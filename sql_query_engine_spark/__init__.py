@@ -16,11 +16,41 @@ Public surface:
 * :func:`queries` / :func:`oracle_sql` — the full checked query inventory
 """
 
+import importlib
+import sys
+import types
+
 from .catalog import TABLES, load_table, register_all
 from .engine import Engine
-from .queries import oracle_sql, queries, registry
 from .ra import run_ra
-from .session import get_spark
+from .session import get_spark, install_worker_zip_cache
+
+install_worker_zip_cache()
+
+_REGISTRY = ("oracle_sql", "queries", "registry")
+
+
+def __getattr__(name: str):
+    # The query registry (queries.py and everything it imports) loads on
+    # first use (PEP 562): a Python worker that unpickles a closure from
+    # one submodule must not pay for it.
+    if name not in _REGISTRY:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(importlib.import_module(".queries", __name__), name)
+    globals()[name] = value
+    return value
+
+
+class _Package(types.ModuleType):
+    def __setattr__(self, name, value):
+        # importing the ``queries`` submodule binds it on the package; the
+        # public name stays the registry function, as with an eager import
+        if name == "queries" and isinstance(value, types.ModuleType):
+            return
+        super().__setattr__(name, value)
+
+
+sys.modules[__name__].__class__ = _Package
 
 __all__ = [
     "Engine",

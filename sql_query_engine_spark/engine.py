@@ -21,7 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from . import catalog as _catalog
-from . import queries as _queries
 from . import ra as _ra
 from .plans.inspect import formatted_plan
 from .session import get_spark
@@ -56,10 +55,14 @@ class Engine:
 
     def query(self, name: str) -> DataFrame:
         """A named operator from the checked inventory (queries.py)."""
-        return _queries.queries()[name](self.spark, self.data_dir)
+        from .queries import queries
+
+        return queries()[name](self.spark, self.data_dir)
 
     def query_names(self) -> list[str]:
-        return sorted(_queries.queries())
+        from .queries import queries
+
+        return sorted(queries())
 
     # -- introspection ---------------------------------------------------
     def explain(self, df: DataFrame, mode: str = "formatted") -> str:

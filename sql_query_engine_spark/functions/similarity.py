@@ -94,13 +94,10 @@ SPARK_SIGN_HI = (
 
 
 def _int8_base(emb: DataFrame) -> DataFrame:
-    """(vec_id, qv): the int8-quantized corpus every int8-scoring
-    strategy shares (zero vectors have no quantization scale and are
-    excluded, matching _ivf_base)."""
-    par = emb.sparkSession.sparkContext.defaultParallelism
+    """(vec_id, qv): int8-quantized vectors (zero vectors have no
+    quantization scale and are excluded, matching _ivf_base)."""
     return (
-        emb.repartition(par)
-        .select(
+        emb.select(
             "vec_id",
             "embedding",
             F.array_max(F.expr("transform(embedding, x -> abs(x))")).alias("m"),
@@ -164,13 +161,16 @@ def cosine_topk(
 
     The corpus is repartitioned to session parallelism — compact parquet
     can arrive as one partition, which would serialize the scoring loop.
+    The query side filters the scan directly, so its broadcast does not
+    wait on that shuffle.
     """
     par = emb.sparkSession.sparkContext.defaultParallelism
-    n = emb.repartition(par).select(
-        "vec_id", "embedding", F.expr(_SPARK_NORM2).alias("n2")
-    )
-    q = n.filter(F.col("vec_id") < n_queries).alias("q")
-    c = n.alias("c")
+
+    def normed(df: DataFrame) -> DataFrame:
+        return df.select("vec_id", "embedding", F.expr(_SPARK_NORM2).alias("n2"))
+
+    q = normed(emb.filter(F.col("vec_id") < n_queries)).alias("q")
+    c = normed(emb.repartition(par)).alias("c")
     scored = (
         F.broadcast(q)
         .join(c, F.col("q.vec_id") != F.col("c.vec_id"))
@@ -198,9 +198,11 @@ def int8_topk(emb: DataFrame, k: int = 10, n_queries: int = 8) -> DataFrame:
     Same plan shape as cosine_topk: broadcast query set × corpus scan,
     per-query rank-limit. At 100 TB the scan reads 1-byte codes instead
     of float32 — the 4× I/O cut is the point of the quantization."""
-    base = _int8_base(emb)
-    q = base.filter(F.col("vec_id") < n_queries).alias("q")
-    c = base.alias("c")
+    par = emb.sparkSession.sparkContext.defaultParallelism
+    # the query side filters the scan directly: its broadcast must not
+    # wait on the corpus's round-robin shuffle
+    q = _int8_base(emb.filter(F.col("vec_id") < n_queries)).alias("q")
+    c = _int8_base(emb.repartition(par)).alias("c")
     scored = (
         F.broadcast(q)
         .join(c, F.col("q.vec_id") != F.col("c.vec_id"))

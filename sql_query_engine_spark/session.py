@@ -20,6 +20,23 @@ session is the single tuned entry point for everything:
   in ``catalog.normalize_events``.
 * **UTC session timezone** — keeps timestamp arithmetic reproducible and
   aligned with the DuckDB oracle.
+* **The package ships itself** — when Python workers cannot import it
+  (its parent is not on ``PYTHONPATH``, ``spark.executorEnv.PYTHONPATH``
+  or site-packages), ``get_spark`` zips it once per process and passes
+  it to ``addPyFile``, so every Python stage runs from any working
+  directory and on executors without a checkout.
+* **Python workers keep their zip directories** — PySpark's worker calls
+  ``importlib.invalidate_caches()`` on every task, and on Python 3.10 and
+  3.11 each of the worker's 16 ``zipimporter`` path entries then
+  re-reads its archive's whole central directory (``pyspark.zip``, the
+  py4j zip and the 15 MB spark-core jar): about 200 ms per task on a
+  reused worker, the bulk of the per-Python-stage cost once booked as a
+  fixed floor. :func:`install_worker_zip_cache`, run when the package is
+  imported in a worker, re-reads an archive only when its stat changes;
+  the call then takes 0.1 ms, and ``read_warc_gz`` over 4 shards on 4
+  cores drops from 0.39–0.68 s to 0.22–0.35 s per warm run (Python
+  3.11). Python 3.12 made the stock call lazy (gh-103200), so there the
+  guard is not installed.
 """
 
 from __future__ import annotations
@@ -28,7 +45,67 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "default_parallelism", "local_df"]
+__all__ = ["get_spark", "default_parallelism", "local_df", "install_worker_zip_cache"]
+
+
+def _zip_reads_eagerly() -> bool:
+    """Whether ``zipimporter.invalidate_caches`` re-reads the archive and
+    stores it in ``self._files``, as on Python 3.10 and 3.11."""
+    import sys
+    import zipimport
+
+    return sys.version_info < (3, 12) and not hasattr(
+        zipimport.zipimporter, "_get_files"
+    )
+
+
+def install_worker_zip_cache() -> None:
+    """Stop a Python worker from re-reading unchanged zip archives on
+    every task.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the start
+    of every task, and on Python 3.10 and 3.11 that makes every
+    ``zipimporter`` on the worker's path re-read its archive's whole
+    central directory at once. Python 3.12 made the method lazy (it only
+    drops the shared directory cache; gh-103200), so there, and wherever
+    the stock importer reads its directory through ``_get_files``, this
+    installs nothing (:func:`_zip_reads_eagerly`).
+    The replacement re-reads an archive only when its
+    ``(st_mtime_ns, st_size)`` differs from its last read or the stat
+    fails — the check CPython's ``FileFinder`` applies to directories —
+    so a rewritten or newly shipped archive is still picked up. Importers
+    of one archive (``pyspark.zip`` and its ``pyspark.zip/pyspark/...``
+    prefixes) share one read, as the zipimport module's own cache does.
+
+    Acts only in a Python worker, recognised by the authentication secret
+    the JVM hands the workers it launches (never to the driver). Runs from
+    the package ``__init__``; idempotent.
+    """
+    if "PYTHON_WORKER_FACTORY_SECRET" not in os.environ or not _zip_reads_eagerly():
+        return
+    import zipimport
+
+    reread = zipimport.zipimporter.invalidate_caches
+    if getattr(reread, "stat_guarded", False):
+        return
+    last_read: dict[str, tuple[tuple[int, int], dict]] = {}
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            last_read.pop(self.archive, None)
+            return reread(self)
+        sig = (st.st_mtime_ns, st.st_size)
+        last = last_read.get(self.archive)
+        if last is not None and last[0] == sig:
+            self._files = last[1]
+            return
+        reread(self)
+        last_read[self.archive] = (sig, self._files)
+
+    invalidate_caches.stat_guarded = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 def local_df(spark: SparkSession, rows, schema: str):
@@ -56,10 +133,11 @@ def local_df(spark: SparkSession, rows, schema: str):
     # or out-of-range ints would coerce without the row-by-row
     # validation plain createDataFrame performs): literal tables are
     # small, so the full check costs microseconds
-    assert not pdf.isna().any().any(), (
-        "local_df rows must be NULL-free (pandas coerces int+None to "
-        "float); use plain createDataFrame for nullable literals"
-    )
+    if pdf.isna().any().any():
+        raise ValueError(
+            "local_df rows must be NULL-free (pandas coerces int+None to "
+            "float); use plain createDataFrame for nullable literals"
+        )
     return spark.createDataFrame(pdf, schema)
 
 
@@ -164,9 +242,64 @@ def get_spark(
     env_conf = os.environ.get("SPARK_GRAFT_CONF", "")
     for item in env_conf.split(";"):
         item = item.strip()
-        if item and "=" in item:
-            k, _, v = item.partition("=")
-            builder = builder.config(k.strip(), v.strip())
+        if not item:
+            continue
+        if "=" not in item:
+            raise ValueError(f"SPARK_GRAFT_CONF item {item!r} is not key=value")
+        k, _, v = item.partition("=")
+        builder = builder.config(k.strip(), v.strip())
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    _ship_package(spark)
+    return spark
+
+
+_PACKAGE_DIR = os.path.dirname(os.path.abspath(__file__))
+_package_zip: str | None = None
+_shipped_apps: set[str] = set()
+
+
+def _workers_can_import(spark: SparkSession) -> bool:
+    """Whether Python workers find the package without shipping it: its
+    parent directory is on ``PYTHONPATH``, on
+    ``spark.executorEnv.PYTHONPATH`` or is a site-packages directory."""
+    import site
+
+    entries = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    entries += spark.sparkContext.getConf().get(
+        "spark.executorEnv.PYTHONPATH", ""
+    ).split(os.pathsep)
+    entries += site.getsitepackages() + [site.getusersitepackages()]
+    parent = os.path.realpath(os.path.dirname(_PACKAGE_DIR))
+    return any(e and os.path.realpath(e) == parent for e in entries)
+
+
+def _ship_package(spark: SparkSession) -> None:
+    """``addPyFile`` the package, zipped once per process, unless workers
+    can already import it — every Python stage (mapInPandas, UDFs, Python
+    data sources, RDD closures) unpickles code from this package."""
+    global _package_zip
+    sc = spark.sparkContext
+    if sc.applicationId in _shipped_apps or _workers_can_import(spark):
+        return
+    if _package_zip is None:
+        import atexit
+        import shutil
+        import tempfile
+        import zipfile
+
+        out_dir = tempfile.mkdtemp(prefix="sql-query-engine-spark-")
+        atexit.register(shutil.rmtree, out_dir, True)
+        out = os.path.join(out_dir, "sql_query_engine_spark.zip")
+        root = os.path.dirname(_PACKAGE_DIR)
+        with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as zf:
+            for d, dirs, files in os.walk(_PACKAGE_DIR):
+                dirs[:] = [x for x in dirs if x != "__pycache__"]
+                for f in files:
+                    if f.endswith(".py"):
+                        path = os.path.join(d, f)
+                        zf.write(path, os.path.relpath(path, root))
+        _package_zip = out
+    sc.addPyFile(_package_zip)
+    _shipped_apps.add(sc.applicationId)
