@@ -10618,7 +10618,7 @@ def src_warc_digest_verify(spark, sf_dir):
     out = _legacy_fixture_dir(sf_dir, "documents_warc_digests")
     _cached_fixture(out, lambda: warc.write_warc_gz_dataset(
         _t(spark, sf_dir, "documents"), out, n_files=4))
-    got = warc.read_warc_gz_meta(spark, f"{out}/*.warc.gz")
+    got = warc.read_warc_gz(spark, f"{out}/*.warc.gz", plane="meta")
     return got.select(
         "doc_id", "http_status", "payload_sha256", "digest_verified")
 
@@ -10662,7 +10662,7 @@ def src_warc_charset_decode(spark, sf_dir):
     out = _legacy_fixture_dir(sf_dir, "documents_warc_charsets")
     _cached_fixture(out, lambda: warc.write_warc_gz_dataset(
         _t(spark, sf_dir, "documents"), out, n_files=4, charsets=True))
-    got = warc.read_warc_gz_meta(spark, f"{out}/*.warc.gz")
+    got = warc.read_warc_gz(spark, f"{out}/*.warc.gz", plane="meta")
     return got.select(
         "doc_id", "charset", "http_status",
         F.md5("text").alias("text_md5"))
@@ -10730,7 +10730,7 @@ def src_warc_wat_sidecar(spark, sf_dir):
     FROM documents WHERE doc_id % 10 = 0""",
     "revisit records — dedup's WIRE format in the public crawl corpora "
     "(ISO 28500 §6.7.2 identical-payload-digest profile; r13 response-"
-    "walk extension, sources/warc.py read_warc_revisits): a re-crawl "
+    "walk extension, sources/warc.py resolution plane): a re-crawl "
     "whose payload matched an earlier capture ships BODY-LESS, carrying "
     "only the original's URI/record-id/date references and the shared "
     "payload digest — at 100 TB the revisit plane is how a crawl avoids "
@@ -10752,8 +10752,8 @@ def src_warc_revisit_dedup(spark, sf_dir):
     out = _legacy_fixture_dir(sf_dir, "documents_warc_revisits")
     _cached_fixture(out, lambda: warc.write_warc_gz_dataset(
         _t(spark, sf_dir, "documents"), out, n_files=4, revisits=True))
-    # r16: ONE fused walk emits both planes (r15 ran read_warc_revisits
-    # AND read_warc_gz_meta — two full gzip+WARC walks of every shard),
+    # r16: ONE fused walk emits both planes (r15 ran a revisit reader
+    # AND the meta reader — two full gzip+WARC walks of every shard),
     # and the resolution join is restated as a grouped per-key cross
     # product so the plan has exactly ONE subtree over the walk (a
     # two-branch filter split would get each filter pushed below any
@@ -10765,7 +10765,7 @@ def src_warc_revisit_dedup(spark, sf_dir):
     # either side explodes to nothing, exactly the inner join. Structs
     # keep NULL digests as present-but-NULL, matching the join's
     # null-comparison semantics in digest_matches.
-    ex = warc.read_warc_revisit_resolution(spark, f"{out}/*.warc.gz")
+    ex = warc.read_warc_gz(spark, f"{out}/*.warc.gz", plane="resolution")
     key = F.when(
         F.col("wtype") == "revisit", F.col("refers_to_uri")
     ).otherwise(F.col("target_uri"))
@@ -10886,7 +10886,7 @@ def src_warc_charset_mislabel(spark, sf_dir):
     out = _legacy_fixture_dir(sf_dir, "documents_warc_mislabels")
     _cached_fixture(out, lambda: warc.write_warc_gz_dataset(
         _t(spark, sf_dir, "documents"), out, n_files=4, mislabel=True))
-    got = warc.read_warc_gz_meta(spark, f"{out}/*.warc.gz")
+    got = warc.read_warc_gz(spark, f"{out}/*.warc.gz", plane="meta")
     return got.select(
         "doc_id",
         "http_status",
@@ -10941,7 +10941,7 @@ def src_warc_charset_east_asian(spark, sf_dir):
     _cached_fixture(out, lambda: warc.write_warc_gz_dataset(
         _t(spark, sf_dir, "documents"), out, n_files=4,
         charsets="east-asian"))
-    got = warc.read_warc_gz_meta(spark, f"{out}/*.warc.gz")
+    got = warc.read_warc_gz(spark, f"{out}/*.warc.gz", plane="meta")
     return got.select(
         "doc_id", "charset", "http_status",
         F.md5("text").alias("text_md5"))
@@ -11019,7 +11019,7 @@ def src_warc_cdx_segment_fetch(spark, sf_dir):
     "method and body. The writer pairs every response with a request "
     "member (GET majority; every 5th doc a POST — every 10th framing "
     "its body CHUNKED with verified X-Len/X-Payload-SHA256 trailers, "
-    "the rest Content-Length); read_warc_requests walks shards with "
+    "the rest Content-Length); the request plane walks shards with "
     "the same O(member) streaming scan and parses each block with the "
     "strict request-side parser (sources/warc.py "
     "parse_http_request_ex): request-line token checks, both body "
@@ -11039,7 +11039,8 @@ def src_warc_request_log(spark, sf_dir):
     out = _legacy_fixture_dir(sf_dir, "documents_warc_gz_req")
     _cached_fixture(out, lambda: warc.write_warc_gz_dataset(
         _t(spark, sf_dir, "documents"), out, n_files=4, requests=True))
-    return warc.read_warc_requests(spark, f"{out}/*.warc.gz").select(
+    reqs = warc.read_warc_gz(spark, f"{out}/*.warc.gz", plane="request")
+    return reqs.select(
         "doc_id",
         "target_uri",
         "method",

@@ -17,18 +17,27 @@ Format essentials implemented here (ISO 28500 / WARC 1.0):
 
 Scale shape: one ``.warc``/``.warc.gz`` file per partition is written
 executor-side. The legacy ``.warc`` read is a ``binaryFile`` scan +
-Arrow ``mapInPandas`` record walk; the ``.warc.gz`` scale paths (batch
-readers since r13, the Structured Streaming landing tail since r14)
-never hold shard bytes JVM-side — workers STREAM each shard through
-the O(member)-memory gzip walker (:func:`iter_gzip_members_stream`),
-so per-task footprint is shard-size-independent. Per-file independent,
-nothing driver-side, exactly the Avro source's plan. Malformed records
-raise with the offending path (attributable ingest failures), matching
-the Avro convention.
+Arrow ``mapInPandas`` record walk. Every ``.warc.gz`` read goes through
+ONE path: the gzip member walker (:func:`iter_gzip_members_stream`,
+O(member) memory, the only RFC 1952 walker here) feeds the one record
+walk (:func:`_shard_records`), and a *plane* turns that record stream
+into rows. The four planes (``response``, ``meta``, ``request``,
+``resolution``; see :data:`_PLANES`) are each a DDL schema plus a row
+function; :func:`read_warc_gz` (batch, driver-side shard listing) and
+:func:`read_warc_gz_stream` (Structured Streaming landing tail) run
+them through one ``mapInPandas`` batching loop, the CDX fetcher and
+the WAT sidecar writer walk the same records, and the fuzz wrapper
+:func:`try_scan_warc_gz` returns exactly a plane's rows for one
+shard's bytes. Workers STREAM each shard, so per-task footprint is
+shard-size-independent and the JVM never holds shard bytes.
+Per-file independent, nothing driver-side, exactly the Avro source's
+plan. Malformed records raise with the offending path (attributable
+ingest failures), matching the Avro convention.
 """
 
 from __future__ import annotations
 
+import io
 import os
 from collections.abc import Iterator
 
@@ -37,7 +46,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BooleanType,
     LongType,
     StringType,
     StructField,
@@ -51,7 +59,6 @@ __all__ = [
     "write_warc_dataset",
     "read_warc",
     "gzip_member",
-    "split_gzip_members",
     "iter_gzip_members_stream",
     "build_http_response",
     "build_http_request",
@@ -60,18 +67,10 @@ __all__ = [
     "parse_http_request_ex",
     "write_warc_gz_dataset",
     "read_warc_gz",
-    "read_warc_gz_meta",
     "read_warc_gz_stream",
-    "read_warc_revisits",
-    "read_warc_requests",
     "read_cdx",
     "fetch_warc_members",
     "try_scan_warc_gz",
-    "try_scan_warc_gz_meta",
-    "try_scan_warc_revisits",
-    "try_scan_warc_requests",
-    "read_warc_revisit_resolution",
-    "try_scan_warc_revisit_resolution",
     "try_fetch_extent",
     "write_wat_sidecar",
     "read_wat",
@@ -273,13 +272,10 @@ def decode_warc_bytes(payload: bytes, path: str = "<bytes>",
 _GZ_MAGIC = b"\x1f\x8b"
 _FTEXT, _FHCRC, _FEXTRA, _FNAME, _FCOMMENT = 1, 2, 4, 8, 16
 _GZ_MAX_MEMBER_BYTES = 256 * 1024 * 1024  # inflation ceiling per member
-# FNAME/FCOMMENT size ceiling, enforced identically by BOTH walkers
-# (stream and in-memory) and on BOTH paths (terminator found / not yet
-# found) — r14: the stream walker used to apply it only while the NUL
-# was absent from the buffered data, so acceptance of an oversized
-# field depended on the caller's chunk size, and the in-memory walker
-# imposed no ceiling at all: the two walkers could disagree on what a
-# legal RFC 1952 member is.
+# FNAME/FCOMMENT size ceiling, enforced on BOTH paths of the walker
+# (terminator found / not yet found) — r14: the walker used to apply it
+# only while the NUL was absent from the buffered data, so acceptance
+# of an oversized field depended on the caller's chunk size.
 _GZ_MAX_HEADER_FIELD = 64 * 1024
 
 
@@ -418,27 +414,6 @@ def _walk_response_records(records, path: str):
             f"{seg['origin']!r} (expected segment {seg['next']})")
 
 
-def _iter_response_records(member: bytes, path: str):
-    """Single-stream wrapper over :func:`_walk_response_records` — one
-    .warc file or one gzip member's bytes in, assembled response
-    records out."""
-    yield from _walk_response_records(
-        decode_warc_bytes(member, path, with_headers=True), path)
-
-
-def _iter_gz_responses(content: bytes, path: str):
-    """File-scope response walk for .warc.gz: records are one-per-gzip-
-    member, but a SEGMENTED logical record spans consecutive members,
-    so the segment state must live at file scope — decode all members
-    into one record stream, then run the shared response walk over
-    it."""
-    def _records():
-        for member in split_gzip_members(content, path):
-            yield from decode_warc_bytes(member, path, with_headers=True)
-
-    yield from _walk_response_records(_records(), path)
-
-
 def gzip_member(payload: bytes, fname: bytes | None = None,
                 fhcrc: bool = False) -> bytes:
     """One RFC 1952 member: fixed header (MTIME=0 for determinism),
@@ -466,16 +441,22 @@ def gzip_member(payload: bytes, fname: bytes | None = None,
 def iter_gzip_members_stream(f, path: str = "<stream>",
                              chunk: int = 256 * 1024):
     """Walk a multi-member gzip STREAM from a file object, yielding one
-    inflated payload per member — the same RFC 1952 MUSTs as
-    :func:`split_gzip_members` (magic + CM=8, reserved FLG bits,
-    FEXTRA/FNAME/FCOMMENT framing, FHCRC, per-member CRC32 + ISIZE,
-    bounded inflation) without EVER materializing the whole file:
-    memory is O(one inflated member + one read chunk), independent of
-    shard size. This is the 100 TB read contract — a reader whose
-    per-task footprint scales with shard bytes OOMs the moment someone
-    doubles the corpus at fixed shard count (the r13 8M-doc rehearsal
-    measured exactly that cliff against the whole-shard binaryFile
-    scan). Raises ValueError with the path on any defect."""
+    inflated payload per member — the ONE RFC 1952 member walker of
+    this module (byte-buffer callers wrap their bytes in
+    ``io.BytesIO``). Enforces the RFC 1952 MUSTs: magic + CM=8,
+    reserved FLG bits zero, FEXTRA/FNAME/FCOMMENT skipped by their own
+    framing (FNAME/FCOMMENT under a size ceiling), FHCRC verified
+    against the header bytes, and the 8-byte trailer's CRC32 and ISIZE
+    checked against the inflated payload; inflation is capped per
+    member BEFORE any declared length is trusted — without EVER
+    materializing the whole file: memory is O(one inflated member +
+    one read chunk), independent of shard size. This is the 100 TB
+    read contract — a reader whose per-task footprint scales with
+    shard bytes OOMs the moment someone doubles the corpus at fixed
+    shard count (the r13 8M-doc rehearsal measured exactly that cliff
+    against the whole-shard binaryFile scan). Raises ValueError with
+    the path on any defect — attributable ingest failures, same
+    convention as the WARC walker above."""
     import zlib
 
     buf = bytearray()
@@ -592,107 +573,28 @@ def iter_gzip_members_stream(f, path: str = "<stream>",
         yield payload
 
 
-def split_gzip_members(b: bytes, path: str = "<bytes>") -> list[bytes]:
-    """Walk a multi-member gzip stream → one inflated payload per
-    member. Enforces the RFC 1952 MUSTs: magic + CM=8, reserved FLG
-    bits zero, FEXTRA/FNAME/FCOMMENT skipped by their own framing,
-    FHCRC verified against the header bytes, and the 8-byte trailer's
-    CRC32 and ISIZE checked against the inflated payload. Inflation is
-    capped per member BEFORE any declared length is trusted. Raises
-    ValueError with the path on any defect — attributable ingest
-    failures, same convention as the WARC walker above."""
-    import zlib
+def _shard_records(f, path: str):
+    """THE record walk of every ``.warc.gz`` read: gzip members of the
+    file object ``f`` (one streaming walk, O(member) memory) →
+    :func:`decode_warc_bytes` records ``(doc_id, uri, content_length,
+    block, headers)`` in stream order. Records are one-per-gzip-member,
+    but a SEGMENTED logical record spans consecutive members, so
+    consumers keep their segment state across this whole stream (file
+    scope), never per member. Byte-buffer callers pass
+    ``io.BytesIO``."""
+    for member in iter_gzip_members_stream(f, path):
+        yield from decode_warc_bytes(member, path, with_headers=True)
 
-    out: list[bytes] = []
-    pos = 0
-    if not b:
-        raise ValueError(f"{path}: empty gzip stream")
-    while pos < len(b):
-        start = pos
-        if b[pos : pos + 2] != _GZ_MAGIC:
-            raise ValueError(f"{path}: bad gzip magic at {pos}")
-        if pos + 10 > len(b):
-            raise ValueError(f"{path}: truncated gzip header at {pos}")
-        if b[pos + 2] != 8:
-            raise ValueError(f"{path}: unknown compression method "
-                             f"{b[pos + 2]} at {pos}")
-        flg = b[pos + 3]
-        if flg & 0xE0:
-            raise ValueError(f"{path}: reserved FLG bits set at {pos}")
-        pos += 10
-        if flg & _FEXTRA:
-            if pos + 2 > len(b):
-                raise ValueError(f"{path}: truncated FEXTRA length")
-            xlen = int.from_bytes(b[pos : pos + 2], "little")
-            pos += 2 + xlen
-            if pos > len(b):
-                raise ValueError(f"{path}: truncated FEXTRA field")
-        for bit, name in ((_FNAME, "FNAME"), (_FCOMMENT, "FCOMMENT")):
-            if flg & bit:
-                z = b.find(b"\x00", pos)
-                if z < 0:
-                    raise ValueError(f"{path}: unterminated {name}")
-                if z - pos > _GZ_MAX_HEADER_FIELD:
-                    # same ceiling as the stream walker — the two MUST
-                    # agree on what a legal member is (walker parity)
-                    raise ValueError(
-                        f"{path}: {name} field exceeds "
-                        f"{_GZ_MAX_HEADER_FIELD} bytes")
-                pos = z + 1
-        if flg & _FHCRC:
-            if pos + 2 > len(b):
-                raise ValueError(f"{path}: truncated header CRC16")
-            want = int.from_bytes(b[pos : pos + 2], "little")
-            got = zlib.crc32(b[start:pos]) & 0xFFFF
-            if want != got:
-                raise ValueError(f"{path}: header CRC16 mismatch "
-                                 f"({want:#06x} != {got:#06x})")
-            pos += 2
-        # feed the inflater in bounded chunks off a memoryview: slicing
-        # `b[pos:]` per member copies the whole remaining buffer, which
-        # is O(shard²) across tens of thousands of members (the 2M-doc
-        # rehearsal measured the cliff)
-        mv = memoryview(b)
-        chunk = 256 * 1024
-        d = zlib.decompressobj(-15)
-        parts: list[bytes] = []
-        produced = 0
-        p = pos
-        try:
-            while not d.eof:
-                if d.unconsumed_tail:
-                    data = d.unconsumed_tail
-                elif p < len(b):
-                    data = mv[p : p + chunk]
-                    p += len(data)
-                else:
-                    raise ValueError(
-                        f"{path}: truncated DEFLATE stream at {pos}")
-                piece = d.decompress(
-                    data, _GZ_MAX_MEMBER_BYTES - produced + 1)
-                produced += len(piece)
-                parts.append(piece)
-                if produced > _GZ_MAX_MEMBER_BYTES:
-                    raise ValueError(f"{path}: member inflates past "
-                                     f"{_GZ_MAX_MEMBER_BYTES} bytes")
-        except zlib.error as e:
-            raise ValueError(f"{path}: bad DEFLATE stream at {pos}: {e}")
-        payload = b"".join(parts)
-        # deflate end within the last fed chunk: unused_data is what
-        # remained of it (bounded by the chunk size, not the shard)
-        end = p - len(d.unused_data)
-        if end + 8 > len(b):
-            raise ValueError(f"{path}: truncated gzip trailer")
-        want_crc = int.from_bytes(b[end : end + 4], "little")
-        want_isize = int.from_bytes(b[end + 4 : end + 8], "little")
-        if want_crc != (zlib.crc32(payload) & 0xFFFFFFFF):
-            raise ValueError(f"{path}: gzip CRC32 mismatch")
-        if want_isize != (len(payload) & 0xFFFFFFFF):
-            raise ValueError(f"{path}: gzip ISIZE mismatch "
-                             f"({want_isize} != {len(payload)})")
-        out.append(payload)
-        pos = end + 8
-    return out
+
+def _http_responses(records, path: str):
+    """Assembled response records (:func:`_walk_response_records`) →
+    strictly parsed HTTP messages: yield (doc_id, uri, warc_headers,
+    status, http_headers, entity_body, n_chunks). The step every
+    response consumer shares — the response / meta / resolution
+    planes, the WAT sidecar writer and the CDX extent fetch."""
+    for d, u, _n, block, wh in _walk_response_records(records, path):
+        st, hh, body, k = parse_http_response_ex(block, path)
+        yield d, u, wh, st, hh, body, k
 
 
 # -------------------------------------------------------------------------
@@ -1043,7 +945,8 @@ def _content_decode(body: bytes, headers: dict, path: str) -> bytes:
     if ce in (b"identity", b""):
         return body
     if ce == b"gzip":
-        members = split_gzip_members(body, f"{path} (entity)")
+        members = list(iter_gzip_members_stream(
+            io.BytesIO(body), f"{path} (entity)"))
         if len(members) != 1:
             raise ValueError(
                 f"{path}: gzip entity holds {len(members)} members")
@@ -1051,161 +954,49 @@ def _content_decode(body: bytes, headers: dict, path: str) -> bytes:
     raise ValueError(f"{path}: unsupported Content-Encoding {ce!r}")
 
 
-def _payload_digest_verdict(wh: dict, body: bytes, path: str,
-                            doc_id: int) -> tuple[str | None, bool | None]:
-    """The labelled WARC-Payload-Digest verdict shared by the meta
-    reader and its fuzz wrapper: → (sha256_hex_or_None,
-    verified_True/False/None). A known-label value that parses as
-    neither hex nor Base32 raises (malformed ≠ mismatched)."""
-    import hashlib
-
+def _declared_payload_digest(wh: dict, path: str, doc_id: int):
+    """A record's labelled ``WARC-Payload-Digest`` → (alg, raw digest
+    bytes), or None when the record declares none or a label this
+    engine cannot recompute (the label set is open-ended). The one
+    parse of that header every plane shares: label split, ASCII
+    decode, :data:`_DIGEST_SIZES` check, :func:`_decode_labelled_digest`.
+    A known-label value that parses as neither hex nor Base32 RAISES —
+    malformed is a defect, not license to skip the check (and not the
+    same thing as mismatched): the digest is dedup's join key, and a
+    silently-NULL garbled key would drop the observation without a
+    trace."""
     decl = wh.get(b"warc-payload-digest")
     if decl is None:
-        return None, None
+        return None
     alg, _, val = decl.partition(b":")
     try:
         alg = alg.strip().lower().decode("ascii")
     except UnicodeDecodeError:
-        return None, None
+        return None
     if alg not in _DIGEST_SIZES:
-        return None, None
+        return None
     raw = _decode_labelled_digest(alg, val)
     if raw is None:
         raise ValueError(
             f"{path}: malformed WARC-Payload-Digest value for {alg} "
             f"(doc {doc_id})")
+    return alg, raw
+
+
+def _payload_digest_verdict(wh: dict, body: bytes, path: str,
+                            doc_id: int) -> tuple[str | None, bool | None]:
+    """The labelled WARC-Payload-Digest verdict of the meta and
+    resolution planes: → (sha256_hex_or_None, verified_True/False/None)
+    — the value surfaces only under a sha256 label, but sha1/md5
+    labels are still VERIFIED against ``body``."""
+    import hashlib
+
+    declared = _declared_payload_digest(wh, path, doc_id)
+    if declared is None:
+        return None, None
+    alg, raw = declared
     digest = raw.hex() if alg == "sha256" else None
     return digest, hashlib.new(alg, body).digest() == raw
-
-
-def try_scan_warc_gz(payload: bytes):
-    """Fuzz-contract wrapper over the full three-layer scan (gzip
-    members → WARC records → HTTP responses): returns the framing
-    census rows, or None on any defect — never raises. The SOURCE path
-    (read_warc_gz) deliberately raises instead: an ingest failure must
-    be attributable, whereas the fuzz contract is reject-never-crash."""
-    try:
-        rows = []
-        for d, u, _n, block, _wh in _iter_gz_responses(payload, "<bytes>"):
-            st, body, k = parse_http_response(block)
-            rows.append((d, u, st, k, len(body)))
-        return rows
-    except ValueError:
-        return None
-
-
-def try_scan_warc_gz_meta(payload: bytes):
-    """Fuzz-contract wrapper over the metadata plane (the digest-
-    verdict path of :func:`read_warc_gz_meta`): returns [(doc_id,
-    status, payload_sha256, digest_verified)], or None on any framing
-    defect — never raises. The key contract under digest-value
-    mutation: a flipped declared digest must surface as None
-    (malformed) or a ``digest_verified is False`` row — NEVER as a
-    silently-True verdict."""
-    try:
-        rows = []
-        for d, _u, _n, block, wh in _iter_gz_responses(payload, "<bytes>"):
-            st, hh, body, _k = parse_http_response_ex(block, "<bytes>")
-            digest, verified = _payload_digest_verdict(
-                wh, body, "<bytes>", d)
-            rows.append((d, st, digest, verified))
-        return rows
-    except ValueError:
-        return None
-
-
-def _revisit_row(wh: dict, path: str, doc_id: int):
-    """One revisit record's reference columns, shared by the Spark
-    reader and its fuzz wrapper (so the soak exercises the exact code
-    the reader runs): → (refers_to_uri, refers_to_id, sha256_hex,
-    profile). A malformed known-label digest value RAISES — same
-    'garbled is a defect, not license to skip' contract as the block
-    and response-payload digest checks; the digest is dedup's join
-    key, and a silently-NULL garbled key would drop the re-crawl
-    observation without a trace."""
-    digest = None
-    decl = wh.get(b"warc-payload-digest")
-    if decl is not None:
-        alg, _, val = decl.partition(b":")
-        try:
-            alg_s = alg.strip().lower().decode("ascii")
-        except UnicodeDecodeError:
-            alg_s = None
-        if alg_s in _DIGEST_SIZES:
-            raw = _decode_labelled_digest(alg_s, val)
-            if raw is None:
-                raise ValueError(
-                    f"{path}: malformed WARC-Payload-Digest value for "
-                    f"{alg_s} on revisit record (doc {doc_id})")
-            if alg_s == "sha256":
-                digest = raw.hex()
-    return (
-        wh.get(b"warc-refers-to-target-uri", b"").decode() or None,
-        wh.get(b"warc-refers-to", b"").decode() or None,
-        digest,
-        wh.get(b"warc-profile", b"").decode() or None,
-    )
-
-
-def _typed_member_rows(payload: bytes, wtype: bytes, row_fn):
-    """Decode every member of ``payload`` and extract ``row_fn`` rows
-    from the records of one WARC-Type — the loop both typed-plane
-    fuzz wrappers share (the Spark readers run the same filter+extract
-    over the streaming walk via :func:`_scan_typed_records`)."""
-    rows = []
-    for member in split_gzip_members(payload, "<bytes>"):
-        for d, u, _n, block, wh in decode_warc_bytes(
-                member, "<bytes>", with_headers=True):
-            if wh.get(b"warc-type", b"").strip().lower() != wtype:
-                continue
-            rows.append(row_fn(d, u, block, wh, "<bytes>"))
-    return rows
-
-
-def _revisit_plane_row(d, u, _block, wh, path):
-    return (d, u) + _revisit_row(wh, path, d)
-
-
-def try_scan_warc_revisits(payload: bytes):
-    """Fuzz-contract wrapper over the revisit plane (the same
-    :func:`_revisit_row` extraction the Spark reader runs): returns
-    [(doc_id, target_uri, refers_to_uri, refers_to_id, payload_sha256,
-    profile)] for revisit records, or None on any framing defect —
-    never raises (UnicodeDecodeError subclasses ValueError)."""
-    try:
-        return _typed_member_rows(payload, b"revisit", _revisit_plane_row)
-    except ValueError:
-        return None
-
-
-def _request_record_row(d: int, u: str, block: bytes, wh: dict,
-                        path: str):
-    """One reader row from a decoded ``request`` record — shared by
-    the Spark scan and its fuzz wrapper: (doc_id, target_uri, method,
-    request_target, http_version, user_agent, body_len, n_chunks,
-    concurrent_to). A malformed client message is a framing defect
-    (raise), not data — the request plane is provenance, and a
-    silently-dropped or half-parsed request would misattribute what
-    the crawler actually sent."""
-    method, target, version, hh, body, k = parse_http_request_ex(
-        block, path)
-    ua = hh.get(b"user-agent")
-    return (d, u, method, target, version,
-            ua.decode("utf-8", "replace") if ua is not None else None,
-            len(body), k,
-            wh.get(b"warc-concurrent-to", b"").decode() or None)
-
-
-def try_scan_warc_requests(payload: bytes):
-    """Fuzz-contract wrapper over the request plane (the same
-    :func:`_request_record_row` extraction the Spark reader runs):
-    returns [(doc_id, target_uri, method, request_target,
-    http_version, user_agent, body_len, n_chunks, concurrent_to)] for
-    request records, or None on any framing defect — never raises."""
-    try:
-        return _typed_member_rows(payload, b"request", _request_record_row)
-    except ValueError:
-        return None
 
 
 # ISO 28500 §6.7.2: the revisit profile URI declaring "same payload as
@@ -1358,7 +1149,7 @@ def write_warc_gz_dataset(df: DataFrame, out_dir: str,
         # measured the cliff) — stream to the file and track the offset.
         # The file is opened lazily on the FIRST record: an empty
         # partition (rows < n_files) must not leave a 0-byte .warc.gz
-        # behind, because split_gzip_members rejects an empty stream —
+        # behind, because the gzip member walker rejects an empty stream —
         # the writer's output stays readable by its own walker for any
         # consumer, not just listings that skip zero-length files.
         cdx_lines = []
@@ -1507,9 +1298,7 @@ def _fetch_extent_row(raw: bytes, where: str):
     Anything else in the extent is an attributable index defect, and a
     PARTIAL chain fails the reassembly walk (truncation /
     orphan-continuation raises) — never a silently-short row."""
-    members = split_gzip_members(raw, where)
-    recs = [r for m in members
-            for r in decode_warc_bytes(m, where, with_headers=True)]
+    recs = list(_shard_records(io.BytesIO(raw), where))
     for _d, _u, _n2, _b, wh in recs:
         wtype = wh.get(b"warc-type", b"response").strip().lower()
         if wtype not in (b"response", b"continuation"):
@@ -1767,65 +1556,34 @@ def _shard_paths_df(spark: SparkSession, path_glob: str) -> DataFrame:
     return df.repartition(len(paths))
 
 
-def _iter_file_responses(path: str):
-    """Open one shard and yield its assembled response records via the
-    streaming member walk — memory O(member + chunk), never O(shard)."""
-    with open(path, "rb") as f:
-
-        def _records():
-            for member in iter_gzip_members_stream(f, path):
-                yield from decode_warc_bytes(member, path,
-                                             with_headers=True)
-
-        yield from _walk_response_records(_records(), path)
-
-
-def read_warc_gz(spark: SparkSession, path_glob: str) -> DataFrame:
-    """Shard-path scan → STREAMING gzip member walk → WARC record walk
-    (segment reassembly included) → HTTP response parse → one row per
-    record: (doc_id, target_uri, http_status, n_chunks, content_length,
-    text). ``content_length`` is the ENTITY byte count (after
-    de-chunking), not the WARC block length. Map-only, one task per
-    shard, per-task memory O(member), shard-size-INDEPENDENT (see
-    :func:`_shard_paths_df` for why binaryFile is not used); rows flow
-    out in bounded Arrow batches."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("target_uri", StringType(), True),
-            StructField("http_status", LongType(), True),
-            StructField("n_chunks", LongType(), True),
-            StructField("content_length", LongType(), True),
-            StructField("text", StringType(), True),
-        ]
-    )
-    files = _shard_paths_df(spark, path_glob)
-    cols = ["doc_id", "target_uri", "http_status",
-            "n_chunks", "content_length", "text"]
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path in pdf["path"]:
-                rows = []
-                for d, u, _n, block, _wh in _iter_file_responses(path):
-                    st, hh, body, k = parse_http_response_ex(
-                        block, path)
-                    rows.append((d, u, st, k, len(body),
-                                 _entity_text(body, hh)))
-                    if len(rows) >= _SCAN_BATCH_ROWS:
-                        yield pd.DataFrame(rows, columns=cols)
-                        rows = []
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(_dec, schema)
+# -------------------------------------------------------------------------
+# Planes — what one .warc.gz record walk is read AS. A plane is a DDL
+# schema plus a row function ``rows(records, path)`` over the
+# :func:`_shard_records` stream of ONE shard. The Spark readers (batch
+# and streaming tail) and the fuzz wrapper run these same functions, so
+# the soak exercises exactly the code the readers run, and the planes
+# partition the record stream cleanly: response/meta/resolution parse
+# responses (segment reassembly included) and skip every other record
+# type, the request plane reads only request records.
+# -------------------------------------------------------------------------
 
 
-def read_warc_gz_meta(spark: SparkSession, path_glob: str) -> DataFrame:
-    """Digest- and charset-exposing variant of :func:`read_warc_gz` —
-    the provenance columns a training-data pipeline keys dedup and
-    audit on: (doc_id, target_uri, http_status, content_length,
-    charset, text, payload_sha256, digest_verified).
+def _response_rows(records, path: str):
+    """``response`` plane — one row per assembled response record:
+    (doc_id, target_uri, http_status, n_chunks, content_length, text).
+    ``content_length`` is the ENTITY byte count (after de-chunking and
+    Content-Encoding), not the WARC block length; ``text`` decodes by
+    the declared charset (:func:`_entity_text`; NULL when the label is
+    unknown or the bytes don't strictly decode)."""
+    for d, u, _wh, st, hh, body, k in _http_responses(records, path):
+        yield d, u, st, k, len(body), _entity_text(body, hh)
+
+
+def _meta_rows(records, path: str):
+    """``meta`` plane — the digest- and charset-exposing variant of the
+    response plane, the provenance columns a training-data pipeline
+    keys dedup and audit on: (doc_id, target_uri, http_status,
+    content_length, charset, text, payload_sha256, digest_verified).
 
     ``payload_sha256`` is the record's labelled ``WARC-Payload-Digest``
     normalized to hex (NULL when the record carries none or a
@@ -1845,243 +1603,185 @@ def read_warc_gz_meta(spark: SparkSession, path_glob: str) -> DataFrame:
     that parses as neither hex nor Base32 raises (malformed, not
     merely mismatched). ``charset`` is the declared Content-Type
     parameter; text is NULL when the label is unknown or the bytes
-    don't strictly decode. Map-only, one task per shard, streaming
-    member walk — per-task memory O(member), shard-size-independent."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("target_uri", StringType(), True),
-            StructField("http_status", LongType(), True),
-            StructField("content_length", LongType(), True),
-            StructField("charset", StringType(), True),
-            StructField("text", StringType(), True),
-            StructField("payload_sha256", StringType(), True),
-            StructField("digest_verified", BooleanType(), True),
-        ]
-    )
-    files = _shard_paths_df(spark, path_glob)
-    cols = ["doc_id", "target_uri", "http_status", "content_length",
-            "charset", "text", "payload_sha256", "digest_verified"]
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path in pdf["path"]:
-                rows = []
-                for d, u, _n, block, wh in _iter_file_responses(path):
-                    st, hh, body, _k = parse_http_response_ex(
-                        block, path)
-                    digest, verified = _payload_digest_verdict(
-                        wh, body, path, d)
-                    rows.append(
-                        (d, u, st, len(body), _charset_of(hh),
-                         _entity_text(body, hh), digest, verified))
-                    if len(rows) >= _SCAN_BATCH_ROWS:
-                        yield pd.DataFrame(rows, columns=cols)
-                        rows = []
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(_dec, schema)
+    don't strictly decode."""
+    for d, u, wh, st, hh, body, _k in _http_responses(records, path):
+        digest, verified = _payload_digest_verdict(wh, body, path, d)
+        yield (d, u, st, len(body), _charset_of(hh),
+               _entity_text(body, hh), digest, verified)
 
 
-def read_warc_revisits(spark: SparkSession, path_glob: str) -> DataFrame:
-    """Scan .warc.gz shards for ``revisit`` records — dedup's wire
-    format in the public crawl corpora (ISO 28500 §6.7.2): a re-crawl
-    whose payload matched an earlier capture ships body-less, carrying
-    only the original's references and the shared payload digest.
-    Surfaces one row per revisit: (doc_id, target_uri, refers_to_uri,
-    refers_to_id, payload_sha256, profile) — everything a dedup
-    resolver needs to rejoin the re-crawl to its stored original
-    without inflating any body bytes. The digest value decodes from
-    hex or Base32 (normalized to hex; non-sha256 labels surface NULL;
-    a malformed known-label value raises — the digest is dedup's join
-    key, and a silently-NULL garbled key would drop the re-crawl).
-    Map-only, one task per shard, streaming member walk (per-task
-    memory O(member)); the response readers SKIP revisit records, so
-    the two scans partition the record stream cleanly."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("target_uri", StringType(), True),
-            StructField("refers_to_uri", StringType(), True),
-            StructField("refers_to_id", StringType(), True),
-            StructField("payload_sha256", StringType(), True),
-            StructField("profile", StringType(), True),
-        ]
-    )
-    cols = ["doc_id", "target_uri", "refers_to_uri",
-            "refers_to_id", "payload_sha256", "profile"]
-    return _scan_typed_records(spark, path_glob, b"revisit",
-                               _revisit_plane_row, schema, cols)
+def _request_rows(records, path: str):
+    """``request`` plane — the client half of each capture (ISO 28500
+    §6.4), the plane crawl forensics and politeness audits read: what
+    was ASKED for, by which agent, with which method and body. One row
+    per ``request`` record: (doc_id, target_uri, method,
+    request_target, http_version, user_agent, body_len, n_chunks,
+    concurrent_to) via the strict request-side parse
+    (:func:`parse_http_request_ex` — request-line token checks, both
+    body framings plus the bodyless no-framing form, verified chunked
+    trailers); ``concurrent_to`` is the stored response's record id,
+    so joining the two planes is id-exact, not URI-heuristic. A
+    malformed client message is a framing defect (raise with the shard
+    path), not data — the request plane is provenance, and a
+    silently-dropped or half-parsed request would misattribute what
+    the crawler actually sent."""
+    for d, u, _n, block, wh in records:
+        if wh.get(b"warc-type", b"").strip().lower() != b"request":
+            continue
+        method, target, version, hh, body, k = parse_http_request_ex(
+            block, path)
+        ua = hh.get(b"user-agent")
+        yield (d, u, method, target, version,
+               ua.decode("utf-8", "replace") if ua is not None else None,
+               len(body), k,
+               wh.get(b"warc-concurrent-to", b"").decode() or None)
 
 
-def read_warc_revisit_resolution(spark: SparkSession,
-                                 path_glob: str) -> DataFrame:
-    """BOTH planes of revisit resolution from ONE streaming walk:
-    (doc_id, wtype, target_uri, refers_to_uri, payload_sha256) where
-    ``wtype`` is 'response' or 'revisit'. r15's revisit-dedup query ran
-    :func:`read_warc_revisits` AND :func:`read_warc_gz_meta` — two full
+def _revisit_row(d: int, u: str, wh: dict, path: str):
+    """One ``revisit`` record's resolution row — dedup's wire format in
+    the public crawl corpora (ISO 28500 §6.7.2): a re-crawl whose
+    payload matched an earlier capture ships body-less, carrying only
+    the original's references and the shared payload digest. → (doc_id,
+    'revisit', target_uri, refers_to_uri, payload_sha256), everything a
+    dedup resolver needs to rejoin the re-crawl to its stored original
+    without inflating any body bytes. The digest value decodes from hex
+    or Base32 (normalized to hex; non-sha256 labels surface NULL); a
+    malformed known-label value RAISES — same 'garbled is a defect, not
+    license to skip' contract as the block and response-payload digest
+    checks; the digest is dedup's join key, and a silently-NULL garbled
+    key would drop the re-crawl observation without a trace."""
+    declared = _declared_payload_digest(wh, path, d)
+    digest = (declared[1].hex()
+              if declared is not None and declared[0] == "sha256" else None)
+    return (d, "revisit", u,
+            wh.get(b"warc-refers-to-target-uri", b"").decode() or None,
+            digest)
+
+
+def _resolution_rows(records, path: str):
+    """``resolution`` plane — BOTH sides of revisit resolution from ONE
+    walk: (doc_id, wtype, target_uri, refers_to_uri, payload_sha256)
+    where ``wtype`` is 'response' or 'revisit'. r15's revisit-dedup
+    query ran a revisit reader AND the metadata reader — two full
     gzip+WARC walks of every shard per execution — to partition a
     record stream one walk already sees whole (guide §4: collapse
-    chained/parallel Python stages). Semantics are the exact union of
-    the two readers: response rows pass through the same segment-
-    reassembly walk, strict HTTP parse and labelled-digest verdict the
-    metadata reader runs (any framing defect raises identically), and
-    revisit rows run the same :func:`_revisit_row` extraction off the
-    raw record stream (malformed known-label digests raise). Map-only,
-    one task per shard, O(member) memory."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("wtype", StringType(), True),
-            StructField("target_uri", StringType(), True),
-            StructField("refers_to_uri", StringType(), True),
-            StructField("payload_sha256", StringType(), True),
-        ]
-    )
-    files = _shard_paths_df(spark, path_glob)
-    cols = ["doc_id", "wtype", "target_uri", "refers_to_uri",
-            "payload_sha256"]
+    chained/parallel Python stages). Response rows pass through the
+    same segment-reassembly walk, strict HTTP parse and labelled-digest
+    verdict the meta plane runs (any framing defect raises
+    identically); revisit rows are captured OFF the raw record stream
+    (the response walk skips them) by :func:`_revisit_row` and follow
+    the shard's response rows — bounded, the reference plane is a
+    sliver of the response plane."""
+    revisits: list[tuple] = []
 
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path in pdf["path"]:
-                rows = []
-                # revisit rows captured OFF the raw record stream (the
-                # response walk skips them), exactly as
-                # _scan_typed_records would extract them; bounded — the
-                # reference plane is a sliver of the response plane
-                side: list[tuple] = []
+    def _tap():
+        for rec in records:
+            wh = rec[4]
+            if wh.get(b"warc-type", b"").strip().lower() == b"revisit":
+                revisits.append(_revisit_row(rec[0], rec[1], wh, path))
+            yield rec
 
-                def _records(path=path, side=side):
-                    with open(path, "rb") as f:
-                        for member in iter_gzip_members_stream(f, path):
-                            for rec in decode_warc_bytes(
-                                    member, path, with_headers=True):
-                                wh = rec[4]
-                                if (wh.get(b"warc-type", b"")
-                                        .strip().lower() == b"revisit"):
-                                    ref_uri, _rid, dig, _prof = \
-                                        _revisit_row(wh, path, rec[0])
-                                    side.append((rec[0], "revisit",
-                                                 rec[1], ref_uri, dig))
-                                yield rec
-
-                for d, u, _n, block, wh in _walk_response_records(
-                        _records(), path):
-                    st, hh, body, _k = parse_http_response_ex(block, path)
-                    digest, _verified = _payload_digest_verdict(
-                        wh, body, path, d)
-                    rows.append((d, "response", u, None, digest))
-                    if len(rows) >= _SCAN_BATCH_ROWS:
-                        yield pd.DataFrame(rows, columns=cols)
-                        rows = []
-                rows.extend(side)
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(_dec, schema)
+    for d, u, wh, _st, _hh, body, _k in _http_responses(_tap(), path):
+        digest, _verified = _payload_digest_verdict(wh, body, path, d)
+        yield d, "response", u, None, digest
+    yield from revisits
 
 
-def _revisit_resolution_rows(payload: bytes, where: str):
-    """The fused walk of :func:`read_warc_revisit_resolution` over ONE
-    shard's bytes — shared by the Spark reader's task body and the fuzz
-    wrapper so the soak exercises the exact code the reader runs."""
-    side: list[tuple] = []
-
-    def _records():
-        for member in split_gzip_members(payload, where):
-            for rec in decode_warc_bytes(member, where, with_headers=True):
-                wh = rec[4]
-                if (wh.get(b"warc-type", b"")
-                        .strip().lower() == b"revisit"):
-                    ref_uri, _rid, dig, _prof = _revisit_row(
-                        wh, where, rec[0])
-                    side.append((rec[0], "revisit", rec[1], ref_uri, dig))
-                yield rec
-
-    rows = []
-    for d, u, _n, block, wh in _walk_response_records(_records(), where):
-        st, hh, body, _k = parse_http_response_ex(block, where)
-        digest, _verified = _payload_digest_verdict(wh, body, where, d)
-        rows.append((d, "response", u, None, digest))
-    return rows + side
+# plane name → (DDL schema, row function over one shard's record walk)
+_PLANES = {
+    "response": (
+        "doc_id long, target_uri string, http_status long, "
+        "n_chunks long, content_length long, text string",
+        _response_rows),
+    "meta": (
+        "doc_id long, target_uri string, http_status long, "
+        "content_length long, charset string, text string, "
+        "payload_sha256 string, digest_verified boolean",
+        _meta_rows),
+    "request": (
+        "doc_id long, target_uri string, method string, "
+        "request_target string, http_version string, user_agent string, "
+        "body_len long, n_chunks long, concurrent_to string",
+        _request_rows),
+    "resolution": (
+        "doc_id long, wtype string, target_uri string, "
+        "refers_to_uri string, payload_sha256 string",
+        _resolution_rows),
+}
 
 
-def try_scan_warc_revisit_resolution(payload: bytes):
-    """Fuzz-contract wrapper over the fused revisit-resolution walk:
-    the union rows, or None on any framing defect — never raises."""
+def _plane(name: str):
+    """(DDL schema, row function) of a plane; an unknown name raises."""
+    if name not in _PLANES:
+        raise ValueError(
+            f"unknown .warc.gz plane {name!r} (one of {sorted(_PLANES)})")
+    return _PLANES[name]
+
+
+def try_scan_warc_gz(payload: bytes, plane: str = "response"):
+    """Fuzz-contract wrapper over one plane of the .warc.gz read: the
+    rows :func:`read_warc_gz` emits for a shard holding ``payload``
+    (same record walk, same row function), or None on any defect —
+    never raises (UnicodeDecodeError subclasses ValueError). The SOURCE
+    path deliberately raises instead: an ingest failure must be
+    attributable, whereas the fuzz contract is reject-never-crash. The
+    key contract of the ``meta`` plane under digest-value mutation: a
+    flipped declared digest must surface as None (malformed) or a
+    ``digest_verified is False`` row — NEVER as a silently-True
+    verdict."""
+    rows_of = _plane(plane)[1]
     try:
-        return _revisit_resolution_rows(payload, "<bytes>")
+        return list(rows_of(_shard_records(io.BytesIO(payload), "<bytes>"),
+                            "<bytes>"))
     except ValueError:
         return None
 
 
-def _scan_typed_records(spark: SparkSession, path_glob: str,
-                        wtype: bytes, row_fn, schema, cols) -> DataFrame:
-    """The typed-plane scan both the revisit and the request readers
-    are: shard-path listing → streaming member walk (O(member) memory,
-    shard-size-independent) → keep records of ONE WARC-Type → one
-    ``row_fn`` row each, flowing out in bounded Arrow batches. Factored
-    so a fix to the shared walk (batching, path handling) lands in one
-    place — the same same-side-drift argument as the HTTP framing
-    helpers."""
-    files = _shard_paths_df(spark, path_glob)
+def _plane_scan(files: DataFrame, plane: str) -> DataFrame:
+    """The ONE batching loop every .warc.gz Spark read runs: ``files``
+    carries one ``path`` per shard (a local path or a ``file:`` URI,
+    see :func:`_local_path_of`); each task opens its shards, STREAMS
+    them through :func:`_shard_records` and the plane's row function,
+    and emits the rows in Arrow batches of at most
+    :data:`_SCAN_BATCH_ROWS`. Map-only, per-task memory O(member)."""
+    ddl, rows_of = _plane(plane)
+    cols = [c.split()[0] for c in ddl.split(",")]
 
     def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for path in pdf["path"]:
+            for uri in pdf["path"]:
+                path = _local_path_of(uri)
                 rows = []
                 with open(path, "rb") as f:
-                    for member in iter_gzip_members_stream(f, path):
-                        for d, u, _n, block, wh in decode_warc_bytes(
-                                member, path, with_headers=True):
-                            if (wh.get(b"warc-type", b"")
-                                    .strip().lower() != wtype):
-                                continue
-                            rows.append(row_fn(d, u, block, wh, path))
-                            if len(rows) >= _SCAN_BATCH_ROWS:
-                                yield pd.DataFrame(rows, columns=cols)
-                                rows = []
+                    for row in rows_of(_shard_records(f, path), path):
+                        rows.append(row)
+                        if len(rows) >= _SCAN_BATCH_ROWS:
+                            yield pd.DataFrame(rows, columns=cols)
+                            rows = []
                 if rows:
                     yield pd.DataFrame(rows, columns=cols)
 
-    return files.mapInPandas(_dec, schema)
+    return files.select("path").mapInPandas(_dec, ddl)
 
 
-def read_warc_requests(spark: SparkSession, path_glob: str) -> DataFrame:
-    """Scan .warc.gz shards for ``request`` records — the client half
-    of each capture (ISO 28500 §6.4), the plane crawl forensics and
-    politeness audits read: what was ASKED for, by which agent, with
-    which method and body. One row per request: (doc_id, target_uri,
-    method, request_target, http_version, user_agent, body_len,
-    n_chunks, concurrent_to) via the strict request-side parse
-    (:func:`parse_http_request_ex` — request-line token checks, both
-    body framings plus the bodyless no-framing form, verified chunked
-    trailers); ``concurrent_to`` is the stored response's record id,
-    so joining the two planes is id-exact, not URI-heuristic.
-    Malformed client messages raise with the shard path. Map-only,
-    one task per shard, streaming member walk (per-task memory
-    O(member)); the response/revisit/meta readers SKIP request
-    records, so the scans partition the record stream cleanly."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("target_uri", StringType(), True),
-            StructField("method", StringType(), True),
-            StructField("request_target", StringType(), True),
-            StructField("http_version", StringType(), True),
-            StructField("user_agent", StringType(), True),
-            StructField("body_len", LongType(), True),
-            StructField("n_chunks", LongType(), True),
-            StructField("concurrent_to", StringType(), True),
-        ]
-    )
-    cols = ["doc_id", "target_uri", "method", "request_target",
-            "http_version", "user_agent", "body_len", "n_chunks",
-            "concurrent_to"]
-    return _scan_typed_records(spark, path_glob, b"request",
-                               _request_record_row, schema, cols)
+def read_warc_gz(spark: SparkSession, path_glob: str,
+                 plane: str = "response") -> DataFrame:
+    """Shard-path scan → STREAMING gzip member walk → WARC record walk
+    (segment reassembly included) → one row per record of ``plane``:
+
+    * ``response`` (default) — (doc_id, target_uri, http_status,
+      n_chunks, content_length, text), :func:`_response_rows`;
+    * ``meta`` — adds the declared charset and the labelled
+      payload-digest verdict, :func:`_meta_rows`;
+    * ``request`` — the client half of each capture,
+      :func:`_request_rows`;
+    * ``resolution`` — response digests plus revisit references from
+      one walk, :func:`_resolution_rows`.
+
+    Map-only, one task per shard, per-task memory O(member),
+    shard-size-INDEPENDENT (see :func:`_shard_paths_df` for why
+    binaryFile is not used); rows flow out in bounded Arrow batches."""
+    return _plane_scan(_shard_paths_df(spark, path_glob), plane)
 
 
 def _local_path_of(uri: str) -> str:
@@ -2140,11 +1840,9 @@ def write_wat_sidecar(spark: SparkSession, warc_dir: str) -> None:
                 local = _local_path_of(path)
                 out = local[: -len(".warc.gz")] + ".wat.jsonl"
                 n = 0
-                with open(out, "w") as sink:
-                    for d, u, _n, block, _wh in _iter_file_responses(
-                            path):
-                        st, hh, body, _k = parse_http_response_ex(
-                            block, path)
+                with open(local, "rb") as f, open(out, "w") as sink:
+                    for d, u, _wh, st, hh, body, _k in _http_responses(
+                            _shard_records(f, local), local):
                         text = _entity_text(body, hh)
                         meta = {
                             "doc_id": d,
@@ -2207,23 +1905,14 @@ def read_warc_gz_stream(spark: SparkSession, path_glob: str,
     projected, so column pruning keeps shard CONTENT out of the JVM
     entirely (binaryFile reads the bytes only when ``content`` is in
     the required schema); the Python workers then stream each landed
-    shard through :func:`_iter_file_responses`, the same O(member +
-    chunk) walker the batch readers use. Before r14 this tail
+    shard through the batch readers' own plane loop
+    (:func:`_plane_scan`, the ``response`` plane), the same O(member +
+    chunk) walker. Before r14 this tail
     materialized whole shards JVM-side via the ``content`` column —
     the exact form the r13 8M-doc rehearsal proved OOMs an 8 GiB heap
     at 452 MB shards; a fat shard arriving on the LANDING path was the
     same OOM waiting. Per-task memory is now shard-size-independent on
     both paths. Local-filesystem contract as :func:`_shard_paths_df`."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("target_uri", StringType(), True),
-            StructField("http_status", LongType(), True),
-            StructField("n_chunks", LongType(), True),
-            StructField("content_length", LongType(), True),
-            StructField("text", StringType(), True),
-        ]
-    )
     files = (
         spark.readStream.format("binaryFile")
         .schema("path string, modificationTime timestamp, "
@@ -2231,26 +1920,7 @@ def read_warc_gz_stream(spark: SparkSession, path_glob: str,
         .options(**source_options)
         .load(path_glob)
     )
-    cols = ["doc_id", "target_uri", "http_status",
-            "n_chunks", "content_length", "text"]
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for uri in pdf["path"]:
-                local = _local_path_of(uri)
-                rows = []
-                for d, u, _n, block, _wh in _iter_file_responses(local):
-                    st, hh, body, k = parse_http_response_ex(
-                        block, local)
-                    rows.append((d, u, st, k, len(body),
-                                 _entity_text(body, hh)))
-                    if len(rows) >= _SCAN_BATCH_ROWS:
-                        yield pd.DataFrame(rows, columns=cols)
-                        rows = []
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
-
-    return files.select("path").mapInPandas(_dec, schema)
+    return _plane_scan(files, "response")
 
 
 def write_warc_dataset(df: DataFrame, out_dir: str, n_files: int = 4) -> None:
@@ -2294,7 +1964,8 @@ def read_warc(spark: SparkSession, path_glob: str) -> DataFrame:
     def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for path, content in zip(pdf["path"], pdf["content"]):
-                recs = _iter_response_records(bytes(content), path)
+                recs = _walk_response_records(decode_warc_bytes(
+                    bytes(content), path, with_headers=True), path)
                 yield pd.DataFrame(
                     [(d, u, n, body.decode("utf-8"))
                      for d, u, n, body, _wh in recs],

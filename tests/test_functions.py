@@ -137,6 +137,36 @@ def test_ngram_postings_expansion_matches_self_join(spark, docs):
     assert got == ref and len(got) > 0
 
 
+def test_ngram_jaccard_duplicated_doc_id_has_no_self_pairs(spark):
+    """A corpus holding a doc_id twice puts that id twice in a sorted
+    postings list; the in-row pair expansion must not turn it into a
+    doc_a == doc_b self-pair — the rows equal the DuckDB twin's
+    a.doc_id < b.doc_id self-join exactly (ADVICE r16)."""
+    import duckdb
+    import pandas as pd
+
+    base = " ".join(f"word{i}" for i in range(30))
+    rows = [
+        (1, base),
+        (1, base),  # the duplicated doc_id
+        (2, base + " tail extra"),
+        (3, "nothing shared with the others at all here"),
+    ]
+    got = sorted(
+        tuple(r) for r in dedup.ngram_jaccard_pairs(
+            spark.createDataFrame(rows, "doc_id long, text string")
+        ).collect()
+    )
+    assert got and all(a < b for a, b, _j in got)
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    want = sorted(
+        tuple(r) for r in con.execute(
+            dedup.ngram_jaccard_pairs_oracle()).fetchall()
+    )
+    assert got == want
+
+
 def test_exact_dedup_partitions_corpus(spark, docs):
     total = docs.count()
     dd = dedup.exact_dedup(docs)

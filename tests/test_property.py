@@ -332,6 +332,8 @@ from sql_query_engine_spark.functions.html import (  # noqa: E402
     try_extract_html,
 )
 from sql_query_engine_spark.sources.warc import (  # noqa: E402
+    _PLANES as _WARC_PLANES,
+    build_http_request,
     build_http_response,
     build_warc_record,
     gzip_member,
@@ -340,28 +342,57 @@ from sql_query_engine_spark.sources.warc import (  # noqa: E402
 
 
 def _ingest_payloads():
+    """(payload, planes the unmutated payload must yield rows on): an
+    HTML page (no WARC plane), a lone response member (response +
+    meta + resolution), a request+response pair (request plane) and a
+    response+revisit pair (the revisit side of the resolution
+    plane)."""
     import hashlib
 
     outs = []
     for d in (0, 3, 7):
         t = f"prop & <doc> {d} — ünïcode ☃"
-        outs.append(build_html_page(d, t).encode())
+        outs.append((build_html_page(d, t).encode(), ()))
         ent = t.encode()
+        digest = hashlib.sha256(ent).hexdigest()
+        http = build_http_response(ent, d)
         rec = build_warc_record(
-            d, payload=build_http_response(ent, d),
+            d, payload=http,
             content_type=b"application/http;msgtype=response",
-            payload_digest=hashlib.sha256(ent).hexdigest())
-        outs.append(gzip_member(rec, fname=b"r.warc", fhcrc=d % 2 == 0))
+            payload_digest=digest)
+        outs.append((gzip_member(rec, fname=b"r.warc", fhcrc=d % 2 == 0),
+                     ("response", "meta", "resolution")))
+        req = build_warc_record(
+            d, payload=build_http_request(d),  # d=0: chunked POST
+            warc_type=b"request",
+            content_type=b"application/http;msgtype=request",
+            extra_headers=[(b"WARC-Concurrent-To", b"<urn:x>")])
+        outs.append((gzip_member(req) + gzip_member(rec), ("request",)))
+        rev = build_warc_record(
+            d, payload=http[: http.find(b"\r\n\r\n") + 4],
+            warc_type=b"revisit",
+            content_type=b"application/http;msgtype=response",
+            payload_digest=digest,
+            target_uri=f"http://mirror.example.com/doc/{d}".encode(),
+            extra_headers=[(b"WARC-Refers-To-Target-URI",
+                            f"http://example.com/doc/{d}".encode())])
+        outs.append((gzip_member(rec) + gzip_member(rev),
+                     ("resolution",)))
     return outs
 
 
-_INGEST_VALID = _ingest_payloads()
+_INGEST_SEEDS = _ingest_payloads()
+_INGEST_VALID = [p for p, _planes in _INGEST_SEEDS]
 # the seeds themselves must exercise the SUCCESS path (r12: the old
 # placeholder-splice seeds failed the new block-digest check, so the
-# property test silently stopped covering successful decodes)
-assert all(
-    try_scan_warc_gz(p) for p in _INGEST_VALID[1::2]
-), "unmutated WARC seeds must decode"
+# property test silently stopped covering successful decodes) — on
+# every plane each seed is built for
+for _p, _planes in _INGEST_SEEDS:
+    for _plane in _planes:
+        assert try_scan_warc_gz(_p, _plane), \
+            f"unmutated WARC seed must decode on the {_plane} plane"
+assert any(r[1] == "revisit"
+           for r in try_scan_warc_gz(_INGEST_VALID[3], "resolution"))
 
 
 @settings(max_examples=200, deadline=None)
@@ -375,17 +406,19 @@ assert all(
     ),
 )
 def test_ingest_decoders_never_raise_on_mutations(base, cut, flips):
-    """HTML tokenizer and the gzip→WARC→HTTP scan under the crawl
-    adversarial model (truncation + byte flips): reject-to-None or
-    decode, never raise."""
+    """HTML tokenizer and the gzip→WARC→HTTP scan, on every .warc.gz
+    plane, under the crawl adversarial model (truncation + byte flips):
+    reject-to-None or decode, never raise."""
     buf = bytearray(_INGEST_VALID[base][:cut] if cut else _INGEST_VALID[base])
     for pos, xor in flips:
         if buf:
             buf[pos % len(buf)] ^= xor
     payload = bytes(buf)
-    for dec in (try_extract_html, try_scan_warc_gz):
-        out = dec(payload)
-        assert out is None or isinstance(out, (list, dict))
+    out = try_extract_html(payload)
+    assert out is None or isinstance(out, dict)
+    for plane in _WARC_PLANES:
+        out = try_scan_warc_gz(payload, plane)
+        assert out is None or isinstance(out, list)
 
 
 @settings(max_examples=60, deadline=None)
@@ -397,25 +430,44 @@ def test_ingest_decoders_never_raise_on_mutations(base, cut, flips):
     chunk=st.sampled_from([1, 3, 17, 256, 1 << 16]),
 )
 def test_gzip_stream_walker_equals_buffer_walker(payloads, flags, chunk):
-    """The streaming multi-member walker (the O(member)-memory 100 TB
-    scan path) must be a pure refactoring of the buffer walker: for
-    ANY member payloads, FNAME/FHCRC flag combination, and read-chunk
-    size, both produce identical member lists — and stdlib gzip agrees
-    on the concatenated inflate (RFC 1952 multi-member semantics)."""
+    """The multi-member walker (the O(member)-memory 100 TB scan path,
+    and the only gzip walker) must not depend on how the stream is
+    read: for ANY member payloads, FNAME/FHCRC flag combination, and
+    read-chunk size, it returns exactly the builder's payloads, the
+    same list a whole-buffer read gives — and stdlib gzip agrees on
+    the concatenated inflate (RFC 1952 multi-member semantics)."""
     import gzip
     import io
 
     from sql_query_engine_spark.sources.warc import (
         gzip_member,
         iter_gzip_members_stream,
-        split_gzip_members,
     )
 
     stream = b"".join(
         gzip_member(p, fname=b"f.warc" if fn else None, fhcrc=fh)
         for p, (fn, fh) in zip(payloads, flags))
-    want = split_gzip_members(stream, "<buf>")
     got = list(iter_gzip_members_stream(io.BytesIO(stream), "<s>",
                                         chunk=chunk))
-    assert got == want == payloads
+    whole = list(iter_gzip_members_stream(io.BytesIO(stream), "<s>",
+                                          chunk=len(stream) + 1))
+    assert got == whole == payloads
     assert gzip.decompress(stream) == b"".join(payloads)
+
+
+def test_fuzz_soak_runs_clean():
+    """tools/fuzz_soak.py (every decoder, every .warc.gz plane, the
+    gzip-seam, digest-flip and chain-extent passes) exits 0 on a short
+    fixed-seed run — so a renamed or broken wrapper fails here, not
+    only in a long soak nobody runs."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, os.path.join(root, "tools", "fuzz_soak.py"),
+         "1000", "1"],
+        capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-2000:]
+    assert "0 crashes" in proc.stdout.splitlines()[-1]

@@ -702,6 +702,29 @@ def test_warc_roundtrip_and_framing_defects(spark, tmp_path):
     ]
 
 
+def _gz_members(b, path="<bytes>", chunk=256 * 1024):
+    """Every member of a byte buffer, through the one streaming walker."""
+    import io
+
+    from sql_query_engine_spark.sources.warc import iter_gzip_members_stream
+
+    return list(iter_gzip_members_stream(io.BytesIO(b), path, chunk=chunk))
+
+
+def _gz_responses(b, path="<bytes>"):
+    """The file-scope response walk (segment reassembly included) of a
+    .warc.gz byte buffer: the record walk every reader runs."""
+    import io
+
+    from sql_query_engine_spark.sources.warc import (
+        _shard_records,
+        _walk_response_records,
+    )
+
+    return list(_walk_response_records(
+        _shard_records(io.BytesIO(b), path), path))
+
+
 def test_gzip_member_walk_and_foreign_twins():
     """Multi-member gzip: roundtrip across flag combinations, BOTH
     foreign-twin directions against the stdlib writer/reader, and one
@@ -711,18 +734,15 @@ def test_gzip_member_walk_and_foreign_twins():
 
     import pytest as _pytest
 
-    from sql_query_engine_spark.sources.warc import (
-        gzip_member,
-        split_gzip_members,
-    )
+    from sql_query_engine_spark.sources.warc import gzip_member
 
     p1, p2, p3 = b"hello world" * 10, b"", bytes(range(256)) * 5
     stream = (gzip_member(p1) + gzip_member(p2, fname=b"a.txt")
               + gzip_member(p3, fname=b"b", fhcrc=True))
-    assert split_gzip_members(stream) == [p1, p2, p3]
+    assert _gz_members(stream) == [p1, p2, p3]
     # foreign twins: stdlib-written member parses; our member inflates
     # with the stdlib reader (which also concatenates multi-member)
-    assert split_gzip_members(stdgzip.compress(p1, mtime=0)) == [p1]
+    assert _gz_members(stdgzip.compress(p1, mtime=0)) == [p1]
     assert stdgzip.decompress(gzip_member(p3)) == p3
     assert stdgzip.decompress(stream) == p1 + p2 + p3
 
@@ -742,7 +762,7 @@ def test_gzip_member_walk_and_foreign_twins():
     cases["header crc16 flip"] = fh[:10] + bytes([fh[10] ^ 1]) + fh[11:]
     for tag, b in cases.items():
         with _pytest.raises(ValueError):
-            split_gzip_members(b), tag
+            _gz_members(b), tag
 
 
 def test_http_response_framing():
@@ -887,7 +907,7 @@ def test_warc_digests_and_trailers(spark, tmp_path):
         decode_warc_bytes,
         gzip_member,
         parse_http_response,
-        read_warc_gz_meta,
+        read_warc_gz,
         write_warc_gz_dataset,
     )
 
@@ -896,7 +916,7 @@ def test_warc_digests_and_trailers(spark, tmp_path):
     out = str(tmp_path / "warc_digests")
     write_warc_gz_dataset(df, out, n_files=2)
     rows = {r.doc_id: r for r in
-            read_warc_gz_meta(spark, f"{out}/*.warc.gz").collect()}
+            read_warc_gz(spark, f"{out}/*.warc.gz", plane="meta").collect()}
     assert set(rows) == {d for d, _ in docs}
     for d, t in docs:
         r = rows[d]
@@ -949,7 +969,8 @@ def test_warc_digests_and_trailers(spark, tmp_path):
     bad_dir = tmp_path / "warc_badpd"
     bad_dir.mkdir()
     (bad_dir / "b.warc.gz").write_bytes(gzip_member(rec))
-    (bad,) = read_warc_gz_meta(spark, str(bad_dir) + "/*.warc.gz").collect()
+    (bad,) = read_warc_gz(
+        spark, str(bad_dir) + "/*.warc.gz", plane="meta").collect()
     assert bad.digest_verified is False
     assert bad.payload_sha256 == hashlib.sha256(b"other bytes").hexdigest()
     assert bad.text == entity.decode()  # row data intact, only the verdict
@@ -966,7 +987,8 @@ def test_warc_digests_and_trailers(spark, tmp_path):
     mal_dir.mkdir()
     (mal_dir / "m.warc.gz").write_bytes(gzip_member(garbled))
     with _pytest.raises(Exception, match="malformed WARC-Payload-Digest"):
-        read_warc_gz_meta(spark, str(mal_dir) + "/*.warc.gz").collect()
+        read_warc_gz(
+            spark, str(mal_dir) + "/*.warc.gz", plane="meta").collect()
 
 
 def test_warc_base32_digests(spark, tmp_path):
@@ -985,7 +1007,7 @@ def test_warc_base32_digests(spark, tmp_path):
         build_warc_record,
         decode_warc_bytes,
         gzip_member,
-        read_warc_gz_meta,
+        read_warc_gz,
     )
 
     # hand-build a record with a Common-Crawl-style Base32 sha1 block
@@ -1027,7 +1049,8 @@ def test_warc_base32_digests(spark, tmp_path):
     d = tmp_path / "warc_b32pd"
     d.mkdir()
     (d / "p.warc.gz").write_bytes(gzip_member(rec2))
-    (row,) = read_warc_gz_meta(spark, str(d) + "/*.warc.gz").collect()
+    (row,) = read_warc_gz(
+        spark, str(d) + "/*.warc.gz", plane="meta").collect()
     assert row.digest_verified is True
     assert row.payload_sha256 is None
 
@@ -1035,16 +1058,15 @@ def test_warc_base32_digests(spark, tmp_path):
 def test_warc_revisit_records(spark, tmp_path):
     """revisits=True: every 10th doc's response is followed by a
     body-less revisit record (identical-payload-digest profile). The
-    revisit reader surfaces the reference triplet; the response
-    readers skip revisits entirely; CDX offsets stay exact with the
-    un-indexed revisit members interleaved."""
+    resolution plane surfaces each revisit's reference and digest; the
+    response readers skip revisits entirely; CDX offsets stay exact
+    with the un-indexed revisit members interleaved."""
     import hashlib
 
     from sql_query_engine_spark.sources.warc import (
         fetch_warc_members,
         read_cdx,
         read_warc_gz,
-        read_warc_revisits,
         write_warc_gz_dataset,
     )
 
@@ -1054,7 +1076,8 @@ def test_warc_revisit_records(spark, tmp_path):
     write_warc_gz_dataset(df, out, n_files=2, revisits=True)
 
     revs = {r.doc_id: r for r in
-            read_warc_revisits(spark, f"{out}/*.warc.gz").collect()}
+            read_warc_gz(spark, f"{out}/*.warc.gz", plane="resolution")
+            .filter("wtype = 'revisit'").collect()}
     assert set(revs) == {10, 20}
     for d, t in docs:
         if d not in revs:
@@ -1062,10 +1085,8 @@ def test_warc_revisit_records(spark, tmp_path):
         r = revs[d]
         assert r.target_uri == f"http://mirror.example.com/doc/{d}"
         assert r.refers_to_uri == f"http://example.com/doc/{d}"
-        assert r.refers_to_id.endswith(f"{d:012d}>")
         assert r.payload_sha256 == hashlib.sha256(
             t.encode("utf-8")).hexdigest()
-        assert r.profile.endswith("identical-payload-digest")
 
     # the response walk sees exactly the 20 responses, no revisits
     got = read_warc_gz(spark, f"{out}/*.warc.gz")
@@ -1079,14 +1100,14 @@ def test_warc_revisit_records(spark, tmp_path):
 
 
 def test_warc_revisit_resolution_fused_walk(spark, tmp_path):
-    """The r16 fused revisit-resolution reader must emit exactly the
-    union of what read_warc_revisits and read_warc_gz_meta's digest
-    plane see: same revisit rows, same response (uri, declared-digest)
-    rows, from ONE walk."""
+    """The r16 fused resolution plane must emit exactly the union of
+    the revisit references the writer planted and what the meta
+    plane's digest column sees: same revisit rows, same response (uri,
+    declared-digest) rows, from ONE walk."""
+    import hashlib
+
     from sql_query_engine_spark.sources.warc import (
-        read_warc_gz_meta,
-        read_warc_revisit_resolution,
-        read_warc_revisits,
+        read_warc_gz,
         write_warc_gz_dataset,
     )
 
@@ -1095,14 +1116,16 @@ def test_warc_revisit_resolution_fused_walk(spark, tmp_path):
     out = str(tmp_path / "warc_fused_revisits")
     write_warc_gz_dataset(df, out, n_files=2, revisits=True)
 
-    fused = read_warc_revisit_resolution(spark, f"{out}/*.warc.gz")
+    fused = read_warc_gz(spark, f"{out}/*.warc.gz", plane="resolution")
     got_rev = sorted(
         (r.doc_id, r.target_uri, r.refers_to_uri, r.payload_sha256)
         for r in fused.filter("wtype = 'revisit'").collect()
     )
     want_rev = sorted(
-        (r.doc_id, r.target_uri, r.refers_to_uri, r.payload_sha256)
-        for r in read_warc_revisits(spark, f"{out}/*.warc.gz").collect()
+        (d, f"http://mirror.example.com/doc/{d}",
+         f"http://example.com/doc/{d}",
+         hashlib.sha256(t.encode("utf-8")).hexdigest())
+        for d, t in docs if d % 10 == 0
     )
     assert got_rev == want_rev and len(got_rev) == 3
 
@@ -1112,7 +1135,8 @@ def test_warc_revisit_resolution_fused_walk(spark, tmp_path):
     )
     want_resp = sorted(
         (r.doc_id, r.target_uri, r.payload_sha256)
-        for r in read_warc_gz_meta(spark, f"{out}/*.warc.gz").collect()
+        for r in read_warc_gz(
+            spark, f"{out}/*.warc.gz", plane="meta").collect()
     )
     assert got_resp == want_resp and len(got_resp) == 30
 
@@ -1129,11 +1153,8 @@ def test_warc_segment_reassembly(spark, tmp_path):
     from sql_query_engine_spark.sources.warc import (
         read_cdx,
         read_warc_gz,
-        read_warc_gz_meta,
-        split_gzip_members,
         write_warc_gz_dataset,
         gzip_member,
-        _iter_gz_responses,
     )
 
     docs = [(d, f"segmented doc {d} — body {'x' * d}") for d in range(1, 13)]
@@ -1147,7 +1168,7 @@ def test_warc_segment_reassembly(spark, tmp_path):
     for d, t in docs:
         assert rows[d].text == t, f"doc {d} text mangled by reassembly"
     meta = {r.doc_id: r for r in
-            read_warc_gz_meta(spark, f"{out}/*.warc.gz").collect()}
+            read_warc_gz(spark, f"{out}/*.warc.gz", plane="meta").collect()}
     for d in (4, 8, 12):
         assert meta[d].digest_verified is True
 
@@ -1177,34 +1198,34 @@ def test_warc_segment_reassembly(spark, tmp_path):
     members = _segment_members(
         6, http, orig, hashlib.sha256(ent).hexdigest())
     ok = b"".join(members)
-    got = list(_iter_gz_responses(ok, "<ok>"))
+    got = _gz_responses(ok, "<ok>")
     assert len(got) == 1 and got[0][3] == http
 
     # stream ends mid-chain → truncated
     with _pytest.raises(ValueError, match="ends inside segmented"):
-        list(_iter_gz_responses(b"".join(members[:2]), "<trunc>"))
+        _gz_responses(b"".join(members[:2]), "<trunc>")
     # a continuation with no open segment
     with _pytest.raises(ValueError, match="without an open"):
-        list(_iter_gz_responses(members[1] + members[2], "<orphan>"))
+        _gz_responses(members[1] + members[2], "<orphan>")
     # out-of-order: segments 1,3 (2 missing)
     with _pytest.raises(ValueError, match="out of order"):
-        list(_iter_gz_responses(members[0] + members[2], "<gap>"))
+        _gz_responses(members[0] + members[2], "<gap>")
     # interleaving record inside an open chain
     from sql_query_engine_spark.sources.warc import build_warc_record
 
     plain = gzip_member(build_warc_record(7, "interloper"))
     with _pytest.raises(ValueError, match="interleaves"):
-        list(_iter_gz_responses(
-            members[0] + plain + members[1] + members[2], "<mix>"))
+        _gz_responses(
+            members[0] + plain + members[1] + members[2], "<mix>")
     # total-length lie: shave a byte off the last segment's declaration
-    bad_last = split_gzip_members(members[2], "<m>")[0]
+    bad_last = _gz_members(members[2], "<m>")[0]
     lied = bad_last.replace(
         b"WARC-Segment-Total-Length: " + str(len(http)).encode(),
         b"WARC-Segment-Total-Length: " + str(len(http) - 1).encode())
     assert lied != bad_last
     with _pytest.raises(ValueError, match="Total-Length"):
-        list(_iter_gz_responses(
-            members[0] + members[1] + gzip_member(lied), "<lie>"))
+        _gz_responses(
+            members[0] + members[1] + gzip_member(lied), "<lie>")
 
 
 def test_warc_charset_east_asian(spark, tmp_path):
@@ -1214,7 +1235,7 @@ def test_warc_charset_east_asian(spark, tmp_path):
     bytes genuinely differ from UTF-8 (multi-byte legacy encodings,
     not relabeled ASCII)."""
     from sql_query_engine_spark.sources.warc import (
-        read_warc_gz_meta,
+        read_warc_gz,
         write_warc_gz_dataset,
     )
 
@@ -1223,7 +1244,7 @@ def test_warc_charset_east_asian(spark, tmp_path):
     out = str(tmp_path / "warc_ea")
     write_warc_gz_dataset(df, out, n_files=1, charsets="east-asian")
     rows = {r.doc_id: r for r in
-            read_warc_gz_meta(spark, f"{out}/*.warc.gz").collect()}
+            read_warc_gz(spark, f"{out}/*.warc.gz", plane="meta").collect()}
     assert set(rows) == {d for d, _ in docs}
     import re
 
@@ -1256,7 +1277,7 @@ def test_warc_charset_mislabel(spark, tmp_path):
     framing/integrity column stays intact (the mislabeled page is
     data to quarantine, not a scan abort)."""
     from sql_query_engine_spark.sources.warc import (
-        read_warc_gz_meta,
+        read_warc_gz,
         write_warc_gz_dataset,
     )
 
@@ -1265,7 +1286,7 @@ def test_warc_charset_mislabel(spark, tmp_path):
     out = str(tmp_path / "warc_mislabels")
     write_warc_gz_dataset(df, out, n_files=1, mislabel=True)
     rows = {r.doc_id: r for r in
-            read_warc_gz_meta(spark, f"{out}/*.warc.gz").collect()}
+            read_warc_gz(spark, f"{out}/*.warc.gz", plane="meta").collect()}
     assert set(rows) == {d for d, _ in docs}
     for d, t in docs:
         r = rows[d]
@@ -1279,11 +1300,14 @@ def test_warc_charset_mislabel(spark, tmp_path):
 
 
 def test_gzip_member_stream_walk_equivalence(tmp_path):
-    """iter_gzip_members_stream must produce byte-identical members to
-    the whole-buffer walker at ANY read-chunk size (including sizes
-    that split every header field, the DEFLATE body, and the trailer
-    across reads), and reject the same defect classes — it is the
-    memory contract of the 100 TB scan path, not a second decoder."""
+    """iter_gzip_members_stream must produce exactly the builder's
+    member payloads at ANY read-chunk size (including sizes that split
+    every header field, the DEFLATE body, and the trailer across
+    reads) — stdlib gzip agreeing on the concatenated inflate — and
+    reject every defect class at any chunk size: results must not
+    depend on how the stream is read (the memory contract of the
+    100 TB scan path)."""
+    import gzip as stdgzip
     import io
 
     import pytest as _pytest
@@ -1291,7 +1315,6 @@ def test_gzip_member_stream_walk_equivalence(tmp_path):
     from sql_query_engine_spark.sources.warc import (
         gzip_member,
         iter_gzip_members_stream,
-        split_gzip_members,
     )
 
     payloads = [b"alpha", "strö☃m two".encode(), b"x" * 70000, b""]
@@ -1301,14 +1324,13 @@ def test_gzip_member_stream_walk_equivalence(tmp_path):
         + gzip_member(payloads[2], fname=b"c.warc", fhcrc=True)
         + gzip_member(payloads[3])
     )
-    want = split_gzip_members(stream, "<twin>")
-    assert want == payloads
+    assert stdgzip.decompress(stream) == b"".join(payloads)
     for chunk in (1, 2, 7, 64, 1 << 20):
         got = list(iter_gzip_members_stream(
             io.BytesIO(stream), "<s>", chunk=chunk))
-        assert got == want, f"chunk={chunk}"
+        assert got == payloads, f"chunk={chunk}"
 
-    # defect parity with the buffer walker
+    # every defect class rejects, at a small and a large chunk size
     for mutate, msg in [
         (lambda b: b[:-4], "truncated gzip trailer"),
         (lambda b: b[:len(b) // 2], "DEFLATE|trailer|truncated"),
@@ -1316,8 +1338,10 @@ def test_gzip_member_stream_walk_equivalence(tmp_path):
         (lambda b: b"", "empty gzip stream"),
     ]:
         bad = mutate(stream)
-        with _pytest.raises(ValueError, match=msg):
-            list(iter_gzip_members_stream(io.BytesIO(bad), "<s>", chunk=3))
+        for chunk in (3, 1 << 20):
+            with _pytest.raises(ValueError, match=msg):
+                list(iter_gzip_members_stream(
+                    io.BytesIO(bad), "<s>", chunk=chunk))
     # CRC32 flip in the first member's trailer
     m0 = gzip_member(b"crc target")
     bad = bytearray(m0)
@@ -1355,8 +1379,8 @@ def test_warc_revisit_malformed_digest_raises(spark, tmp_path):
     from sql_query_engine_spark.sources.warc import (
         build_warc_record,
         gzip_member,
-        read_warc_revisits,
-        try_scan_warc_revisits,
+        read_warc_gz,
+        try_scan_warc_gz,
     )
 
     rev = build_warc_record(
@@ -1369,9 +1393,29 @@ def test_warc_revisit_malformed_digest_raises(spark, tmp_path):
     d.mkdir()
     (d / "r.warc.gz").write_bytes(gzip_member(rev))
     with _pytest.raises(Exception, match="malformed WARC-Payload-Digest"):
-        read_warc_revisits(spark, str(d) + "/*.warc.gz").collect()
+        read_warc_gz(
+            spark, str(d) + "/*.warc.gz", plane="resolution").collect()
     # the fuzz wrapper rejects (None), never a silently-NULL row
-    assert try_scan_warc_revisits(gzip_member(rev)) is None
+    assert try_scan_warc_gz(gzip_member(rev), "resolution") is None
+
+
+def test_warc_unknown_plane_raises(spark, tmp_path):
+    """A plane name outside response/meta/request/resolution is a
+    caller error on every entry point — never an empty scan, and never
+    a None the fuzz contract would read as a rejected payload."""
+    import pytest as _pytest
+
+    from sql_query_engine_spark.sources.warc import (
+        gzip_member,
+        read_warc_gz,
+        try_scan_warc_gz,
+    )
+
+    (tmp_path / "p.warc.gz").write_bytes(gzip_member(b"x"))
+    with _pytest.raises(ValueError, match="unknown .warc.gz plane"):
+        read_warc_gz(spark, str(tmp_path) + "/*.warc.gz", plane="revisit")
+    with _pytest.raises(ValueError, match="unknown .warc.gz plane"):
+        try_scan_warc_gz(gzip_member(b"x"), "revisit")
 
 
 def test_warc_gz_writer_layout_deterministic(spark, tmp_path):
@@ -1470,7 +1514,7 @@ def test_warc_charset_rotation(spark, tmp_path):
         build_http_response,
         build_warc_record,
         gzip_member,
-        read_warc_gz_meta,
+        read_warc_gz,
         write_warc_gz_dataset,
     )
 
@@ -1479,7 +1523,7 @@ def test_warc_charset_rotation(spark, tmp_path):
     out = str(tmp_path / "warc_charsets")
     write_warc_gz_dataset(df, out, n_files=2, charsets=True)
     rows = {r.doc_id: r for r in
-            read_warc_gz_meta(spark, f"{out}/*.warc.gz").collect()}
+            read_warc_gz(spark, f"{out}/*.warc.gz", plane="meta").collect()}
     import re as _re
     labels = ["utf-8", "windows-1252", "iso-8859-1", "us-ascii"]
     sufs = [None, " €—™", " caf\xe9 \xa3\xb1\xb0", ""]
@@ -1542,7 +1586,8 @@ def test_warc_charset_rotation(spark, tmp_path):
     d2 = tmp_path / "warc_cs_unknown"
     d2.mkdir()
     (d2 / "u.warc.gz").write_bytes(gzip_member(rec))
-    row = read_warc_gz_meta(spark, str(d2) + "/*.warc.gz").collect()[0]
+    row = read_warc_gz(
+        spark, str(d2) + "/*.warc.gz", plane="meta").collect()[0]
     assert row.text is None and row.charset == "shift_jis"
     assert row.content_length == len(ent)
 
@@ -1559,7 +1604,6 @@ def test_warc_mixed_record_types(spark, tmp_path):
         build_warc_record,
         gzip_member,
         read_warc_gz,
-        read_warc_gz_meta,
         try_scan_warc_gz,
     )
 
@@ -1593,7 +1637,8 @@ def test_warc_mixed_record_types(spark, tmp_path):
                   read_warc_gz(spark, str(d) + "/*.warc.gz").collect())
     assert rows == [(1, "first page"), (2, "second — pägé ☃")]
     meta = sorted((r.doc_id, r.digest_verified) for r in
-                  read_warc_gz_meta(spark, str(d) + "/*.warc.gz").collect())
+                  read_warc_gz(spark, str(d) + "/*.warc.gz",
+                               plane="meta").collect())
     assert meta == [(1, True), (2, True)]
     scan = try_scan_warc_gz(b"".join(members))
     assert scan is not None and sorted(r[0] for r in scan) == [1, 2]
@@ -1881,7 +1926,7 @@ def test_warc_cdx_random_access(spark, tmp_path):
 
 def test_warc_writer_skips_empty_partitions(spark, tmp_path):
     """rows < n_files: empty partitions must leave NO files behind —
-    split_gzip_members rejects an empty stream, so a 0-byte .warc.gz
+    the gzip member walker rejects an empty stream, so a 0-byte .warc.gz
     would make the writer's own output unreadable for any consumer
     that walks shards directly instead of relying on a listing that
     skips zero-length files."""
@@ -1890,7 +1935,6 @@ def test_warc_writer_skips_empty_partitions(spark, tmp_path):
 
     from sql_query_engine_spark.sources.warc import (
         read_warc_gz,
-        split_gzip_members,
         write_warc_gz_dataset,
     )
 
@@ -1905,7 +1949,7 @@ def test_warc_writer_skips_empty_partitions(spark, tmp_path):
     # every emitted file is non-empty AND directly walkable
     for p in shards:
         assert _os.path.getsize(p) > 0
-        assert split_gzip_members(open(p, "rb").read(), p)
+        assert _gz_members(open(p, "rb").read(), p)
     for p in cdxes:
         assert _os.path.getsize(p) > 0
     got = sorted(r.doc_id for r in
@@ -1925,7 +1969,6 @@ def test_warc_cdx_extent_fuzz(spark, tmp_path):
         decode_warc_bytes,
         parse_http_response,
         read_cdx,
-        split_gzip_members,
         write_warc_gz_dataset,
     )
 
@@ -1947,7 +1990,7 @@ def test_warc_cdx_extent_fuzz(spark, tmp_path):
         raw = shards[shard][off : off + ln]
         if len(raw) != ln:
             raise ValueError("extent past end of shard")
-        members = split_gzip_members(raw, "fuzz")
+        members = _gz_members(raw, "fuzz")
         if len(members) != 1:
             raise ValueError("extent holds != 1 member")
         for _d, _u, _n, block in decode_warc_bytes(members[0], "fuzz"):
@@ -1979,13 +2022,13 @@ def test_warc_cdx_extent_fuzz(spark, tmp_path):
 
 
 def test_gzip_header_field_ceiling_walker_parity():
-    """The FNAME/FCOMMENT ceiling is deterministic and walker-uniform
-    (ADVICE r13): a TERMINATED 100 KiB FNAME must be rejected by the
-    stream walker regardless of the caller's chunk size (before r14,
-    chunk=256 KiB accepted what chunk=1 KiB rejected — acceptance
-    depended on whether the NUL was already buffered), and by the
-    in-memory walker too (which had no ceiling at all, so the two
-    walkers disagreed on what a legal RFC 1952 member is)."""
+    """The FNAME/FCOMMENT ceiling is deterministic (ADVICE r13): a
+    TERMINATED 100 KiB FNAME must be rejected by the walker regardless
+    of the caller's chunk size (before r14, chunk=256 KiB accepted
+    what chunk=1 KiB rejected — acceptance depended on whether the NUL
+    was already buffered; a second, in-memory walker had no ceiling at
+    all). Byte buffers go through the same walker, so one chunk-size
+    sweep covers every caller."""
     import io
 
     import pytest as _pytest
@@ -1993,21 +2036,18 @@ def test_gzip_header_field_ceiling_walker_parity():
     from sql_query_engine_spark.sources.warc import (
         gzip_member,
         iter_gzip_members_stream,
-        split_gzip_members,
     )
 
     fat = gzip_member(b"payload", fname=b"A" * 100_000)
-    for chunk in (1024, 1 << 20):
+    for chunk in (1024, 256 * 1024, 1 << 20):
         with _pytest.raises(ValueError, match="FNAME field exceeds"):
             list(iter_gzip_members_stream(io.BytesIO(fat), "<fat>",
                                           chunk=chunk))
-    with _pytest.raises(ValueError, match="FNAME field exceeds"):
-        split_gzip_members(fat, "<fat>")
-    # a legal FNAME passes both walkers identically
+    # a legal FNAME passes at every chunk size identically
     ok = gzip_member(b"payload", fname=b"n" * 1024)
-    assert split_gzip_members(ok, "<ok>") == [b"payload"]
-    assert list(iter_gzip_members_stream(
-        io.BytesIO(ok), "<ok>", chunk=7)) == [b"payload"]
+    for chunk in (7, 256 * 1024):
+        assert list(iter_gzip_members_stream(
+            io.BytesIO(ok), "<ok>", chunk=chunk)) == [b"payload"]
 
 
 def test_warc_single_segment_chain_closes(spark):
@@ -2023,7 +2063,6 @@ def test_warc_single_segment_chain_closes(spark):
         build_http_response,
         build_warc_record,
         gzip_member,
-        _iter_gz_responses,
     )
 
     ent = "single-segment body — ☃".encode()
@@ -2040,7 +2079,7 @@ def test_warc_single_segment_chain_closes(spark):
         content_type=b"application/http;msgtype=response")
     stream = gzip_member(single) + gzip_member(plain)
     got = {d: block for d, _u, _n, block, _wh in
-           _iter_gz_responses(stream, "<single-seg>")}
+           _gz_responses(stream, "<single-seg>")}
     assert set(got) == {7, 8}, "follower must not be blamed for a chain"
     assert got[7] == http
 
@@ -2054,7 +2093,7 @@ def test_warc_single_segment_chain_closes(spark):
         ])
     with _pytest.raises(ValueError,
                         match="WARC-Segment-Total-Length"):
-        list(_iter_gz_responses(gzip_member(bad), "<single-seg>"))
+        _gz_responses(gzip_member(bad), "<single-seg>")
 
 
 def test_cached_fixture_writer_edit_rebuilds(tmp_path):
@@ -2191,7 +2230,6 @@ def test_warc_request_records(spark, tmp_path):
         fetch_warc_members,
         read_cdx,
         read_warc_gz,
-        read_warc_requests,
         write_warc_gz_dataset,
     )
 
@@ -2201,7 +2239,8 @@ def test_warc_request_records(spark, tmp_path):
     write_warc_gz_dataset(df, out, n_files=2, requests=True, segments=8)
 
     reqs = {r.doc_id: r for r in
-            read_warc_requests(spark, f"{out}/*.warc.gz").collect()}
+            read_warc_gz(spark, f"{out}/*.warc.gz", plane="request")
+            .collect()}
     assert set(reqs) == set(range(40))
     for d in range(40):
         r = reqs[d]
@@ -2242,8 +2281,8 @@ def test_warc_request_malformed_raises(spark, tmp_path):
     from sql_query_engine_spark.sources.warc import (
         build_warc_record,
         gzip_member,
-        read_warc_requests,
-        try_scan_warc_requests,
+        read_warc_gz,
+        try_scan_warc_gz,
     )
 
     bad = build_warc_record(
@@ -2254,8 +2293,9 @@ def test_warc_request_malformed_raises(spark, tmp_path):
     d.mkdir()
     (d / "part-00000.warc.gz").write_bytes(gzip_member(bad))
     with pytest.raises(Exception, match="request line"):
-        read_warc_requests(spark, str(d) + "/*.warc.gz").collect()
-    assert try_scan_warc_requests(gzip_member(bad)) is None
+        read_warc_gz(
+            spark, str(d) + "/*.warc.gz", plane="request").collect()
+    assert try_scan_warc_gz(gzip_member(bad), "request") is None
 
 
 def test_http_framing_ambiguity_rejects():

@@ -17,11 +17,8 @@ from sql_query_engine_spark.functions.robots import (
     try_robots_decide as _robots,
 )
 from sql_query_engine_spark.sources.warc import (
+    _PLANES as _warc_planes,
     try_scan_warc_gz as _warcgz,
-    try_scan_warc_gz_meta as _warcmeta,
-    try_scan_warc_revisits as _warcrev,
-    try_scan_warc_requests as _warcreq,
-    try_scan_warc_revisit_resolution as _warcrr,
     gzip_member as _gzm,
     build_http_response as _bhttp,
     build_http_request as _bhttpreq,
@@ -30,6 +27,14 @@ from sql_query_engine_spark.sources.warc import (
     _request_body as _reqbody,
     _decode_labelled_digest as _decdig,
 )
+
+def _warc_plane(plane):
+    """try_scan_warc_gz bound to one .warc.gz plane, named for reports."""
+    def scan(payload):
+        return _warcgz(payload, plane)
+    scan.__name__ = f"try_scan_warc_gz_{plane}"
+    return scan
+
 
 DECODERS = [
     _mm.decode_png_pixels, _mm.decode_png16_gray_stats,
@@ -54,12 +59,9 @@ DECODERS = [
     _mm.decode_flac_seektable,                          # r11
     _mm.decode_ogg_comments,                            # r11
     _html,                                              # r11: HTML extract
-    _warcgz,                                            # r11: .warc.gz scan
     _robots,                                            # r11: robots.txt
-    _warcmeta,                                          # r13: digest plane
-    _warcrev,                                           # r13: revisit plane
-    _warcreq,                                           # r14: request plane
-    _warcrr,                                            # r16: fused revisit resolution
+    # every .warc.gz plane: response / meta / request / resolution
+    *(_warc_plane(p) for p in _warc_planes),
 ]
 
 def valid_corpus():
@@ -333,14 +335,15 @@ for i in range(NT):
         buf = bytearray(rec)
         buf[pos] ^= 1 << rng.randrange(8)
         new_val = bytes(buf[span[0]:span[1]])
-        out = _warcmeta(_gzm(bytes(buf)))
+        out = _warcgz(_gzm(bytes(buf)), "meta")
         same = (_decdig("sha256", new_val) == _decdig("sha256", orig_val)
                 and _decdig("sha256", new_val) is not None)
+        # digest_verified is the meta plane's last column
         if same:
-            ok = out is not None and all(r[3] is True for r in out)
+            ok = out is not None and all(r[-1] is True for r in out)
         else:
             ok = (out is None
-                  or any(r[3] is False for r in out))
+                  or any(r[-1] is False for r in out))
     else:
         tag = b"X-Payload-SHA256: "
         start = _httpCH.index(tag) + len(tag)
