@@ -364,11 +364,24 @@ _REGION_DD = {"r_regionkey": "int", "r_name": "string"}
 
 
 def _legacy_fixture_dir(sf_dir: str, leaf: str) -> str:
-    """Deterministic per-sf scratch dir for legacy-format round-trips."""
+    """Deterministic scratch dir for fixtures built from one dataset.
+
+    Keyed on the real path of ``sf_dir`` plus the ``(st_size,
+    st_mtime_ns)`` of each ``*.parquet`` entry in it, so two datasets
+    that share a basename (two ``sf0.01`` dirs), or one dataset rewritten
+    in place, never reuse each other's cached fixtures. Stat only, never
+    a content hash: builders call this on every build."""
+    import hashlib
     import os
     import tempfile
 
-    sf = os.path.basename(os.path.normpath(sf_dir)) or "sf"
+    real = os.path.realpath(sf_dir)
+    key = hashlib.sha256(real.encode())
+    for name in sorted(os.listdir(real)):
+        if name.endswith(".parquet"):
+            st = os.stat(os.path.join(real, name))
+            key.update(f"\0{name}\0{st.st_size}\0{st.st_mtime_ns}".encode())
+    sf = f"{os.path.basename(real) or 'sf'}-{key.hexdigest()[:16]}"
     return os.path.join(tempfile.gettempdir(), "sqes_legacy_fixtures", sf, leaf)
 
 

@@ -27,10 +27,11 @@ Scale notes (100 TB):
 * The partsupp surrogate is one hash-distinct over (partkey, suppkey) —
   the same shuffle the real table's scan would cost, and Catalyst prunes
   both columns at the parquet scan.
-* Q21 computes per-order supplier/lateness counts as ONE grouped
-  aggregation over the filtered fact table instead of two correlated
-  EXISTS probes (three scans in the textbook plan), then rejoins — the
-  reduce-side shape survives arbitrary order cardinality.
+* Q21 computes per-order supplier/lateness counts as window
+  aggregates over ONE lineitem⋈orders pass instead of two correlated
+  EXISTS probes (three scans in the textbook plan): one shuffle on
+  l_orderkey, no rejoin of the counts, so the shape survives arbitrary
+  order cardinality.
 * All dimension joins (supplier, nation, region, part-filtered) are
   explicit ``broadcast()``; only lineitem/orders/customer shuffles remain,
   each on its natural key.
@@ -661,8 +662,9 @@ def register_tpch(q, t):
         "TPC-H Q21 shape: suppliers who were the sole late shipper on "
         "multi-supplier finished orders (shipdate lag stands in for "
         "receipt-vs-commit). The textbook EXISTS + NOT-EXISTS pair — two "
-        "extra scans of lineitem — collapses into ONE grouped aggregation "
-        "of per-order supplier/lateness counts, rejoined on orderkey",
+        "extra scans of lineitem — collapses into per-order "
+        "supplier/lateness counts computed as window aggregates over ONE "
+        "lineitem⋈orders pass (one shuffle on orderkey, no rejoin)",
     )
     def tpch_q21_suppliers_kept_waiting(spark, sf_dir):
         li = t(spark, sf_dir, "lineitem")
@@ -678,16 +680,22 @@ def register_tpch(q, t):
                 > F.lit(7776000000000)
             ).alias("is_late"),
         )
-        stats = fl.groupBy(F.col("l_orderkey").alias("ok")).agg(
-            F.count_distinct("l_suppkey").alias("n_supp"),
-            F.count_distinct(F.when(F.col("is_late"), F.col("l_suppkey"))).alias("n_late"),
-        )
+        # the per-order distinct counts ride along each row as window
+        # aggregates (collect_set drops NULLs, as count(DISTINCT) does),
+        # so the lineitem⋈orders join runs once and nothing joins back
+        order = Window.partitionBy("l_orderkey")
         s = F.broadcast(t(spark, sf_dir, "supplier"))
         return (
-            fl.filter(F.col("is_late"))
-            .join(stats, fl["l_orderkey"] == stats["ok"])
-            .filter((F.col("n_supp") > 1) & (F.col("n_late") == 1))
-            .join(s, fl["l_suppkey"] == s["s_suppkey"])
+            fl.select(
+                "l_suppkey",
+                "is_late",
+                F.size(F.collect_set("l_suppkey").over(order)).alias("n_supp"),
+                F.size(
+                    F.collect_set(F.when(F.col("is_late"), F.col("l_suppkey"))).over(order)
+                ).alias("n_late"),
+            )
+            .filter(F.col("is_late") & (F.col("n_supp") > 1) & (F.col("n_late") == 1))
+            .join(s, F.col("l_suppkey") == s["s_suppkey"])
             .groupBy("s_name")
             .agg(F.count("*").alias("numwait"))
         )

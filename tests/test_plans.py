@@ -298,6 +298,34 @@ def test_tpch_suite_is_complete_and_dimension_joins_broadcast(spark):
     assert "BroadcastHashJoin" in p
 
 
+def test_tpch_q21_joins_lineitem_orders_once(spark):
+    """Q21 reads lineitem once: the per-order supplier and lateness
+    counts are window aggregates over the one lineitem⋈orders pass, not
+    a grouped aggregate rejoined to it (which scanned and joined twice
+    and sort-merge joined the two fact-sized sides). Rows equal the
+    DuckDB twin at two scales."""
+    import re
+
+    import duckdb
+
+    from sql_query_engine_spark.catalog import TABLES, table_path
+    from sql_query_engine_spark.plans.inspect import formatted_plan, join_strategies
+    from sql_query_engine_spark.queries import oracle_sql, queries
+
+    name = "tpch_q21_suppliers_kept_waiting"
+    df = queries()[name](spark, SF_DIR)
+    scans = re.findall(r"Location: \S+ \[[^\]]*/lineitem\.parquet\]", formatted_plan(df))
+    assert len(scans) == 1, scans
+    assert "SortMergeJoin" not in join_strategies(df)
+    for sf_dir in (SF_DIR, SF_DIR.replace("sf0.001", "sf0.01")):
+        got = sorted(tuple(r) for r in queries()[name](spark, sf_dir).collect())
+        con = duckdb.connect()
+        for t in TABLES:
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{table_path(sf_dir, t)}'")
+        want = sorted(tuple(r) for r in con.sql(oracle_sql()[name]).fetchall())
+        assert got and got == want, sf_dir
+
+
 def test_curation_plan_shapes(spark):
     """Plan pins for the curation operators: the mixture filter is
     map-only (zero exchanges), the global shuffle's window is partitioned

@@ -204,3 +204,28 @@ def test_malformed_spark_graft_conf_raises(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CONF", "spark.sql.shuffle.partitions=4;oops")
     with pytest.raises(ValueError, match="'oops'"):
         get_spark("tests")
+
+
+def test_codegen_cache_outlives_one_bench_pass(spark):
+    """A query's compiled stage classes survive more than 100 other
+    distinct shapes: rerunning it compiles nothing. Spark's default
+    codegen cache (100 entries) evicts them, and one pass of the
+    SQL/RA/TPC-H bench ops compiles about 105 classes."""
+    from pyspark.sql import functions as F
+
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+
+    def query_a():
+        return (
+            spark.range(1000)
+            .groupBy((F.col("id") % 7).alias("k"))
+            .agg(F.sum("id").alias("s"))
+            .collect()
+        )
+
+    want = query_a()
+    for i in range(130):  # 130 single-stage shapes, one class each or more
+        spark.range(4).select((F.col("id") * (i + 2) + 1).alias("x")).collect()
+    before = compiled().getCount()
+    assert sorted(query_a()) == sorted(want)
+    assert compiled().getCount() - before == 0

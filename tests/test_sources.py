@@ -1482,6 +1482,48 @@ def test_cached_fixture_reuse_and_drift(tmp_path):
     assert len(calls) == 2
 
 
+def test_fixture_not_shared_between_same_basename_datasets(
+        spark, tmp_path, monkeypatch):
+    """Two datasets in dirs with the same basename get their own cached
+    fixtures: keyed on the basename alone, the second run of
+    src_warc_gz_scan returned the first dataset's rows without error."""
+    import os
+    import shutil
+    import tempfile
+
+    import duckdb
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from sql_query_engine_spark.catalog import table_path
+    from sql_query_engine_spark.queries import oracle_sql, queries
+    from tests.conftest import SF_DIR
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    (tmp_path / "tmp").mkdir()
+    a, b = (str(tmp_path / side / "sf0.001") for side in "ab")
+    for d in (a, b):  # plain copies: the source files may be read-only
+        os.makedirs(d)
+        for f in os.listdir(SF_DIR):
+            shutil.copyfile(os.path.join(SF_DIR, f), os.path.join(d, f))
+    docs = pq.read_table(table_path(b, "documents"))
+    docs = docs.set_column(
+        docs.schema.get_field_index("text"), "text",
+        pc.binary_join_element_wise(docs["text"], " (b)", ""))
+    pq.write_table(docs, table_path(b, "documents"))
+
+    name = "src_warc_gz_scan"
+    for sf_dir in (a, b):
+        df = queries()[name](spark, sf_dir)
+        got = sorted(tuple(r[c] for c in sorted(df.columns)) for r in df.collect())
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM '{table_path(sf_dir, 'documents')}'")
+        rel = con.sql(oracle_sql()[name])
+        order = sorted(range(len(rel.columns)), key=lambda i: rel.columns[i])
+        want = sorted(tuple(r[i] for i in order) for r in rel.fetchall())
+        assert got and got == want, sf_dir
+
+
 def test_wat_sidecar_percent_encoded_dir(spark, tmp_path):
     """binaryFile paths are URIs: a shard directory containing a space
     arrives percent-encoded, and the sidecar must land next to the

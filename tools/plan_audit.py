@@ -6,6 +6,10 @@ sort-merge joins where a broadcast was expected. Run after adding or
 changing operators:
 
     python tools/plan_audit.py [sf_dir]
+
+An allowlist entry whose query no longer shows the pattern it excuses
+(or is no longer registered) prints as ``STALE <name>``; stale entries
+are reported only and do not count as flags.
 """
 
 from __future__ import annotations
@@ -97,10 +101,6 @@ EXPECTED = {
     "machine saw BHJ). SMJ on suppkey is the scale-safe choice anyway — "
     "the mover set grows with supplier count — so either static plan is "
     "correct; annotated to keep the gate deterministic across machines",
-    "tpch_q21_suppliers_kept_waiting": "fact-fact rejoin of per-order "
-    "lateness stats on l_orderkey — both sides are lineitem-sized, so a "
-    "shuffle join on the natural key is the correct strategy (neither "
-    "side can broadcast)",
     "dedup_clusters": "corpus left-join of the converged paired-node "
     "label map on doc_id — the label set is data-dependent (up to every "
     "paired doc), so a shuffle join on the key is the correct general "
@@ -237,6 +237,9 @@ def main() -> int:
     spark = get_spark("plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
     flagged = 0
+    # allowlist entries whose query showed the excused pattern
+    used: set[str] = set()
+    used_window: set[str] = set()
     for q in registry():
         try:
             df = q.spark(spark, sf_dir)
@@ -254,12 +257,14 @@ def main() -> int:
         if "SortMergeJoin" in js:
             problems.append(f"SMJ×{js.count('SortMergeJoin')}")
         if problems and q.name in EXPECTED:
+            used.add(q.name)
             print(f"ok   {q.name}: {problems} — {EXPECTED[q.name]}")
         elif problems:
             print(f"FLAG {q.name}: {problems} joins={js}")
             flagged += 1
         n_global = partitionless_windows(plan)
         if n_global and q.name in EXPECTED_GLOBAL_WINDOW:
+            used_window.add(q.name)
             print(
                 f"ok   {q.name}: global-window×{n_global} — "
                 f"{EXPECTED_GLOBAL_WINDOW[q.name]}"
@@ -267,6 +272,10 @@ def main() -> int:
         elif n_global:
             print(f"FLAG {q.name}: partitionless Window×{n_global} (global sort)")
             flagged += 1
+    for name in sorted(set(EXPECTED) - used):
+        print(f"STALE {name}: EXPECTED join entry, pattern not in its plan")
+    for name in sorted(set(EXPECTED_GLOBAL_WINDOW) - used_window):
+        print(f"STALE {name}: EXPECTED_GLOBAL_WINDOW entry, no global window in its plan")
     print(f"\naudited {len(registry())} queries, {flagged} flagged")
     return 1 if flagged else 0
 
