@@ -21,6 +21,17 @@ Two decode tiers, BOTH real and from-spec (no image/audio libraries):
   gray/4:4:4/4:2:0, AC refinement); video decodes real MJPEG-in-MP4
   pixels; corrupt payloads decode to NULL rows, never stage failures.
 
+Design: every media format is one entry of the codec table
+(:data:`CODECS`, at the end of the module) — a builder ``doc_id -> bytes``,
+a row function ``payload -> tuple | None`` (the format's ``decode_*`` or a
+few-line projection of it) and the output ``StructType``. Two helpers
+serve every entry: :func:`_synth_df` owns the one synthesize batch loop
+and :func:`_decode_df` the one decode batch loop (NULL fill on ``None``,
+nullable-int casts derived from the schema). Each public
+``synthesize_*``/``*_stats`` function is a lookup in that table, and
+``tools/fuzz_soak.py`` fuzzes every row function over every builder's
+output.
+
 Scale notes: binary payloads ride the scan; ``mapInPandas`` streams Arrow
 batches so executor memory is bounded by batch size × payload size — set
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` down for large blobs.
@@ -29,7 +40,9 @@ Feature extraction is map-only (no shuffle).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from functools import partial
+from typing import NamedTuple
 
 import pandas as pd
 
@@ -123,11 +136,6 @@ def attach_binary_payload(docs: DataFrame) -> DataFrame:
     )
 
 
-def _decode_stub(payload: bytes) -> bytes:
-    """Deterministic stand-in for a media decoder (identity)."""
-    return payload
-
-
 # ---------------------------------------------------------------------------
 # Real byte-level media decode (container/header parse — no external libs).
 #
@@ -136,8 +144,8 @@ def _decode_stub(payload: bytes) -> bytes:
 # GIF89a specification). This is a real decoder for the *container* level —
 # dimensions, channel count, bit depth — which is what a curation pipeline
 # filters on (drop tiny images, drop extreme aspect ratios, bucket by
-# resolution) without ever inflating pixels. Full pixel decode (inflate /
-# IDCT) still needs PIL/av and is out of scope for this container.
+# resolution) without ever inflating pixels. The pixel tier (PNG inflate,
+# GIF LZW, JPEG IDCT) lives further down this module.
 # ---------------------------------------------------------------------------
 
 # SOF markers that carry frame dimensions (ITU-T T.81 Table B.1). C4/C8/CC
@@ -225,35 +233,79 @@ def _doc_id_partitions(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id").repartition(par)
 
 
-def _synth_df(docs: DataFrame, make) -> DataFrame:
-    """Synthesizer output, carrying its (docs, make) recipe so a decode
-    applied DIRECTLY to it can fuse both steps into one Python stage
-    (see _decode_df). The recipe rides as a plain Python attribute on
-    the DataFrame wrapper: any other composition (a filter, a join, a
+def _synth_df(docs: DataFrame, build: Callable[[int], bytes]) -> DataFrame:
+    """The one synthesize batch loop: ``build(doc_id)`` → payload bytes
+    for every doc, as (doc_id, payload) rows.
+
+    The output carries its (docs, make) recipe so a decode applied
+    DIRECTLY to it can fuse both steps into one Python stage (see
+    _decode_df). The recipe rides as a plain Python attribute on the
+    DataFrame wrapper: any other composition (a filter, a join, a
     corruption splice, a foreign fixture) produces a new wrapper
     without it and takes the general two-stage path unchanged.
 
-    CONTRACT: ``make`` must be a pure function of the input doc_ids —
-    the fused path re-runs it inside the decode stage, so a stateful or
+    CONTRACT: ``build`` must be a pure function of the doc_id — the
+    fused path re-runs it inside the decode stage, so a stateful or
     randomized builder would diverge from what other consumers of this
     DataFrame see. (_decode_df also refuses to fuse a cached synth
     output for the same reason.)"""
+
+    def make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            payloads = [build(int(d)) for d in pdf["doc_id"]]
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+
     df = _doc_id_partitions(docs).mapInPandas(make, _MEDIA_SCHEMA)
     df._sqes_synth_recipe = (docs, make)
     return df
 
 
-def _decode_df(with_media: DataFrame, dec, schema) -> DataFrame:
-    """Decode stage over (doc_id, payload) rows. When ``with_media``
-    came STRAIGHT from a synthesizer (_synth_df recipe present), run
-    synthesize→decode inside ONE mapInPandas: one Python stage instead
-    of two, and the payload bytes never cross the JVM boundary at all
-    (guide §4: control how many columns cross, and how often).
-    Measured ~0.4 s per mm_* query at sf0.1 (0.85 → 0.45 s on
-    mm_png16_stats, rows identical — the per-stage fixed cost plus the
-    double payload transfer). Every other input — filtered/spliced
+# Spark integer type → pandas nullable dtype. Building the column in it
+# directly keeps a NULL a typed null and a long exact: a column built
+# untyped and cast afterwards detours through float64 once it holds a
+# NULL, which rounds any value above 2**53.
+_NULLABLE_INT = {IntegerType: "Int32", LongType: "Int64"}
+
+
+def _decode_df(with_media: DataFrame, row, schema: StructType) -> DataFrame:
+    """The one decode batch loop over (doc_id, payload) rows.
+
+    ``row(payload)`` returns the output fields after doc_id as a tuple,
+    ``None`` to reject the document to one all-NULL row (corrupt or
+    unrecognized payloads decode to NULLs, never stage failures), or a
+    list of tuples for a 1→N fan-out (an empty list emits no row).
+    Integer columns are built in pandas' nullable dtypes derived from
+    ``schema``.
+
+    When ``with_media`` came STRAIGHT from a synthesizer (_synth_df
+    recipe present), run synthesize→decode inside ONE mapInPandas: one
+    Python stage instead of two, and the payload bytes never cross the
+    JVM boundary at all (guide §4: control how many columns cross, and
+    how often). Measured ~0.4 s per mm_* query at sf0.1 (0.85 → 0.45 s
+    on mm_png16_stats, rows identical — the per-stage fixed cost plus
+    the double payload transfer). Every other input — filtered/spliced
     synth output, fixture-backed media, foreign files — decodes the
     general way."""
+    names = schema.fieldNames()
+    nulls = (None,) * (len(names) - 1)
+    dtypes = {f.name: _NULLABLE_INT[type(f.dataType)] for f in schema.fields
+              if type(f.dataType) in _NULLABLE_INT}
+
+    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+                out = row(payload)
+                if out is None:
+                    rows.append((doc_id, *nulls))
+                elif isinstance(out, list):
+                    rows.extend((doc_id, *r) for r in out)
+                else:
+                    rows.append((doc_id, *out))
+            cols = zip(*rows, strict=True) if rows else [()] * len(names)
+            yield pd.DataFrame({n: pd.Series(list(c), dtype=dtypes.get(n))
+                                for n, c in zip(names, cols, strict=True)})
+
     recipe = getattr(with_media, "_sqes_synth_recipe", None)
     # A cached synth output must NOT take the fused path: fusing would
     # silently bypass the cache and re-run `make` inside the decode
@@ -270,6 +322,56 @@ def _decode_df(with_media: DataFrame, dec, schema) -> DataFrame:
 
         return _doc_id_partitions(docs).mapInPandas(_fused, schema)
     return with_media.mapInPandas(dec, schema)
+
+
+class Codec(NamedTuple):
+    """One media format: ``build(doc_id) -> bytes``, ``row(payload)``
+    (see _decode_df for what it returns) and the output schema."""
+
+    build: Callable[[int], bytes]
+    row: Callable
+    schema: StructType
+
+    def synthesize(self, docs: DataFrame) -> DataFrame:
+        return _synth_df(docs, self.build)
+
+    def decode(self, with_media: DataFrame) -> DataFrame:
+        return _decode_df(with_media, self.row, self.schema)
+
+
+def _then(decode, project):
+    """Row function: ``decode`` the payload, then ``project`` its tuple
+    into the output fields; a rejected (None) payload stays None."""
+
+    def row(payload):
+        dec = decode(payload)
+        return None if dec is None else project(*dec)
+
+    return row
+
+
+def _rgb_means(w, h, sr, sg, sb):
+    n = w * h
+    return w, h, round(sr / n, 6), round(sg / n, 6), round(sb / n, 6)
+
+
+def _gray_mean(w, h, total):
+    return w, h, round(total / (w * h), 6)
+
+
+def _sample_means(rate, n, a, b, peak):
+    """(rate, n, sum_a, sum_b, peak) → the two sums as per-sample means:
+    (mean_amp, mean_abs) for mono PCM/FLAC, (mean_left, mean_right)
+    for stereo. A well-formed stream with an empty data chunk has no
+    samples and so no mean: it rejects to NULL instead of failing the
+    stage on a division by zero."""
+    if n == 0:
+        return None
+    return rate, n, round(a / n, 6), round(b / n, 6), peak
+
+
+def _round_last(*fields):
+    return (*fields[:-1], round(fields[-1], 6))
 
 
 def decode_real(payload: bytes):
@@ -385,22 +487,7 @@ def synthesize_media(docs: DataFrame) -> DataFrame:
     expected decode output arithmetically while the Spark path round-trips
     through genuine format bytes.
     """
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = media_dims(d)
-                if d % 3 == 0:
-                    payloads.append(build_png(w, h, color_type=6 if d % 2 == 0 else 2))
-                elif d % 3 == 1:
-                    payloads.append(build_jpeg(w, h, n_comp=1 if d % 2 == 0 else 3))
-                else:
-                    payloads.append(build_gif(w, h))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _synth_df(docs, _make)
+    return CODECS["media"].synthesize(docs)
 
 
 def decode_media(with_media: DataFrame) -> DataFrame:
@@ -409,29 +496,7 @@ def decode_media(with_media: DataFrame) -> DataFrame:
     Map-only (no shuffle); at scale the payload column streams through in
     Arrow batches and only the small typed columns survive the stage.
     """
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "format", "width", "height", "channels", "bit_depth")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                meta = decode_real(payload)
-                rows["doc_id"].append(doc_id)
-                if meta is None:
-                    for k in ("format", "width", "height", "channels", "bit_depth"):
-                        rows[k].append(None)
-                else:
-                    fmt, w, h, ch, depth = meta
-                    rows["format"].append(fmt)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["channels"].append(ch)
-                    rows["bit_depth"].append(depth)
-            pdf_out = pd.DataFrame(rows)
-            for c in ("width", "height", "channels", "bit_depth"):
-                pdf_out[c] = pdf_out[c].astype("Int32")
-            yield pdf_out
-
-    return _decode_df(with_media, _dec, DECODE_SCHEMA)
+    return CODECS["media"].decode(with_media)
 
 
 # ---------------------------------------------------------------------------
@@ -440,7 +505,8 @@ def decode_media(with_media: DataFrame) -> DataFrame:
 # (xiph.org, RFC 9639). Same design as the image path: parse the container
 # header into the typed metadata a curation pipeline filters on — sample
 # rate, channel count, bit depth, sample count/duration — without ever
-# decoding samples (PCM inflate / FLAC subframe decode needs a codec lib).
+# decoding samples. The sample tier (PCM and FLAC subframe decode) lives
+# further down this module.
 # ---------------------------------------------------------------------------
 
 AUDIO_RATES = [8000, 16000, 22050, 44100, 48000]
@@ -591,17 +657,7 @@ def audio_params(doc_id: int) -> tuple[str, int, int, int, int]:
 
 def synthesize_audio(docs: DataFrame) -> DataFrame:
     """Build real audio container bytes per document, deterministically."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                fmt, rate, ch, bits, n = audio_params(int(doc_id))
-                builder = build_wav if fmt == "wav" else build_flac
-                payloads.append(builder(rate, ch, bits, n))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _synth_df(docs, _make)
+    return CODECS["audio"].synthesize(docs)
 
 
 def decode_audio(with_media: DataFrame) -> DataFrame:
@@ -611,33 +667,7 @@ def decode_audio(with_media: DataFrame) -> DataFrame:
     division on integer inputs — bit-identical in any engine, so the SQL
     oracle matches without rounding.
     """
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("doc_id", "format", "sample_rate", "channels", "bit_depth",
-                "n_samples", "duration_ms")
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                meta = decode_audio_real(payload)
-                rows["doc_id"].append(doc_id)
-                if meta is None:
-                    for k in cols[1:]:
-                        rows[k].append(None)
-                else:
-                    fmt, rate, ch, bits, n = meta
-                    rows["format"].append(fmt)
-                    rows["sample_rate"].append(rate)
-                    rows["channels"].append(ch)
-                    rows["bit_depth"].append(bits)
-                    rows["n_samples"].append(n)
-                    rows["duration_ms"].append(n * 1000.0 / rate)
-            out = pd.DataFrame(rows)
-            for c in ("sample_rate", "channels", "bit_depth"):
-                out[c] = out[c].astype("Int32")
-            out["n_samples"] = out["n_samples"].astype("Int64")
-            yield out
-
-    return _decode_df(with_media, _dec, AUDIO_SCHEMA)
+    return CODECS["audio"].decode(with_media)
 
 
 # ---------------------------------------------------------------------------
@@ -908,6 +938,10 @@ def _mp4_sample_table(b: bytes):
             fixed = int.from_bytes(body[4:8], "big")
             n = int.from_bytes(body[8:12], "big")
             if fixed:
+                # n samples of `fixed` bytes must all lie in the file;
+                # reject a crafted n before allocating the size list
+                if fixed * n > len(b):
+                    return None
                 sizes = [fixed] * n
             else:
                 if len(body) < 12 + 4 * n:
@@ -983,19 +1017,19 @@ def decode_mjpeg_mp4_pixels(payload: bytes):
 
 def synthesize_mjpeg_video(docs: DataFrame) -> DataFrame:
     """One real MJPEG-in-MP4 per doc (Arrow mapInPandas, map-only)."""
+    return CODECS["mjpeg_video"].synthesize(docs)
 
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        build_mjpeg_mp4_pixels(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
 
-    return _synth_df(docs, _make)
+VIDEO_PIXEL_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType(), False),
+        StructField("width", IntegerType(), True),
+        StructField("height", IntegerType(), True),
+        StructField("n_frames", IntegerType(), True),
+        StructField("duration_ms", DoubleType(), True),
+        StructField("mean_gray", DoubleType(), True),
+    ]
+)
 
 
 def video_pixel_stats(with_media: DataFrame) -> DataFrame:
@@ -1004,88 +1038,17 @@ def video_pixel_stats(with_media: DataFrame) -> DataFrame:
     Arrow batch is the only memory bound, every video decodes
     independently, nothing is corpus-global — at 100 TB this is one
     scan stage whose parallelism is the input partitioning."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), False),
-            StructField("width", IntegerType(), True),
-            StructField("height", IntegerType(), True),
-            StructField("n_frames", IntegerType(), True),
-            StructField("duration_ms", DoubleType(), True),
-            StructField("mean_gray", DoubleType(), True),
-        ]
-    )
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in
-                    ("doc_id", "width", "height", "n_frames",
-                     "duration_ms", "mean_gray")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rows["doc_id"].append(doc_id)
-                dec = decode_mjpeg_mp4_pixels(payload)
-                if dec is None:
-                    for k in ("width", "height", "n_frames",
-                              "duration_ms", "mean_gray"):
-                        rows[k].append(None)
-                else:
-                    w, h, n, dur, total = dec
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["n_frames"].append(n)
-                    rows["duration_ms"].append(dur)
-                    rows["mean_gray"].append(
-                        round(total / float(w * h * n), 6)
-                    )
-            out = pd.DataFrame(rows)
-            for c in ("width", "height", "n_frames"):
-                out[c] = out[c].astype("Int32")
-            yield out
-
-    return _decode_df(with_media, _dec, schema)
+    return CODECS["mjpeg_video"].decode(with_media)
 
 
 def synthesize_video(docs: DataFrame) -> DataFrame:
     """Build real MP4 header bytes per document, deterministically."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                build_mp4(*video_params(int(doc_id))) for doc_id in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _synth_df(docs, _make)
+    return CODECS["video"].synthesize(docs)
 
 
 def decode_video(with_media: DataFrame) -> DataFrame:
     """Arrow-batched MP4 box-walk decode → typed metadata row."""
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("doc_id", "format", "width", "height", "timescale",
-                "duration_units", "duration_ms")
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                meta = decode_video_real(payload)
-                rows["doc_id"].append(doc_id)
-                if meta is None:
-                    for k in cols[1:]:
-                        rows[k].append(None)
-                else:
-                    ts, dur, w, h = meta
-                    rows["format"].append("mp4")
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["timescale"].append(ts)
-                    rows["duration_units"].append(dur)
-                    rows["duration_ms"].append(dur * 1000.0 / ts)
-            out = pd.DataFrame(rows)
-            for c in ("width", "height", "timescale"):
-                out[c] = out[c].astype("Int32")
-            out["duration_units"] = out["duration_units"].astype("Int64")
-            yield out
-
-    return _decode_df(with_media, _dec, VIDEO_SCHEMA)
+    return CODECS["video"].decode(with_media)
 
 
 # ---------------------------------------------------------------------------
@@ -1111,73 +1074,12 @@ ROUTED_SCHEMA = StructType(
 
 def synthesize_mixed_media(docs: DataFrame) -> DataFrame:
     """One binary column, three modalities interleaved by doc_id % 3."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if d % 3 == 0:
-                    w, h = media_dims(d)
-                    payloads.append(build_png(w, h))
-                elif d % 3 == 1:
-                    _, rate, ch, bits, n = audio_params(d)
-                    payloads.append(build_wav(rate, ch, bits, n))
-                else:
-                    payloads.append(build_mp4(*video_params(d)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _synth_df(docs, _make)
+    return CODECS["mixed_media"].synthesize(docs)
 
 
 def route_and_decode(with_media: DataFrame) -> DataFrame:
     """Magic-byte sniff → modality dispatch → unified typed metadata."""
-
-    def _route(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("doc_id", "modality", "format", "n_bytes", "dim_a", "dim_b",
-                "duration_ms")
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                rows["doc_id"].append(doc_id)
-                rows["n_bytes"].append(len(b))
-                img = decode_real(b)
-                if img is not None:
-                    fmt, w, h, _, _ = img
-                    rows["modality"].append("image")
-                    rows["format"].append(fmt)
-                    rows["dim_a"].append(w)
-                    rows["dim_b"].append(h)
-                    rows["duration_ms"].append(None)
-                    continue
-                aud = decode_audio_real(b)
-                if aud is not None:
-                    fmt, rate, ch, _, n = aud
-                    rows["modality"].append("audio")
-                    rows["format"].append(fmt)
-                    rows["dim_a"].append(rate)
-                    rows["dim_b"].append(ch)
-                    rows["duration_ms"].append(n * 1000.0 / rate)
-                    continue
-                vid = decode_video_real(b)
-                if vid is not None:
-                    ts, dur, w, h = vid
-                    rows["modality"].append("video")
-                    rows["format"].append("mp4")
-                    rows["dim_a"].append(w)
-                    rows["dim_b"].append(h)
-                    rows["duration_ms"].append(dur * 1000.0 / ts)
-                    continue
-                for k in ("modality", "format", "dim_a", "dim_b", "duration_ms"):
-                    rows[k].append(None)
-            out = pd.DataFrame(rows)
-            out["n_bytes"] = out["n_bytes"].astype("int64")
-            for c in ("dim_a", "dim_b"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return _decode_df(with_media, _route, ROUTED_SCHEMA)
+    return CODECS["mixed_media"].decode(with_media)
 
 
 FRAME_SCHEMA = StructType(
@@ -1208,24 +1110,16 @@ def sample_frames(
     """
     import hashlib
 
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "frame_idx": [], "frame_md5": [], "frame_bytes": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                blob = _decode_stub(payload)
-                idx = 0
-                for pos in range(0, len(blob), stride):
-                    frame = blob[pos : pos + frame_size]
-                    if not frame:
-                        break
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(idx)
-                    out["frame_md5"].append(hashlib.md5(frame).hexdigest())
-                    out["frame_bytes"].append(len(frame))
-                    idx += 1
-            yield pd.DataFrame(out)
+    def row(blob: bytes) -> list:
+        frames = []
+        for pos in range(0, len(blob), stride):
+            frame = blob[pos : pos + frame_size]
+            if not frame:
+                break
+            frames.append((len(frames), hashlib.md5(frame).hexdigest(), len(frame)))
+        return frames
 
-    return with_payload.mapInPandas(_frames, FRAME_SCHEMA)
+    return _decode_df(with_payload, row, FRAME_SCHEMA)
 
 
 def extract_features(with_payload: DataFrame) -> DataFrame:
@@ -1236,21 +1130,9 @@ def extract_features(with_payload: DataFrame) -> DataFrame:
     features (byte length, first byte) keep the pipeline testable and
     oracle-checkable.
     """
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = pdf["payload"].map(_decode_stub)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": decoded.map(len).astype("int64"),
-                    "first_byte": decoded.map(
-                        lambda b: int(b[0]) if len(b) else None
-                    ).astype("Int32"),
-                }
-            )
-
-    return with_payload.mapInPandas(_extract, FEATURE_SCHEMA)
+    return _decode_df(
+        with_payload, lambda b: (len(b), b[0] if len(b) else None), FEATURE_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1260,8 +1142,8 @@ def extract_features(with_payload: DataFrame) -> DataFrame:
 # "what is IN it". PNG is the one mainstream image format whose pixel
 # path needs nothing beyond the standard library: IDAT is zlib (RFC
 # 1950/1951, stdlib `zlib`) and scanline prediction is the five public
-# filter types of the PNG specification (RFC 2083 §6). JPEG stays
-# header-only (IDCT needs a codec lib) — documented boundary.
+# filter types of the PNG specification (RFC 2083 §6). JPEG pixels
+# (Huffman + dequant + IDCT) decode further down, from ITU-T T.81.
 #
 # The synthetic encoder writes REAL filtered scanlines (cycling through
 # all five filter types) so the decoder's unfilter path is genuinely
@@ -1761,49 +1643,14 @@ PNG16_SCHEMA = StructType(
 def synthesize_png16_pixels(docs: DataFrame, interlaced: bool = False) -> DataFrame:
     """One real 16-bit grayscale PNG per doc (Arrow mapInPandas);
     ``interlaced=True`` emits the Adam7 form of the same samples."""
-    build = build_png16_pixels_interlaced if interlaced else build_png16_pixels
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [build(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return CODECS["png16_interlaced" if interlaced else "png16"].synthesize(docs)
 
 
 def png16_stats(with_media: DataFrame) -> DataFrame:
     """payload → exact 16-bit sample stats (integer sum/min/max — the
     all-integer output shape keeps the cross-engine oracle tie-free)
     via decode_png16_gray_stats (map-only, NULL on corruption)."""
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "width", "height",
-                                    "sum_v", "min_v", "max_v")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rows["doc_id"].append(doc_id)
-                dec = decode_png16_gray_stats(payload)
-                if dec is None:
-                    for k in ("width", "height", "sum_v", "min_v", "max_v"):
-                        rows[k].append(None)
-                else:
-                    w, h, total, vmin, vmax = dec
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["sum_v"].append(total)
-                    rows["min_v"].append(vmin)
-                    rows["max_v"].append(vmax)
-            out = pd.DataFrame(rows)
-            for c in ("width", "height", "min_v", "max_v"):
-                out[c] = out[c].astype("Int32")
-            out["sum_v"] = out["sum_v"].astype("Int64")
-            yield out
-
-    return _decode_df(with_media, _dec, PNG16_SCHEMA)
+    return CODECS["png16"].decode(with_media)
 
 
 def decode_png_pixels(payload: bytes):
@@ -1953,54 +1800,13 @@ PNG_META_SCHEMA = StructType(
 
 def synthesize_png_metadata(docs: DataFrame) -> DataFrame:
     """One metadata-bearing real PNG per doc (Arrow mapInPandas)."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        build_png_with_metadata(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return CODECS["png_metadata"].synthesize(docs)
 
 
 def png_metadata(with_media: DataFrame) -> DataFrame:
     """payload → extracted container metadata (map-only, NULL on
     corruption or CRC failure)."""
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "width", "height", "title",
-                                    "source_tag", "ppu_x", "ppu_y", "unit")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rows["doc_id"].append(doc_id)
-                dec = decode_png_metadata(payload)
-                if dec is None:
-                    for k in ("width", "height", "title", "source_tag",
-                              "ppu_x", "ppu_y", "unit"):
-                        rows[k].append(None)
-                else:
-                    w, h, texts, px, py, unit = dec
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["title"].append(texts.get("Title"))
-                    rows["source_tag"].append(texts.get("Source"))
-                    rows["ppu_x"].append(px)
-                    rows["ppu_y"].append(py)
-                    rows["unit"].append(unit)
-            out = pd.DataFrame(rows)
-            out["width"] = out["width"].astype("Int32")
-            out["height"] = out["height"].astype("Int32")
-            out["ppu_x"] = out["ppu_x"].astype("Int64")
-            out["ppu_y"] = out["ppu_y"].astype("Int64")
-            out["unit"] = out["unit"].astype("Int32")
-            yield out
-
-    return _decode_df(with_media, _dec, PNG_META_SCHEMA)
+    return CODECS["png_metadata"].decode(with_media)
 
 
 # ---------------------------------------------------------------------------
@@ -2109,45 +1915,12 @@ MP3_META_SCHEMA = StructType(
 
 def synthesize_mp3(docs: DataFrame) -> DataFrame:
     """One real-layout MP3 per doc (Arrow mapInPandas)."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [build_mp3(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return CODECS["mp3"].synthesize(docs)
 
 
 def mp3_metadata(with_media: DataFrame) -> DataFrame:
     """payload → frame-walk metadata (map-only, NULL on corruption)."""
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "n_frames", "bitrate_kbps",
-                                    "sample_rate", "duration_ms")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rows["doc_id"].append(doc_id)
-                dec = decode_mp3_metadata(payload)
-                if dec is None:
-                    for k in ("n_frames", "bitrate_kbps", "sample_rate",
-                              "duration_ms"):
-                        rows[k].append(None)
-                else:
-                    n, br, sr, dur = dec
-                    rows["n_frames"].append(n)
-                    rows["bitrate_kbps"].append(br)
-                    rows["sample_rate"].append(sr)
-                    rows["duration_ms"].append(round(dur, 6))
-            out = pd.DataFrame(rows)
-            for c in ("n_frames", "bitrate_kbps", "sample_rate"):
-                out[c] = out[c].astype("Int32")
-            yield out
-
-    return _decode_df(with_media, _dec, MP3_META_SCHEMA)
+    return CODECS["mp3"].decode(with_media)
 
 
 # ---------------------------------------------------------------------------
@@ -2313,54 +2086,13 @@ MP3_XING_SCHEMA = StructType(
 
 def synthesize_mp3_vbr(docs: DataFrame) -> DataFrame:
     """One real-layout VBR (Xing-indexed) MP3 per doc."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [build_mp3_vbr(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return CODECS["mp3_vbr"].synthesize(docs)
 
 
 def mp3_xing_stats(with_media: DataFrame) -> DataFrame:
     """payload → Xing-validated VBR metadata (map-only, NULL on
     corruption or on a lying VBR index)."""
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "n_frames", "sample_rate",
-                                    "total_bytes", "duration_ms",
-                                    "avg_bitrate_kbps")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rows["doc_id"].append(doc_id)
-                dec = decode_mp3_xing(payload)
-                if dec is None:
-                    for k in ("n_frames", "sample_rate", "total_bytes",
-                              "duration_ms", "avg_bitrate_kbps"):
-                        rows[k].append(None)
-                else:
-                    n, sr, tb, dur, kbps = dec
-                    rows["n_frames"].append(n)
-                    rows["sample_rate"].append(sr)
-                    rows["total_bytes"].append(tb)
-                    # UNROUNDED: both are divisions of exact integers in
-                    # a pinned op order, so the doubles are bit-identical
-                    # cross-engine — while round(x, 6) DIVERGES on exact
-                    # half-ties (Python rounds half-even, DuckDB half-away;
-                    # avg 61.9390625 was the observed case)
-                    rows["duration_ms"].append(dur)
-                    rows["avg_bitrate_kbps"].append(kbps)
-            out = pd.DataFrame(rows)
-            out["n_frames"] = out["n_frames"].astype("Int32")
-            out["sample_rate"] = out["sample_rate"].astype("Int32")
-            out["total_bytes"] = out["total_bytes"].astype("Int64")
-            yield out
-
-    return _decode_df(with_media, _dec, MP3_XING_SCHEMA)
+    return CODECS["mp3_vbr"].decode(with_media)
 
 
 # ---------------------------------------------------------------------------
@@ -2500,46 +2232,12 @@ FLAC_SEEK_SCHEMA = StructType(
 
 def synthesize_flac_seektable(docs: DataFrame) -> DataFrame:
     """One FLAC-with-SEEKTABLE per doc (Arrow mapInPandas)."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        build_flac_seektable(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return CODECS["flac_seektable"].synthesize(docs)
 
 
 def flac_seektable_stats(with_media: DataFrame) -> DataFrame:
     """payload → seektable census (map-only, NULL on corruption)."""
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("sample_rate", "n_samples", "n_points", "n_placeholders",
-                "last_seek_sample", "sum_byte_offsets")
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id",) + cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rows["doc_id"].append(doc_id)
-                dec = decode_flac_seektable(payload)
-                if dec is None:
-                    for k in cols:
-                        rows[k].append(None)
-                else:
-                    for k, vv in zip(cols, dec):
-                        rows[k].append(vv)
-            out = pd.DataFrame(rows)
-            for c in ("sample_rate", "n_points", "n_placeholders"):
-                out[c] = out[c].astype("Int32")
-            for c in ("n_samples", "last_seek_sample", "sum_byte_offsets"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return _decode_df(with_media, _dec, FLAC_SEEK_SCHEMA)
+    return CODECS["flac_seektable"].decode(with_media)
 
 
 # ---------------------------------------------------------------------------
@@ -2745,50 +2443,12 @@ OGG_META_SCHEMA = StructType(
 def synthesize_ogg(docs: DataFrame) -> DataFrame:
     """One real-layout Ogg/Vorbis stream head per doc (Arrow
     mapInPandas)."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        build_ogg_vorbis(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return CODECS["ogg"].synthesize(docs)
 
 
 def ogg_metadata(with_media: DataFrame) -> DataFrame:
     """payload → page-walk metadata (map-only, NULL on corruption)."""
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "n_pages", "channels",
-                                    "sample_rate", "last_granule",
-                                    "duration_ms")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rows["doc_id"].append(doc_id)
-                dec = decode_ogg_metadata(payload)
-                if dec is None:
-                    for k in ("n_pages", "channels", "sample_rate",
-                              "last_granule", "duration_ms"):
-                        rows[k].append(None)
-                else:
-                    n, ch, sr, gran, dur = dec
-                    rows["n_pages"].append(n)
-                    rows["channels"].append(ch)
-                    rows["sample_rate"].append(sr)
-                    rows["last_granule"].append(gran)
-                    rows["duration_ms"].append(round(dur, 6))
-            out = pd.DataFrame(rows)
-            for c in ("n_pages", "channels", "sample_rate"):
-                out[c] = out[c].astype("Int32")
-            out["last_granule"] = out["last_granule"].astype("Int64")
-            yield out
-
-    return _decode_df(with_media, _dec, OGG_META_SCHEMA)
+    return CODECS["ogg"].decode(with_media)
 
 
 # ---------------------------------------------------------------------------
@@ -2954,46 +2614,12 @@ OGG_COMMENT_SCHEMA = StructType(
 
 def synthesize_ogg_tagged(docs: DataFrame) -> DataFrame:
     """One tagged Ogg/Vorbis stream per doc (Arrow mapInPandas)."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        build_ogg_vorbis_tagged(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return CODECS["ogg_tagged"].synthesize(docs)
 
 
 def ogg_comment_stats(with_media: DataFrame) -> DataFrame:
     """payload → comment-header census (map-only, NULL on corruption)."""
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("n_pages", "channels", "sample_rate", "n_comments",
-                "vendor", "artist", "title", "track", "comment_bytes")
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id",) + cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rows["doc_id"].append(doc_id)
-                dec = decode_ogg_comments(payload)
-                if dec is None:
-                    for k in cols:
-                        rows[k].append(None)
-                else:
-                    for k, vv in zip(cols, dec):
-                        rows[k].append(vv)
-            out = pd.DataFrame(rows)
-            for c in ("n_pages", "channels", "sample_rate", "n_comments",
-                      "track"):
-                out[c] = out[c].astype("Int32")
-            out["comment_bytes"] = out["comment_bytes"].astype("Int64")
-            yield out
-
-    return _decode_df(with_media, _dec, OGG_COMMENT_SCHEMA)
+    return CODECS["ogg_tagged"].decode(with_media)
 
 
 # ---------------------------------------------------------------------------
@@ -3149,47 +2775,13 @@ MP4_TRACKS_SCHEMA = StructType(
 def synthesize_mp4_multitrack(docs: DataFrame) -> DataFrame:
     """One real-layout multi-track MP4 header per doc (Arrow
     mapInPandas)."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        build_mp4_multitrack(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return CODECS["mp4_multitrack"].synthesize(docs)
 
 
 def mp4_track_stats(with_media: DataFrame) -> DataFrame:
     """payload → per-container track census (map-only, NULL on
     corruption)."""
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = ("n_tracks", "n_video", "n_audio", "max_width",
-                    "max_height", "duration_ms")
-            rows = {k: [] for k in ("doc_id", *cols)}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rows["doc_id"].append(doc_id)
-                dec = decode_mp4_tracks(payload)
-                if dec is None:
-                    for k in cols:
-                        rows[k].append(None)
-                else:
-                    for k, v in zip(cols, dec):
-                        rows[k].append(
-                            round(v, 6) if k == "duration_ms" else v
-                        )
-            out = pd.DataFrame(rows)
-            for c in cols[:-1]:
-                out[c] = out[c].astype("Int32")
-            yield out
-
-    return _decode_df(with_media, _dec, MP4_TRACKS_SCHEMA)
+    return CODECS["mp4_multitrack"].decode(with_media)
 
 
 AHASH_SCHEMA = StructType(
@@ -3207,34 +2799,7 @@ AHASH_SCHEMA = StructType(
 def png_ahash(with_media: DataFrame) -> DataFrame:
     """payload → 64-bit perceptual average-hash via the full PNG decode
     path (map-only, NULL on corruption)."""
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "width", "height",
-                                    "ahash_hi", "ahash_lo", "n_bits")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rows["doc_id"].append(doc_id)
-                dec = decode_png_ahash(payload)
-                if dec is None:
-                    for k in ("width", "height", "ahash_hi", "ahash_lo",
-                              "n_bits"):
-                        rows[k].append(None)
-                else:
-                    w, h, hi, lo, nb = dec
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["ahash_hi"].append(hi)
-                    rows["ahash_lo"].append(lo)
-                    rows["n_bits"].append(nb)
-            out = pd.DataFrame(rows)
-            out["width"] = out["width"].astype("Int32")
-            out["height"] = out["height"].astype("Int32")
-            out["ahash_hi"] = out["ahash_hi"].astype("Int64")
-            out["ahash_lo"] = out["ahash_lo"].astype("Int64")
-            out["n_bits"] = out["n_bits"].astype("Int32")
-            yield out
-
-    return _decode_df(with_media, _dec, AHASH_SCHEMA)
+    return CODECS["png_ahash"].decode(with_media)
 
 
 RESIZE_GRID = 4  # thumbnail target: 4x4 cells per image
@@ -3287,68 +2852,18 @@ def png_resize(with_media: DataFrame, grid: int = RESIZE_GRID) -> DataFrame:
     """payload → exploded grid×grid thumbnail cells via the full PNG
     decode path (Arrow mapInPandas, map-only; a corrupt container
     becomes one NULL-cells row, never a stage failure)."""
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "gy", "gx", "n_px",
-                                    "mean_r", "mean_g", "mean_b")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                cells = decode_png_resize(payload, grid)
-                if cells is None:
-                    rows["doc_id"].append(doc_id)
-                    for k in ("gy", "gx", "n_px", "mean_r", "mean_g",
-                              "mean_b"):
-                        rows[k].append(None)
-                    continue
-                for gy, gx, n, mr, mg, mb in cells:
-                    rows["doc_id"].append(doc_id)
-                    rows["gy"].append(gy)
-                    rows["gx"].append(gx)
-                    rows["n_px"].append(n)
-                    rows["mean_r"].append(mr)
-                    rows["mean_g"].append(mg)
-                    rows["mean_b"].append(mb)
-            out = pd.DataFrame(rows)
-            for k in ("gy", "gx"):
-                out[k] = out[k].astype("Int32")
-            for k in ("n_px", "mean_r", "mean_g", "mean_b"):
-                out[k] = out[k].astype("Int64")
-            yield out
-
-    return _decode_df(with_media, _dec, RESIZE_SCHEMA)
+    codec = CODECS["png_resize"]
+    return _decode_df(with_media, partial(codec.row, grid=grid), codec.schema)
 
 
 def synthesize_png_pixels(docs: DataFrame) -> DataFrame:
     """One real truecolor PNG per doc (Arrow mapInPandas, map-only)."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [build_png_pixels(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return CODECS["png_pixels"].synthesize(docs)
 
 
 def synthesize_png_pixels_interlaced(docs: DataFrame) -> DataFrame:
     """One real Adam7-interlaced PNG per doc (Arrow mapInPandas)."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        build_png_pixels_interlaced(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return CODECS["png_pixels_interlaced"].synthesize(docs)
 
 
 def pixel_stats(with_media: DataFrame) -> DataFrame:
@@ -3357,31 +2872,7 @@ def pixel_stats(with_media: DataFrame) -> DataFrame:
     Map-only like decode_media: payload bytes live inside the stage,
     only (doc_id, dims, 3 doubles) survive. At 100 TB this is the shape
     image curation needs — pixel statistics without moving pixels."""
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in
-                    ("doc_id", "width", "height", "mean_r", "mean_g", "mean_b")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rows["doc_id"].append(doc_id)
-                dec = decode_png_pixels(payload)
-                if dec is None:
-                    for k in ("width", "height", "mean_r", "mean_g", "mean_b"):
-                        rows[k].append(None)
-                else:
-                    w, h, sr, sg, sb = dec
-                    n = w * h
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["mean_r"].append(round(sr / n, 6))
-                    rows["mean_g"].append(round(sg / n, 6))
-                    rows["mean_b"].append(round(sb / n, 6))
-            out = pd.DataFrame(rows)
-            for c in ("width", "height"):
-                out[c] = out[c].astype("Int32")
-            yield out
-
-    return _decode_df(with_media, _dec, PIXEL_SCHEMA)
+    return CODECS["png_pixels"].decode(with_media)
 
 
 # ---------------------------------------------------------------------------
@@ -3822,46 +3313,12 @@ TIFF_META_SCHEMA = StructType(
 
 def synthesize_tiff(docs: DataFrame) -> DataFrame:
     """One real-layout TIFF per doc (Arrow mapInPandas)."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [build_tiff(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return CODECS["tiff"].synthesize(docs)
 
 
 def tiff_metadata(with_media: DataFrame) -> DataFrame:
     """payload → IFD metadata (map-only, NULL on corruption)."""
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "byteorder", "width",
-                                    "height", "bits", "photometric")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rows["doc_id"].append(doc_id)
-                dec = decode_tiff_metadata(payload)
-                if dec is None:
-                    for k in ("byteorder", "width", "height", "bits",
-                              "photometric"):
-                        rows[k].append(None)
-                else:
-                    bo, w, h, bits, pm = dec
-                    rows["byteorder"].append(bo)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["bits"].append(bits)
-                    rows["photometric"].append(pm)
-            out = pd.DataFrame(rows)
-            for c in ("width", "height", "bits", "photometric"):
-                out[c] = out[c].astype("Int32")
-            yield out
-
-    return _decode_df(with_media, _dec, TIFF_META_SCHEMA)
+    return CODECS["tiff"].decode(with_media)
 
 
 # ---------------------------------------------------------------------------
@@ -4317,20 +3774,7 @@ def synthesize_tiff_pixels(docs: DataFrame, compression: int = 5) -> DataFrame:
     """One real multi-strip RGB TIFF per doc (Arrow mapInPandas);
     compression 5 = TIFF-LZW (the default — the codec worth gating),
     1 = raw strips."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        build_tiff_pixels(int(d), compression=compression)
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return _synth_df(docs, partial(build_tiff_pixels, compression=compression))
 
 
 _TIFF_VARIANTS = (
@@ -4351,20 +3795,7 @@ def synthesize_tiff_variants(docs: DataFrame) -> DataFrame:
     (_TIFF_VARIANTS by doc_id % 6): II/MM byte order, raw/LZW/PackBits
     strips, chunky/planar layout. Same planted pixel grid as every
     other image builder, so the decoded sums are dialect-invariant."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                comp, endv, planar = _TIFF_VARIANTS[int(d) % 6]
-                payloads.append(
-                    build_tiff_pixels(
-                        int(d), compression=comp, endian=endv, planar=planar
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _synth_df(docs, _make)
+    return CODECS["tiff_variants"].synthesize(docs)
 
 
 def tiff_pixel_stats(with_media: DataFrame) -> DataFrame:
@@ -4372,37 +3803,7 @@ def tiff_pixel_stats(with_media: DataFrame) -> DataFrame:
     TIFF decode path (strip walk, LZW, gray→RGB expansion). All-integer
     output (the r9 rule: integer sums cannot hit cross-engine rounding
     ties). Map-only, NULL on corruption."""
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in
-                    ("doc_id", "width", "height", "sum_r", "sum_g", "sum_b")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rows["doc_id"].append(doc_id)
-                dec = decode_tiff_pixels(payload)
-                if dec is None:
-                    for k in ("width", "height", "sum_r", "sum_g", "sum_b"):
-                        rows[k].append(None)
-                else:
-                    w, h, rws = dec
-                    sr = sg = sb = 0
-                    for r in rws:
-                        sr += sum(r[0::3])
-                        sg += sum(r[1::3])
-                        sb += sum(r[2::3])
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["sum_r"].append(sr)
-                    rows["sum_g"].append(sg)
-                    rows["sum_b"].append(sb)
-            out = pd.DataFrame(rows)
-            for c in ("width", "height"):
-                out[c] = out[c].astype("Int32")
-            for c in ("sum_r", "sum_g", "sum_b"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return _decode_df(with_media, _dec, TIFF_PIXEL_SCHEMA)
+    return CODECS["tiff_pixels"].decode(with_media)
 
 
 # ---------------------------------------------------------------------------
@@ -4479,36 +3880,12 @@ SNIFF_SCHEMA = StructType(
 
 def synthesize_sniff_corpus(docs: DataFrame) -> DataFrame:
     """One container per doc across the eight-format zoo."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        build_sniff_payload(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return CODECS["sniff"].synthesize(docs)
 
 
 def format_sniffer(with_media: DataFrame) -> DataFrame:
     """payload → sniffed format name (map-only)."""
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "format": [
-                        sniff_format(p) for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    return _decode_df(with_media, _dec, SNIFF_SCHEMA)
+    return CODECS["sniff"].decode(with_media)
 
 
 GIF_INTERLACED_SCHEMA = StructType(
@@ -4526,53 +3903,13 @@ GIF_INTERLACED_SCHEMA = StructType(
 
 def synthesize_gif_pixels_interlaced(docs: DataFrame) -> DataFrame:
     """One real interlaced GIF89a per doc (Arrow mapInPandas)."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        build_gif_pixels_interlaced(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return CODECS["gif_pixels_interlaced"].synthesize(docs)
 
 
 def gif_interlaced_stats(with_media: DataFrame) -> DataFrame:
     """payload → channel means + position-weighted index checksum via
     the de-interlacing decode (map-only, NULL on corruption)."""
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "width", "height", "mean_r",
-                                    "mean_g", "mean_b", "poshash")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rows["doc_id"].append(doc_id)
-                dec = decode_gif_interlaced_stats(payload)
-                if dec is None:
-                    for k in ("width", "height", "mean_r", "mean_g",
-                              "mean_b", "poshash"):
-                        rows[k].append(None)
-                else:
-                    w, h, sr, sg, sb, ph = dec
-                    n = w * h
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["mean_r"].append(round(sr / n, 6))
-                    rows["mean_g"].append(round(sg / n, 6))
-                    rows["mean_b"].append(round(sb / n, 6))
-                    rows["poshash"].append(ph)
-            out = pd.DataFrame(rows)
-            out["width"] = out["width"].astype("Int32")
-            out["height"] = out["height"].astype("Int32")
-            out["poshash"] = out["poshash"].astype("Int64")
-            yield out
-
-    return _decode_df(with_media, _dec, GIF_INTERLACED_SCHEMA)
+    return CODECS["gif_pixels_interlaced"].decode(with_media)
 
 
 def gif_frame_count(doc_id: int) -> int:
@@ -4724,19 +4061,7 @@ GIF_FRAME_SCHEMA = StructType(
 
 def synthesize_gif_animations(docs: DataFrame) -> DataFrame:
     """One real animated GIF per doc (Arrow mapInPandas, map-only)."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        build_gif_animation(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return CODECS["gif_animation"].synthesize(docs)
 
 
 def gif_frame_sample_stats(with_media: DataFrame, stride: int = 2) -> DataFrame:
@@ -4744,81 +4069,20 @@ def gif_frame_sample_stats(with_media: DataFrame, stride: int = 2) -> DataFrame:
     1→N fan-out a video frame-sampling pipeline produces, with real
     per-frame decode behind it (map-only, NULL-free: corrupt containers
     simply emit no rows, matching the oracle's absence semantics)."""
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "frame_idx", "delay_cs",
-                                    "width", "height",
-                                    "mean_r", "mean_g", "mean_b")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                dec = decode_gif_animation(payload)
-                if dec is None:
-                    continue
-                w, h, frames = dec
-                n = w * h
-                for fi, (delay, sr, sg, sb) in enumerate(frames):
-                    if fi % stride:
-                        continue
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(fi)
-                    rows["delay_cs"].append(delay)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["mean_r"].append(round(sr / n, 6))
-                    rows["mean_g"].append(round(sg / n, 6))
-                    rows["mean_b"].append(round(sb / n, 6))
-            out = pd.DataFrame(rows)
-            for c in ("frame_idx", "delay_cs", "width", "height"):
-                out[c] = out[c].astype("Int32")
-            yield out
-
-    return _decode_df(with_media, _dec, GIF_FRAME_SCHEMA)
+    codec = CODECS["gif_animation"]
+    return _decode_df(with_media, partial(codec.row, stride=stride), codec.schema)
 
 
 def synthesize_gif_pixels(docs: DataFrame) -> DataFrame:
     """One real LZW-compressed GIF per doc (Arrow mapInPandas, map-only)."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [build_gif_pixels(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return CODECS["gif_pixels"].synthesize(docs)
 
 
 def gif_pixel_stats(with_media: DataFrame) -> DataFrame:
     """payload → per-channel pixel means via the full LZW decode path
     (same map-only shape and NULL-on-corruption contract as
     :func:`pixel_stats`)."""
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in
-                    ("doc_id", "width", "height", "mean_r", "mean_g", "mean_b")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rows["doc_id"].append(doc_id)
-                dec = decode_gif_pixels(payload)
-                if dec is None:
-                    for k in ("width", "height", "mean_r", "mean_g", "mean_b"):
-                        rows[k].append(None)
-                else:
-                    w, h, sr, sg, sb = dec
-                    n = w * h
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["mean_r"].append(round(sr / n, 6))
-                    rows["mean_g"].append(round(sg / n, 6))
-                    rows["mean_b"].append(round(sb / n, 6))
-            out = pd.DataFrame(rows)
-            for c in ("width", "height"):
-                out[c] = out[c].astype("Int32")
-            yield out
-
-    return _decode_df(with_media, _dec, PIXEL_SCHEMA)
+    return CODECS["gif_pixels"].decode(with_media)
 
 
 # ---------------------------------------------------------------------------
@@ -4826,7 +4090,7 @@ def gif_pixel_stats(with_media: DataFrame) -> DataFrame:
 # and GIF pixel paths. PCM needs no codec: the data chunk IS the samples
 # (int16 little-endian, RIFF WAVE spec). Deterministic synthetic signals
 # make the sample statistics oracle-expressible arithmetically.
-# FLAC subframe decode stays header-only (documented codec boundary).
+# FLAC subframe decode (all four subframe types) follows the JPEG section.
 # ---------------------------------------------------------------------------
 
 
@@ -5050,50 +4314,13 @@ def decode_wav_stereo_samples(payload: bytes):
 
 def synthesize_wav_stereo_samples(docs: DataFrame) -> DataFrame:
     """One real stereo PCM WAV per doc (Arrow mapInPandas, map-only)."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        build_wav_stereo_samples(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return CODECS["wav_stereo"].synthesize(docs)
 
 
 def wav_stereo_stats(with_media: DataFrame) -> DataFrame:
     """payload → per-channel stats via the stereo PCM decode path
     (map-only, NULL on corruption)."""
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "sample_rate", "n_samples",
-                                    "mean_left", "mean_right", "peak")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rows["doc_id"].append(doc_id)
-                dec = decode_wav_stereo_samples(payload)
-                if dec is None:
-                    for k in ("sample_rate", "n_samples", "mean_left",
-                              "mean_right", "peak"):
-                        rows[k].append(None)
-                else:
-                    rate, n, sl, sr, peak = dec
-                    rows["sample_rate"].append(rate)
-                    rows["n_samples"].append(n)
-                    rows["mean_left"].append(round(sl / n, 6))
-                    rows["mean_right"].append(round(sr / n, 6))
-                    rows["peak"].append(peak)
-            out = pd.DataFrame(rows)
-            out["sample_rate"] = out["sample_rate"].astype("Int32")
-            out["n_samples"] = out["n_samples"].astype("Int64")
-            out["peak"] = out["peak"].astype("Int32")
-            yield out
-
-    return _decode_df(with_media, _dec, STEREO_SAMPLE_SCHEMA)
+    return CODECS["wav_stereo"].decode(with_media)
 
 
 AUDIO_SAMPLE_SCHEMA = StructType(
@@ -5122,117 +4349,36 @@ STEREO_SAMPLE_SCHEMA = StructType(
 
 def synthesize_flac_stereo_samples(docs: DataFrame) -> DataFrame:
     """One real stereo FLAC per doc (Arrow mapInPandas, map-only)."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        build_flac_stereo_samples(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return CODECS["flac_stereo"].synthesize(docs)
 
 
 def flac_stereo_stats(with_media: DataFrame) -> DataFrame:
     """payload → per-channel statistics via the stereo FLAC decode path
     (decorrelation undo; map-only, NULL on corruption)."""
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "sample_rate", "n_samples",
-                                    "mean_left", "mean_right", "peak")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rows["doc_id"].append(doc_id)
-                dec = decode_flac_stereo_samples(payload)
-                if dec is None:
-                    for k in ("sample_rate", "n_samples", "mean_left",
-                              "mean_right", "peak"):
-                        rows[k].append(None)
-                else:
-                    rate, n, sl, sr, peak = dec
-                    rows["sample_rate"].append(rate)
-                    rows["n_samples"].append(n)
-                    rows["mean_left"].append(round(sl / n, 6))
-                    rows["mean_right"].append(round(sr / n, 6))
-                    rows["peak"].append(peak)
-            out = pd.DataFrame(rows)
-            out["sample_rate"] = out["sample_rate"].astype("Int32")
-            out["n_samples"] = out["n_samples"].astype("Int64")
-            out["peak"] = out["peak"].astype("Int32")
-            yield out
-
-    return _decode_df(with_media, _dec, STEREO_SAMPLE_SCHEMA)
+    return CODECS["flac_stereo"].decode(with_media)
 
 
 def synthesize_wav_samples(docs: DataFrame) -> DataFrame:
     """One real PCM WAV per doc (Arrow mapInPandas, map-only)."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [build_wav_samples(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return CODECS["wav"].synthesize(docs)
 
 
 def synthesize_wav_24bit_samples(docs: DataFrame) -> DataFrame:
     """One real mono 24-bit PCM WAV per doc (Arrow mapInPandas)."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        build_wav_24bit_samples(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return CODECS["wav24"].synthesize(docs)
 
 
-def wav_sample_stats(with_media: DataFrame, decoder=None) -> DataFrame:
-    """payload → sample statistics via the full PCM decode path (same
-    map-only shape and NULL-on-corruption contract as pixel_stats).
-    ``decoder`` selects the sample width (16-bit default, 24-bit via
-    decode_wav_24bit_samples) — the stats contract is identical."""
-    decoder = decoder or decode_wav_samples
+def wav_sample_stats(with_media: DataFrame) -> DataFrame:
+    """payload → sample statistics via the full 16-bit PCM decode path
+    (same map-only shape and NULL-on-corruption contract as
+    pixel_stats)."""
+    return CODECS["wav"].decode(with_media)
 
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "sample_rate", "n_samples",
-                                    "mean_amp", "mean_abs", "peak")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rows["doc_id"].append(doc_id)
-                dec = decoder(payload)
-                if dec is None:
-                    for k in ("sample_rate", "n_samples", "mean_amp",
-                              "mean_abs", "peak"):
-                        rows[k].append(None)
-                else:
-                    rate, n, total, abs_total, peak = dec
-                    rows["sample_rate"].append(rate)
-                    rows["n_samples"].append(n)
-                    rows["mean_amp"].append(round(total / n, 6))
-                    rows["mean_abs"].append(round(abs_total / n, 6))
-                    rows["peak"].append(peak)
-            out = pd.DataFrame(rows)
-            out["sample_rate"] = out["sample_rate"].astype("Int32")
-            out["n_samples"] = out["n_samples"].astype("Int64")
-            out["peak"] = out["peak"].astype("Int32")
-            yield out
 
-    return _decode_df(with_media, _dec, AUDIO_SAMPLE_SCHEMA)
+def wav_24bit_sample_stats(with_media: DataFrame) -> DataFrame:
+    """payload → the same sample statistics as wav_sample_stats, via the
+    24-bit PCM decode path (decode_wav_24bit_samples)."""
+    return CODECS["wav24"].decode(with_media)
 
 
 # ---------------------------------------------------------------------------
@@ -5246,8 +4392,8 @@ def wav_sample_stats(with_media: DataFrame, decoder=None) -> DataFrame:
 # run/size with ZRL and EOB (F.2.2.2), zigzag dequantization, and a full
 # 2-D IDCT (A.3.3) done as an 8x8 basis-matrix product in numpy.
 #
-# The synthetic corpus is grayscale (1 component, no subsampling — the
-# chroma upsampling/YCbCr path is the remaining documented boundary).
+# This baseline corpus is grayscale (1 component, no subsampling); the
+# color 4:4:4 / 4:2:0 and progressive paths follow below.
 # The ORACLE corpus is DC-only blocks: the IDCT of a DC-only block is
 # exactly flat (AC basis functions are zero-mean), pixel = dc*q0/8 + 128
 # with q0 = 8, so the expected channel mean is integer arithmetic a SQL
@@ -6968,51 +6114,14 @@ JPEG_CMYK_SCHEMA = StructType(
 
 def synthesize_jpeg_cmyk_pixels(docs: DataFrame) -> DataFrame:
     """One real 4-component baseline JPEG per doc (Arrow mapInPandas)."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        build_jpeg_cmyk_pixels(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return CODECS["jpeg_cmyk"].synthesize(docs)
 
 
 def jpeg_cmyk_stats(with_media: DataFrame) -> DataFrame:
     """payload → per-stored-band integer sums (all-integer output keeps
     the cross-engine oracle tie-free) via the full 4-component baseline
     decode (map-only, NULL on corruption)."""
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = ("doc_id", "width", "height",
-                    "sum_c", "sum_m", "sum_y", "sum_k")
-            rows = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rows["doc_id"].append(doc_id)
-                dec = decode_jpeg_cmyk_pixels(payload)
-                if dec is None:
-                    for k in cols[1:]:
-                        rows[k].append(None)
-                else:
-                    w, h = dec[0], dec[1]
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    for k, total in zip(cols[3:], dec[2:]):
-                        rows[k].append(total)
-            out = pd.DataFrame(rows)
-            out["width"] = out["width"].astype("Int32")
-            out["height"] = out["height"].astype("Int32")
-            for c in cols[3:]:
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return _decode_df(with_media, _dec, JPEG_CMYK_SCHEMA)
+    return CODECS["jpeg_cmyk"].decode(with_media)
 
 
 def decode_jpeg_cmyk_pixels(payload: bytes):
@@ -7049,87 +6158,24 @@ JPEG_PIXEL_SCHEMA = StructType(
 
 def synthesize_jpeg_pixels(docs: DataFrame) -> DataFrame:
     """One real baseline JPEG per doc (Arrow mapInPandas, map-only)."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [build_jpeg_pixels(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return CODECS["jpeg"].synthesize(docs)
 
 
 def jpeg_pixel_stats(with_media: DataFrame) -> DataFrame:
     """payload → gray-channel mean via the full baseline decode path
     (same map-only shape and NULL-on-corruption contract as pixel_stats)."""
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "width", "height", "mean_gray")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rows["doc_id"].append(doc_id)
-                dec = decode_jpeg_pixels(payload)
-                if dec is None:
-                    for k in ("width", "height", "mean_gray"):
-                        rows[k].append(None)
-                else:
-                    w, h, total = dec
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["mean_gray"].append(round(total / (w * h), 6))
-            out = pd.DataFrame(rows)
-            out["width"] = out["width"].astype("Int32")
-            out["height"] = out["height"].astype("Int32")
-            yield out
-
-    return _decode_df(with_media, _dec, JPEG_PIXEL_SCHEMA)
+    return CODECS["jpeg"].decode(with_media)
 
 
 def synthesize_jpeg_progressive_pixels(docs: DataFrame) -> DataFrame:
     """One real progressive (SOF2) JPEG per doc (Arrow mapInPandas)."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        build_jpeg_progressive_pixels(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return CODECS["jpeg_progressive"].synthesize(docs)
 
 
 def jpeg_progressive_stats(with_media: DataFrame) -> DataFrame:
     """payload → gray mean via the multi-scan progressive decode path
     (map-only, NULL on corruption)."""
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "width", "height", "mean_gray")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rows["doc_id"].append(doc_id)
-                dec = decode_jpeg_progressive_pixels(payload)
-                if dec is None:
-                    for k in ("width", "height", "mean_gray"):
-                        rows[k].append(None)
-                else:
-                    w, h, total = dec
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["mean_gray"].append(round(total / (w * h), 6))
-            out = pd.DataFrame(rows)
-            out["width"] = out["width"].astype("Int32")
-            out["height"] = out["height"].astype("Int32")
-            yield out
-
-    return _decode_df(with_media, _dec, JPEG_PIXEL_SCHEMA)
+    return CODECS["jpeg_progressive"].decode(with_media)
 
 
 JPEG_COLOR_SCHEMA = StructType(
@@ -7146,162 +6192,40 @@ JPEG_COLOR_SCHEMA = StructType(
 
 def synthesize_jpeg_color_pixels(docs: DataFrame) -> DataFrame:
     """One real 4:4:4 color baseline JPEG per doc (Arrow mapInPandas)."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        build_jpeg_color_pixels(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return CODECS["jpeg_color"].synthesize(docs)
 
 
 def synthesize_jpeg_420_pixels(docs: DataFrame) -> DataFrame:
     """One real 4:2:0 subsampled color JPEG per doc (Arrow mapInPandas)."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        build_jpeg_420_pixels(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return CODECS["jpeg_420"].synthesize(docs)
 
 
 def jpeg_color_stats(with_media: DataFrame) -> DataFrame:
     """payload → RGB channel means via the full 3-component baseline
     decode + fixed-point YCbCr→RGB (map-only, NULL on corruption)."""
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "width", "height",
-                                    "mean_r", "mean_g", "mean_b")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rows["doc_id"].append(doc_id)
-                dec = decode_jpeg_color_pixels(payload)
-                if dec is None:
-                    for k in ("width", "height", "mean_r", "mean_g", "mean_b"):
-                        rows[k].append(None)
-                else:
-                    w, h, sr, sg, sb = dec
-                    n = w * h
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["mean_r"].append(round(sr / n, 6))
-                    rows["mean_g"].append(round(sg / n, 6))
-                    rows["mean_b"].append(round(sb / n, 6))
-            out = pd.DataFrame(rows)
-            out["width"] = out["width"].astype("Int32")
-            out["height"] = out["height"].astype("Int32")
-            yield out
-
-    return _decode_df(with_media, _dec, JPEG_COLOR_SCHEMA)
+    return CODECS["jpeg_color"].decode(with_media)
 
 
 def synthesize_jpeg_progressive_color_pixels(docs: DataFrame) -> DataFrame:
     """One real progressive color JPEG per doc (Arrow mapInPandas)."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        build_jpeg_progressive_color_pixels(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return CODECS["jpeg_progressive_color"].synthesize(docs)
 
 
 def jpeg_progressive_color_stats(with_media: DataFrame) -> DataFrame:
     """payload → RGB channel means via the multi-scan progressive color
     decode (map-only, NULL on corruption)."""
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "width", "height",
-                                    "mean_r", "mean_g", "mean_b")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rows["doc_id"].append(doc_id)
-                dec = decode_jpeg_progressive_color_pixels(payload)
-                if dec is None:
-                    for k in ("width", "height", "mean_r", "mean_g", "mean_b"):
-                        rows[k].append(None)
-                else:
-                    w, h, sr, sg, sb = dec
-                    n = w * h
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["mean_r"].append(round(sr / n, 6))
-                    rows["mean_g"].append(round(sg / n, 6))
-                    rows["mean_b"].append(round(sb / n, 6))
-            out = pd.DataFrame(rows)
-            out["width"] = out["width"].astype("Int32")
-            out["height"] = out["height"].astype("Int32")
-            yield out
-
-    return _decode_df(with_media, _dec, JPEG_COLOR_SCHEMA)
+    return CODECS["jpeg_progressive_color"].decode(with_media)
 
 
 def synthesize_jpeg_progressive_420_pixels(docs: DataFrame) -> DataFrame:
     """One real progressive 4:2:0 JPEG per doc (Arrow mapInPandas)."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        build_jpeg_progressive_420_pixels(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return CODECS["jpeg_progressive_420"].synthesize(docs)
 
 
 def jpeg_progressive_420_stats(with_media: DataFrame) -> DataFrame:
     """payload → RGB channel means via the subsampled multi-scan
     progressive decode (map-only, NULL on corruption)."""
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "width", "height",
-                                    "mean_r", "mean_g", "mean_b")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rows["doc_id"].append(doc_id)
-                dec = decode_jpeg_progressive_420_pixels(payload)
-                if dec is None:
-                    for k in ("width", "height", "mean_r", "mean_g", "mean_b"):
-                        rows[k].append(None)
-                else:
-                    w, h, sr, sg, sb = dec
-                    n = w * h
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["mean_r"].append(round(sr / n, 6))
-                    rows["mean_g"].append(round(sg / n, 6))
-                    rows["mean_b"].append(round(sb / n, 6))
-            out = pd.DataFrame(rows)
-            out["width"] = out["width"].astype("Int32")
-            out["height"] = out["height"].astype("Int32")
-            yield out
-
-    return _decode_df(with_media, _dec, JPEG_COLOR_SCHEMA)
+    return CODECS["jpeg_progressive_420"].decode(with_media)
 
 
 # ---------------------------------------------------------------------------
@@ -7908,45 +6832,202 @@ def build_flac_stereo_samples(doc_id: int) -> bytes:
 
 def synthesize_flac_samples(docs: DataFrame) -> DataFrame:
     """One real FLAC per doc (Arrow mapInPandas, map-only)."""
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [build_flac_samples(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return _synth_df(docs, _make)
+    return CODECS["flac"].synthesize(docs)
 
 
 def flac_sample_stats(with_media: DataFrame) -> DataFrame:
     """payload → sample statistics via the full FLAC decode path (same
     map-only shape and NULL-on-corruption contract as wav_sample_stats)."""
+    return CODECS["flac"].decode(with_media)
 
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "sample_rate", "n_samples",
-                                    "mean_amp", "mean_abs", "peak")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rows["doc_id"].append(doc_id)
-                dec = decode_flac_samples(payload)
-                if dec is None:
-                    for k in ("sample_rate", "n_samples", "mean_amp",
-                              "mean_abs", "peak"):
-                        rows[k].append(None)
-                else:
-                    rate, n, total, abs_total, peak = dec
-                    rows["sample_rate"].append(rate)
-                    rows["n_samples"].append(n)
-                    rows["mean_amp"].append(round(total / n, 6))
-                    rows["mean_abs"].append(round(abs_total / n, 6))
-                    rows["peak"].append(peak)
-            out = pd.DataFrame(rows)
-            out["sample_rate"] = out["sample_rate"].astype("Int32")
-            out["n_samples"] = out["n_samples"].astype("Int64")
-            out["peak"] = out["peak"].astype("Int32")
-            yield out
 
-    return _decode_df(with_media, _dec, AUDIO_SAMPLE_SCHEMA)
+# ---------------------------------------------------------------------------
+# The codec table. One entry per media format: its builder, its row
+# function and its output schema (see Codec and _decode_df). Every
+# synthesize_*/*_stats function above is a lookup here, and
+# tools/fuzz_soak.py and the codec-contract test walk the whole table, so
+# a new format is fuzzed and pinned by adding one entry.
+# ---------------------------------------------------------------------------
+
+
+def _build_media(d: int) -> bytes:
+    """doc_id % 3 picks the container (0→PNG, 1→JPEG, 2→GIF)."""
+    w, h = media_dims(d)
+    if d % 3 == 0:
+        return build_png(w, h, color_type=6 if d % 2 == 0 else 2)
+    if d % 3 == 1:
+        return build_jpeg(w, h, n_comp=1 if d % 2 == 0 else 3)
+    return build_gif(w, h)
+
+
+def _build_audio(d: int) -> bytes:
+    fmt, rate, ch, bits, n = audio_params(d)
+    return (build_wav if fmt == "wav" else build_flac)(rate, ch, bits, n)
+
+
+def _build_video(d: int) -> bytes:
+    return build_mp4(*video_params(d))
+
+
+def _build_mixed_media(d: int) -> bytes:
+    """Three modalities interleaved by doc_id % 3: PNG, WAV, MP4."""
+    if d % 3 == 0:
+        return build_png(*media_dims(d))
+    if d % 3 == 1:
+        _, rate, ch, bits, n = audio_params(d)
+        return build_wav(rate, ch, bits, n)
+    return build_mp4(*video_params(d))
+
+
+def _build_tiff_variant(d: int) -> bytes:
+    comp, endian, planar = _TIFF_VARIANTS[d % 6]
+    return build_tiff_pixels(d, compression=comp, endian=endian, planar=planar)
+
+
+def _route_row(payload):
+    """Magic-byte cascade image → audio → video. Never rejects: an
+    unrecognized payload keeps its n_bytes and routes to modality NULL."""
+    b = bytes(payload) if payload is not None else b""
+    img = decode_real(b)
+    if img is not None:
+        fmt, w, h, _, _ = img
+        return "image", fmt, len(b), w, h, None
+    aud = decode_audio_real(b)
+    if aud is not None:
+        fmt, rate, ch, _, n = aud
+        return "audio", fmt, len(b), rate, ch, n * 1000.0 / rate
+    vid = decode_video_real(b)
+    if vid is not None:
+        ts, dur, w, h = vid
+        return "video", "mp4", len(b), w, h, dur * 1000.0 / ts
+    return None, None, len(b), None, None, None
+
+
+def _tiff_sums(w, h, rows):
+    sr = sg = sb = 0
+    for r in rows:
+        sr += sum(r[0::3])
+        sg += sum(r[1::3])
+        sb += sum(r[2::3])
+    return w, h, sr, sg, sb
+
+
+def _gif_frames_row(payload, stride: int = 2) -> list:
+    """Every ``stride``-th frame of an animated GIF as one row; a
+    corrupt container emits no rows (the oracle's absence semantics)."""
+    dec = decode_gif_animation(payload)
+    if dec is None:
+        return []
+    w, h, frames = dec
+    return [(fi, delay, *_rgb_means(w, h, sr, sg, sb))
+            for fi, (delay, sr, sg, sb) in enumerate(frames) if fi % stride == 0]
+
+
+_png_rgb_row = _then(decode_png_pixels, _rgb_means)
+_tiff_rgb_row = _then(decode_tiff_pixels, _tiff_sums)
+_jpeg_color_row = _then(decode_jpeg_color_pixels, _rgb_means)
+
+CODECS: dict[str, Codec] = {
+    "media": Codec(_build_media, decode_real, DECODE_SCHEMA),
+    "audio": Codec(
+        _build_audio,
+        _then(decode_audio_real, lambda fmt, rate, ch, bits, n:
+              (fmt, rate, ch, bits, n, n * 1000.0 / rate)),
+        AUDIO_SCHEMA,
+    ),
+    "video": Codec(
+        _build_video,
+        _then(decode_video_real, lambda ts, dur, w, h:
+              ("mp4", w, h, ts, dur, dur * 1000.0 / ts)),
+        VIDEO_SCHEMA,
+    ),
+    "mixed_media": Codec(_build_mixed_media, _route_row, ROUTED_SCHEMA),
+    "mjpeg_video": Codec(
+        build_mjpeg_mp4_pixels,
+        _then(decode_mjpeg_mp4_pixels, lambda w, h, n, dur, total:
+              (w, h, n, dur, round(total / float(w * h * n), 6))),
+        VIDEO_PIXEL_SCHEMA,
+    ),
+    "png16": Codec(build_png16_pixels, decode_png16_gray_stats, PNG16_SCHEMA),
+    "png16_interlaced": Codec(
+        build_png16_pixels_interlaced, decode_png16_gray_stats, PNG16_SCHEMA),
+    "png_metadata": Codec(
+        build_png_with_metadata,
+        _then(decode_png_metadata, lambda w, h, texts, px, py, unit:
+              (w, h, texts.get("Title"), texts.get("Source"), px, py, unit)),
+        PNG_META_SCHEMA,
+    ),
+    "mp3": Codec(
+        build_mp3, _then(decode_mp3_metadata, _round_last), MP3_META_SCHEMA),
+    # UNROUNDED duration/bitrate: both are divisions of exact integers in
+    # a pinned op order, so the doubles are bit-identical cross-engine —
+    # while round(x, 6) DIVERGES on exact half-ties (Python rounds
+    # half-even, DuckDB half-away; avg 61.9390625 was the observed case)
+    "mp3_vbr": Codec(build_mp3_vbr, decode_mp3_xing, MP3_XING_SCHEMA),
+    "flac_seektable": Codec(
+        build_flac_seektable, decode_flac_seektable, FLAC_SEEK_SCHEMA),
+    "ogg": Codec(
+        build_ogg_vorbis, _then(decode_ogg_metadata, _round_last),
+        OGG_META_SCHEMA),
+    "ogg_tagged": Codec(
+        build_ogg_vorbis_tagged, decode_ogg_comments, OGG_COMMENT_SCHEMA),
+    "mp4_multitrack": Codec(
+        build_mp4_multitrack, _then(decode_mp4_tracks, _round_last),
+        MP4_TRACKS_SCHEMA),
+    "png_pixels": Codec(build_png_pixels, _png_rgb_row, PIXEL_SCHEMA),
+    "png_pixels_interlaced": Codec(
+        build_png_pixels_interlaced, _png_rgb_row, PIXEL_SCHEMA),
+    "png_ahash": Codec(build_png_pixels, decode_png_ahash, AHASH_SCHEMA),
+    "png_resize": Codec(build_png_pixels, decode_png_resize, RESIZE_SCHEMA),
+    "tiff": Codec(build_tiff, decode_tiff_metadata, TIFF_META_SCHEMA),
+    "tiff_pixels": Codec(
+        partial(build_tiff_pixels, compression=5), _tiff_rgb_row,
+        TIFF_PIXEL_SCHEMA),
+    "tiff_variants": Codec(
+        _build_tiff_variant, _tiff_rgb_row, TIFF_PIXEL_SCHEMA),
+    "sniff": Codec(
+        build_sniff_payload, lambda p: (sniff_format(p),), SNIFF_SCHEMA),
+    "gif_pixels": Codec(
+        build_gif_pixels, _then(decode_gif_pixels, _rgb_means), PIXEL_SCHEMA),
+    "gif_pixels_interlaced": Codec(
+        build_gif_pixels_interlaced,
+        _then(decode_gif_interlaced_stats, lambda w, h, sr, sg, sb, ph:
+              (*_rgb_means(w, h, sr, sg, sb), ph)),
+        GIF_INTERLACED_SCHEMA,
+    ),
+    "gif_animation": Codec(build_gif_animation, _gif_frames_row, GIF_FRAME_SCHEMA),
+    "wav": Codec(
+        build_wav_samples, _then(decode_wav_samples, _sample_means),
+        AUDIO_SAMPLE_SCHEMA),
+    "wav24": Codec(
+        build_wav_24bit_samples,
+        _then(decode_wav_24bit_samples, _sample_means), AUDIO_SAMPLE_SCHEMA),
+    "wav_stereo": Codec(
+        build_wav_stereo_samples,
+        _then(decode_wav_stereo_samples, _sample_means), STEREO_SAMPLE_SCHEMA),
+    "flac": Codec(
+        build_flac_samples, _then(decode_flac_samples, _sample_means),
+        AUDIO_SAMPLE_SCHEMA),
+    "flac_stereo": Codec(
+        build_flac_stereo_samples,
+        _then(decode_flac_stereo_samples, _sample_means), STEREO_SAMPLE_SCHEMA),
+    "jpeg": Codec(
+        build_jpeg_pixels, _then(decode_jpeg_pixels, _gray_mean),
+        JPEG_PIXEL_SCHEMA),
+    "jpeg_progressive": Codec(
+        build_jpeg_progressive_pixels,
+        _then(decode_jpeg_progressive_pixels, _gray_mean), JPEG_PIXEL_SCHEMA),
+    "jpeg_cmyk": Codec(
+        build_jpeg_cmyk_pixels, decode_jpeg_cmyk_pixels, JPEG_CMYK_SCHEMA),
+    "jpeg_color": Codec(
+        build_jpeg_color_pixels, _jpeg_color_row, JPEG_COLOR_SCHEMA),
+    "jpeg_420": Codec(build_jpeg_420_pixels, _jpeg_color_row, JPEG_COLOR_SCHEMA),
+    "jpeg_progressive_color": Codec(
+        build_jpeg_progressive_color_pixels,
+        _then(decode_jpeg_progressive_color_pixels, _rgb_means),
+        JPEG_COLOR_SCHEMA),
+    "jpeg_progressive_420": Codec(
+        build_jpeg_progressive_420_pixels,
+        _then(decode_jpeg_progressive_420_pixels, _rgb_means),
+        JPEG_COLOR_SCHEMA),
+}

@@ -8087,9 +8087,8 @@ FROM agg""",
 )
 def mm_wav_24bit_stats(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    return multimodal.wav_sample_stats(
-        multimodal.synthesize_wav_24bit_samples(d),
-        decoder=multimodal.decode_wav_24bit_samples,
+    return multimodal.wav_24bit_sample_stats(
+        multimodal.synthesize_wav_24bit_samples(d)
     )
 
 

@@ -756,6 +756,106 @@ def test_route_and_decode_dispatch_and_rejects(spark, docs):
     assert got == {1: None, 2: None}
 
 
+def _python_stages(df) -> int:
+    return df._jdf.queryExecution().executedPlan().toString().count("MapInPandas")
+
+
+def test_cached_synth_output_decodes_two_stage_with_fused_rows(spark, docs):
+    """A decode applied straight to a synthesizer fuses both into one
+    Python stage; once the synth output is cached, the decode must read
+    the cached bytes instead (two stages) and give the same rows."""
+    synth = multimodal.synthesize_png_pixels(docs)
+    fused = multimodal.pixel_stats(synth)
+    assert _python_stages(fused) == 1
+    synth.cache()
+    try:
+        two_stage = multimodal.pixel_stats(synth)
+        assert _python_stages(two_stage) == 2
+        want = sorted(fused.collect())
+        assert want and sorted(two_stage.collect()) == want
+    finally:
+        synth.unpersist()
+
+
+# What a rejected payload yields where it is not None: the two codecs
+# that classify rather than decode still give a row, and a fan-out codec
+# gives no rows.
+_REJECTED = {
+    "sniff": lambda cut: ("unknown",),
+    "mixed_media": lambda cut: (None, None, len(cut), None, None, None),
+    "gif_animation": lambda cut: [],
+}
+# Codecs that read only the container header, so a payload cut in half
+# (header intact) still decodes.
+_HEADER_ONLY = {"media", "audio", "mixed_media", "sniff"}
+
+
+def test_codec_table_contract():
+    """Every codec's row function gives len(schema) - 1 fields on each
+    built payload, and rejects truncated ones (None, or no rows for a
+    fan-out) — no Spark needed."""
+    assert len(multimodal.CODECS) >= 37
+    for name, codec in multimodal.CODECS.items():
+        width = len(codec.schema) - 1
+        for d in (0, 1, 2, 3, 7, 11):
+            payload = codec.build(d)
+            out = codec.row(payload)
+            rows = out if isinstance(out, list) else [out]
+            assert rows, (name, d)
+            for r in rows:
+                assert isinstance(r, tuple) and len(r) == width, (name, d, r)
+            cuts = [payload[:11]]
+            if name not in _HEADER_ONLY:
+                cuts.append(payload[: len(payload) // 2])
+            for cut in cuts:
+                want = _REJECTED.get(name, lambda cut: None)(cut)
+                assert codec.row(cut) == want, (name, d, len(cut))
+
+
+def test_codec_rows_reject_degenerate_streams():
+    """Two payloads the codec fuzz found: a well-formed WAV with an
+    empty data chunk (no samples, so no mean) and an MJPEG-in-MP4 whose
+    stsz declares 2^32-1 fixed-size samples. Both reject to None; before,
+    the first raised ZeroDivisionError in the stats projection and the
+    second tried to allocate a 2^32-entry size list."""
+    codecs = multimodal.CODECS
+    assert codecs["wav"].row(multimodal.build_wav(8000, 1, 16, 0)) is None
+    assert codecs["wav_stereo"].row(multimodal.build_wav(8000, 2, 16, 0)) is None
+    mp4 = bytearray(multimodal.build_mjpeg_mp4_pixels(1))
+    i = mp4.index(b"stsz") + 4  # box body: version/flags, size, count
+    mp4[i + 4 : i + 12] = (1).to_bytes(4, "big") + (2**32 - 1).to_bytes(4, "big")
+    assert codecs["mjpeg_video"].row(bytes(mp4)) is None
+
+
+def test_decode_loop_rejects_to_typed_nulls(spark):
+    """One Spark round trip through the general decode path: a rejected
+    payload comes out as one row of NULLs, and the integer columns keep
+    the schema's types (no float NaN detour)."""
+    codec = multimodal.CODECS["png16"]
+    media = spark.createDataFrame(
+        [(1, bytearray(codec.build(1))), (2, bytearray(b"not a png")), (3, None)],
+        "doc_id long, payload binary",
+    )
+    out = multimodal.png16_stats(media)
+    assert out.schema == codec.schema
+    got = {r.doc_id: tuple(r)[1:] for r in out.collect()}
+    assert got[1] == codec.row(codec.build(1))
+    assert all(isinstance(v, int) for v in got[1])
+    assert got[2] == got[3] == (None,) * (len(codec.schema) - 1)
+
+    # a long above 2**53 next to a NULL in the same batch stays exact
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    big = 2**60 + 1
+    wide = multimodal._decode_df(
+        media.coalesce(1),
+        lambda p: None if p is None else (big,),
+        StructType([StructField("doc_id", LongType(), False),
+                    StructField("v", LongType(), True)]),
+    )
+    assert {r.doc_id: r.v for r in wide.collect()} == {1: big, 2: big, 3: None}
+
+
 def test_containment_catches_doc_inside_doc_where_jaccard_misses(spark):
     """The motivating asymmetry: a short doc quoted wholesale inside a
     much longer one must score containment ~1 while the same pair's

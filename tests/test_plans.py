@@ -326,6 +326,26 @@ def test_tpch_q21_joins_lineitem_orders_once(spark):
         assert got and got == want, sf_dir
 
 
+def test_mm_rows_run_one_python_stage(spark):
+    """Every mm_* row runs its media work as exactly ONE Python stage
+    (MapInPandas node) in the executed plan: synthesize→decode fuse into
+    one stage, and feature/frame extraction is one stage of its own.
+    mm_payload_dedup hashes in the JVM and has none. A refactor that
+    silently splits the fusion doubles every row's Python stages and
+    fails here."""
+    from sql_query_engine_spark.queries import queries
+
+    qs = queries()
+    stages = {
+        name: qs[name](spark, SF_DIR)._jdf.queryExecution().executedPlan()
+        .toString().count("MapInPandas")
+        for name in qs if name.startswith("mm_")
+    }
+    assert len(stages) == 42
+    assert stages.pop("mm_payload_dedup") == 0
+    assert {n: c for n, c in stages.items() if c != 1} == {}
+
+
 def test_curation_plan_shapes(spark):
     """Plan pins for the curation operators: the mixture filter is
     map-only (zero exchanges), the global shuffle's window is partitioned

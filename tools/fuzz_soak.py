@@ -1,11 +1,13 @@
-"""Long-run mutation fuzz over EVERY decoder (round-9 soak).
+"""Long-run mutation fuzz over EVERY decoder.
 
 Beyond tests/test_property.py's 200-example hypothesis passes, this
-hammers all 25 decoders with N truncation/byte-flip/splice mutations of
-a 76-container valid corpus (all builders at 4 doc_ids, restart and
-interlaced variants, every foreign fixture). Contract: a decoder may
-return None or a tuple/list/dict, and must NEVER raise. r9 run: 60k
-mutations x 25 decoders = 1.5M calls, 0 crashes (REHEARSAL_r09_fuzz.json).
+hammers every row function of the media codec table (multimodal.CODECS),
+the HTML and robots.txt extractors and every .warc.gz plane with N
+truncation/byte-flip/splice mutations of a valid corpus (every codec
+builder at 4 doc_ids, extra restart/TIFF-dialect variants, the WARC
+ingest chain, every foreign fixture). Contract: a decoder may return
+None or a tuple/list/dict, and must NEVER raise. r9 run: 60k mutations
+x 25 decoders = 1.5M calls, 0 crashes (REHEARSAL_r09_fuzz.json).
 
     python tools/fuzz_soak.py [n_mutations] [seed]
 """
@@ -36,28 +38,21 @@ def _warc_plane(plane):
     return scan
 
 
+def _codec_row(name, row):
+    """A codec-table row function, named for reports."""
+    def decode(payload):
+        return row(payload)
+    decode.__name__ = f"codec_{name}"
+    return decode
+
+
+# one entry per distinct row function (codecs may share one)
+_rows = {}
+for _name, _codec in _mm.CODECS.items():
+    _rows.setdefault(_codec.row, _name)
+
 DECODERS = [
-    _mm.decode_png_pixels, _mm.decode_png16_gray_stats,
-    _mm.decode_gif_pixels, _mm.decode_gif_animation,
-    _mm.decode_jpeg_pixels, _mm.decode_jpeg_color_pixels,
-    _mm.decode_jpeg_cmyk_pixels,
-    _mm.decode_jpeg_progressive_pixels,
-    _mm.decode_jpeg_progressive_color_pixels,
-    _mm.decode_jpeg_progressive_420_pixels,
-    _mm.decode_gif_interlaced_stats,
-    _mm.decode_wav_24bit_samples,
-    _mm.decode_mp3_metadata,
-    _mm.decode_wav_samples, _mm.decode_wav_stereo_samples,
-    _mm.decode_flac_samples, _mm.decode_flac_stereo_samples,
-    _mm.decode_real, _mm.decode_audio_real, _mm.decode_video_real,
-    _mm.decode_png_metadata, _mm.decode_tiff_metadata,
-    _mm.decode_png_resize, _mm.decode_png_ahash,
-    _mm.decode_mjpeg_mp4_pixels,
-    _mm.decode_ogg_metadata, _mm.decode_mp4_tracks,  # r10
-    _mm.decode_tiff_pixels,                             # r10
-    _mm.decode_mp3_xing,                                # r11
-    _mm.decode_flac_seektable,                          # r11
-    _mm.decode_ogg_comments,                            # r11
+    *(_codec_row(name, row) for row, name in _rows.items()),
     _html,                                              # r11: HTML extract
     _robots,                                            # r11: robots.txt
     # every .warc.gz plane: response / meta / request / resolution
@@ -67,32 +62,13 @@ DECODERS = [
 def valid_corpus():
     outs = []
     for d in (0, 3, 7, 11):
-        outs += [
-            _mm.build_png_pixels(d), _mm.build_png_pixels_interlaced(d),
-            _mm.build_png16_pixels(d), _mm.build_png_with_metadata(d),
-            _mm.build_gif_pixels(d), _mm.build_gif_animation(d),
-            _mm.build_jpeg_pixels(d), _mm.build_jpeg_color_pixels(d),
-            _mm.build_jpeg_420_pixels(d), _mm.build_jpeg_cmyk_pixels(d),
-            _mm.build_jpeg_progressive_pixels(d),
-            _mm.build_jpeg_progressive_color_pixels(d),
-            _mm.build_jpeg_pixels(d, restart_interval=2),
-            _mm.build_wav_samples(d), _mm.build_wav_stereo_samples(d),
-            _mm.build_flac_samples(d), _mm.build_flac_stereo_samples(d),
-            _mm.build_mp4(*_mm.video_params(d)),
-            _mm.build_mjpeg_mp4_pixels(d),
-            _mm.build_png16_pixels_interlaced(d),  # r10
-            _mm.build_ogg_vorbis(d),               # r10
-            _mm.build_mp4_multitrack(d),           # r10
-            _mm.build_tiff_pixels(d, compression=1),  # r10
-            _mm.build_tiff_pixels(d, compression=5),  # r10
-            _mm.build_tiff_pixels(                     # r11: MM+PackBits
-                d, compression=32773, endian="big", planar=1),
-            _mm.build_tiff_pixels(                     # r11: planar LZW
-                d, compression=5, endian="little", planar=2),
-            _mm.build_mp3_vbr(d),                      # r11
-            _mm.build_flac_seektable(d),               # r11
-            _mm.build_ogg_vorbis_tagged(d),            # r11
-        ]
+        outs += [codec.build(d) for codec in _mm.CODECS.values()]
+        # variants beyond the table's builders: JPEG restart markers, raw
+        # TIFF strips, and every TIFF dialect at every doc_id
+        outs.append(_mm.build_jpeg_pixels(d, restart_interval=2))
+        outs.append(_mm.build_tiff_pixels(d))
+        outs += [_mm.build_tiff_pixels(d, compression=c, endian=e, planar=p)
+                 for c, e, p in _mm._TIFF_VARIANTS]
         # r11 ingest chain: a 2-member .warc.gz (HTTP chunked + CL
         # framings) and a standalone HTML page (UTF-8 bytes); r12: the
         # records carry the labelled digests + trailers the writer now
@@ -212,7 +188,7 @@ def valid_corpus():
     for f in sorted(os.listdir(fdir)):
         if not f.endswith('.json'):
             outs.append(open(os.path.join(fdir, f), 'rb').read())
-    return [o for o in outs if o]
+    return list(dict.fromkeys(o for o in outs if o))
 
 corpus = valid_corpus()
 rng = random.Random(int(sys.argv[2], 0) if len(sys.argv) > 2 else 0xF0225)
