@@ -14,14 +14,14 @@ dedup families a training-data pipeline needs:
 
 Scale design (the 100 TB story):
 
-* Shingle hashing happens exactly once per (doc, shingle) row on an
-  exploded table, then signatures are *aggregates* over that table —
-  16 ``min()`` columns for MinHash, 48 ``sum()`` columns for SimHash. One
-  map-side-combinable shuffle keyed by doc_id, no recomputation, no
-  per-bit row explosion. (The first cut computed signatures as 16
-  array-expressions over the shingle array — Catalyst's projection
-  collapse inlined the md5 into every one of them, 16× the hashing work;
-  the aggregate formulation is both faster and the shape that scales.)
+* Shingle hashing happens exactly once per (doc, shingle). MinHash
+  signatures are MAP-ONLY ``array_min`` expressions over the doc's
+  in-row hash set, built in one place (:func:`minhash_bands`) for batch,
+  incremental and streaming callers alike; the md5 runs in its own
+  projection so Catalyst cannot inline it into the 16 permutations (the
+  first cut did, 16× the hashing work). SimHash signatures are 48
+  ``sum()`` aggregates over the exploded (doc, shingle-hash) table — one
+  map-side-combinable shuffle keyed by doc_id, no per-bit row explosion.
 * The n-gram inverted index is the classic frequency-bounded join: a
   stop-shingle appearing in f docs contributes f² pairs. Shingles are word
   5-grams (hashing.SHINGLE_N) — measured: same near-dups as trigrams with
@@ -47,13 +47,18 @@ from .hashing import (
     spark_shingles,
     spark_tokens,
 )
+from .similarity import _DUCK_NORM2, _SPARK_NORM2, _bucket_expr, _duck_dot
 
 __all__ = [
     "exact_dedup",
     "shingled_docs",
     "exploded_shingle_hashes",
+    "minhash_bands",
     "minhash_lsh_pairs",
     "minhash_lsh_pairs_oracle",
+    "probe_band_index",
+    "incremental_neardup",
+    "incremental_neardup_oracle",
     "simhash_fingerprints",
     "simhash_fingerprints_oracle",
     "simhash_pairs",
@@ -65,8 +70,6 @@ __all__ = [
     "ngram_containment_pairs",
     "ngram_containment_pairs_oracle",
     "substring_span_pairs",
-    "minhash_bands_stateless",
-    "incremental_neardup_stateless",
     "embedding_neardup_pairs",
     "embedding_neardup_pairs_oracle",
     "banding_for_threshold",
@@ -210,36 +213,39 @@ _DUCK_SHINGLED = f"""
 # --------------------------------------------------------------------------
 
 def minhash_signatures(docs: DataFrame) -> DataFrame:
-    """doc_id + 16 minhash columns mh0..mh15 — one aggregate pass."""
-    return _minhash_signatures_from(exploded_shingle_hashes(docs))
+    """doc_id + 16 minhash columns mh0..mh15 as explode + groupBy(doc_id)
+    ``min()`` aggregates.
 
-
-def _minhash_signatures_from(ex: DataFrame) -> DataFrame:
+    Not a production path: it is the independent reference the tests
+    compare :func:`minhash_bands` against (same ``(a*x + b) % P``
+    arithmetic, a different algorithm), and the shape the DuckDB oracles
+    restate.
+    """
     aggs = [
         F.min(F.expr(f"({a} * x + {b}) % {MERSENNE_P}")).alias(f"mh{k}")
         for k, (a, b) in enumerate(MINHASH_PERMS)
     ]
-    return ex.groupBy("doc_id").agg(*aggs)
+    return exploded_shingle_hashes(docs).groupBy("doc_id").agg(*aggs)
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    banding: tuple[int, int] | None = None,
+def minhash_bands(
+    docs: DataFrame, banding: tuple[int, int] | None = None
 ) -> DataFrame:
-    """Near-dup pairs via MinHash signatures + LSH banding + exact verify.
+    """(doc_id, sh, bsigs, band, bsig) — the one MinHash band table.
 
-    Pipeline: shingle → 48-bit shingle hash (once) → 16 MAP-ONLY
-    array_min minhashes → bands (default 4 bands of 4; pass
-    ``banding=banding_for_threshold(t)`` to size the S-curve to the
-    target threshold) → shuffle by (band, band-signature) with the hash
-    set carried in-row → exact Jaccard verified directly on colliding
-    band rows → distinct surviving pairs.
+    Every LSH caller builds its bands here: :func:`minhash_lsh_pairs`
+    joins the table with itself, :func:`probe_band_index` joins a new
+    batch's table with a known corpus's (stored or fresh), and the scale
+    rehearsal counts its (band, bsig) buckets. Default banding is 4 bands
+    of 4 rows; pass ``banding=banding_for_threshold(t)`` to size the
+    S-curve to the target threshold.
 
-    At 100 TB the band-join is the only all-data shuffle; its key
-    cardinality is huge (band signatures), so it partitions evenly, and the
-    quadratic blow-up is confined to same-signature buckets (true
-    near-dups, plus ~J⁴-rate false positives that verification removes).
+    Every operator is STATELESS (per-row expressions plus one posexplode),
+    so the table builds unchanged on a Structured Streaming DataFrame.
+    ``sh`` is the doc's distinct 48-bit shingle-hash set, carried for the
+    exact-Jaccard verify; ``bsigs`` holds all band signatures so a join
+    consumer can keep each pair at its first matching band with a per-row
+    predicate instead of a stateful DISTINCT.
     """
     n_bands, rows_per_band = banding if banding is not None else (
         N_BANDS, ROWS_PER_BAND,
@@ -263,71 +269,96 @@ def minhash_lsh_pairs(
             f"array_distinct(transform(sh, s -> {spark_hex48('s')}))"
         ).alias("sh"),
     )
-    # r16: MinHash signatures as MAP-ONLY array_min(transform(...)) over
-    # the in-row hash set — same (a*x+b) % P arithmetic per element, same
-    # min, so values are identical to the former explode + groupBy(doc_id)
-    # aggregation, but with NO doc_id exchange and no 200×-row explode
-    # (guide §2.4: remove shuffles outright; measured 0.62 → 0.29 s for
-    # the signature subtree at sf0.1). The xs projection is separate so
-    # the h % P pass evaluates once, not once per permutation.
+    # MinHash signatures as MAP-ONLY array_min(transform(...)) over the
+    # in-row hash set — same (a*x+b) % P arithmetic per element, same
+    # min, so values are identical to the explode + groupBy(doc_id)
+    # aggregation of minhash_signatures, but with NO doc_id exchange and
+    # no 200×-row explode (guide §2.4: remove shuffles outright; measured
+    # 0.62 → 0.29 s for the signature subtree at sf0.1). The xs
+    # projection is separate so the h % P pass evaluates once, not once
+    # per permutation.
     xs = sh.select(
         "doc_id", "sh",
         F.expr(f"transform(sh, h -> h % {MERSENNE_P})").alias("xs"),
     )
-    mh_cols = [
-        F.expr(
-            f"array_min(transform(xs, x -> ({a} * x + {b}) % {MERSENNE_P}))"
-        ).alias(f"mh{k}")
-        for k, (a, b) in enumerate(MINHASH_PERMS)
+    mh = [
+        f"array_min(transform(xs, x -> ({a} * x + {b}) % {MERSENNE_P}))"
+        for (a, b) in MINHASH_PERMS
     ]
-    sigs = xs.select("doc_id", "sh", *mh_cols)
-
-    band_structs = []
-    for j in range(n_bands):
-        ms = [f"mh{j * rows_per_band + r}" for r in range(rows_per_band)]
-        band_structs.append(
-            f"struct({j} as band, concat_ws('-', {', '.join(ms)}) as bsig)"
-        )
-    # The band rows CARRY the doc's shingle-hash set, so the exact-Jaccard
-    # verify runs directly on the band join's output — the former
-    # cand-distinct + two verify joins (3 more exchanges + 2 broadcast
-    # builds on the critical path) disappear. Scale note: the band shuffle
-    # now ships each doc's hash set n_bands× where the old shape shipped
-    # it 2× (the verify joins) — a deliberate trade of ~2× band-shuffle
-    # bytes for 3 fewer all-data stages; the sets are the narrow 8-byte
-    # hashes (never raw text), so the multiplier is bounded and the
-    # pair-verify still never re-reads the corpus.
-    bands = sigs.select(
-        "doc_id",
-        "sh",
-        F.explode(F.expr(f"array({', '.join(band_structs)})")).alias("bb"),
-    ).select(
-        "doc_id", "sh",
-        F.col("bb.band").alias("band"), F.col("bb.bsig").alias("bsig"),
+    bsigs = ", ".join(
+        "concat_ws('-', "
+        + ", ".join(mh[j * rows_per_band : (j + 1) * rows_per_band])
+        + ")"
+        for j in range(n_bands)
     )
+    return xs.select(
+        "doc_id", "sh", F.expr(f"array({bsigs})").alias("bsigs")
+    ).select("doc_id", "sh", "bsigs", F.posexplode("bsigs").alias("band", "bsig"))
 
-    a, b = bands.alias("a"), bands.alias("b")
-    # A pair colliding in k > 1 bands is verified k times and deduplicated
-    # by the final distinct — jaccard is deterministic per pair, so
-    # distinct over (doc_a, doc_b, jaccard) equals distinct over pairs;
-    # multi-band collisions are rare (near-identical docs) and the
-    # distinct runs on the tiny post-threshold survivor set.
-    ver = (
-        a.join(b, ["band", "bsig"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
+
+def _verified_band_pairs(
+    a: DataFrame,
+    b: DataFrame,
+    threshold: float,
+    names: tuple[str, str],
+    self_join: bool = False,
+) -> DataFrame:
+    """(names[0], names[1], jaccard) for docs of band tables ``a`` and
+    ``b`` that share a (band, bsig) bucket and verify at exact Jaccard
+    ≥ ``threshold``.
+
+    The band join is the only all-data shuffle; its key cardinality is
+    huge (band signatures), so it partitions evenly, and the quadratic
+    blow-up is confined to same-signature buckets (true near-dups, plus
+    ~J⁴-rate false positives that verification removes). The band rows
+    CARRY the doc's shingle-hash set, so the verify runs directly on the
+    join's output, with no verify joins back to the corpus. A pair
+    colliding in k > 1 bands is kept only at its FIRST matching band
+    (``array_position`` over the zipped signature arrays): a per-row
+    predicate, so no DISTINCT and no state, and the probe runs on a
+    stream. ``self_join`` keeps only ``a.doc_id < b.doc_id``.
+    """
+    joined = a.alias("a").join(b.alias("b"), ["band", "bsig"]).filter(
+        F.expr("array_position(zip_with(a.bsigs, b.bsigs, (x, y) -> x = y), true)")
+        == F.col("band") + 1
+    )
+    if self_join:
+        joined = joined.filter(F.col("a.doc_id") < F.col("b.doc_id"))
+    return (
+        joined.select(
+            F.col("a.doc_id").alias(names[0]),
+            F.col("b.doc_id").alias(names[1]),
             F.expr(
                 "cast(size(array_intersect(a.sh, b.sh)) as double)"
                 " / (size(a.sh) + size(b.sh) - size(array_intersect(a.sh, b.sh)))"
             ).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
-        .distinct()
+        .select(*names, F.round("jaccard", 6).alias("jaccard"))
     )
-    return ver
+
+
+def minhash_lsh_pairs(
+    docs: DataFrame,
+    threshold: float = 0.5,
+    banding: tuple[int, int] | None = None,
+) -> DataFrame:
+    """Near-dup pairs via MinHash signatures + LSH banding + exact verify.
+
+    Pipeline: the band table (:func:`minhash_bands`: shingle → 48-bit
+    shingle hash once → 16 map-only array_min minhashes → bands) joined
+    with itself on (band, band-signature) → exact Jaccard verified on the
+    colliding band rows, each pair once at its first matching band.
+
+    Scale note: the band shuffle ships each doc's hash set n_bands×, a
+    deliberate trade for no verify joins; the sets are the narrow 8-byte
+    hashes (never raw text), so the multiplier is bounded and the
+    pair-verify never re-reads the corpus.
+    """
+    bands = minhash_bands(docs, banding)
+    return _verified_band_pairs(
+        bands, bands, threshold, ("doc_a", "doc_b"), self_join=True
+    )
 
 
 def minhash_lsh_pairs_oracle(threshold: float = 0.5) -> str:
@@ -834,204 +865,47 @@ FROM cand WHERE bit_count(xor(fa, fb)) <= {max_hamming}
 
 
 # --------------------------------------------------------------------------
-# stateless MinHash bands (streaming-safe)
+# incremental dedup (new batch vs known corpus, batch or streaming)
 # --------------------------------------------------------------------------
-
-def minhash_bands_stateless(docs: DataFrame) -> DataFrame:
-    """(doc_id, sh, bsigs, band, bsig) via PURE per-row expressions.
-
-    The batch path computes MinHash signatures as min-AGGREGATES over the
-    exploded shingle table (one shuffle — right at corpus scale, where a
-    document's shingles may outnumber a task's rows). This variant folds
-    the identical arithmetic into array expressions evaluated per document
-    row: ``mh_k = array_min(transform(xs, x -> (a_k*x + b_k) % P))``.
-    Every operator is STATELESS, so the computation runs unchanged on a
-    Structured Streaming DataFrame (where the aggregate path would demand
-    watermarked state). Same md5 arithmetic, same constants — values are
-    bit-identical to :func:`minhash_signatures`.
-
-    ``bsigs`` (all 4 band signatures as an array) rides along so consumers
-    can dedup multi-band collisions with a per-row predicate instead of a
-    stateful DISTINCT — see :func:`incremental_neardup_stateless`.
-    """
-    # carry the distinct 48-bit shingle HASHES (not the strings) through
-    # every downstream shuffle/index — same ~4× payload cut and identical
-    # oracle treatment as minhash_lsh_pairs; xs derives from them by % P
-    sh = shingled_docs(docs).select(
-        "doc_id",
-        F.expr(
-            f"array_distinct(transform(sh, s -> {spark_hex48('s')}))"
-        ).alias("sh"),
-    )
-    xs = sh.select(
-        "doc_id",
-        "sh",
-        F.expr(f"transform(sh, h -> h % {MERSENNE_P})").alias("xs"),
-    )
-    mh = [
-        f"array_min(transform(xs, x -> ({a} * x + {b}) % {MERSENNE_P}))"
-        for (a, b) in MINHASH_PERMS
-    ]
-    bsig_exprs = []
-    for j in range(N_BANDS):
-        ms = mh[j * ROWS_PER_BAND : (j + 1) * ROWS_PER_BAND]
-        bsig_exprs.append("concat_ws('-', " + ", ".join(ms) + ")")
-    sigs = xs.select(
-        "doc_id", "sh", F.expr(f"array({', '.join(bsig_exprs)})").alias("bsigs")
-    )
-    return sigs.select(
-        "doc_id", "sh", "bsigs", F.posexplode("bsigs").alias("band", "bsig")
-    )
-
-
-def incremental_neardup_stateless(
-    new_docs: DataFrame, known_docs: DataFrame, threshold: float = 0.5
-) -> DataFrame:
-    """:func:`incremental_neardup` re-expressed with ONLY stateless
-    operators on the new side — the streaming ingest shape.
-
-    ``new_docs`` may be a STREAMING DataFrame: bands come from per-row
-    expressions (:func:`minhash_bands_stateless`), candidates from a
-    stream-static equi-join on (band, bsig) against the known corpus's
-    band index, and the multi-band duplicate collapse is the first-
-    matching-band predicate (``array_position`` over the zipped signature
-    arrays) instead of a stateful DISTINCT. Verification is the same
-    exact-Jaccard expression on the two shingle arrays carried through
-    the join. Output pairs are identical to the batch path.
-    """
-    # probe a freshly-built index; production ingest builds/persists the
-    # index once per corpus snapshot (build_band_index) and probes it
-    # per batch (probe_band_index). The multi-band duplicate collapse is
-    # the first-matching-band predicate inside the probe — no state.
-    return probe_band_index(
-        new_docs, build_band_index(known_docs), threshold=threshold
-    )
-
-
-def build_band_index(known_docs: DataFrame) -> DataFrame:
-    """Materializable band index of a known corpus: (doc_id, sh, band, bsig).
-
-    The production ingest loop computes this ONCE per corpus snapshot and
-    persists it (parquet partitioned by band, or just cached); every
-    arriving batch then probes the stored index instead of re-shingling
-    the known side per micro-batch:
-
-        idx = spark.read.parquet(index_path)       # or build_band_index(known)
-        pairs = probe_band_index(new_batch, idx)
-
-    Identical signatures to the stateless path (same per-row arithmetic).
-    """
-    return minhash_bands_stateless(known_docs)
-
 
 def probe_band_index(
     new_docs: DataFrame, index: DataFrame, threshold: float = 0.5
 ) -> DataFrame:
-    """Stateless probe of a prebuilt band index — streaming-safe.
+    """Near-dup matches of ``new_docs`` against a band index — the
+    :func:`minhash_bands` table of a known corpus, fresh or stored.
 
-    Same join/verify shape as :func:`incremental_neardup_stateless` but
-    the known side is the stored index, so per-batch cost is only the
-    arriving documents' expressions + one equi-join against the index.
+    The production ingest loop computes the index ONCE per corpus
+    snapshot and persists it (parquet partitioned by band, or just
+    cached); every arriving batch then probes the stored index instead of
+    re-shingling the known side per micro-batch:
+
+        idx = spark.read.parquet(index_path)       # or minhash_bands(known)
+        pairs = probe_band_index(new_batch, idx)
+
+    Per-batch cost is only the arriving documents' expressions + one
+    equi-join against the index. Every operator on the new side is
+    stateless, so ``new_docs`` may be a STREAMING DataFrame (a
+    stream-static join). Returns (new_doc, known_doc, jaccard).
     """
-    new_b = minhash_bands_stateless(new_docs).alias("a")
-    known_b = index.alias("b")
-    joined = new_b.join(known_b, ["band", "bsig"]).select(
-        F.col("a.doc_id").alias("new_doc"),
-        F.col("b.doc_id").alias("known_doc"),
-        F.col("band").alias("band"),
-        F.col("a.bsigs").alias("a_bsigs"),
-        F.col("b.bsigs").alias("b_bsigs"),
-        F.col("a.sh").alias("a_sh"),
-        F.col("b.sh").alias("b_sh"),
-    )
-    first_band = joined.filter(
-        F.expr("array_position(zip_with(a_bsigs, b_bsigs, (x, y) -> x = y), true)")
-        == F.col("band") + 1
-    )
-    return (
-        first_band.select(
-            "new_doc",
-            "known_doc",
-            F.expr(
-                "cast(size(array_intersect(a_sh, b_sh)) as double)"
-                " / (size(a_sh) + size(b_sh) - size(array_intersect(a_sh, b_sh)))"
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_doc", "known_doc", F.round("jaccard", 6).alias("jaccard"))
+    return _verified_band_pairs(
+        minhash_bands(new_docs), index, threshold, ("new_doc", "known_doc")
     )
 
-
-# --------------------------------------------------------------------------
-# incremental dedup (new batch vs known corpus)
-# --------------------------------------------------------------------------
 
 def incremental_neardup(
     new_docs: DataFrame, known_docs: DataFrame, threshold: float = 0.5
 ) -> DataFrame:
     """Near-dup matches of a NEW batch against a KNOWN corpus.
 
-    The production ingest flow: the known corpus's band signatures are a
-    persisted index; each arriving batch computes its own signatures and
-    probes the index — candidate generation is a band-signature equi-join
-    of new×known only (never known×known), so ingest cost scales with the
-    batch, not the corpus. Verification = exact Jaccard on candidates.
+    The known corpus's band table is the index each arriving batch probes
+    (:func:`probe_band_index`): candidate generation is a band-signature
+    equi-join of new×known only (never known×known), so ingest cost
+    scales with the batch, not the corpus. Verification = exact Jaccard
+    on candidates. Runs on a streaming ``new_docs`` too.
 
     Returns (new_doc, known_doc, jaccard) pairs ≥ threshold.
     """
-    def _bands(docs: DataFrame, par):
-        # hashed-before-repartition, like minhash_lsh_pairs: the reused
-        # exchange and the verify joins carry bigints, never strings
-        sh = (
-            shingled_docs(docs)
-            .select(
-                "doc_id",
-                F.expr(
-                    f"array_distinct(transform(sh, s -> {spark_hex48('s')}))"
-                ).alias("sh"),
-            )
-            .repartition(par, "doc_id")
-        )
-        ex = sh.select("doc_id", F.explode("sh").alias("h")).select(
-            "doc_id", F.expr(f"h % {MERSENNE_P}").alias("x")
-        )
-        sigs = _minhash_signatures_from(ex)
-        band_structs = []
-        for j in range(N_BANDS):
-            ms = [f"mh{j * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)]
-            band_structs.append(
-                f"struct({j} as band, concat_ws('-', {', '.join(ms)}) as bsig)"
-            )
-        bands = sigs.select(
-            "doc_id", F.explode(F.expr(f"array({', '.join(band_structs)})")).alias("bb")
-        ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bsig").alias("bsig"))
-        return sh, bands
-
-    par = new_docs.sparkSession.sparkContext.defaultParallelism
-    new_sh, new_bands = _bands(new_docs, par)
-    known_sh, known_bands = _bands(known_docs, par)
-
-    cand = (
-        new_bands.alias("a")
-        .join(known_bands.alias("b"), ["band", "bsig"])
-        .select(F.col("a.doc_id").alias("new_doc"), F.col("b.doc_id").alias("known_doc"))
-        .distinct()
-    )
-    da, db = new_sh.alias("da"), known_sh.alias("db")
-    return (
-        cand.join(da, cand["new_doc"] == da["doc_id"])
-        .join(db, cand["known_doc"] == db["doc_id"])
-        .select(
-            "new_doc",
-            "known_doc",
-            F.expr(
-                "cast(size(array_intersect(da.sh, db.sh)) as double)"
-                " / (size(da.sh) + size(db.sh) - size(array_intersect(da.sh, db.sh)))"
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_doc", "known_doc", F.round("jaccard", 6).alias("jaccard"))
-    )
+    return probe_band_index(new_docs, minhash_bands(known_docs), threshold)
 
 
 def incremental_neardup_oracle(
@@ -1188,10 +1062,18 @@ def dedup_clusters(
             return df.checkpoint(eager=True)
         return df.localCheckpoint(eager=True)
 
-    # undirected edges, both directions
+    # undirected edges, both directions, from ONE pass over the pairs: a
+    # union of two projections runs the whole pair plan twice unless an
+    # exchange happens to sit on top of it (measured on the MinHash pairs
+    # at sf0.1: the union form signs every document twice, ~+0.7 s)
     edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).unionAll(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
+        F.explode(
+            F.array(
+                F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+                F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")),
+            )
+        ).alias("e")
+    ).select("e.src", "e.dst")
     edges = _ckpt(edges)
 
     if driver_threshold and edges.count() <= 2 * driver_threshold:
@@ -1294,14 +1176,6 @@ def dedup_clusters_oracle(pairs_cte: str) -> str:
 # embedding cosine near-dup
 # --------------------------------------------------------------------------
 
-_SPARK_NORM2 = (
-    "aggregate(transform(embedding, x -> cast(x as double) * cast(x as double)),"
-    " cast(0 as double), (acc, v) -> acc + v)"
-)
-_DUCK_NORM2 = (
-    "list_reduce(list_prepend(cast(0 as double),"
-    " list_transform(embedding, x -> x::DOUBLE * x::DOUBLE)), (a, b) -> a + b)"
-)
 # dot product folded left in ascending index order — bit-identical on both
 # engines because every product is float32*float32 widened to double and the
 # accumulation order is fixed.
@@ -1311,13 +1185,6 @@ _SPARK_DOT = (
     " cast(0 as double), (acc, v) -> acc + v)"
 )
 
-
-def _duck_dot(av: str, bv: str, dim: int = 64) -> str:
-    return (
-        f"list_reduce(list_prepend(cast(0 as double),"
-        f" list_transform(generate_series(1, {dim}),"
-        f" i -> {av}[i]::DOUBLE * {bv}[i]::DOUBLE)), (x, y) -> x + y)"
-    )
 
 
 def embedding_neardup_pairs(emb: DataFrame, threshold: float = 0.45) -> DataFrame:
@@ -1375,8 +1242,6 @@ def embedding_neardup_lsh(emb: DataFrame, threshold: float = 0.3) -> DataFrame:
     query returns a non-trivial pair set on the test corpus (which has no
     planted embedding near-dups).
     """
-    from .similarity import _bucket_expr
-
     par = emb.sparkSession.sparkContext.defaultParallelism
     n = emb.repartition(par).select(
         "vec_id",
@@ -1404,8 +1269,6 @@ def embedding_neardup_lsh(emb: DataFrame, threshold: float = 0.3) -> DataFrame:
 
 
 def embedding_neardup_lsh_oracle(threshold: float = 0.3) -> str:
-    from .similarity import _bucket_expr
-
     return f"""
 WITH n AS (
     SELECT vec_id, embedding, {_DUCK_NORM2} AS n2,

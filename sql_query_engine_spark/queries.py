@@ -2469,18 +2469,18 @@ def dedup_incremental(spark, sf_dir):
 @_q(
     "dedup_incremental_stateless",
     dedup.incremental_neardup_oracle("% 2 = 1", "% 2 = 0"),
-    "streaming-shaped incremental dedup: identical pairs to "
-    "dedup_incremental, but every operator on the arriving side is "
+    "streaming-shaped incremental dedup: the same incremental_neardup "
+    "as dedup_incremental, whose every operator on the arriving side is "
     "STATELESS (per-row MinHash expressions, stream-static band join, "
     "first-matching-band dedup predicate) — runs unchanged on a "
     "readStream of documents (test_streaming.py drives it as a real "
-    "stream); same oracle as the batch twin",
+    "stream); same oracle as dedup_incremental",
 )
 def dedup_incremental_stateless(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     new_docs = docs.filter(F.col("doc_id") % 2 == 1)
     known_docs = docs.filter(F.col("doc_id") % 2 == 0)
-    return dedup.incremental_neardup_stateless(new_docs, known_docs)
+    return dedup.incremental_neardup(new_docs, known_docs)
 
 
 @_q(
@@ -6525,13 +6525,20 @@ def pipeline_source_authority(spark, sf_dir):
         .filter(F.col("s_from") != F.col("s_to"))
         .select("s_from", "s_to")
     )
+    # both directions from one pass over und (a union would run the
+    # LSH pair plan twice, as in dedup_clusters)
     edges = (
-        und.unionByName(
-            und.select(
-                F.col("s_to").alias("s_from"), F.col("s_from").alias("s_to")
-            )
+        und.select(
+            F.explode(
+                F.array(
+                    F.struct("s_from", "s_to"),
+                    F.struct(
+                        F.col("s_to").alias("s_from"), F.col("s_from").alias("s_to")
+                    ),
+                )
+            ).alias("e")
         )
-        .groupBy("s_from", "s_to")
+        .groupBy("e.s_from", "e.s_to")
         .agg(F.count("*").alias("w"))
         .persist()  # referenced every iteration; the LSH pass runs once
     )
@@ -10577,7 +10584,7 @@ def src_warc_gz_scan(spark, sf_dir):
 def src_warc_cdx_fetch(spark, sf_dir):
     from .sources import warc
 
-    out = _legacy_fixture_dir(sf_dir, "documents_warc_gz_cdx")
+    out = _legacy_fixture_dir(sf_dir, "documents_warc_gz")
     _cached_fixture(out, lambda: warc.write_warc_gz_dataset(
         _t(spark, sf_dir, "documents"), out, n_files=4))
     idx = warc.read_cdx(spark, f"{out}/*.cdx")
@@ -10627,7 +10634,7 @@ def src_warc_cdx_fetch(spark, sf_dir):
 def src_warc_digest_verify(spark, sf_dir):
     from .sources import warc
 
-    out = _legacy_fixture_dir(sf_dir, "documents_warc_digests")
+    out = _legacy_fixture_dir(sf_dir, "documents_warc_gz")
     _cached_fixture(out, lambda: warc.write_warc_gz_dataset(
         _t(spark, sf_dir, "documents"), out, n_files=4))
     got = warc.read_warc_gz(spark, f"{out}/*.warc.gz", plane="meta")

@@ -162,23 +162,9 @@ def _candidate_stats(docs: DataFrame, banding: tuple[int, int]) -> dict:
     pairs the LSH self-join will generate (with band multiplicity) — the
     quantity that must stay ~linear in the corpus for the 100 TB story.
     """
-    n_bands, rows_per_band = banding
-    sigs = dedup.minhash_signatures(docs)
-    band_structs = [
-        "struct({j} as band, concat_ws('-', {ms}) as bsig)".format(
-            j=j,
-            ms=", ".join(
-                f"mh{j * rows_per_band + r}" for r in range(rows_per_band)
-            ),
-        )
-        for j in range(n_bands)
-    ]
     buckets = (
-        sigs.select(
-            "doc_id",
-            F.explode(F.expr(f"array({', '.join(band_structs)})")).alias("bb"),
-        )
-        .groupBy("bb.band", "bb.bsig")
+        dedup.minhash_bands(docs, banding)
+        .groupBy("band", "bsig")
         .agg(F.count("*").alias("n"))
         .filter(F.col("n") > 1)
     )

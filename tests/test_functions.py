@@ -39,47 +39,27 @@ def test_minhash_lsh_finds_exact_jaccard_dups(spark, docs):
 
 
 def test_minhash_arraymin_sigs_match_aggregate_form(spark, docs):
-    """The r16 map-only array_min signatures must equal the former
-    explode + groupBy(doc_id) aggregation exactly — same (a*x+b) % P
-    arithmetic, same min, per permutation."""
+    """The map-only array_min band table (minhash_bands) must carry the
+    same (doc_id, band, bsig) rows as bands assembled from the explode +
+    groupBy(doc_id) min-aggregate reference (minhash_signatures) — same
+    (a*x+b) % P arithmetic, same min, per permutation."""
     from sql_query_engine_spark.functions.dedup import (
-        _minhash_signatures_from,
-        exploded_shingle_hashes,
-        shingled_docs,
-    )
-    from sql_query_engine_spark.functions.hashing import (
-        MERSENNE_P,
-        MINHASH_PERMS,
-        spark_hex48,
+        N_BANDS,
+        ROWS_PER_BAND,
+        minhash_bands,
+        minhash_signatures,
     )
 
     ref = {
-        r.doc_id: tuple(r)[1:]
-        for r in _minhash_signatures_from(
-            exploded_shingle_hashes(docs)
-        ).collect()
+        (r.doc_id, j, "-".join(
+            str(r[f"mh{j * ROWS_PER_BAND + k}"]) for k in range(ROWS_PER_BAND)
+        ))
+        for r in minhash_signatures(docs).collect()
+        for j in range(N_BANDS)
     }
-    sh = shingled_docs(docs).select(
-        "doc_id",
-        F.expr(
-            f"array_distinct(transform(sh, s -> {spark_hex48('s')}))"
-        ).alias("sh"),
-    )
-    xs = sh.select(
-        "doc_id", F.expr(f"transform(sh, h -> h % {MERSENNE_P})").alias("xs")
-    )
     got = {
-        r.doc_id: tuple(r)[1:]
-        for r in xs.select(
-            "doc_id",
-            *[
-                F.expr(
-                    f"array_min(transform(xs, x -> ({a} * x + {b})"
-                    f" % {MERSENNE_P}))"
-                ).alias(f"mh{k}")
-                for k, (a, b) in enumerate(MINHASH_PERMS)
-            ],
-        ).collect()
+        tuple(r)
+        for r in minhash_bands(docs).select("doc_id", "band", "bsig").collect()
     }
     assert got == ref and len(got) > 0
 

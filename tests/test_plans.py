@@ -193,8 +193,8 @@ FIXTURE_WRITERS = {
     "src_avro_scan": "orders_avro",
     "src_warc_scan": "documents_warc",
     "src_warc_gz_scan": "documents_warc_gz",
-    "src_warc_cdx_fetch": "documents_warc_gz_cdx",
-    "src_warc_digest_verify": "documents_warc_digests",
+    "src_warc_cdx_fetch": "documents_warc_gz",
+    "src_warc_digest_verify": "documents_warc_gz",
     "src_warc_charset_decode": "documents_warc_charsets",
     "src_warc_wat_sidecar": "documents_warc_wat",
     "src_warc_revisit_dedup": "documents_warc_revisits",
@@ -344,6 +344,41 @@ def test_mm_rows_run_one_python_stage(spark):
     assert len(stages) == 42
     assert stages.pop("mm_payload_dedup") == 0
     assert {n: c for n, c in stages.items() if c != 1} == {}
+
+
+def test_minhash_rows_sign_map_only(spark):
+    """The MinHash dedup rows sign documents with the map-only array_min
+    band table: no HashAggregate computes min( signatures, and the final
+    executed plan holds no more Exchange/BroadcastExchange nodes than the
+    ceilings below (a ReusedExchange does no work and is not counted).
+    The explode + groupBy signature path these rows used to mix in gave
+    3 / 7 / 3 exchanges here, with 4 min( aggregates in
+    dedup_incremental; a refactor that brings it back fails here."""
+    import re
+
+    from sql_query_engine_spark.queries import queries
+
+    ceilings = {
+        "dedup_minhash_lsh": 2,
+        "dedup_incremental": 3,
+        "dedup_incremental_stateless": 3,
+    }
+    qs = queries()
+    for name, ceiling in ceilings.items():
+        df = qs[name](spark, SF_DIR)
+        df.collect()  # AQE settles the final plan only once it runs
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.executedPlan()  # the final plan alone
+        tree = plan.toString()
+        nodes = re.findall(r"^[\s:+-]*(\w+)", tree, re.M)
+        exchanges = sum(n in ("Exchange", "BroadcastExchange") for n in nodes)
+        min_aggs = [
+            ln for ln in tree.splitlines()
+            if "HashAggregate" in ln and re.search(r"\bmin\(", ln)
+        ]
+        assert min_aggs == [], (name, min_aggs)
+        assert exchanges <= ceiling, (name, exchanges, tree)
 
 
 def test_curation_plan_shapes(spark):

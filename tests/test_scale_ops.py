@@ -473,8 +473,12 @@ def test_ntile_from_rn_remainder_buckets(spark):
 
 
 def test_band_index_parquet_roundtrip_probe(spark, tmp_path):
-    """The persisted-index ingest flow: build_band_index → parquet →
-    reload → probe must yield exactly the directly-computed pairs."""
+    """The persisted-index ingest flow: minhash_bands → parquet →
+    reload → probe must yield exactly the DuckDB oracle's pairs for the
+    same split."""
+    import duckdb
+
+    from sql_query_engine_spark.catalog import table_path
     from sql_query_engine_spark.functions import dedup
 
     docs = load_table(spark, SF_DIR, "documents")
@@ -482,17 +486,21 @@ def test_band_index_parquet_roundtrip_probe(spark, tmp_path):
     known = docs.filter(F.col("doc_id") % 2 == 0)
 
     idx_path = str(tmp_path / "band_index")
-    dedup.build_band_index(known).write.parquet(idx_path)
+    dedup.minhash_bands(known).write.parquet(idx_path)
     idx = spark.read.parquet(idx_path)
 
     got = {
         (r.new_doc, r.known_doc, r.jaccard)
         for r in dedup.probe_band_index(new_batch, idx).collect()
     }
-    want = {
-        (r.new_doc, r.known_doc, r.jaccard)
-        for r in dedup.incremental_neardup(new_batch, known).collect()
-    }
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"'{table_path(SF_DIR, 'documents')}'"
+    )
+    want = set(
+        con.sql(dedup.incremental_neardup_oracle("% 2 = 1", "% 2 = 0")).fetchall()
+    )
     assert got == want and len(want) > 0
 
 

@@ -268,14 +268,17 @@ def test_sliding_each_event_in_two_windows(spark, batch_events):
 
 
 def test_streaming_incremental_dedup_equals_batch(spark, tmp_path):
-    """incremental_neardup_stateless on a REAL document stream
-    (readStream → stream-static band join → append memory sink) must emit
-    exactly the batch twin's near-dup pairs — the streaming ingest-dedup
-    story end-to-end: arriving docs probe the known corpus's index with
-    zero stateful operators (no watermark, bounded memory by construction).
+    """incremental_neardup on a REAL document stream (readStream →
+    stream-static band join → append memory sink) must emit exactly the
+    DuckDB oracle's near-dup pairs for the same split — the streaming
+    ingest-dedup story end-to-end: arriving docs probe the known corpus's
+    index with zero stateful operators (no watermark, bounded memory by
+    construction).
     """
+    import duckdb
     from pyspark.sql import functions as F
 
+    from sql_query_engine_spark.catalog import table_path
     from sql_query_engine_spark.functions import dedup
 
     docs = load_table(spark, SF_DIR, "documents")
@@ -287,7 +290,7 @@ def test_streaming_incremental_dedup_equals_batch(spark, tmp_path):
     new_batch.coalesce(1).write.parquet(str(stream_dir))
 
     new_stream = spark.readStream.schema(docs.schema).parquet(str(stream_dir))
-    out = dedup.incremental_neardup_stateless(new_stream, known)
+    out = dedup.incremental_neardup(new_stream, known)
     assert out.isStreaming
 
     q = (
@@ -304,10 +307,14 @@ def test_streaming_incremental_dedup_equals_batch(spark, tmp_path):
         (r.new_doc, r.known_doc, r.jaccard)
         for r in spark.sql("SELECT * FROM dedup_stream_test").collect()
     }
-    expected = {
-        (r.new_doc, r.known_doc, r.jaccard)
-        for r in dedup.incremental_neardup(new_batch, known).collect()
-    }
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"'{table_path(SF_DIR, 'documents')}'"
+    )
+    expected = set(
+        con.sql(dedup.incremental_neardup_oracle("% 2 = 1", "% 2 = 0")).fetchall()
+    )
     assert got == expected
     assert len(expected) > 0
 

@@ -52,9 +52,9 @@ SHOWCASE = [
     ),
     (
         "dedup_minhash_lsh",
-        "shingles exploded once, signatures as min-aggregates, band "
-        "equi-join (ShuffledHashJoin/SortMergeJoin on band signature), "
-        "Jaccard verify only on candidates",
+        "shingles hashed once, map-only array_min signatures (no "
+        "aggregate), band equi-join on band signature, Jaccard verify "
+        "only on candidates at their first matching band",
         "quadratic work confined to hash buckets; every shuffle keys on "
         "high-cardinality values — no skew, no all-pairs stage",
     ),
