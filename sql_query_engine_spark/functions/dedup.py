@@ -47,7 +47,7 @@ from .hashing import (
     spark_shingles,
     spark_tokens,
 )
-from .similarity import _DUCK_NORM2, _SPARK_NORM2, _bucket_expr, _duck_dot
+from .similarity import _DUCK_NORM2, _bucket_expr, _cosine, _duck_dot, _spark_norm2
 
 __all__ = [
     "exact_dedup",
@@ -1176,17 +1176,6 @@ def dedup_clusters_oracle(pairs_cte: str) -> str:
 # embedding cosine near-dup
 # --------------------------------------------------------------------------
 
-# dot product folded left in ascending index order — bit-identical on both
-# engines because every product is float32*float32 widened to double and the
-# accumulation order is fixed.
-_SPARK_DOT = (
-    "aggregate(zip_with(a.embedding, b.embedding,"
-    " (x, y) -> cast(x as double) * cast(y as double)),"
-    " cast(0 as double), (acc, v) -> acc + v)"
-)
-
-
-
 def embedding_neardup_pairs(emb: DataFrame, threshold: float = 0.45) -> DataFrame:
     """Near-dup vector pairs by cosine similarity (brute-force verifier).
 
@@ -1196,7 +1185,7 @@ def embedding_neardup_pairs(emb: DataFrame, threshold: float = 0.45) -> DataFram
     """
     par = emb.sparkSession.sparkContext.defaultParallelism
     n = emb.repartition(par).select(
-        "vec_id", "embedding", F.expr(_SPARK_NORM2).alias("n2")
+        "vec_id", "embedding", F.expr(_spark_norm2("embedding")).alias("n2")
     )
     a, b = n.alias("a"), n.alias("b")
     return (
@@ -1204,9 +1193,7 @@ def embedding_neardup_pairs(emb: DataFrame, threshold: float = 0.45) -> DataFram
         .select(
             F.col("a.vec_id").alias("vec_a"),
             F.col("b.vec_id").alias("vec_b"),
-            (F.expr(_SPARK_DOT) / (F.sqrt(F.col("a.n2")) * F.sqrt(F.col("b.n2")))).alias(
-                "cos"
-            ),
+            _cosine("a.embedding", "b.embedding", "a.n2", "b.n2").alias("cos"),
         )
         .filter(F.col("cos") >= threshold)
         .select("vec_a", "vec_b", F.round("cos", 6).alias("cos"))
@@ -1246,7 +1233,7 @@ def embedding_neardup_lsh(emb: DataFrame, threshold: float = 0.3) -> DataFrame:
     n = emb.repartition(par).select(
         "vec_id",
         "embedding",
-        F.expr(_SPARK_NORM2).alias("n2"),
+        F.expr(_spark_norm2("embedding")).alias("n2"),
         F.expr(_bucket_expr("spark")).alias("bucket"),
     )
     a, b = n.alias("a"), n.alias("b")
@@ -1259,9 +1246,7 @@ def embedding_neardup_lsh(emb: DataFrame, threshold: float = 0.3) -> DataFrame:
         .select(
             F.col("a.vec_id").alias("vec_a"),
             F.col("b.vec_id").alias("vec_b"),
-            (F.expr(_SPARK_DOT) / (F.sqrt(F.col("a.n2")) * F.sqrt(F.col("b.n2")))).alias(
-                "cos"
-            ),
+            _cosine("a.embedding", "b.embedding", "a.n2", "b.n2").alias("cos"),
         )
         .filter(F.col("cos") >= threshold)
         .select("vec_a", "vec_b", F.round("cos", 6).alias("cos"))

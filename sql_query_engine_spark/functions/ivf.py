@@ -18,11 +18,12 @@ honest check; see tests/test_scale_ops.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import local_df as _local_df
 from .partitioning import sized_for_python_stage
+from .similarity import _centroid_dists, _cosine, _rank_limit, _spark_norm2
 
 __all__ = ["adaptive_params", "train_centroids", "ivf_topk"]
 
@@ -43,8 +44,7 @@ def _assign_udf(centroids):
             if len(pdf) == 0:
                 continue
             v = np.array(list(pdf["embedding"]), dtype=np.float64)
-            # argmin ||v - c||² = argmin (||c||² - 2 v·c)
-            d = c_sq[None, :] - 2.0 * (v @ c_mat.T)
+            d = _centroid_dists(v, c_mat, c_sq)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"],
@@ -77,7 +77,7 @@ def _partial_mean_udf(centroids):
             if len(pdf) == 0:
                 continue
             v = np.array(list(pdf["embedding"]), dtype=np.float64)
-            cell = (c_sq[None, :] - 2.0 * (v @ c_mat.T)).argmin(axis=1)
+            cell = _centroid_dists(v, c_mat, c_sq).argmin(axis=1)
             out = {"cell": [], "pos": [], "s": [], "cnt": []}
             for c in np.unique(cell):
                 mask = cell == c
@@ -199,13 +199,7 @@ def ivf_topk(
         base.mapInPandas(
             _assign_udf(centroids), "vec_id long, embedding array<float>, cell int"
         )
-        .withColumn(
-            "n2",
-            F.expr(
-                "aggregate(transform(embedding, x -> cast(x as double) * cast(x as double)),"
-                " cast(0 as double), (acc, v) -> acc + v)"
-            ),
-        )
+        .withColumn("n2", F.expr(_spark_norm2("embedding")))
         .persist()
     )
 
@@ -216,7 +210,7 @@ def ivf_topk(
     probe_rows = []
     for r in q_rows:
         v = np.asarray(r.embedding, dtype=np.float64)
-        d = c_sq - 2.0 * (c_mat @ v)
+        d = _centroid_dists(v[None, :], c_mat, c_sq)[0]
         for cell in np.argsort(d)[:n_probe]:
             probe_rows.append((r.vec_id, int(cell)))
     probes = F.broadcast(
@@ -236,18 +230,6 @@ def ivf_topk(
     scored = cand.select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
-        (
-            F.expr(
-                "aggregate(zip_with(q_emb, embedding,"
-                " (x, y) -> cast(x as double) * cast(y as double)),"
-                " cast(0 as double), (acc, v) -> acc + v)"
-            )
-            / (F.sqrt(F.col("q_n2")) * F.sqrt(F.col("n2")))
-        ).alias("cos"),
+        _cosine("q_emb", "embedding", "q_n2", "n2").alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"), "rank")
-    )
+    return _rank_limit(scored, "cos", k)

@@ -33,11 +33,18 @@ family.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import local_df as _local_df
 from .partitioning import sized_for_python_stage
+from .similarity import (
+    IVF_CENTROID_IDS,
+    _centroid_dists,
+    _rank_limit,
+    _spark_norm2,
+    _spread,
+)
 
 __all__ = [
     "train_codebooks", "pq_codes", "pq_topk", "ivfpq_topk",
@@ -52,6 +59,76 @@ K_CELLS = 16  # 4-bit codes
 # every subspace codebook = the matching subvector of vec_id 8+j —
 # sample-init without Lloyd rounds, exactly the IVF_CENTROID_IDS trick
 PQ_CB_VEC_IDS: tuple[int, ...] = tuple(range(8, 8 + K_CELLS))
+
+
+def _norm_literal(cb) -> str:
+    """Per-(subspace, code) reconstruction norms ‖cb[s][j]‖² of a driver
+    codebook as one Spark array literal — query-independent."""
+    return "array(" + ", ".join(
+        "array(" + ", ".join(repr(float(x)) + "D" for x in (sub * sub).sum(axis=1)) + ")"
+        for sub in cb
+    ) + ")"
+
+
+def _adc_cos(m: int, norms: str, coarse: bool = False) -> Column:
+    """The ADC approximate cosine every PQ builder ranks by:
+    Σ_s lut[s][code_s] / (qn · sqrt(Σ_s norms[s][code_s])), each sum a
+    fixed-order fold over ascending s. ``norms`` is a column name or an
+    array literal (:func:`_norm_literal`). ``coarse=True`` adds the
+    IVF-PQ residual terms: (qdotc + Σ lut) / (qn · sqrt(cnorm2 + 2·Σ
+    ccdot + Σ norms)). Spark SQL array subscripts are 0-based (DuckDB's
+    are 1-based)."""
+
+    def fold(table: str) -> str:
+        return (
+            f"aggregate(sequence(0, {m - 1}), cast(0 as double),"
+            f" (acc, s) -> acc + {table}[s][codes[s]])"
+        )
+
+    dot, recon = fold("lut"), fold(norms)
+    if coarse:
+        dot = f"qdotc + {dot}"
+        recon = f"cnorm2 + cast(2 as double) * ({fold('ccdot')}) + ({recon})"
+    return (F.expr(dot) / (F.col("qn") * F.sqrt(F.expr(recon)))).alias("approx_cos")
+
+
+def _by_subspace(m: int, col: str, name: str) -> Column:
+    """Aggregate per-code ``col`` arrays (indexed by subspace) into the
+    [s][j] table the ADC fold reads, codes ordered by ``j``."""
+    return F.expr(
+        f"transform(sequence(0, {m - 1}), s ->"
+        f" transform(sort_array(collect_list(struct(j, {col}))),"
+        f" e -> e.{col}[s]))"
+    ).alias(name)
+
+
+def _subspace_folds(m: int, subdim: int, term: str, lead: str = "") -> str:
+    """Spark array over subspaces s of ``lead`` + the fixed-order fold
+    Σ_p ``term`` (p ascending) — the per-subspace dot/norm arithmetic of
+    the pinned paths; ``{i}`` in ``term`` is the element index."""
+    i = f"s * {subdim} + p"
+    return (
+        f"transform(sequence(0, {m - 1}), s -> {lead}"
+        f"aggregate(sequence(0, {subdim - 1}), cast(0 as double),"
+        f" (acc, p) -> acc + {term.format(i=i)}))"
+    )
+
+
+def _argmin_codes(dists: DataFrame, *keys: str) -> DataFrame:
+    """(keys…, codes): per (vector, subspace) the code ``j`` of least
+    ``dist`` (ties on the lower j) via map-side combinable
+    ``min(struct(dist, j))``, then collected in subspace order."""
+    return (
+        dists.groupBy(*keys, "s")
+        .agg(F.min(F.struct("dist", "j")).alias("b"))
+        .groupBy(*keys)
+        .agg(
+            F.expr(
+                "transform(sort_array(collect_list(struct(s, b.j as j))),"
+                " e -> e.j)"
+            ).alias("codes")
+        )
+    )
 
 
 def _partials_udf(codebooks):
@@ -73,8 +150,7 @@ def _partials_udf(codebooks):
             sub = v.reshape(len(v), m, subdim)
             out = {"sub": [], "cell": [], "pos": [], "s": [], "cnt": []}
             for si in range(m):
-                d = cb_sq[si][None, :] - 2.0 * (sub[:, si, :] @ cb[si].T)
-                cell = d.argmin(axis=1)
+                cell = _centroid_dists(sub[:, si, :], cb[si], cb_sq[si]).argmin(axis=1)
                 for c in np.unique(cell):
                     mask = cell == c
                     out["sub"].extend([si] * subdim)
@@ -105,8 +181,9 @@ def _codes_udf(codebooks):
             sub = v.reshape(len(v), m, subdim)
             codes = np.empty((len(v), m), dtype=np.int32)
             for si in range(m):
-                d = cb_sq[si][None, :] - 2.0 * (sub[:, si, :] @ cb[si].T)
-                codes[:, si] = d.argmin(axis=1)
+                codes[:, si] = _centroid_dists(
+                    sub[:, si, :], cb[si], cb_sq[si]
+                ).argmin(axis=1)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"],
@@ -239,52 +316,16 @@ def pq_topk(
     queries = _local_df(
         spark, q_data, "query_id long, qn double, lut array<array<double>>"
     )
-    # per-cell reconstruction norms are query-independent: one literal
-    norm_lit = (
-        "array("
-        + ", ".join(
-            "array("
-            + ", ".join(
-                repr(float(x)) + "D" for x in (cb[si] * cb[si]).sum(axis=1)
-            )
-            + ")"
-            for si in range(m)
-        )
-        + ")"
-    )
-    # Spark SQL array subscripts are 0-based (DuckDB's are 1-based)
-    approx = (
-        f"aggregate(sequence(0, {m - 1}), cast(0 as double),"
-        f" (acc, s) -> acc + lut[s][codes[s]])"
-    )
-    recon = (
-        f"aggregate(sequence(0, {m - 1}), cast(0 as double),"
-        f" (acc, s) -> acc + {norm_lit}[s][codes[s]])"
-    )
     scored = (
         coded.crossJoin(F.broadcast(queries))
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            (F.expr(approx) / (F.col("qn") * F.sqrt(F.expr(recon)))).alias(
-                "approx_cos"
-            ),
+            _adc_cos(m, _norm_literal(cb)),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("approx_cos", 6).alias("approx_cos"),
-            "rank",
-        )
-    )
+    return _rank_limit(scored, "approx_cos", k)
 
 
 def _residual_codes_udf(centroids, codebooks):
@@ -304,12 +345,13 @@ def _residual_codes_udf(centroids, codebooks):
             if len(pdf) == 0:
                 continue
             v = np.array(list(pdf["embedding"]), dtype=np.float64)
-            cell = (c_sq[None, :] - 2.0 * (v @ c_mat.T)).argmin(axis=1)
+            cell = _centroid_dists(v, c_mat, c_sq).argmin(axis=1)
             res = (v - c_mat[cell]).reshape(len(v), m, subdim)
             codes = np.empty((len(v), m), dtype=np.int32)
             for si in range(m):
-                d = cb_sq[si][None, :] - 2.0 * (res[:, si, :] @ cb[si].T)
-                codes[:, si] = d.argmin(axis=1)
+                codes[:, si] = _centroid_dists(
+                    res[:, si, :], cb[si], cb_sq[si]
+                ).argmin(axis=1)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"],
@@ -334,7 +376,7 @@ def _residuals_df(emb: DataFrame, centroids) -> DataFrame:
             if len(pdf) == 0:
                 continue
             v = np.array(list(pdf["embedding"]), dtype=np.float64)
-            cell = (c_sq[None, :] - 2.0 * (v @ c_mat.T)).argmin(axis=1)
+            cell = _centroid_dists(v, c_mat, c_sq).argmin(axis=1)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"],
@@ -342,9 +384,7 @@ def _residuals_df(emb: DataFrame, centroids) -> DataFrame:
                 }
             )
 
-    return emb.repartition(
-        emb.sparkSession.sparkContext.defaultParallelism
-    ).select("vec_id", "embedding").mapInPandas(
+    return _spread(emb).select("vec_id", "embedding").mapInPandas(
         _f, "vec_id long, embedding array<float>"
     )
 
@@ -398,7 +438,7 @@ def ivfpq_topk(
     for r in sorted(q_rows, key=lambda r: r.vec_id):
         q = np.asarray(r.embedding, dtype=np.float64)
         qn = float(np.sqrt((q * q).sum()))
-        d = c_sq - 2.0 * (c_mat @ q)
+        d = _centroid_dists(q[None, :], c_mat, c_sq)[0]
         for cell in np.argsort(d, kind="stable")[:n_probe]:
             cell = int(cell)
             c = c_mat[cell]
@@ -432,52 +472,16 @@ def ivfpq_topk(
         "query_id long, cell int, qn double, qdotc double, cnorm2 double,"
         " lut array<array<double>>, ccdot array<array<double>>",
     )
-    rnorm_lit = (
-        "array("
-        + ", ".join(
-            "array("
-            + ", ".join(
-                repr(float(x)) + "D" for x in (cb[si] * cb[si]).sum(axis=1)
-            )
-            + ")"
-            for si in range(m)
-        )
-        + ")"
-    )
-    agg = "aggregate(sequence(0, {n}), cast(0 as double), (acc, s) -> acc + {t})"
-    approx_dot = "qdotc + " + agg.format(n=m - 1, t="lut[s][codes[s]]")
-    recon2 = (
-        "cnorm2 + 2 * ("
-        + agg.format(n=m - 1, t="ccdot[s][codes[s]]")
-        + ") + ("
-        + agg.format(n=m - 1, t=f"{rnorm_lit}[s][codes[s]]")
-        + ")"
-    )
     scored = (
         coded.join(F.broadcast(queries), "cell")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            (
-                F.expr(approx_dot)
-                / (F.col("qn") * F.sqrt(F.expr(recon2)))
-            ).alias("approx_cos"),
+            _adc_cos(m, _norm_literal(cb), coarse=True),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("approx_cos", 6).alias("approx_cos"),
-            "rank",
-        )
-    )
+    return _rank_limit(scored, "approx_cos", k)
 
 
 def pq_pinned_topk(
@@ -509,8 +513,7 @@ def pq_pinned_topk(
     (:func:`train_codebooks` / :func:`pq_topk`) remains the production
     API, recall-pinned in tests."""
     subdim = dim // m
-    par = emb.sparkSession.sparkContext.defaultParallelism
-    base = emb.repartition(par).select("vec_id", "embedding")
+    base = _spread(emb).select("vec_id", "embedding")
     cb = F.broadcast(
         base.filter(F.col("vec_id").isin(*PQ_CB_VEC_IDS))
         .select(
@@ -519,46 +522,26 @@ def pq_pinned_topk(
         )
         .withColumn(
             "cn2s",
-            F.expr(
-                f"transform(sequence(0, {m - 1}), s ->"
-                f" aggregate(sequence(0, {subdim - 1}), cast(0 as double),"
-                f" (acc, p) -> acc"
-                f" + cast(cemb[s * {subdim} + p] as double)"
-                f" * cast(cemb[s * {subdim} + p] as double)))"
-            ),
+            F.expr(_subspace_folds(
+                m, subdim, "cast(cemb[{i}] as double) * cast(cemb[{i}] as double)"
+            )),
         )
     )
     # per-(vector, codebook row): the m subspace distances in one array
-    dist_arr = (
-        f"transform(sequence(0, {m - 1}), s -> cn2s[s]"
-        f" - cast(2 as double) * aggregate(sequence(0, {subdim - 1}),"
-        f" cast(0 as double), (acc, p) -> acc"
-        f" + cast(embedding[s * {subdim} + p] as double)"
-        f" * cast(cemb[s * {subdim} + p] as double)))"
+    dist_arr = _subspace_folds(
+        m, subdim,
+        "cast(embedding[{i}] as double) * cast(cemb[{i}] as double)",
+        lead="cn2s[s] - cast(2 as double) * ",
     )
     dists = base.crossJoin(cb).select(
         "vec_id",
         "j",
         F.posexplode(F.expr(dist_arr)).alias("s", "dist"),
     )
-    codes = (
-        dists.groupBy("vec_id", "s")
-        .agg(F.min(F.struct("dist", "j")).alias("b"))
-        .groupBy("vec_id")
-        .agg(
-            F.expr(
-                "transform(sort_array(collect_list(struct(s, b.j as j))),"
-                " e -> e.j)"
-            ).alias("codes")
-        )
-    )
+    codes = _argmin_codes(dists, "vec_id")
     # per-query LUT: lut[s][j] = q_s · cb[s][j], plus the query norm
-    dot_arr = (
-        f"transform(sequence(0, {m - 1}), s ->"
-        f" aggregate(sequence(0, {subdim - 1}), cast(0 as double),"
-        f" (acc, p) -> acc"
-        f" + cast(q_emb[s * {subdim} + p] as double)"
-        f" * cast(cemb[s * {subdim} + p] as double)))"
+    dot_arr = _subspace_folds(
+        m, subdim, "cast(q_emb[{i}] as double) * cast(cemb[{i}] as double)"
     )
     queries = (
         base.filter(F.col("vec_id") < n_queries)
@@ -567,41 +550,12 @@ def pq_pinned_topk(
         .select("query_id", "q_emb", "j", F.expr(dot_arr).alias("ds"))
         .groupBy("query_id")
         .agg(
-            F.expr(
-                f"transform(sequence(0, {m - 1}), s ->"
-                f" transform(sort_array(collect_list(struct(j, ds))),"
-                f" e -> e.ds[s]))"
-            ).alias("lut"),
-            F.sqrt(
-                F.first(
-                    F.expr(
-                        "aggregate(transform(q_emb, x -> cast(x as double)"
-                        " * cast(x as double)), cast(0 as double),"
-                        " (acc, v) -> acc + v)"
-                    )
-                )
-            ).alias("qn"),
+            _by_subspace(m, "ds", "lut"),
+            F.sqrt(F.first(F.expr(_spark_norm2("q_emb")))).alias("qn"),
         )
     )
     # reconstruction norms are query-independent: one broadcast row
-    norms = F.broadcast(
-        cb.groupBy()
-        .agg(
-            F.expr(
-                f"transform(sequence(0, {m - 1}), s ->"
-                f" transform(sort_array(collect_list(struct(j, cn2s))),"
-                f" e -> e.cn2s[s]))"
-            ).alias("norms")
-        )
-    )
-    approx = (
-        f"aggregate(sequence(0, {m - 1}), cast(0 as double),"
-        f" (acc, s) -> acc + lut[s][codes[s]])"
-    )
-    recon = (
-        f"aggregate(sequence(0, {m - 1}), cast(0 as double),"
-        f" (acc, s) -> acc + norms[s][codes[s]])"
-    )
+    norms = F.broadcast(cb.groupBy().agg(_by_subspace(m, "cn2s", "norms")))
     scored = (
         codes.crossJoin(F.broadcast(queries))
         .crossJoin(norms)
@@ -609,24 +563,10 @@ def pq_pinned_topk(
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            (F.expr(approx) / (F.col("qn") * F.sqrt(F.expr(recon)))).alias(
-                "approx_cos"
-            ),
+            _adc_cos(m, "norms"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("approx_cos", 6).alias("approx_cos"),
-            "rank",
-        )
-    )
+    return _rank_limit(scored, "approx_cos", k)
 
 
 def pq_pinned_topk_oracle(
@@ -721,8 +661,6 @@ def _ivfpq_pinned_ids() -> tuple[int, ...]:
     """16 pinned RESIDUAL-codebook source vectors: the smallest corpus
     vec_ids ≥ 8 (past the query set) that are not coarse centroids —
     collisions would make degenerate zero residual entries."""
-    from .similarity import IVF_CENTROID_IDS
-
     out, i = [], 8
     taken = set(IVF_CENTROID_IDS)
     while len(out) < K_CELLS:
@@ -760,23 +698,13 @@ def ivfpq_pinned_topk(
     broadcast relations, not driver literals) so the DuckDB oracle can
     restate every step. The trained two-quantizer path stays the
     production API, recall-pinned in tests."""
-    from .similarity import IVF_CENTROID_IDS
-
     subdim = dim // m
-    par = emb.sparkSession.sparkContext.defaultParallelism
-    base = emb.repartition(par).select("vec_id", "embedding")
+    base = _spread(emb).select("vec_id", "embedding")
     coarse = F.broadcast(
         base.filter(F.col("vec_id").isin(*IVF_CENTROID_IDS))
         .select(F.col("vec_id").alias("cell_id"),
                 F.col("embedding").alias("cemb"))
-        .withColumn(
-            "cn2",
-            F.expr(
-                "aggregate(transform(cemb, x -> cast(x as double)"
-                " * cast(x as double)), cast(0 as double),"
-                " (acc, v) -> acc + v)"
-            ),
-        )
+        .withColumn("cn2", F.expr(_spark_norm2("cemb")))
     )
     dot_ec = (
         f"aggregate(sequence(1, {dim}), cast(0 as double), (acc, i) ->"
@@ -813,15 +741,7 @@ def ivfpq_pinned_topk(
     rcb = F.broadcast(
         resid.filter(F.col("vec_id").isin(*IVFPQ_CB_VEC_IDS))
         .select(F.col("vec_id").alias("cb_vec"), F.col("rvec").alias("rcb"))
-        .withColumn(
-            "rn2s",
-            F.expr(
-                f"transform(sequence(0, {m - 1}), s ->"
-                f" aggregate(sequence(0, {subdim - 1}), cast(0 as double),"
-                f" (acc, p) -> acc + rcb[s * {subdim} + p]"
-                f" * rcb[s * {subdim} + p]))"
-            ),
-        )
+        .withColumn("rn2s", F.expr(_subspace_folds(m, subdim, "rcb[{i}] * rcb[{i}]")))
     )
     jmap = {v: j for j, v in enumerate(IVFPQ_CB_VEC_IDS)}
     j_expr = "CASE cb_vec " + " ".join(
@@ -829,29 +749,18 @@ def ivfpq_pinned_topk(
     ) + " END"
     rcb = rcb.withColumn("j", F.expr(j_expr))
     # residual codes per corpus vector (argmin per subspace, tie on j)
-    rdist_arr = (
-        f"transform(sequence(0, {m - 1}), s -> rn2s[s]"
-        f" - cast(2 as double) * aggregate(sequence(0, {subdim - 1}),"
-        f" cast(0 as double), (acc, p) -> acc"
-        f" + rvec[s * {subdim} + p] * rcb[s * {subdim} + p]))"
+    rdist_arr = _subspace_folds(
+        m, subdim, "rvec[{i}] * rcb[{i}]", lead="rn2s[s] - cast(2 as double) * "
     )
-    codes = (
-        resid.crossJoin(rcb)
-        .select(
+    codes = _argmin_codes(
+        resid.crossJoin(rcb).select(
             "vec_id",
             "cell_id",
             "j",
             F.posexplode(F.expr(rdist_arr)).alias("s", "dist"),
-        )
-        .groupBy("vec_id", "cell_id", "s")
-        .agg(F.min(F.struct("dist", "j")).alias("b"))
-        .groupBy("vec_id", "cell_id")
-        .agg(
-            F.expr(
-                "transform(sort_array(collect_list(struct(s, b.j as j))),"
-                " e -> e.j)"
-            ).alias("codes")
-        )
+        ),
+        "vec_id",
+        "cell_id",
     )
     # query-side: probed cells + per-(query, cell) ADC tables, in-plan
     q = base.filter(F.col("vec_id") < n_queries).select(
@@ -882,19 +791,11 @@ def ivfpq_pinned_topk(
         )
         .filter(F.col("rn") <= n_probe)
     )
-    lut_arr = (
-        f"transform(sequence(0, {m - 1}), s ->"
-        f" aggregate(sequence(0, {subdim - 1}), cast(0 as double),"
-        f" (acc, p) -> acc + (cast(q_emb[s * {subdim} + p] as double)"
-        f" - cast(cemb[s * {subdim} + p] as double))"
-        f" * rcb[s * {subdim} + p]))"
+    lut_arr = _subspace_folds(
+        m, subdim,
+        "(cast(q_emb[{i}] as double) - cast(cemb[{i}] as double)) * rcb[{i}]",
     )
-    ccd_arr = (
-        f"transform(sequence(0, {m - 1}), s ->"
-        f" aggregate(sequence(0, {subdim - 1}), cast(0 as double),"
-        f" (acc, p) -> acc + cast(cemb[s * {subdim} + p] as double)"
-        f" * rcb[s * {subdim} + p]))"
-    )
+    ccd_arr = _subspace_folds(m, subdim, "cast(cemb[{i}] as double) * rcb[{i}]")
     qcell = F.broadcast(
         qprobes.crossJoin(rcb)
         .select(
@@ -905,46 +806,13 @@ def ivfpq_pinned_topk(
         )
         .groupBy("query_id", "cell_id", "qdotc", "cnorm2")
         .agg(
-            F.expr(
-                f"transform(sequence(0, {m - 1}), s ->"
-                f" transform(sort_array(collect_list(struct(j, ls))),"
-                f" e -> e.ls[s]))"
-            ).alias("lut"),
-            F.expr(
-                f"transform(sequence(0, {m - 1}), s ->"
-                f" transform(sort_array(collect_list(struct(j, cs))),"
-                f" e -> e.cs[s]))"
-            ).alias("ccdot"),
-            F.expr(
-                f"transform(sequence(0, {m - 1}), s ->"
-                f" transform(sort_array(collect_list(struct(j, ns))),"
-                f" e -> e.ns[s]))"
-            ).alias("rnorm"),
+            _by_subspace(m, "ls", "lut"),
+            _by_subspace(m, "cs", "ccdot"),
+            _by_subspace(m, "ns", "rnorm"),
         )
     )
     qn = F.broadcast(
-        q.select(
-            "query_id",
-            F.sqrt(
-                F.expr(
-                    "aggregate(transform(q_emb, x -> cast(x as double)"
-                    " * cast(x as double)), cast(0 as double),"
-                    " (acc, v) -> acc + v)"
-                )
-            ).alias("qn"),
-        )
-    )
-    agg = (
-        "aggregate(sequence(0, {n}), cast(0 as double),"
-        " (acc, s) -> acc + {t})"
-    )
-    approx_dot = "qdotc + " + agg.format(n=m - 1, t="lut[s][codes[s]]")
-    recon2 = (
-        "cnorm2 + cast(2 as double) * ("
-        + agg.format(n=m - 1, t="ccdot[s][codes[s]]")
-        + ") + ("
-        + agg.format(n=m - 1, t="rnorm[s][codes[s]]")
-        + ")"
+        q.select("query_id", F.sqrt(F.expr(_spark_norm2("q_emb"))).alias("qn"))
     )
     scored = (
         codes.join(qcell, "cell_id")
@@ -953,23 +821,10 @@ def ivfpq_pinned_topk(
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            (F.expr(approx_dot) / (F.col("qn") * F.sqrt(F.expr(recon2))))
-            .alias("approx_cos"),
+            _adc_cos(m, "rnorm", coarse=True),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("approx_cos", 6).alias("approx_cos"),
-            "rank",
-        )
-    )
+    return _rank_limit(scored, "approx_cos", k)
 
 
 def ivfpq_pinned_topk_oracle(

@@ -3,15 +3,34 @@
 Capability extension (the reference has no vector support at all — its
 only types are string/int/float scalars, SURVEY.md §1.3).
 
-Two tiers:
+Entry points — each returns a per-query ranked neighbor list:
 
-* brute-force cosine top-k — the exactness baseline. The query set is tiny
-  and broadcast; the corpus streams through a single map + per-query top-k
-  (window row_number). No all-corpus shuffle of vectors.
-* LSH-bucketed ANN (random hyperplanes) — the 100 TB path: each vector
-  maps to a small bucket id; candidate generation is an equi-join on the
-  bucket (hash shuffle on a high-cardinality int key), and the exact
+* exact scans: :func:`cosine_topk` (float cosine) and :func:`int8_topk`
+  (int8-quantized bigint dot) — the query set is tiny and broadcast, the
+  corpus streams through one map + per-query top-k. No all-corpus
+  shuffle of vectors.
+* LSH-bucketed ANN (:func:`lsh_bucket_topk`, random hyperplanes, with
+  optional multi-probe): each vector maps to a small bucket id,
+  candidate generation is an equi-join on the bucket and the exact
   scoring runs only within buckets.
+* IVF over pinned sample-init centroids: :func:`ivf_int8_topk` (int8
+  rescoring; :func:`ivf_int8_index` is the persistable build) and
+  :func:`ivf_float_topk` (cosine rescoring).
+* :func:`hamming_prefilter_topk`: a 64-bit sign-code prefilter with
+  int8 rescoring of the survivors.
+* :func:`ann_topk`: the adaptive entry point; :func:`ann_plan` picks
+  exact / IVF / Hamming from a sampled-recall diagnostic.
+* :func:`hybrid_rrf` (keyword ⊕ vector rank fusion) and
+  :func:`random_projection` (JL dimensionality reduction).
+
+One shared core sits under every builder here and in functions/pq.py,
+functions/ivf.py, functions/dedup.py and the emb_* rows: the Spark
+float folds (:func:`_spark_dot`, :func:`_spark_norm2`, :func:`_cosine`),
+the int8 codes, dot fold and candidate rescorer, the nonzero-scale base,
+the IVF cell step (SQL argmin assignment, query probes, cell
+equi-join), the numpy :func:`_centroid_dists` behind every Arrow
+assignment pass, and :func:`_rank_limit` — the per-query top-k with its
+neighbor-id tie-break.
 
 All scoring is a fixed-order double fold over float32 elements so the
 DuckDB oracle reproduces scores bit-for-bit (see functions/dedup.py for the
@@ -24,11 +43,13 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType
 
 __all__ = [
     "HYPERPLANES",
+    "IVF_CENTROID_IDS",
     "ann_plan",
     "ann_topk",
     "cosine_topk",
@@ -38,11 +59,17 @@ __all__ = [
     "hybrid_rrf_oracle",
     "int8_topk",
     "int8_topk_oracle",
+    "ivf_float_topk",
+    "ivf_float_topk_oracle",
     "ivf_int8_index",
     "ivf_int8_topk",
     "ivf_int8_topk_oracle",
+    "ivf_operating_point",
+    "ivf_sampled_recall",
     "lsh_bucket_topk",
     "lsh_bucket_topk_oracle",
+    "random_projection",
+    "random_projection_oracle",
 ]
 
 DIM = 64
@@ -55,19 +82,69 @@ HYPERPLANES: tuple[tuple[float, ...], ...] = tuple(
     tuple(round(_rng.uniform(-1.0, 1.0), 6) for _ in range(DIM)) for _ in range(N_PLANES)
 )
 
-_SPARK_NORM2 = (
-    "aggregate(transform(embedding, x -> cast(x as double) * cast(x as double)),"
-    " cast(0 as double), (acc, v) -> acc + v)"
-)
 _DUCK_NORM2 = (
     "list_reduce(list_prepend(cast(0 as double),"
     " list_transform(embedding, x -> x::DOUBLE * x::DOUBLE)), (a, b) -> a + b)"
 )
-_SPARK_DOT_QC = (
-    "aggregate(zip_with(q.embedding, c.embedding,"
-    " (x, y) -> cast(x as double) * cast(y as double)),"
-    " cast(0 as double), (acc, v) -> acc + v)"
-)
+
+
+def _spark_dot(a: str, b: str) -> str:
+    """Σ a[i]·b[i] as a double fold in ascending index order — each
+    float32 product widened to double, so the DuckDB twin
+    (:func:`_duck_dot`) reproduces it bit for bit."""
+    return (
+        f"aggregate(zip_with({a}, {b},"
+        f" (x, y) -> cast(x as double) * cast(y as double)),"
+        f" cast(0 as double), (acc, v) -> acc + v)"
+    )
+
+
+def _spark_norm2(a: str) -> str:
+    """‖a‖² as the same fixed-order double fold (twin: ``_DUCK_NORM2``)."""
+    return (
+        f"aggregate(transform({a}, x -> cast(x as double) * cast(x as double)),"
+        f" cast(0 as double), (acc, v) -> acc + v)"
+    )
+
+
+def _duck_dot(av: str, bv: str) -> str:
+    return (
+        f"list_reduce(list_prepend(cast(0 as double),"
+        f" list_transform(generate_series(1, {DIM}),"
+        f" i -> {av}[i]::DOUBLE * {bv}[i]::DOUBLE)), (x, y) -> x + y)"
+    )
+
+
+def _cosine(a: str, b: str, a_n2: str, b_n2: str) -> Column:
+    """a·b / (‖a‖·‖b‖) from the dot fold and precomputed squared norms."""
+    return F.expr(_spark_dot(a, b)) / (F.sqrt(F.col(a_n2)) * F.sqrt(F.col(b_n2)))
+
+
+def _rank_limit(scored: DataFrame, score: str, k: int) -> DataFrame:
+    """The per-query top-k every vector builder ends in: row_number per
+    ``query_id`` by ``score`` descending, ties broken on the smaller
+    ``neighbor_id`` (the DuckDB oracles replay exactly this order, so
+    the tie-break is part of the value-exact contract), ``rank <= k``
+    kept. Catalyst plans the filtered row_number as a map-side
+    WindowGroupLimit, so only per-partition partial top-k rows reach the
+    ranking shuffle. Float scores leave rounded to 6 places (both
+    engines round the same double); integer scores pass through."""
+    w = Window.partitionBy("query_id").orderBy(F.col(score).desc(), F.col("neighbor_id"))
+    out = F.col(score)
+    if isinstance(scored.schema[score].dataType, DoubleType):
+        out = F.round(score, 6).alias(score)
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", out, "rank")
+    )
+
+
+def _spread(emb: DataFrame) -> DataFrame:
+    """Round-robin to session parallelism — compact parquet can arrive
+    as one partition, which would serialize the scoring loop."""
+    return emb.repartition(emb.sparkSession.sparkContext.defaultParallelism)
+
 
 # ---- shared quantization expressions (review r10: these contracts are
 # asserted identical across operators — int8 rescoring must score the
@@ -93,25 +170,47 @@ SPARK_SIGN_HI = (
 )
 
 
-def _int8_base(emb: DataFrame) -> DataFrame:
-    """(vec_id, qv): int8-quantized vectors (zero vectors have no
-    quantization scale and are excluded, matching _ivf_base)."""
-    return (
-        emb.select(
-            "vec_id",
-            "embedding",
-            F.array_max(F.expr("transform(embedding, x -> abs(x))")).alias("m"),
+def _nonzero_base(emb: DataFrame) -> DataFrame:
+    """(vec_id, embedding, m = max |x|) with zero vectors dropped: they
+    have no int8 quantization scale, so every int8 and IVF path
+    excludes them."""
+    return emb.select(
+        "vec_id",
+        "embedding",
+        F.array_max(F.expr("transform(embedding, x -> abs(x))")).alias("m"),
+    ).filter(F.col("m") > 0)
+
+
+def _int8_codes(base: DataFrame) -> DataFrame:
+    """(vec_id, qv): int8 codes of a :func:`_nonzero_base` frame."""
+    return base.select("vec_id", F.expr(SPARK_INT8_QV).alias("qv"))
+
+
+def _int8_dot(a: str, b: str) -> str:
+    """Exact bigint dot of two int8 code arrays — integers end to end,
+    so cross-engine ties are impossible by construction."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0L, (a, v) -> a + v)"
+
+
+def _pair_features(cand: DataFrame, side: DataFrame, *cols: str) -> DataFrame:
+    """Attach ``side``'s ``cols`` to (query_id, neighbor_id) candidate
+    pairs as ``q_<col>`` / ``c_<col>`` — two equi-joins on the vector id."""
+    for role, key in (("q", "query_id"), ("c", "neighbor_id")):
+        cand = cand.join(
+            side.select(
+                F.col("vec_id").alias(key),
+                *(F.col(c).alias(f"{role}_{c}") for c in cols),
+            ),
+            key,
         )
-        .filter(F.col("m") > 0)
-        .select("vec_id", F.expr(SPARK_INT8_QV).alias("qv"))
-    )
+    return cand
 
 
-def _duck_dot(av: str, bv: str) -> str:
-    return (
-        f"list_reduce(list_prepend(cast(0 as double),"
-        f" list_transform(generate_series(1, {DIM}),"
-        f" i -> {av}[i]::DOUBLE * {bv}[i]::DOUBLE)), (x, y) -> x + y)"
+def _int8_rescore(cand: DataFrame, codes: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, dot): candidates rescored by the exact
+    int8 dot — the one scoring contract of every int8 strategy."""
+    return _pair_features(cand, codes, "qv").select(
+        "query_id", "neighbor_id", F.expr(_int8_dot("q_qv", "c_qv")).alias("dot")
     )
 
 
@@ -159,33 +258,28 @@ def cosine_topk(
     n_queries × corpus-partition partial top-k rows once Catalyst applies
     the window's rank-limit pushdown (WindowGroupLimit).
 
-    The corpus is repartitioned to session parallelism — compact parquet
-    can arrive as one partition, which would serialize the scoring loop.
+    The corpus is repartitioned to session parallelism (:func:`_spread`).
     The query side filters the scan directly, so its broadcast does not
     wait on that shuffle.
     """
-    par = emb.sparkSession.sparkContext.defaultParallelism
 
     def normed(df: DataFrame) -> DataFrame:
-        return df.select("vec_id", "embedding", F.expr(_SPARK_NORM2).alias("n2"))
+        return df.select(
+            "vec_id", "embedding", F.expr(_spark_norm2("embedding")).alias("n2")
+        )
 
     q = normed(emb.filter(F.col("vec_id") < n_queries)).alias("q")
-    c = normed(emb.repartition(par)).alias("c")
+    c = normed(_spread(emb)).alias("c")
     scored = (
         F.broadcast(q)
         .join(c, F.col("q.vec_id") != F.col("c.vec_id"))
         .select(
             F.col("q.vec_id").alias("query_id"),
             F.col("c.vec_id").alias("neighbor_id"),
-            (F.expr(_SPARK_DOT_QC) / (F.sqrt(F.col("q.n2")) * F.sqrt(F.col("c.n2")))).alias("cos"),
+            _cosine("q.embedding", "c.embedding", "q.n2", "c.n2").alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"), "rank")
-    )
+    return _rank_limit(scored, "cos", k)
 
 
 def int8_topk(emb: DataFrame, k: int = 10, n_queries: int = 8) -> DataFrame:
@@ -198,31 +292,20 @@ def int8_topk(emb: DataFrame, k: int = 10, n_queries: int = 8) -> DataFrame:
     Same plan shape as cosine_topk: broadcast query set × corpus scan,
     per-query rank-limit. At 100 TB the scan reads 1-byte codes instead
     of float32 — the 4× I/O cut is the point of the quantization."""
-    par = emb.sparkSession.sparkContext.defaultParallelism
     # the query side filters the scan directly: its broadcast must not
     # wait on the corpus's round-robin shuffle
-    q = _int8_base(emb.filter(F.col("vec_id") < n_queries)).alias("q")
-    c = _int8_base(emb.repartition(par)).alias("c")
+    q = _int8_codes(_nonzero_base(emb.filter(F.col("vec_id") < n_queries))).alias("q")
+    c = _int8_codes(_nonzero_base(_spread(emb))).alias("c")
     scored = (
         F.broadcast(q)
         .join(c, F.col("q.vec_id") != F.col("c.vec_id"))
         .select(
             F.col("q.vec_id").alias("query_id"),
             F.col("c.vec_id").alias("neighbor_id"),
-            F.expr(
-                "aggregate(zip_with(q.qv, c.qv, (x, y) -> x * y),"
-                " 0L, (a, v) -> a + v)"
-            ).alias("dot"),
+            F.expr(_int8_dot("q.qv", "c.qv")).alias("dot"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot", "rank")
-    )
+    return _rank_limit(scored, "dot", k)
 
 
 def int8_topk_oracle(k: int = 10, n_queries: int = 8) -> str:
@@ -393,7 +476,7 @@ def ivf_sampled_recall(
                               max(8, int(len(centroid_ids) ** 0.5))))
     if len(centroid_ids) < 2:
         return 1.0  # degenerate grid — IVF prunes nothing, moot
-    base = _ivf_base(emb)
+    base = _nonzero_base(_spread(emb))
     # ONE bounded job for centroids + sample (r16; was two separate
     # collects — each a full scan job, and the diagnostic runs per
     # query build). Sort key ranks every centroid row ahead of the
@@ -432,7 +515,7 @@ def ivf_sampled_recall(
     x = np.asarray([r.embedding for r in sample], dtype=np.float64)
     c_sq = (c_mat * c_mat).sum(axis=1)
     # cell assignment for every sampled vector (the index rule: L2 argmin)
-    d_cells = c_sq[None, :] - 2.0 * (x @ c_mat.T)
+    d_cells = _centroid_dists(x, c_mat, c_sq)
     cells = d_cells.argmin(axis=1)
     nq = min(n_query_sample, len(x))
     n_probes = min(n_probes, len(c_mat))
@@ -448,17 +531,14 @@ def ivf_sampled_recall(
     return hits / total
 
 
-def _ivf_base(emb: DataFrame) -> DataFrame:
-    par = emb.sparkSession.sparkContext.defaultParallelism
-    return (
-        emb.repartition(par)
-        .select(
-            "vec_id",
-            "embedding",
-            F.array_max(F.expr("transform(embedding, x -> abs(x))")).alias("m"),
-        )
-        .filter(F.col("m") > 0)
-    )
+def _centroid_dists(x, c_mat, c_sq):
+    """(n, C) numpy matrix ‖c‖² − 2·x·cᵀ: squared L2 distance from each
+    row of ``x`` to each centroid minus the per-row constant ‖x‖², so a
+    row's argmin is its nearest centroid (ties to the lowest index).
+    The one nearest-centroid rule of every Arrow assignment pass (IVF,
+    PQ, IVF-PQ) and of the planner's sampled-recall diagnostic;
+    ``c_sq`` is the caller's precomputed ‖c‖² row."""
+    return c_sq[None, :] - 2.0 * (x @ c_mat.T)
 
 
 def _ivf_centroids(base: DataFrame, centroid_ids: tuple[int, ...]):
@@ -466,22 +546,55 @@ def _ivf_centroids(base: DataFrame, centroid_ids: tuple[int, ...]):
         base.filter(F.col("vec_id").isin(*centroid_ids)).select(
             F.col("vec_id").alias("cell_id"),
             F.col("embedding").alias("cemb"),
-            F.expr(
-                "aggregate(transform(embedding, x -> cast(x as double)"
-                " * cast(x as double)), cast(0 as double),"
-                " (acc, v) -> acc + v)"
-            ).alias("cn2"),
+            F.expr(_spark_norm2("embedding")).alias("cn2"),
         )
     )
 
 
-def _ivf_dot_vc():
-    # built lazily: F.expr needs an active SparkContext, so this cannot
-    # be a module-level Column
-    return F.expr(
-        "aggregate(zip_with(embedding, cemb,"
-        " (x, y) -> cast(x as double) * cast(y as double)),"
-        " cast(0 as double), (acc, v) -> acc + v)"
+def _cell_dists(vecs: DataFrame, cent: DataFrame) -> DataFrame:
+    """(vec_id, cell_id, dist) for every vector × broadcast centroid:
+    argmin ‖v−c‖² = argmin (‖c‖² − 2·v·c) via the fixed-order fold."""
+    return vecs.crossJoin(cent).select(
+        "vec_id",
+        "cell_id",
+        (F.col("cn2") - F.lit(2.0) * F.expr(_spark_dot("embedding", "cemb"))).alias("dist"),
+    )
+
+
+def _ivf_assign_sql(base: DataFrame, cent: DataFrame) -> DataFrame:
+    """(vec_id, cell_id) as argmin-by-struct: ``min(struct(dist,
+    cell_id))`` under a plain groupBy — map-side combinable PARTIAL
+    aggregation, so the corpus × n_cells distance rows reduce to one row
+    per vector before any shuffle; ties go to the lower cell id. (A
+    row_number window here would shuffle and sort the full corpus×cells
+    expansion — measured OOM at 4M vectors × 128 cells on local[32].)"""
+    return (
+        _cell_dists(base, cent)
+        .groupBy("vec_id")
+        .agg(F.min(F.struct("dist", "cell_id")).alias("best"))
+        .select("vec_id", F.col("best.cell_id").alias("cell_id"))
+    )
+
+
+def _ivf_candidates(
+    base: DataFrame, cent: DataFrame, assign: DataFrame, n_queries: int, n_probes: int
+) -> DataFrame:
+    """(query_id, neighbor_id): each query keeps its ``n_probes`` nearest
+    cells (ties on cell id), then candidates come from an EQUI-JOIN of
+    the broadcast probes onto the corpus assignment — never query ×
+    corpus."""
+    w_cell = Window.partitionBy("vec_id").orderBy("dist", "cell_id")
+    probes = (
+        _cell_dists(base.filter(F.col("vec_id") < n_queries), cent)
+        .withColumn("rn", F.row_number().over(w_cell))
+        .filter(F.col("rn") <= n_probes)
+        .select(F.col("vec_id").alias("query_id"), "cell_id")
+    )
+    return (
+        F.broadcast(probes)
+        .join(assign, "cell_id")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", F.col("vec_id").alias("neighbor_id"))
     )
 
 
@@ -525,7 +638,7 @@ def _ivf_assign_arrow(base: DataFrame, centroid_ids: tuple[int, ...]) -> DataFra
 
         for pdf in it:
             x = np.asarray(list(pdf["embedding"]), dtype=np.float64)
-            d = c_sq[None, :] - 2.0 * (x @ c_mat.T)
+            d = _centroid_dists(x, c_mat, c_sq)
             yield pd.DataFrame(
                 {"vec_id": pdf["vec_id"], "cell_id": c_ids[d.argmin(axis=1)]}
             )
@@ -546,38 +659,22 @@ def ivf_int8_index(
     batches.
 
     ``assign_method="sql"`` (default, the oracle-exact gate
-    configuration) computes the cell assignment as argmin-by-struct:
-    ``min(struct(dist, cell_id))`` under a plain groupBy — map-side
-    combinable PARTIAL aggregation, so the corpus × n_cells distance
-    rows reduce to one row per vector before any shuffle. (A row_number
-    window here would shuffle and sort the full corpus×cells expansion
-    — measured OOM at 4M vectors × 128 cells on local[32].)
+    configuration) computes the cell assignment as argmin-by-struct
+    (:func:`_ivf_assign_sql`).
 
     ``assign_method="arrow"`` is the production-scale path for √N-sized
     cell grids (:func:`_ivf_assign_arrow`): one numpy matmul per Arrow
     batch against the broadcast centroid matrix — use it whenever
     n_cells is large enough that the per-cell lambda fold dominates
     (REHEARSAL_r08_ivf_*: ~1000–2000 cells at 1M–4M vectors)."""
-    base = _ivf_base(emb)
+    base = _nonzero_base(_spread(emb))
     if assign_method == "arrow":
         assign = _ivf_assign_arrow(base, centroid_ids)
     elif assign_method == "sql":
-        cent = _ivf_centroids(base, centroid_ids)
-        assign = (
-            base.crossJoin(cent)
-            .select(
-                "vec_id",
-                "cell_id",
-                (F.col("cn2") - F.lit(2.0) * _ivf_dot_vc()).alias("dist"),
-            )
-            .groupBy("vec_id")
-            .agg(F.min(F.struct("dist", "cell_id")).alias("best"))
-            .select("vec_id", F.col("best.cell_id").alias("cell_id"))
-        )
+        assign = _ivf_assign_sql(base, _ivf_centroids(base, centroid_ids))
     else:  # pragma: no cover - caller bug
         raise ValueError(f"unknown assign_method: {assign_method!r}")
-    qn = base.select("vec_id", F.expr(SPARK_INT8_QV).alias("qv"))
-    return assign, qn
+    return assign, _int8_codes(base)
 
 
 def ivf_int8_topk(
@@ -618,55 +715,11 @@ def ivf_int8_topk(
     assign, qn = (
         index if index is not None else ivf_int8_index(emb, centroid_ids)
     )
-    base = _ivf_base(emb)
-    cent = _ivf_centroids(base, centroid_ids)
-    w_cell = Window.partitionBy("vec_id").orderBy("dist", "cell_id")
-    probes = (
-        base.filter(F.col("vec_id") < n_queries)
-        .crossJoin(cent)
-        .select(
-            "vec_id",
-            "cell_id",
-            (F.col("cn2") - F.lit(2.0) * _ivf_dot_vc()).alias("dist"),
-        )
-        .withColumn("rn", F.row_number().over(w_cell))
-        .filter(F.col("rn") <= n_probes)
-        .select(F.col("vec_id").alias("query_id"), "cell_id")
+    base = _nonzero_base(_spread(emb))
+    cand = _ivf_candidates(
+        base, _ivf_centroids(base, centroid_ids), assign, n_queries, n_probes
     )
-    cand = (
-        F.broadcast(probes)
-        .join(assign, "cell_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-    scored = (
-        cand.join(
-            qn.select(F.col("vec_id").alias("query_id"), F.col("qv").alias("q_qv")),
-            "query_id",
-        )
-        .join(
-            qn.select(
-                F.col("vec_id").alias("neighbor_id"), F.col("qv").alias("c_qv")
-            ),
-            "neighbor_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.expr(
-                "aggregate(zip_with(q_qv, c_qv, (x, y) -> x * y),"
-                " 0L, (a, v) -> a + v)"
-            ).alias("dot"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot", "rank")
-    )
+    return _rank_limit(_int8_rescore(cand, qn), "dot", k)
 
 
 def ivf_int8_topk_oracle(
@@ -752,82 +805,20 @@ def ivf_float_topk(
     Plan shape is ivf_int8_topk's: broadcast centroid set, map-side
     combinable argmin aggregate, cell equi-join — sub-linear scan at
     100 TB, no query×corpus product anywhere."""
-    base = _ivf_base(emb)
+    base = _nonzero_base(_spread(emb))
     cent = _ivf_centroids(base, centroid_ids)
-    assign = (
-        base.crossJoin(cent)
-        .select(
-            "vec_id",
-            "cell_id",
-            (F.col("cn2") - F.lit(2.0) * _ivf_dot_vc()).alias("dist"),
-        )
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("dist", "cell_id")).alias("best"))
-        .select("vec_id", F.col("best.cell_id").alias("cell_id"))
-    )
-    w_cell = Window.partitionBy("vec_id").orderBy("dist", "cell_id")
-    probes = (
-        base.filter(F.col("vec_id") < n_queries)
-        .crossJoin(cent)
-        .select(
-            "vec_id",
-            "cell_id",
-            (F.col("cn2") - F.lit(2.0) * _ivf_dot_vc()).alias("dist"),
-        )
-        .withColumn("rn", F.row_number().over(w_cell))
-        .filter(F.col("rn") <= n_probes)
-        .select(F.col("vec_id").alias("query_id"), "cell_id")
-    )
-    cand = (
-        F.broadcast(probes)
-        .join(assign, "cell_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
+    cand = _ivf_candidates(
+        base, cent, _ivf_assign_sql(base, cent), n_queries, n_probes
     )
     n = base.select(
-        "vec_id", "embedding", F.expr(_SPARK_NORM2).alias("n2")
+        "vec_id", "embedding", F.expr(_spark_norm2("embedding")).alias("n2")
     )
-    scored = (
-        cand.join(
-            n.select(
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("q_emb"),
-                F.col("n2").alias("q_n2"),
-            ),
-            "query_id",
-        )
-        .join(
-            n.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("embedding").alias("c_emb"),
-                F.col("n2").alias("c_n2"),
-            ),
-            "neighbor_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                F.expr(
-                    "aggregate(zip_with(q_emb, c_emb,"
-                    " (x, y) -> cast(x as double) * cast(y as double)),"
-                    " cast(0 as double), (acc, v) -> acc + v)"
-                )
-                / (F.sqrt(F.col("q_n2")) * F.sqrt(F.col("c_n2")))
-            ).alias("cos"),
-        )
+    scored = _pair_features(cand, n, "embedding", "n2").select(
+        "query_id",
+        "neighbor_id",
+        _cosine("q_embedding", "c_embedding", "q_n2", "c_n2").alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id",
-            F.round("cos", 6).alias("cos"), "rank",
-        )
-    )
+    return _rank_limit(scored, "cos", k)
 
 
 def ivf_float_topk_oracle(
@@ -920,12 +911,7 @@ def hamming_prefilter_topk(
     8-bytes-per-vector read (vs 64 for int8 codes) cuts read volume
     8×. Raise ``prefilter_mult`` to trade stage-2 cost for recall.
     """
-    par = emb.sparkSession.sparkContext.defaultParallelism
-    base = emb.repartition(par).select(
-        "vec_id",
-        "embedding",
-        F.array_max(F.expr("transform(embedding, x -> abs(x))")).alias("m"),
-    ).filter(F.col("m") > 0)
+    base = _nonzero_base(_spread(emb))
     codes = base.select(
         "vec_id",
         F.expr(SPARK_SIGN_LO).alias("lo"),
@@ -953,35 +939,7 @@ def hamming_prefilter_topk(
         .filter(F.col("hrn") <= prefilter_mult * k)
         .select("query_id", "neighbor_id")
     )
-    qn = base.select("vec_id", F.expr(SPARK_INT8_QV).alias("qv"))
-    scored = (
-        cand.join(
-            qn.select(F.col("vec_id").alias("query_id"),
-                      F.col("qv").alias("q_qv")),
-            "query_id",
-        )
-        .join(
-            qn.select(F.col("vec_id").alias("neighbor_id"),
-                      F.col("qv").alias("c_qv")),
-            "neighbor_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.expr(
-                "aggregate(zip_with(q_qv, c_qv, (x, y) -> x * y),"
-                " 0L, (a, v) -> a + v)"
-            ).alias("dot"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot", "rank")
-    )
+    return _rank_limit(_int8_rescore(cand, _int8_codes(base)), "dot", k)
 
 
 def ann_plan(
@@ -1165,11 +1123,11 @@ def lsh_bucket_topk(
     # candidate branch (ReuseExchange), instead of codegen-compiling and
     # evaluating the giant expression twice — measured 2× on cold plans
     withb = (
-        emb.repartition(par)
+        _spread(emb)
         .select(
             "vec_id",
             "embedding",
-            F.expr(_SPARK_NORM2).alias("n2"),
+            F.expr(_spark_norm2("embedding")).alias("n2"),
             F.expr(_bucket_expr("spark")).alias("bucket"),
         )
         .repartition(par, "bucket")
@@ -1206,84 +1164,10 @@ def lsh_bucket_topk(
         .select(
             F.col("q.vec_id").alias("query_id"),
             F.col("c.vec_id").alias("neighbor_id"),
-            (F.expr(_SPARK_DOT_QC) / (F.sqrt(F.col("q.n2")) * F.sqrt(F.col("c.n2")))).alias("cos"),
+            _cosine("q.embedding", "c.embedding", "q.n2", "c.n2").alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"), "rank")
-    )
-
-
-def cosine_topk_pandas(
-    emb: DataFrame, k: int = 10, n_queries: int = 8
-) -> DataFrame:
-    """Exact cosine top-k scored in a vectorized Arrow/NumPy pandas UDF.
-
-    Alternative implementation of :func:`cosine_topk` for WIDE vectors:
-    the JVM fold costs O(dim) interpreted lambda steps per pair, while
-    this path moves each Arrow batch into one BLAS matmul
-    (batch × dim · dim × n_queries). At dim 64 the JVM fold wins; at
-    dim ≥ ~512 the matmul does — both are kept, same output contract.
-
-    Scores differ from the JVM fold only in final-ULP (BLAS pairwise
-    summation vs sequential fold), so this variant is NOT oracle-checked;
-    tests assert rank-identical results against :func:`cosine_topk`.
-
-    The query matrix is collected driver-side (tiny) and closed over —
-    shipped once per executor via task serialization, the broadcast
-    pattern for small reference data entering Python workers.
-    """
-    import numpy as np
-    import pandas as pd
-
-    par = emb.sparkSession.sparkContext.defaultParallelism
-    out_schema_full = "query_id long, neighbor_id long, cos double, rank int"
-    q_rows = (
-        emb.filter(F.col("vec_id") < n_queries)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    if not q_rows:
-        # empty query set: matmul shapes degenerate — return typed empty
-        return emb.sparkSession.createDataFrame([], out_schema_full)
-    q_ids = np.array([r.vec_id for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r.embedding for r in q_rows], dtype=np.float64)
-    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
-
-    out_schema = "query_id long, neighbor_id long, cos double"
-
-    def _score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            c_mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-            c_norm = np.sqrt((c_mat * c_mat).sum(axis=1))
-            sims = (c_mat @ q_mat.T) / (c_norm[:, None] * q_norm[None, :])
-            n_c, n_q = sims.shape
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(q_ids[None, :], n_c, axis=0).ravel(),
-                    "neighbor_id": np.repeat(c_ids, n_q),
-                    "cos": sims.ravel(),
-                }
-            )
-
-    scored = (
-        emb.repartition(par)
-        .select("vec_id", "embedding")
-        .mapInPandas(_score, out_schema)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"), "rank")
-    )
+    return _rank_limit(scored, "cos", k)
 
 
 def lsh_bucket_topk_oracle(k: int = 5, n_queries: int = 8, n_probes: int = 1) -> str:
@@ -1418,7 +1302,9 @@ def hybrid_rrf(
         "doc_id", F.row_number().over(w_kw).alias("kw_rank")
     )
 
-    base = emb.select("vec_id", "embedding", F.expr(_SPARK_NORM2).alias("n2"))
+    base = emb.select(
+        "vec_id", "embedding", F.expr(_spark_norm2("embedding")).alias("n2")
+    )
     q = base.filter(F.col("vec_id") == query_id).select(
         F.col("embedding").alias("q_emb"), F.col("n2").alias("q_n2")
     )
@@ -1427,14 +1313,7 @@ def hybrid_rrf(
         .crossJoin(F.broadcast(q))
         .select(
             "vec_id",
-            (
-                F.expr(
-                    "aggregate(zip_with(q_emb, embedding,"
-                    " (x, y) -> cast(x as double) * cast(y as double)),"
-                    " cast(0 as double), (acc, v) -> acc + v)"
-                )
-                / (F.sqrt("q_n2") * F.sqrt("n2"))
-            ).alias("cos"),
+            _cosine("q_emb", "embedding", "q_n2", "n2").alias("cos"),
         )
     )
     vec_top = scored.orderBy(F.col("cos").desc(), "vec_id").limit(_RRF_CUT)

@@ -4819,14 +4819,14 @@ FROM scored WHERE cos >= 0.45 GROUP BY vec_id""",
     "broadcast, dedup_embedding_lsh's bucketed join is the drop-in.",
 )
 def pipeline_semantic_decontaminate(spark, sf_dir):
-    from .functions.similarity import _SPARK_DOT_QC, _SPARK_NORM2
+    from .functions.similarity import _cosine, _spark_norm2
 
     e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding", F.expr(_SPARK_NORM2).alias("n2")
+        "vec_id", "embedding", F.expr(_spark_norm2("embedding")).alias("n2")
     )
     train = e.filter(F.col("vec_id") % 10 != 0).alias("q")
     held = e.filter(F.col("vec_id") % 10 == 0).alias("c")
-    cos = F.expr(_SPARK_DOT_QC) / (F.sqrt(F.col("q.n2")) * F.sqrt(F.col("c.n2")))
+    cos = _cosine("q.embedding", "c.embedding", "q.n2", "c.n2")
     scored = train.join(F.broadcast(held), how="cross").select(
         F.col("q.vec_id").alias("vec_id"), cos.alias("cos")
     )
@@ -4945,14 +4945,14 @@ FROM (SELECT *, row_number() OVER (PARTITION BY query_id
     "tiny window. Deterministic and value-exact vs the oracle.",
 )
 def emb_knn_label_transfer(spark, sf_dir):
-    from .functions.similarity import _SPARK_DOT_QC, _SPARK_NORM2
+    from .functions.similarity import _cosine, _spark_norm2
 
     e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", "embedding", F.expr(_SPARK_NORM2).alias("n2")
+        "vec_id", "label", "embedding", F.expr(_spark_norm2("embedding")).alias("n2")
     )
     q = e.filter(F.col("vec_id") % 10 == 0).alias("q")
     c = e.filter(F.col("vec_id") % 10 != 0).alias("c")
-    cos = F.expr(_SPARK_DOT_QC) / (F.sqrt(F.col("q.n2")) * F.sqrt(F.col("c.n2")))
+    cos = _cosine("q.embedding", "c.embedding", "q.n2", "c.n2")
     scored = F.broadcast(q).join(c, how="cross").select(
         F.col("q.vec_id").alias("query_id"),
         F.col("c.label").alias("neighbor_label"),
@@ -5065,11 +5065,11 @@ FROM n GROUP BY 1""",
 )
 def emb_norm_histogram(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
-    from .functions.similarity import _SPARK_NORM2
+    from .functions.similarity import _spark_norm2
 
     n = e.select(
         "label",
-        F.sqrt(F.expr(_SPARK_NORM2)).alias("nrm"),
+        F.sqrt(F.expr(_spark_norm2("embedding"))).alias("nrm"),
         F.size("embedding").alias("dim"),
     )
     return n.groupBy(
@@ -6588,11 +6588,7 @@ def pipeline_source_authority(spark, sf_dir):
 
 _MRL_DIM = 16
 
-_MRL_SPARK_N2 = (
-    f"aggregate(transform(slice(embedding, 1, {_MRL_DIM}),"
-    " x -> cast(x as double) * cast(x as double)),"
-    " cast(0 as double), (acc, v) -> acc + v)"
-)
+_MRL_SPARK_N2 = similarity._spark_norm2(f"slice(embedding, 1, {_MRL_DIM})")
 _MRL_DUCK_N2 = (
     f"list_reduce(list_prepend(cast(0 as double),"
     f" list_transform(embedding[1:{_MRL_DIM}],"

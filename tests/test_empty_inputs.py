@@ -38,9 +38,20 @@ def test_dedup_ops_on_empty(spark, empty_docs):
 
 
 def test_similarity_on_empty(spark, empty_emb):
-    assert similarity.cosine_topk(empty_emb).count() == 0
-    assert similarity.lsh_bucket_topk(empty_emb).count() == 0
-    assert similarity.cosine_topk_pandas(empty_emb).count() == 0
+    from sql_query_engine_spark.functions import pq
+
+    for topk in (
+        similarity.cosine_topk,
+        similarity.lsh_bucket_topk,
+        similarity.int8_topk,
+        similarity.ivf_int8_topk,
+        similarity.ivf_float_topk,
+        similarity.hamming_prefilter_topk,
+        similarity.ann_topk,
+        pq.pq_pinned_topk,
+        pq.ivfpq_pinned_topk,
+    ):
+        assert topk(empty_emb).count() == 0, topk.__name__
 
 
 def test_text_ops_on_empty(spark, empty_docs):

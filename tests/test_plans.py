@@ -275,6 +275,35 @@ def test_ann_query_side_broadcast_skips_corpus_shuffle(spark):
                 assert "Exchange" not in line, f"{name}: {line.strip()}"
 
 
+def test_sim_rows_push_rank_limit(spark):
+    """Every per-query top-k sim_* row plans its row_number <= k filter as
+    a map-side WindowGroupLimit, so map tasks forward only partial top-k
+    rows per query to the ranking shuffle. The builders share one
+    rank-limit helper; a helper that lost the pushdown would still pass
+    every oracle row, and fails here instead. The exempt rows never rank
+    per query with a filtered row_number."""
+    from sql_query_engine_spark.queries import queries
+
+    exempt = {
+        # per-modality top-50 and the fused top-k are orderBy+limit
+        # (TakeOrderedAndProject); its rank windows are global ones over
+        # those few rows
+        "sim_hybrid_rrf",
+        # greedy MMR picks one row per round with orderBy+limit(1)
+        "sim_mmr_rerank",
+    }
+    qs = queries()
+    checked = sorted(n for n in qs if n.startswith("sim_") and n not in exempt)
+    assert len(checked) == 10, checked
+    assert exempt <= set(qs)
+    missing = [
+        n for n in checked
+        if "WindowGroupLimit"
+        not in qs[n](spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+    ]
+    assert missing == []
+
+
 def test_tpch_suite_is_complete_and_dimension_joins_broadcast(spark):
     """All 22 TPC-H shapes are registered (Q1 lives under its round-1 name
     agg_pricing_summary), and the suite's dimension joins broadcast —

@@ -403,23 +403,6 @@ def test_asof_join_semantics(spark):
     }
 
 
-def test_pandas_cosine_topk_matches_jvm(spark):
-    """The BLAS pandas-UDF scorer must produce rank-identical top-k to
-    the JVM fold (scores differ only in final ULP; ranks must agree)."""
-    from sql_query_engine_spark.functions import similarity
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    jvm = {
-        (r.query_id, r.rank): r.neighbor_id
-        for r in similarity.cosine_topk(emb, k=10, n_queries=4).collect()
-    }
-    pnd = {
-        (r.query_id, r.rank): r.neighbor_id
-        for r in similarity.cosine_topk_pandas(emb, k=10, n_queries=4).collect()
-    }
-    assert jvm == pnd
-
-
 def test_global_row_number_matches_window(spark):
     """Two-pass range rank (operators/rank.py) must equal the global
     window's row_number on a total order — same numbers, no global sort."""

@@ -60,8 +60,10 @@ SHOWCASE = [
     ),
     (
         "sim_lsh_ann_topk",
-        "bucket expression computed scan-side; candidates via equi-join "
-        "on the bucket int; per-query top-k through WindowGroupLimit",
+        "bucket expression computed map-side after one round-robin "
+        "spread (the 8-row query branch filters at the scan and buckets "
+        "only its own rows); candidates via a broadcast equi-join on the "
+        "bucket int; per-query top-k through WindowGroupLimit",
         "ANN candidate generation is a join, not a scan of the corpus "
         "per query; WindowGroupLimit keeps only k rows per partition "
         "during the rank",
