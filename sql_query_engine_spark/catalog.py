@@ -78,13 +78,25 @@ def _ensure_session_semantics(spark: SparkSession) -> None:
         pass
 
 
-# (sf_dir, name) → inferred StructType. ``spark.read.parquet`` runs a
-# footer-reading schema-inference job on EVERY invocation (it is not
+# (sf_dir, name, mtime_ns, size) → inferred StructType. ``spark.read.parquet``
+# runs a footer-reading schema-inference job on EVERY invocation (it is not
 # cached per path); the registry builds hundreds of scans per gate run,
 # so caching the schema and passing it back via ``.schema(...)`` removes
 # one Spark job per table reference and makes query CONSTRUCTION
 # genuinely job-free (pinned by test_plans.py::test_query_construction_is_lazy).
-_SCHEMA_CACHE: dict[tuple[str, str], "object"] = {}
+# The stat fields key the entry on the file itself: a table rewritten in
+# place is inferred again instead of being read with its old schema.
+_SCHEMA_CACHE: dict[tuple[str, str, int, int], "object"] = {}
+
+
+def _schema_key(sf_dir: str, name: str) -> tuple[str, str, int, int]:
+    try:
+        st = os.stat(table_path(sf_dir, name))
+    except OSError:
+        # an object-store URI or a missing table: key on the path alone,
+        # and a missing table fails in spark.read as before
+        return (sf_dir, name, 0, 0)
+    return (sf_dir, name, st.st_mtime_ns, st.st_size)
 
 
 def normalize_events(df: DataFrame) -> DataFrame:
@@ -120,7 +132,7 @@ def raw_schema(spark: SparkSession, sf_dir: str, name: str):
     """The *physical* (inferred) schema of a table — what ``readStream``
     must declare before :func:`normalize_events` is applied."""
     _ensure_session_semantics(spark)
-    key = (sf_dir, name)
+    key = _schema_key(sf_dir, name)
     cached = _SCHEMA_CACHE.get(key)
     if cached is None:
         cached = spark.read.parquet(table_path(sf_dir, name)).schema
@@ -137,7 +149,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Structured-Streaming-style operators (see :func:`normalize_events`).
     """
     _ensure_session_semantics(spark)
-    key = (sf_dir, name)
+    key = _schema_key(sf_dir, name)
     cached = _SCHEMA_CACHE.get(key)
     if cached is None:
         df = spark.read.parquet(table_path(sf_dir, name))

@@ -37,6 +37,7 @@ from .partitioning import configure_checkpoint_dir
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.iterate import iterate, release, truncate
 from .hashing import (
     MERSENNE_P,
     MINHASH_PERMS,
@@ -1017,15 +1018,19 @@ def dedup_clusters(
 
     Convergence in O(diameter) rounds (near-dup clusters are tiny — a
     handful of rounds). Each round is one join + one aggregate, both keyed
-    on doc ids (shuffle-friendly at any scale); checkpointing truncates
-    the growing lineage every round — the standard iterative-algorithm
-    pattern on Spark (GraphFrames does the same under the hood).
+    on doc ids (shuffle-friendly at any scale), run by the fixpoint loop
+    of ``operators/iterate.py``: every round is materialized with its
+    lineage truncated (GraphFrames does the same under the hood), and
+    the round it replaced is released, so only the final labels stay.
 
-    Fault tolerance: the default ``localCheckpoint`` stores blocks on
-    executors — fast, but a lost executor kills a long job because the
-    truncated lineage cannot recompute. On a real cluster pass
-    ``checkpoint_dir`` (an HDFS/S3 path): rounds then use reliable
-    ``checkpoint()`` so recovery reads the checkpoint store instead.
+    Fault tolerance: the edge list and every round are truncated by
+    ``localCheckpoint`` by default, whose blocks die with their executor,
+    so a lost executor kills a long job. On a real cluster pass
+    ``checkpoint_dir`` (an HDFS/S3 path): the edges and the rounds are
+    then reliable ``checkpoint()`` files, and recovery reads the
+    checkpoint store instead. The edge blocks are released once the
+    labels no longer need them: after the driver union-find collects
+    them, or after the last propagation round.
 
     Documents in no pair stay singleton clusters of themselves.
 
@@ -1052,16 +1057,6 @@ def dedup_clusters(
     (property-tested); ``stats["path"]`` records which one ran. Pass 0 to
     force the distributed path (the scale rehearsal does).
     """
-    if checkpoint_dir is not None:
-        configure_checkpoint_dir(
-            docs.sparkSession.sparkContext, checkpoint_dir
-        )
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
     # undirected edges, both directions, from ONE pass over the pairs: a
     # union of two projections runs the whole pair plan twice unless an
     # exchange happens to sit on top of it (measured on the MinHash pairs
@@ -1074,13 +1069,14 @@ def dedup_clusters(
             )
         ).alias("e")
     ).select("e.src", "e.dst")
-    edges = _ckpt(edges)
+    edges = truncate(edges, checkpoint_dir)
 
     if driver_threshold and edges.count() <= 2 * driver_threshold:
         if stats is not None:
             stats["rounds"] = 0
             stats["path"] = "driver-union-find"
         labels = _driver_union_find(docs.sparkSession, edges)
+        release(edges)
         return docs.join(labels, "doc_id", "left").select(
             "doc_id", F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id")
         )
@@ -1093,8 +1089,8 @@ def dedup_clusters(
     # paired-node set is a small fraction of the corpus, so every
     # per-round join/agg shrinks from |docs| to |paired docs| (at 100 TB,
     # the difference between iterating over terabytes and over gigabytes).
-    labels = edges.select(F.col("src").alias("doc_id")).distinct().withColumn(
-        "cluster_id", F.col("doc_id")
+    labels = edges.select(F.col("src").alias("doc_id")).distinct().select(
+        "doc_id", F.col("doc_id").alias("cluster_id"), F.lit(True).alias("changed")
     )
     # Frontier (delta) iteration: only labels that IMPROVED last round
     # send messages. Round 1 everyone sends; afterwards the edges⋈frontier
@@ -1103,17 +1099,20 @@ def dedup_clusters(
     # labels⋈edges join would stay corpus-sized every round. A label can
     # only improve via a neighbor whose label improved, so the delta
     # schedule reaches the same fixpoint as the dense one.
-    frontier = labels
     rounds = 0
-    for _ in range(max_iter):
+
+    def propagate(labels: DataFrame) -> DataFrame:
+        nonlocal rounds
         rounds += 1
+        frontier = labels.filter("changed")
         neighbor_min = (
             edges.join(frontier, edges["src"] == frontier["doc_id"])
             .groupBy(F.col("dst").alias("doc_id"))
             .agg(F.min("cluster_id").alias("nmin"))
         )
-        updated = (
-            labels.join(neighbor_min, "doc_id", "left")
+        return (
+            labels.drop("changed")
+            .join(neighbor_min, "doc_id", "left")
             .select(
                 "doc_id",
                 F.least(
@@ -1124,15 +1123,16 @@ def dedup_clusters(
                 ),
             )
         )
-        updated = _ckpt(updated)
-        if rounds % check_every == 0 or rounds == max_iter:
-            n_changed = updated.filter("changed").count()
-        else:
-            n_changed = None  # unprobed round — no extra driver action
-        frontier = updated.filter("changed").drop("changed")
-        labels = updated.drop("changed")
-        if n_changed == 0:
-            break
+
+    labels = iterate(
+        labels,
+        propagate,
+        max_iter,
+        while_any="changed",
+        every=check_every,
+        checkpoint_dir=checkpoint_dir,
+    )
+    release(edges)
     if stats is not None:
         stats["rounds"] = rounds
     # singletons (docs in no pair) map to themselves

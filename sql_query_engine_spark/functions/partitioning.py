@@ -42,7 +42,7 @@ def sized_for_python_stage(
 
 def configure_checkpoint_dir(sc, checkpoint_dir: str) -> None:
     """The single chokepoint for ``sc.setCheckpointDir`` (ADVICE r9:
-    dedup.py once called it directly while queries._iter_checkpoint
+    dedup.py once called it directly while the iterative loops' helper
     cached the configured dir in ``sc._sqe_checkpoint_dir`` — a direct
     call elsewhere could change the JVM-side dir after the cache was
     set, and the helper would then silently checkpoint into the foreign

@@ -24,6 +24,7 @@ Determinism contract with the oracle (the driver hash-compares values):
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -38,6 +39,7 @@ from .functions.pq import pq_pinned_topk_oracle as _pq_pinned_oracle
 _PQ_PINNED_ORACLE = _pq_pinned_oracle()
 _IVFPQ_PINNED_ORACLE = _ivfpq_pinned_oracle()
 from .operators import relational as R
+from .operators.iterate import iterate, release, truncate
 from .session import local_df as _local_df
 from .streaming import events as EV
 
@@ -3579,9 +3581,11 @@ SELECT a, b FROM r""",
     "SQL lacks outright, re-expressed as the engine's fixpoint loop: "
     "seed the reachability set with the edge list, then repeatedly "
     "extend one hop (closure join edges) and UNION-distinct until a "
-    "round adds no new pairs, lineage checkpoint-truncated per round "
-    "(the iterative-algorithm pattern shared with pagerank and "
-    "classifier-train). DuckDB runs its NATIVE recursive CTE as the "
+    "round adds no new pairs. It runs through the fixpoint loop it "
+    "shares with dedup_clusters (operators/iterate.py): every round is "
+    "materialized with its lineage truncated, one count of the pairs it "
+    "added decides whether to go on, and the round it replaced is "
+    "released, so only the final closure stays cached. DuckDB runs its NATIVE recursive CTE as the "
     "oracle, so the hash match proves the loop implements exactly "
     "ANSI's recursive-union fixpoint semantics. Scale note: closure on "
     "dimension-sized graphs (this shape) is the SQL-parity surface; "
@@ -3591,23 +3595,32 @@ SELECT a, b FROM r""",
 )
 def sql_recursive_cte(spark, sf_dir):
     n = _t(spark, sf_dir, "nation")
-    e = n.select(
-        F.col("n_nationkey").alias("a"),
-        ((F.col("n_nationkey") * 7 + 3) % 25).alias("b"),
-    ).localCheckpoint(eager=False)
-    r = e
-    prev = -1
-    cur = r.count()
-    while cur != prev:
-        prev = cur
-        step = (
+    # every round joins the edges: materialize them once, not a scan per round
+    e = truncate(
+        n.select(
+            F.col("n_nationkey").alias("a"),
+            ((F.col("n_nationkey") * 7 + 3) % 25).alias("b"),
+        )
+    )
+
+    def extend(r: DataFrame) -> DataFrame:
+        # UNION-distinct of the closure and one more hop; a pair is new
+        # when only the hop produced it
+        hop = (
             r.alias("r")
             .join(e.alias("e"), F.col("r.b") == F.col("e.a"))
             .select(F.col("r.a").alias("a"), F.col("e.b").alias("b"))
         )
-        r = r.unionByName(step).distinct().localCheckpoint(eager=False)
-        cur = r.count()
-    return r
+        return (
+            r.select("a", "b", F.lit(False).alias("new"))
+            .unionByName(hop.withColumn("new", F.lit(True)))
+            .groupBy("a", "b")
+            .agg(F.min("new").alias("new"))
+        )
+
+    r = iterate(e.withColumn("new", F.lit(True)), extend, rounds=None, while_any="new")
+    release(e)
+    return r.select("a", "b")
 
 
 @_q(
@@ -6440,6 +6453,23 @@ _PR_DAMP = "cast(0.85 as double)"
 _PR_BASE = "cast(0.15 as double)"
 
 
+def _pagerank_round(rank: DataFrame, edges: DataFrame, *sums) -> DataFrame:
+    """One PageRank message pass, shared by graph_pagerank and
+    pipeline_source_authority; the caller supplies the arithmetic.
+
+    Every row of ``rank`` (keyed ``node``) meets the node's out-edges in
+    ``edges`` (``src``, ``dst`` and any weights), and ``sums`` fold the
+    per-edge terms per target ``node``. A node without out-edges meets
+    one NULL ``dst``, so its mass lands in the NULL-keyed row: the
+    dangling mass, for a caller whose graph has any.
+    """
+    return (
+        rank.join(edges, rank["node"] == edges["src"], "left")
+        .groupBy(F.col("dst").alias("node"))
+        .agg(*sums)
+    )
+
+
 def _pagerank_oracle() -> str:
     """Unrolled fixed-iteration PageRank: because the iteration count is
     a compile-time constant, the 'iterative' algorithm IS SQL — five
@@ -6506,10 +6536,14 @@ SELECT source, round(pr, 9) AS authority FROM pr{_PR_ITERS}
     "Scale split: the EXPENSIVE part (edge construction) is one "
     "distributed LSH pass whose output aggregates to the source×source "
     "level — small by construction (sources number thousands, not "
-    "billions) and persisted once; the 5 fixed power-iteration rounds "
-    "then run as joins over that compact graph with dangling-mass "
-    "redistribution. Value-exact oracle: fixed iteration count unrolls "
-    "to 5 chained SQL rounds; per-node sums ride exact DECIMAL.",
+    "billions); the 5 fixed power-iteration rounds then unroll into the "
+    "same lazy plan (operators/iterate.py), AQE reusing the one LSH "
+    "pass across rounds, and nothing is persisted. Each round is the "
+    "PageRank message pass graph_pagerank shares: rank ⟕ weighted edges "
+    "sums the per-target contributions and, under a NULL target, the "
+    "dangling mass, which one window spreads over every source. "
+    "Value-exact oracle: fixed iteration count unrolls to 5 chained SQL "
+    "rounds; per-node sums ride exact DECIMAL.",
 )
 def pipeline_source_authority(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
@@ -6526,7 +6560,8 @@ def pipeline_source_authority(spark, sf_dir):
         .select("s_from", "s_to")
     )
     # both directions from one pass over und (a union would run the
-    # LSH pair plan twice, as in dedup_clusters)
+    # LSH pair plan twice, as in dedup_clusters), each edge carrying its
+    # source's out-weight
     edges = (
         und.select(
             F.explode(
@@ -6538,52 +6573,49 @@ def pipeline_source_authority(spark, sf_dir):
                 )
             ).alias("e")
         )
-        .groupBy("e.s_from", "e.s_to")
+        .groupBy(F.col("e.s_from").alias("src"), F.col("e.s_to").alias("dst"))
         .agg(F.count("*").alias("w"))
-        .persist()  # referenced every iteration; the LSH pass runs once
+        .withColumn("ow", F.sum("w").over(Window.partitionBy("src")))
     )
-    nodes = docs.select("source").distinct().persist()
-    nn = nodes.agg(F.count("*").alias("n"))
-    outw = edges.groupBy("s_from").agg(F.sum("w").alias("ow"))
-    pr = nodes.crossJoin(F.broadcast(nn)).select(
-        "source", F.expr("cast(1 as double) / n").alias("pr")
+    nodes = docs.select(F.col("source").alias("node")).distinct()
+    nodes = nodes.crossJoin(F.broadcast(nodes.agg(F.count("*").alias("n"))))
+    # the NULL-target row of each round's sums is the dangling mass; this
+    # window spreads it over every node (sources number thousands, so one
+    # global window per round is cheap)
+    dangling = F.max(F.when(F.col("n").isNull(), F.col("c"))).over(
+        Window.partitionBy()
     )
-    for _ in range(_PR_ITERS):
-        contrib = (
-            edges.join(
-                pr.withColumnsRenamed({"source": "s_from", "pr": "p"}), "s_from"
-            )
-            .join(outw, "s_from")
-            .groupBy(F.col("s_to").alias("source"))
-            .agg(F.sum(F.expr("cast(p * w / ow as decimal(30,15))")).alias("c"))
-        )
-        dang = (
-            pr.join(outw, pr["source"] == outw["s_from"], "left_anti")
-            .agg(
-                F.coalesce(
-                    F.sum(F.expr("cast(pr as decimal(30,15))")),
-                    F.lit(0).cast("decimal(30,15)"),
-                ).alias("dm")
-            )
-        )
-        pr = (
-            nodes.crossJoin(F.broadcast(nn))
-            .crossJoin(F.broadcast(dang))
-            .join(contrib, "source", "left")
-            .select(
-                "source",
+
+    def step(pr: DataFrame) -> DataFrame:
+        sums = _pagerank_round(
+            pr,
+            edges,
+            F.sum(
                 F.expr(
-                    f"{_PR_BASE} / n + {_PR_DAMP} * "
-                    "(cast(coalesce(c, 0) as double) + cast(dm as double) / n)"
-                ).alias("pr"),
-            )
-            # truncate lineage every round (the dedup_clusters pattern):
-            # pr feeds BOTH contrib and dang next round, so without the
-            # checkpoint the logical plan doubles per iteration and
-            # Catalyst optimization time grows 2^k
-            .localCheckpoint()
+                    "CASE WHEN dst IS NULL THEN cast(rank as decimal(30,15))"
+                    " ELSE cast(rank * w / ow as decimal(30,15)) END"
+                )
+            ).alias("c"),
         )
-    return pr.select("source", F.round("pr", 9).alias("authority"))
+        return (
+            nodes.join(sums, "node", "full")
+            .select("node", "n", "c", dangling.alias("dm"))
+            .filter("n IS NOT NULL")
+            .select(
+                "node",
+                "n",
+                F.expr(
+                    f"{_PR_BASE} / n + {_PR_DAMP} * (cast(coalesce(c, 0) as double)"
+                    " + cast(coalesce(dm, 0) as double) / n)"
+                ).alias("rank"),
+            )
+        )
+
+    pr0 = nodes.select("node", "n", F.expr("cast(1 as double) / n").alias("rank"))
+    pr = iterate(pr0, step, _PR_ITERS)
+    return pr.select(
+        F.col("node").alias("source"), F.round("rank", 9).alias("authority")
+    )
 
 
 _MRL_DIM = 16
@@ -8692,16 +8724,18 @@ w0 AS (SELECT cast(0 as double) AS b, cast(0 as double) AS w1,
     "style gradient descent on the doc feature table (length, "
     "whitespace density; label = contains-'table'), 5 fixed "
     "iterations: each round is one map-side-combinable gradient "
-    "aggregate over the persisted feature table crossJoined with the "
-    "broadcast 1-row weight vector — per-partition gradient partials "
-    "combine exactly because contributions ride DECIMAL(30,15); the "
-    "1-row weight vector is localCheckpoint()ed per round (it feeds "
-    "three consumers, so an untruncated lineage triples per iteration "
-    "— the Catalyst plan-blowup this repo's round-3 notes document), "
-    "giving the standard driver-coordinated iterative shape. "
-    "At 100 TB each iteration is one scan+reduce of the feature table "
-    "(itself computed once and cached); weights are O(features) "
-    "regardless of corpus size. Value-exact oracle: the algebraic "
+    "aggregate over the feature projection (shuffled once per "
+    "execution; AQE reuses that exchange in every round) crossJoined "
+    "with the broadcast 1-row weight vector — per-partition gradient "
+    "partials "
+    "combine exactly because contributions ride DECIMAL(30,15). The "
+    "weights and the row count ride through that same aggregate, so a "
+    "round reads the previous weights once and the 5 rounds unroll into "
+    "one lazy plan (operators/iterate.py) with no build-time job and "
+    "nothing persisted; AQE reuses each round's exchange across the "
+    "trajectory's branches. At 100 TB the corpus is read once and each "
+    "iteration is one pass over the 3-column features + one reduce; "
+    "weights are O(features) regardless of corpus size. Value-exact oracle: the algebraic "
     "sigmoid z/(1+|z|) replaces exp() so both engines compute bit-equal "
     "doubles (exp differs across libm builds; +,-,*,/ are exactly-"
     "rounded IEEE everywhere), and the fixed iteration count unrolls to "
@@ -8710,55 +8744,55 @@ w0 AS (SELECT cast(0 as double) AS b, cast(0 as double) AS w1,
 )
 def pipeline_classifier_train(spark, sf_dir, checkpoint_dir: str | None = None):
     docs = _t(spark, sf_dir, "documents")
+    # every round scans the features through this one exchange, which AQE
+    # reuses, so the documents are read and featurized once per execution
     feat = docs.select(
         F.expr(_LRT_Y).alias("y"),
         F.expr(_LRT_X1).alias("x1"),
         F.expr(_LRT_X2).alias("x2"),
-    ).persist()  # scanned once per iteration; tiny projected columns
-    nn = feat.groupBy().agg(F.count("*").alias("n"))
-    w = feat.sparkSession.range(1).select(
+    ).repartition(spark.sparkContext.defaultParallelism)
+    w0 = spark.range(1).select(
         F.expr("cast(0 as double)").alias("b"),
         F.expr("cast(0 as double)").alias("w1"),
         F.expr("cast(0 as double)").alias("w2"),
     )
-    out = None
-    for i in range(1, _LRT_ITERS + 1):
-        scored = (
+    trajectory = []
+
+    def step(w: DataFrame) -> DataFrame:
+        # max() passes the 1-row weights through the gradient aggregate,
+        # and count(*) is the row count, so the round reads w once
+        g = (
             feat.crossJoin(F.broadcast(w))
-            .select("y", "x1", "x2", F.expr(_LRT_Z).alias("z"))
-            .select("y", "x1", "x2", F.expr(_LRT_S).alias("s"))
-        )
-        g = scored.groupBy().agg(
-            F.expr("sum(cast((s - y) as decimal(30,15)))").alias("gb"),
-            F.expr("sum(cast((s - y) * x1 as decimal(30,15)))").alias("g1"),
-            F.expr("sum(cast((s - y) * x2 as decimal(30,15)))").alias("g2"),
-        )
-        w = (
-            w.crossJoin(F.broadcast(g))
-            .crossJoin(F.broadcast(nn))
-            .select(
-                F.expr(f"b - {_LRT_LR} * (cast(gb as double) / n)").alias("b"),
-                F.expr(f"w1 - {_LRT_LR} * (cast(g1 as double) / n)").alias("w1"),
-                F.expr(f"w2 - {_LRT_LR} * (cast(g2 as double) / n)").alias("w2"),
+            .select("b", "w1", "w2", "y", "x1", "x2", F.expr(_LRT_Z).alias("z"))
+            .select("b", "w1", "w2", "y", "x1", "x2", F.expr(_LRT_S).alias("s"))
+            .groupBy()
+            .agg(
+                F.max("b").alias("b"),
+                F.max("w1").alias("w1"),
+                F.max("w2").alias("w2"),
+                F.count("*").alias("n"),
+                F.expr("sum(cast((s - y) as decimal(30,15)))").alias("gb"),
+                F.expr("sum(cast((s - y) * x1 as decimal(30,15)))").alias("g1"),
+                F.expr("sum(cast((s - y) * x2 as decimal(30,15)))").alias("g2"),
             )
         )
-        # the loop variable feeds THREE consumers per round (next
-        # round's z, the gradient rejoin, and the output row), so an
-        # un-truncated lineage triples per iteration (the Catalyst
-        # plan blowup); checkpointing the 1-ROW weight vector keeps
-        # every round's plan one scan + one reduce — the standard
-        # driver-coordinated iterative shape (MLlib does the same);
-        # checkpoint_dir switches to reliable checkpoints (executor-loss
-        # survival on a real cluster — see _iter_checkpoint)
-        w = _iter_checkpoint(w, checkpoint_dir, eager=True)
-        row = w.select(
-            F.lit(i).alias("iteration"),
-            F.expr("round(b, 9)").alias("bias"),
-            F.expr("round(w1, 9)").alias("w_len"),
-            F.expr("round(w2, 9)").alias("w_ws"),
+        w = g.select(
+            F.expr(f"b - {_LRT_LR} * (cast(gb as double) / n)").alias("b"),
+            F.expr(f"w1 - {_LRT_LR} * (cast(g1 as double) / n)").alias("w1"),
+            F.expr(f"w2 - {_LRT_LR} * (cast(g2 as double) / n)").alias("w2"),
         )
-        out = row if out is None else out.unionByName(row)
-    return out
+        trajectory.append(
+            w.select(
+                F.lit(len(trajectory) + 1).alias("iteration"),
+                F.expr("round(b, 9)").alias("bias"),
+                F.expr("round(w1, 9)").alias("w_len"),
+                F.expr("round(w2, 9)").alias("w_ws"),
+            )
+        )
+        return w
+
+    iterate(w0, step, _LRT_ITERS, checkpoint_dir=checkpoint_dir)
+    return functools.reduce(DataFrame.unionByName, trajectory)
 
 
 _PSI_W = 50  # n_chars bin width for drift detection (~11 bins on the gate corpus)
@@ -11156,40 +11190,8 @@ def graph_triangle_count(spark, sf_dir):
     )
 
 
-def _iter_checkpoint(df: DataFrame, checkpoint_dir: str | None, *, eager: bool = False) -> DataFrame:
-    """Lineage truncation for iterative loops, with a durability knob.
-
-    Default: ``localCheckpoint`` — blocks live on executors, fast, but a
-    lost executor kills a long job because the truncated lineage cannot
-    recompute. On a real cluster pass ``checkpoint_dir`` (an HDFS/S3
-    path): iterations then use reliable ``checkpoint()`` so recovery
-    reads the checkpoint store instead of dying mid-power-iteration.
-    Mirrors ``functions/dedup.py``'s connected-components option
-    (dedup_clusters), per the r7 verdict: every iterative loop in the
-    engine exposes the same knob.
-
-    Reliable ``checkpoint()`` materializes eagerly-on-first-use through
-    the checkpoint store; the ``eager`` flag is honored on both paths.
-    """
-    if checkpoint_dir:
-        # one chokepoint for setCheckpointDir across the engine (ADVICE
-        # r9) — see functions/partitioning.py:configure_checkpoint_dir
-        # for the caching rationale (resolved-URI mismatch, ADVICE r8)
-        from .functions.partitioning import configure_checkpoint_dir
-
-        configure_checkpoint_dir(df.sparkSession.sparkContext, checkpoint_dir)
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
-
-
 # ---- PageRank over the customer-supplier purchase graph ------------------
 _PR_SCALE = 10**15  # integer rank scale: 85*SCALE = 8.5e16 << 2^63
-# MUST stay small on the default (checkpoint_dir=None) path: each
-# iteration embeds the previous rounds' plan, so analysis cost grows
-# superlinearly with the count (the classifier-train lesson); raise it
-# only together with a checkpoint_dir (reliable per-round truncation)
-# or a periodic localCheckpoint every ~5-8 rounds.
-_PR_ITERS = 5
 _PR_TOPK = 20
 
 
@@ -11234,20 +11236,18 @@ LIMIT {_PR_TOPK}""",
     "contributions, (15*S)//(100*N) teleport, (85*t)//100 damp) so "
     "both engines produce bit-identical ranks — the documented "
     "deviation from float PageRank is the floor at each step. Scale "
-    "shape: edges are materialized ONCE (localCheckpoint) and reused "
-    "every iteration; each iteration is one edges-by-source shuffle "
-    "join against the node-sized rank table plus one groupBy-sum — the "
-    "classic Pregel/GraphX plan re-expressed in DataFrames; rank "
-    "lineage is checkpoint-truncated per round when a checkpoint store "
-    "is configured (the classifier-train lesson: un-truncated "
-    "iterative lineage multiplies the plan per round). r16 shape: the "
-    "edge table is hash-partitioned by source ONCE in-plan (AQE stage "
-    "reuse shares that exchange across all five iterations of one "
-    "execution), the out-degree rides the NODE-sized rank table into "
-    "each iteration, and NOTHING is persisted — every execution is a "
-    "full cold computation, so the bench's min-of-3 measures the "
-    "query, not a leaked cache (r15's persist()ed edges made reps 2-3 "
-    "warm reads and squatted executor memory for every later bench "
+    "shape: the symmetrized edges are deduplicated and hash-partitioned "
+    "by source in ONE exchange, and the five rounds unroll into one lazy "
+    "plan (operators/iterate.py) whose exchanges AQE reuses across "
+    "rounds. Each round is the shared PageRank message pass: the "
+    "node-sized rank table, which carries each node's degree and the "
+    "node count, meets the edges, and one groupBy-sum per target is the "
+    "round's only shuffle — the classic Pregel/GraphX plan re-expressed "
+    "in DataFrames, 11 Spark jobs per execution. NOTHING is persisted: "
+    "every execution is a full cold computation, so the bench's min-of-3 "
+    "measures the query, not a leaked cache (r15's persist()ed edges "
+    "made reps 2-3 warm reads and squatted executor memory for every "
+    "later bench "
     "row). Top-20 by (rank, node) keeps the output "
     "bounded. rank is "
     "CAST to BIGINT in the oracle: DuckDB's integer sum() propagates "
@@ -11259,69 +11259,57 @@ LIMIT {_PR_TOPK}""",
 def graph_pagerank(spark, sf_dir, checkpoint_dir: str | None = None):
     orders = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
-    e0 = (
+    cust = F.col("o_custkey") * 2
+    supp = F.col("l_suppkey") * 2 + 1
+    # both directions of every purchase pair from one pass, deduplicated
+    # right after the one exchange that hash-partitions them by source.
+    # Null keys (none in TPC-H) never form an edge; stating it once keeps
+    # every consumer's copy of the edge plan identical, so AQE reuses the
+    # exchange instead of re-running it under differently inferred null
+    # filters.
+    edges = (
         orders.join(li, orders.o_orderkey == li.l_orderkey)
         .select(
-            (F.col("o_custkey") * 2).alias("a"),
-            (F.col("l_suppkey") * 2 + 1).alias("b"),
+            F.explode(
+                F.array(
+                    F.struct(cust.alias("src"), supp.alias("dst")),
+                    F.struct(supp.alias("src"), cust.alias("dst")),
+                )
+            ).alias("e")
         )
-        .distinct()
+        .select("e.src", "e.dst")
+        .filter("src IS NOT NULL AND dst IS NOT NULL")
+        .repartition(spark.sparkContext.defaultParallelism, "src")
+        .dropDuplicates()
     )
-    e = e0.unionByName(
-        e0.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    deg = edges.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("d"))
+    # count_if, not count(*): a bare count lets Catalyst drop the edge
+    # dedup from this branch and run the edge exchange a second time
+    nrow = deg.agg(F.count_if(F.col("d") > 0).alias("n"))
+    rank0 = deg.crossJoin(F.broadcast(nrow)).select(
+        "node", F.expr(f"{_PR_SCALE} div n").alias("rank"), "d", "n"
     )
-    # r16: NO persist. r15 persisted deg/ed, which made the bench's
-    # min-of-3 read warm-cache reps (cold first rep measured 7-10 s vs
-    # 1.9 s warm at sf0.1) and left three InMemoryRelations squatting on
-    # executor memory for every later bench row — the caches were never
-    # unpersisted and a query builder has no action-completion hook to do
-    # it from. Every rep is now a full cold computation: within ONE
-    # action, AQE stage reuse deduplicates the identical edge/degree
-    # exchange subtrees across the five iterations, so the edge table is
-    # still shuffled by source only once per execution.
-    deg = (
-        e.groupBy("a").agg(F.count("*").alias("d"))
-        .withColumnRenamed("a", "node")
-    )  # reused by nrow, r init, and the per-iteration rank⋈degree join
-    # node count as a LAZY 1-row aggregate (broadcast into each consumer)
-    # instead of a blocking driver-side count() — the whole query stays
-    # one DAG with no scalar job (the text_idf pattern)
-    nrow = F.broadcast(deg.agg(F.count("*").alias("n_nodes")))
-    par = spark.sparkContext.defaultParallelism
-    # edges hash-partitioned by source ONCE; every iteration's join sees
-    # this exchange (reused across iterations by AQE stage reuse)
-    ep = e.repartition(par, "a")
-    r = deg.crossJoin(nrow).select(
-        "node", F.expr(f"{_PR_SCALE} div n_nodes").alias("rank")
-    )
-    tele_expr = f"((15 * {_PR_SCALE}) div (100 * n_nodes)) + (85 * t) div 100"
-    for _ in range(_PR_ITERS):
-        # r16: attach the out-degree to the NODE-SIZED rank table, not to
-        # the full edge table (r15's ed = e⋈deg paid a second whole-edge
-        # join + reshuffle during setup). rank and degree both come out
-        # of node-keyed aggregations, so this join is co-partitioned; the
-        # planner picks the strategy for the edges⋈rd join itself —
-        # locally rd broadcasts (measured faster than the r15
-        # shuffle_hash hints once the caches were gone: 3.0-3.7 s vs
-        # 3.9-5.2 s min-of-3), and at scale billion-node rank tables
-        # exceed any broadcast threshold and fall back to a shuffled join
-        # against the already-partitioned edge side.
-        rd = r.join(deg, "node").select(
-            "node", F.expr("rank div d").alias("c")
+
+    def step(r: DataFrame) -> DataFrame:
+        # the edges are symmetric, so a node's in-edge count is its
+        # degree: the round's count(*) hands the next round d, and the
+        # node count rides along, so no round joins deg or nrow again
+        return _pagerank_round(
+            r,
+            edges,
+            F.sum(F.expr("rank div d")).alias("t"),
+            F.count("*").alias("d"),
+            F.max("n").alias("n"),
+        ).select(
+            "node",
+            F.expr(f"((15 * {_PR_SCALE}) div (100 * n)) + (85 * t) div 100").alias(
+                "rank"
+            ),
+            "d",
+            "n",
         )
-        contrib = (
-            ep.join(rd, ep.a == rd.node)
-            .select(F.col("b").alias("node"), "c")
-            .groupBy("node")
-            .agg(F.sum("c").alias("t"))
-        )
-        r = contrib.crossJoin(nrow).select(
-            "node", F.expr(tele_expr).alias("rank")
-        )
-        if checkpoint_dir:
-            # cluster durability knob: reliable checkpoint still truncates
-            # per-round lineage when a checkpoint store is configured
-            r = _iter_checkpoint(r, checkpoint_dir)
+
+    r = iterate(rank0, step, _PR_ITERS, checkpoint_dir=checkpoint_dir)
     return r.orderBy(F.desc("rank"), "node").limit(_PR_TOPK).select(
         "node", "rank"
     )

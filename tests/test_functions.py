@@ -1515,11 +1515,11 @@ def test_pagerank_golden(spark):
 def test_iterative_loops_support_reliable_checkpoints(spark):
     """graph_pagerank and pipeline_classifier_train accept a
     checkpoint_dir (r7 verdict #5): iterations then truncate lineage via
-    reliable checkpoint() into that directory instead of
-    localCheckpoint(), so an executor loss mid-power-iteration recovers
-    from the checkpoint store on a real cluster (localCheckpoint blocks
-    die with their executor). Results must be identical on both paths
-    and checkpoint files must actually land in the directory."""
+    reliable checkpoint() into that directory instead of unrolling into
+    one lazy plan, so an executor loss mid-power-iteration recovers
+    from the checkpoint store on a real cluster. Results must be
+    identical on both paths and checkpoint files must actually land in
+    the directory."""
     import os
     import sys
     import tempfile

@@ -162,13 +162,12 @@ def test_partial_aggregation_before_shuffle(spark):
 
 
 # Builders that still issue Spark jobs on a repeat build, with the reason.
-# Each one is a case for a prepare/build split; the list only shrinks.
+# Each one is a case for a prepare/build split; the list only shrinks: an
+# entry whose repeat build issues no job fails the lazy-construction test.
 BUILD_TIME_JOBS = {
-    "pipeline_source_authority": "MinHash clustering plus per-iteration PageRank localCheckpoints",
     "sim_mmr_rerank": "greedy MMR selection: one collect and localCheckpoint per pick",
-    "sql_recursive_cte": "fixpoint iteration: one count() per round",
-    "pipeline_classifier_train": "gradient-descent iterations: localCheckpoint per step",
-    "dedup_clusters": "union-find: toPandas of the edge list and convergence count()s",
+    "sql_recursive_cte": "fixpoint iteration: each round materialized by its convergence count()",
+    "dedup_clusters": "union-find: count and toPandas of the materialized edge list",
     "dedup_embedding_clusters": "union-find over embedding near-dup pairs (dedup_clusters)",
     "pipeline_dedup_rate_by_source": "union-find over MinHash pairs (dedup_clusters)",
     "pipeline_dedup_keeper": "union-find over MinHash pairs (dedup_clusters)",
@@ -183,6 +182,20 @@ BUILD_TIME_JOBS = {
     "ref_jsonl_scan": "writes its tagged-JSONL fixture",
     "src_fixed_width_scan": "collects supplier rows to write its fixed-width fixture",
     "src_tbl_scan": "collects nation rows to write its .tbl fixture",
+}
+
+
+# Builders that leave cached plans (Spark's CacheManager) or persisted /
+# checkpointed RDDs behind after a build, with the reason. A later build
+# whose plan matches a cached one reads the cache, and localCheckpoint
+# blocks pile up over warm passes. The list only shrinks: an entry whose
+# build leaves nothing fails the lazy-construction test.
+BUILD_TIME_STATE = {
+    "sql_recursive_cte": "the fixpoint loop keeps its final round's checkpoint blocks",
+    "sim_mmr_rerank": "persisted posexploded vectors and per-pick penalty localCheckpoints",
+    "text_bm25_topk": "lazy localCheckpoint of the per-doc term table",
+    "dedup_winnowing": "DISK_ONLY persist of the fingerprint table",
+    "graph_triangle_count": "persisted capped edge list shared by the wedge and closing joins",
 }
 
 
@@ -207,18 +220,24 @@ FIXTURE_WRITERS = {
 
 
 def test_query_construction_is_lazy(spark):
-    """Building any registry query must launch NO Spark job — the registry
-    is a lazy-plan contract. Every entry is built twice and the jobs of
-    both builds are counted: only FIXTURE_WRITERS may issue jobs on the
-    first build, and no entry on the second. Builders with a documented
-    build-time job are exempt through BUILD_TIME_JOBS; a new one fails
-    here."""
+    """Building any registry query must launch NO Spark job and leave no
+    cached or persisted state — the registry is a lazy-plan contract.
+    Every entry is built twice and the jobs of both builds are counted:
+    only FIXTURE_WRITERS may issue jobs on the first build, and no entry
+    on the second. After each build Spark's CacheManager and the
+    persistent-RDD map must be empty; both are cleared between builds.
+    persist() and localCheckpoint(eager=False) register their state at
+    build time, so no action is needed to see it. Builders with a
+    documented build-time job or leftover state are exempt through
+    BUILD_TIME_JOBS / BUILD_TIME_STATE; a new one fails here, and so does
+    an exempt entry that no longer needs its exemption."""
     import uuid
 
     from sql_query_engine_spark.catalog import TABLES
     from sql_query_engine_spark.queries import registry
 
     sc = spark.sparkContext
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
     # warm the table schemas first: the FIRST spark.read.parquet of a file
     # runs a one-time footer-reading job, which is scan setup, not query
     # construction
@@ -227,28 +246,69 @@ def test_query_construction_is_lazy(spark):
 
     names = {q.name for q in registry()}
     assert set(BUILD_TIME_JOBS) <= names, set(BUILD_TIME_JOBS) - names
+    assert set(BUILD_TIME_STATE) <= names, set(BUILD_TIME_STATE) - names
     assert set(FIXTURE_WRITERS) <= names, set(FIXTURE_WRITERS) - names
 
-    def build_jobs(q) -> int:
+    def clear() -> None:
+        spark.catalog.clearCache()
+        for rdd in sc._jsc.getPersistentRDDs().values():
+            rdd.unpersist(True)
+
+    def build(q) -> tuple[int, bool]:
+        """(jobs the build issued, whether it left state behind)"""
+        clear()
         group = f"lazy-{q.name}-{uuid.uuid4().hex[:8]}"
         sc.setJobGroup(group, "lazy construction check")
         try:
             q.spark(spark, SF_DIR)  # build only — no action
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        left = not cache_manager.isEmpty() or len(sc._jsc.getPersistentRDDs()) > 0
+        return len(sc.statusTracker().getJobIdsForGroup(group)), left
 
-    eager = {}
-    for q in registry():
-        if q.name in BUILD_TIME_JOBS:
-            continue
-        first = build_jobs(q)
-        if first and q.name not in FIXTURE_WRITERS:
-            eager[q.name] = ("first build", first)
-        repeat = build_jobs(q)
-        if repeat:
-            eager[q.name] = ("repeat build", repeat)
-    assert eager == {}, f"queries ran jobs at construction: {eager}"
+    eager, stale = {}, {}
+    try:
+        for q in registry():
+            first, left_first = build(q)
+            repeat, left_repeat = build(q)
+            if q.name in BUILD_TIME_JOBS:
+                if not repeat:
+                    stale[q.name] = "BUILD_TIME_JOBS entry, repeat build ran no job"
+            elif repeat:
+                eager[q.name] = ("repeat build", repeat)
+            elif first and q.name not in FIXTURE_WRITERS:
+                eager[q.name] = ("first build", first)
+            left = left_first or left_repeat
+            if left and q.name not in BUILD_TIME_STATE:
+                eager[q.name] = ("left cached or persisted state", 1)
+            elif not left and q.name in BUILD_TIME_STATE:
+                stale[q.name] = "BUILD_TIME_STATE entry, build left nothing"
+    finally:
+        clear()
+    assert eager == {}, f"queries ran jobs or left state at construction: {eager}"
+    assert stale == {}, f"exemptions no longer needed (remove them): {stale}"
+
+
+def test_graph_pagerank_job_budget(spark):
+    """One graph_pagerank execution runs at most 11 Spark jobs: the edge
+    table is deduplicated and partitioned in one exchange that every
+    round reuses, the node count is computed once, and each of the five
+    power rounds adds one shuffle. A round that re-joined the degree or
+    re-broadcast the node count would push it over (the row ran 22)."""
+    import uuid
+
+    from sql_query_engine_spark.queries import queries
+
+    sc = spark.sparkContext
+    df = queries()["graph_pagerank"](spark, SF_DIR)
+    group = f"pagerank-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "graph_pagerank job budget")
+    try:
+        assert len(df.collect()) == 20
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 11, jobs
 
 
 def test_ann_query_side_broadcast_skips_corpus_shuffle(spark):

@@ -538,6 +538,27 @@ def test_schema_evolution_merge_read(spark, tmp_path):
     assert "PushedFilters" in plan and "quality" in plan
 
 
+def test_load_table_sees_a_table_rewritten_in_place(spark, tmp_path):
+    """load_table caches each table's inferred schema, keyed on the file
+    itself: a table rewritten in place with new rows and a new column is
+    read with its new schema, not the one cached for the old file."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    from sql_query_engine_spark.catalog import load_table
+
+    path = str(tmp_path / "shards.parquet")
+    papq.write_table(pa.table({"k": pa.array([1, 2], pa.int64())}), path)
+    assert load_table(spark, str(tmp_path), "shards").count() == 2
+    papq.write_table(
+        pa.table({"k": pa.array([1, 2, 3], pa.int64()), "v": ["a", "b", "c"]}),
+        path,
+    )
+    df = load_table(spark, str(tmp_path), "shards")
+    assert df.columns == ["k", "v"]
+    assert sorted(map(tuple, df.collect())) == [(1, "a"), (2, "b"), (3, "c")]
+
+
 def test_csv_quarantine_routes_bad_lines(spark, tmp_path):
     """Malformed lines (wrong arity, bad types) land in the quarantine
     split as raw text; clean lines parse fully; nothing is lost."""

@@ -93,24 +93,6 @@ EXPECTED = {
     "aggregate (same lazy-count shape as text_idf)",
     "tpch_q22_global_sales_opportunity": "crossJoin of a broadcast 1-row "
     "average-balance aggregate (same lazy-count shape as text_idf)",
-    "tpch_q20_part_promotion": "left-semi join of supplier against the "
-    "post-aggregation movers set may plan as SMJ on s_suppkey: movers "
-    "sits behind a groupBy-HAVING so Catalyst has no static size "
-    "estimate, and whether AQE converts it to broadcast at runtime is "
-    "environment-dependent (the r10 judge saw SMJ where the builder's "
-    "machine saw BHJ). SMJ on suppkey is the scale-safe choice anyway — "
-    "the mover set grows with supplier count — so either static plan is "
-    "correct; annotated to keep the gate deterministic across machines",
-    "dedup_clusters": "corpus left-join of the converged paired-node "
-    "label map on doc_id — the label set is data-dependent (up to every "
-    "paired doc), so a shuffle join on the key is the correct general "
-    "strategy; AQE broadcasts it at runtime when the graph is sparse",
-    "pipeline_training_data": "inherits dedup_clusters' singleton-rejoin "
-    "shuffle join; the second SMJ is the same corpus⋈labels key join "
-    "inside the pipeline composition",
-    "pipeline_cluster_safe_split": "inherits dedup_clusters' singleton-"
-    "rejoin shuffle join on doc_id (the one SMJ); everything after the "
-    "cluster map is a tiny hash-agg on the 3-value split key",
     "pipeline_temperature_mixture": "BNLJs are the 1-row aggregate "
     "(total count + sorted-fold denominator) broadcast against the tiny "
     "per-source rate table — the text_idf shape; corpus-side admission "
@@ -147,13 +129,6 @@ EXPECTED = {
     "emb_knn_label_transfer": "BNLJ is the broadcast unlabeled batch "
     "(the small side in label transfer) scored against the labeled "
     "corpus scan — same broadcast-query-set shape as cosine_topk",
-    "dedup_embedding_clusters": "BNLJ is the all-pairs exactness "
-    "baseline pair generator (dedup_embedding_cosine's documented "
-    "shape; the LSH-bucketed variant is the scale path); the SMJ is "
-    "dedup_clusters' singleton-rejoin key join",
-    "pipeline_dedup_rate_by_source": "inherits dedup_clusters' "
-    "singleton-rejoin shuffle join on doc_id; the per-source aggregate "
-    "after the cluster map is a tiny hash-agg",
     "catalog_table_diff": "full outer join of two table SNAPSHOTS on the "
     "primary key — both sides are table-sized, neither can broadcast, "
     "and full outer requires a shuffle join; the shuffle carries only "
@@ -164,12 +139,25 @@ EXPECTED = {
     "aggregate crossJoin (text_idf shape) against the per-key counts",
     "catalog_feed_freshness": "BNLJ is the broadcast 1-row corpus-max "
     "aggregate against the tiny per-feed table (text_idf shape)",
-    "graph_pagerank": "BNLJs are the lazy 1-row n_nodes aggregate "
-    "crossJoined into the init row and each iteration's teleport term "
-    "(text_idf shape — never data-sized). The r15 rewrite made the "
-    "whole iteration DAG visible to this audit (the old per-round "
-    "localCheckpoint hid it behind ExistingRDD); every edge/rank join "
-    "is a shuffled-hash join on the node key.",
+    "graph_pagerank": "BNLJ is the lazy 1-row node-count aggregate "
+    "crossJoined once into the initial rank table (text_idf shape — "
+    "never data-sized). SMJ×5 is each round's rank ⟕ edges join on the "
+    "source key: the static plan shuffles both sides, and AQE broadcasts "
+    "the edge table at runtime when it fits (every round then reuses the "
+    "one broadcast). The rounds unroll into one lazy plan "
+    "(operators/iterate.py), so the whole iteration DAG is visible here.",
+    "pipeline_source_authority": "BNLJ×6 is the lazy 1-row source-count "
+    "aggregate crossJoined into the source table (text_idf shape), which "
+    "the initial ranks and every round re-read (AQE runs it once). Per "
+    "round, one SMJ is the rank ⟕ weighted-edges join (the LSH-derived "
+    "edge table has no small static estimate; AQE broadcasts it at "
+    "runtime) and one is the full outer join of the source table with "
+    "the per-target sums, which cannot broadcast — both sides are "
+    "source-sized, thousands of rows by construction",
+    "pipeline_classifier_train": "BNLJ×15 is the broadcast 1-row weight "
+    "vector crossed with the feature scan once per GD round in each of "
+    "the trajectory's 5 union branches (1+2+3+4+5); AQE reuses each "
+    "round's exchanges, so each round runs once",
 }
 
 # queries whose physical plan legitimately contains a Window with no
@@ -199,6 +187,9 @@ EXPECTED_GLOBAL_WINDOW = {
     "pipeline_classifier_calibration": "same two-pass rank offsets "
     "window; the crossJoin is a broadcast 1-row total-count aggregate "
     "(lazy-count shape)",
+    "pipeline_source_authority": "one window per PageRank round spreads "
+    "the dangling mass over the source-sized rank table (thousands of "
+    "sources by construction), never the corpus",
     "sim_hybrid_rrf": "rank windows run AFTER TakeOrdered limits — each "
     "covers at most the 50-row per-modality candidate list / 10-row "
     "fused list, never corpus-sized input",

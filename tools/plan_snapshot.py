@@ -258,9 +258,12 @@ SHOWCASE = [
     ),
     (
         "pipeline_classifier_train",
-        "each GD round is one scan of the cached 3-column feature "
-        "projection + one SinglePartition reduce of 3 decimal sums; "
-        "weight lineage truncated per round (no plan growth)",
+        "the 3-column feature projection is shuffled once and every GD "
+        "round reads that reused exchange, crossJoined with the "
+        "broadcast 1-row weights, into one "
+        "SinglePartition reduce of 3 decimal sums that also carries the "
+        "weights and row count; each round reads the previous weights "
+        "once, so the unrolled plan grows linearly",
         "training state is O(features) regardless of corpus size; "
         "gradients combine map-side because contributions ride DECIMAL",
     ),
