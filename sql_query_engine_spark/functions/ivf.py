@@ -1,4 +1,5 @@
-"""IVF (inverted-file) approximate nearest-neighbor search.
+"""IVF (inverted-file) approximate nearest-neighbor search with a
+TRAINED coarse quantizer.
 
 The second scale path for similarity search beside random-hyperplane LSH
 (functions/similarity.py): a k-means coarse quantizer partitions the
@@ -8,9 +9,12 @@ partition/cluster key, candidate generation is an equi-join on it, and
 recall/cost is tuned by (n_cells, n_probe).
 
 Training runs as Spark jobs (assignment via Arrow/NumPy matmul batches,
-centroid update via explode + groupBy mean); only the K×dim centroid
-matrix ever touches the driver. Centroid means are float reductions, so
-cell boundaries can wobble in the last ULP between runs — results are
+centroid update via a map-side partial mean); only the K×dim centroid
+matrix ever touches the driver. Search is similarity.py's one IVF core
+over that matrix: the same centroid table, cell assignment, in-plan
+probe step, float cosine rescoring and √N sizing rule the pinned
+``sim_ivf_*`` rows run. Centroid means are float reductions, so cell
+boundaries can wobble in the last ULP between runs — results are
 therefore checked by *recall against the exact brute force* rather than a
 value-exact oracle (the one approximate operator family where that is the
 honest check; see tests/test_scale_ops.py).
@@ -23,37 +27,17 @@ from pyspark.sql import functions as F
 
 from ..session import local_df as _local_df
 from .partitioning import sized_for_python_stage
-from .similarity import _centroid_dists, _cosine, _rank_limit, _spark_norm2
+from .similarity import (
+    _centroid_dists,
+    _centroid_table,
+    _ivf_grid,
+    _ivf_probes,
+    _ivf_topk,
+    _nonzero_base,
+    _spread,
+)
 
-__all__ = ["adaptive_params", "train_centroids", "ivf_topk"]
-
-
-def _assign_udf(centroids):
-    """mapInPandas batch assigner: vec → nearest centroid id (L2).
-
-    Carries the embedding through so the caller needs NO join back onto
-    the corpus — assignment is a pure map stage."""
-    import numpy as np
-    import pandas as pd
-
-    c_mat = np.asarray(centroids, dtype=np.float64)  # (K, dim)
-    c_sq = (c_mat * c_mat).sum(axis=1)
-
-    def _assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v = np.array(list(pdf["embedding"]), dtype=np.float64)
-            d = _centroid_dists(v, c_mat, c_sq)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "embedding": pdf["embedding"],
-                    "cell": d.argmin(axis=1).astype("int32"),
-                }
-            )
-
-    return _assign
+__all__ = ["train_centroids", "ivf_topk"]
 
 
 def _partial_mean_udf(centroids):
@@ -141,20 +125,6 @@ def train_centroids(
         base.unpersist()
 
 
-def adaptive_params(n_vectors: int) -> tuple[int, int]:
-    """(n_cells, n_probe) for a corpus of ``n_vectors``.
-
-    The standard IVF sizing: cells ≈ √N (each cell holds ~√N vectors, so
-    probe cost and cell-scan cost balance), probes ≈ √cells with a floor
-    of 4 (recall ≥ the fixed 16/4 test configuration). Clamped to
-    [4, 65536] cells so tiny corpora still partition and the centroid
-    matrix stays driver-sized (65536 × dim doubles ≈ 34 MB at dim 64).
-    """
-    n_cells = max(4, min(65536, int(n_vectors**0.5)))
-    n_probe = max(4, min(n_cells, int(n_cells**0.5)))
-    return n_cells, n_probe
-
-
 def ivf_topk(
     emb: DataFrame,
     k: int = 10,
@@ -163,73 +133,43 @@ def ivf_topk(
     n_probe: int | None = None,
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
-    """Approximate cosine top-k probing the ``n_probe`` nearest cells.
+    """Approximate cosine top-k probing the ``n_probe`` nearest of the
+    trained cells.
 
-    Corpus vectors carry their cell id (one assignment pass); each query
-    expands to its n_probe nearest cells and candidates come from an
+    :func:`train_centroids` (skipped when ``centroids`` are given) plus
+    similarity.py's IVF core: corpus vectors carry their cell id (one
+    assignment pass, its kernel picked by the grid size), each query
+    keeps its n_probe nearest cells in-plan, and candidates come from an
     equi-join on the cell id — the same join-on-coarse-key shape as the
     LSH variant, with learned (data-adaptive) cells instead of random
-    hyperplanes. Pass ``n_cells=None`` to size cells AND probes from the
-    corpus count (√N rule, :func:`adaptive_params`) — the setting a
-    100 TB corpus wants; the fixed cell default keeps the small-corpus
-    gate runs reproducible. ``n_probe`` defaults to ``None`` = derived
-    from whichever cell count is in effect (√cells, floor 4), so the
+    hyperplanes. Given ``centroids``, the build runs no Spark job: the
+    centroid table is a literal relation and the Arrow assignment reads
+    the driver-side matrix. Pass ``n_cells=None`` to size the grid from
+    the corpus count (the √N rule of ``similarity._ivf_grid``) — the
+    setting a 100 TB corpus wants; the fixed cell default keeps the
+    small-corpus gate runs reproducible. ``n_probe`` defaults to
+    ``None`` = derived from the grid in effect (√cells, floor 8), so the
     auto-sized path never probes a fixed-constant fraction of a corpus-
-    scaled cell grid; pass an int only to pin it explicitly.
+    scaled grid; pass an int only to pin it explicitly.
     """
     import numpy as np
 
-    if n_cells is None:
-        n_cells, auto_probe = adaptive_params(emb.count())
-    else:
-        auto_probe = adaptive_params(n_cells * n_cells)[1]
-    if n_probe is None:
-        n_probe = auto_probe
     if centroids is None:
+        if n_cells is None:
+            n_cells = max(1, _ivf_grid(emb.count(), n_queries)[0])
         centroids = train_centroids(emb, n_cells=n_cells)
-    spark = emb.sparkSession
-
-    sel = emb.select("vec_id", "embedding")
-    base = sized_for_python_stage(sel, sel.count())
-    # assignment is a pure map stage (the UDF carries the embedding
-    # through — no join back onto the corpus); persist because the
-    # assigned corpus feeds three consumers (query collect, query branch,
-    # candidate join) and the Arrow pass would re-run per consumer
-    corpus = (
-        base.mapInPandas(
-            _assign_udf(centroids), "vec_id long, embedding array<float>, cell int"
-        )
-        .withColumn("n2", F.expr(_spark_norm2("embedding")))
-        .persist()
-    )
-
-    # query → its n_probe nearest cells (tiny, computed driver-side)
-    q_rows = corpus.filter(F.col("vec_id") < n_queries).collect()
+    if n_probe is None:
+        n_probe = _ivf_probes(len(centroids))
     c_mat = np.asarray(centroids, dtype=np.float64)
-    c_sq = (c_mat * c_mat).sum(axis=1)
-    probe_rows = []
-    for r in q_rows:
-        v = np.asarray(r.embedding, dtype=np.float64)
-        d = _centroid_dists(v[None, :], c_mat, c_sq)[0]
-        for cell in np.argsort(d)[:n_probe]:
-            probe_rows.append((r.vec_id, int(cell)))
-    probes = F.broadcast(
-        _local_df(spark, probe_rows, "query_id long, cell int")
+    cent = _centroid_table(
+        _local_df(
+            emb.sparkSession,
+            [(i, row.tolist()) for i, row in enumerate(c_mat)],
+            "cell_id long, cemb array<double>",
+        )
     )
-
-    q = corpus.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("n2").alias("q_n2"),
+    cells = (np.arange(len(c_mat), dtype=np.int64), c_mat)
+    return _ivf_topk(
+        _nonzero_base(_spread(emb)), cent, len(c_mat), k, n_queries, n_probe,
+        cells=cells,
     )
-    cand = (
-        probes.join(q, "query_id")
-        .join(corpus, "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-    )
-    scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        _cosine("q_emb", "embedding", "q_n2", "n2").alias("cos"),
-    )
-    return _rank_limit(scored, "cos", k)

@@ -506,7 +506,7 @@ def pq_pinned_topk(
 
     Plan shape: codes come from a broadcast corpus×16 join + a
     map-side-combinable per-(vector, subspace) argmin aggregate (the
-    ivf_int8_index "sql" assignment applied per subspace); scoring is
+    IVF SQL argmin fold applied per subspace); scoring is
     the production ADC shape — per-query LUTs and the code table
     cross-joined via broadcast, the corpus scanned once, per-query
     rank-limit. The distributedly-TRAINED codebook path

@@ -13,9 +13,15 @@ Entry points — each returns a per-query ranked neighbor list:
   optional multi-probe): each vector maps to a small bucket id,
   candidate generation is an equi-join on the bucket and the exact
   scoring runs only within buckets.
-* IVF over pinned sample-init centroids: :func:`ivf_int8_topk` (int8
-  rescoring; :func:`ivf_int8_index` is the persistable build) and
-  :func:`ivf_float_topk` (cosine rescoring).
+* IVF: one core (:func:`_ivf_topk`) behind every IVF builder — one
+  centroid table ``(cell_id, cemb, cn2)``, one cell assignment whose
+  kernel follows the grid size (SQL argmin fold below
+  ``IVF_ARROW_MIN_CELLS``, Arrow matmul at or above it), one in-plan
+  probe step and one √N sizing rule (:func:`_ivf_grid`). Pinned
+  sample-init centroids serve :func:`ivf_int8_topk` (int8 rescoring;
+  :func:`ivf_int8_index` is the persistable build) and
+  :func:`ivf_float_topk` (cosine rescoring); trained centroids serve
+  ``ivf.ivf_topk``.
 * :func:`hamming_prefilter_topk`: a 64-bit sign-code prefilter with
   int8 rescoring of the survivors.
 * :func:`ann_topk`: the adaptive entry point; :func:`ann_plan` picks
@@ -27,10 +33,9 @@ One shared core sits under every builder here and in functions/pq.py,
 functions/ivf.py, functions/dedup.py and the emb_* rows: the Spark
 float folds (:func:`_spark_dot`, :func:`_spark_norm2`, :func:`_cosine`),
 the int8 codes, dot fold and candidate rescorer, the nonzero-scale base,
-the IVF cell step (SQL argmin assignment, query probes, cell
-equi-join), the numpy :func:`_centroid_dists` behind every Arrow
-assignment pass, and :func:`_rank_limit` — the per-query top-k with its
-neighbor-id tie-break.
+the IVF core above, the numpy :func:`_centroid_dists` behind every
+Arrow assignment pass, and :func:`_rank_limit` — the per-query top-k
+with its neighbor-id tie-break.
 
 All scoring is a fixed-order double fold over float32 elements so the
 DuckDB oracle reproduces scores bit-for-bit (see functions/dedup.py for the
@@ -389,19 +394,11 @@ def ivf_operating_point(
     binary-Hamming prefilter (sim_hamming_topk shape) for one-off
     batches that cannot amortize an index build.
     Deterministic sample-init (seeded ids, disjoint from the query ids)
-    like the fixed gate configuration. The 65536 clamp keeps the
-    centroid matrix driver-sized (65536×128 doubles ≈ 67 MB); the lower
-    clamp keeps sample() feasible on tiny corpora."""
-    n_cells = max(16, min(65536, int(n_vectors**0.5)))
-    # tiny-corpus clamp: sample() needs n_cells ≤ population size; a
-    # corpus no bigger than the query set has nothing to index — return
-    # an empty grid (callers like ivf_sampled_recall treat it as "IVF
-    # is moot") instead of raising from sample()
-    population = max(0, n_vectors - n_queries)
-    n_cells = min(n_cells, population)
+    like the fixed gate configuration; the grid size is
+    :func:`_ivf_grid`'s."""
+    n_cells, n_probes = _ivf_grid(n_vectors, n_queries)
     if n_cells == 0:
         return (), 0
-    n_probes = max(1, min(n_cells, max(8, int(n_cells**0.5))))
     ids = tuple(
         sorted(
             random.Random(0xCE11).sample(range(n_queries, n_vectors), n_cells)
@@ -410,13 +407,34 @@ def ivf_operating_point(
     return ids, n_probes
 
 
+def _ivf_grid(n_vectors: int, n_queries: int = 8) -> tuple[int, int]:
+    """``(n_cells, n_probes)`` — the one IVF sizing rule, behind the
+    pinned (:func:`ivf_operating_point`) and the trained
+    (``ivf.ivf_topk(n_cells=None)``) quantizers: cells ≈ √N clamped to
+    [16, 65536] (the upper clamp keeps the centroid matrix driver-sized,
+    65536×128 doubles ≈ 67 MB) and to the corpus past the query set
+    (0 cells: nothing to index); probes per :func:`_ivf_probes`."""
+    n_cells = max(16, min(65536, int(n_vectors**0.5)))
+    n_cells = min(n_cells, max(0, n_vectors - n_queries))
+    return n_cells, _ivf_probes(n_cells)
+
+
+def _ivf_probes(n_cells: int) -> int:
+    """Probes for a grid of ``n_cells``: √cells with a floor of 8,
+    never more than the grid holds."""
+    return max(1, min(n_cells, max(8, int(n_cells**0.5))))
+
+
+# sample sizes of the sampled-recall diagnostic: queries, corpus vectors
+_RECALL_QUERIES = 64
+_RECALL_SAMPLE = 4096
+
+
 def ivf_sampled_recall(
     emb: DataFrame,
     centroid_ids: tuple[int, ...] | None = None,
     n_probes: int | None = None,
     k: int = 10,
-    n_query_sample: int = 64,
-    max_sample: int = 4096,
     sample_mod: int = 1,
 ) -> float:
     """Estimate IVF recall@k at an operating point from a driver-sized
@@ -428,13 +446,13 @@ def ivf_sampled_recall(
     scanned fraction — no probe-count knee exists).
 
     Method (all driver-side numpy after one bounded sampling scan):
-    hash-sample ≤``max_sample`` corpus vectors; the first
-    ``n_query_sample`` double as queries. Ground truth = exact top-k by
-    dot product within the sample (the retrieval metric family — int8
-    rescoring approximates float dot). IVF simulation = assign the
-    sample to cells by nearest centroid (L2, exactly the index rule),
-    probe each query's ``n_probes`` nearest cells, count the fraction of
-    true top-k inside probed cells.
+    hash-sample ≤``_RECALL_SAMPLE`` (4096) corpus vectors; the first
+    ``_RECALL_QUERIES`` (64) double as queries. Ground truth = exact
+    top-k by dot product within the sample (the retrieval metric family
+    — int8 rescoring approximates float dot). IVF simulation = assign
+    the sample to cells by nearest centroid (L2, exactly the index
+    rule), probe each query's ``n_probes`` nearest cells, count the
+    fraction of true top-k inside probed cells.
 
     The estimate is a CONSERVATIVE lower band, not an unbiased recall
     predictor: a 4k-sample cannot contain the corpus's true nearest
@@ -460,22 +478,27 @@ def ivf_sampled_recall(
     index build. ``sample_mod`` > 1 thins the hash-sample for corpora
     where even the scan-side filter should pass fewer rows.
     """
-    import numpy as np
-
     if centroid_ids is None:
-        auto_ids, auto_probes = ivf_operating_point(emb.count())
-        centroid_ids = auto_ids
+        centroid_ids, auto_probes = ivf_operating_point(emb.count())
         if n_probes is None:
             n_probes = auto_probes
     if n_probes is None:
         # probes sized from the CALLER'S grid, not the corpus-size auto
-        # grid — deriving from ivf_operating_point here would hand a
-        # small grid more probes than it has cells and the diagnostic
-        # would degenerate to a constant 1.0 (review r9)
-        n_probes = max(1, min(len(centroid_ids),
-                              max(8, int(len(centroid_ids) ** 0.5))))
+        # grid — a small grid must not get more probes than it has cells,
+        # or the diagnostic degenerates to a constant 1.0
+        n_probes = _ivf_probes(len(centroid_ids))
+    return _sampled_recall(emb, centroid_ids, n_probes, k, sample_mod)[0]
+
+
+def _sampled_recall(emb, centroid_ids, n_probes, k, sample_mod=1):
+    """``(estimate, cells)`` of :func:`ivf_sampled_recall`; ``cells`` is
+    the ``(cell ids, centroid matrix)`` pair the sampling scan collected
+    (None on a degenerate grid), which :func:`ann_topk` hands to the
+    Arrow assignment so the index build collects nothing again."""
+    import numpy as np
+
     if len(centroid_ids) < 2:
-        return 1.0  # degenerate grid — IVF prunes nothing, moot
+        return 1.0, None  # degenerate grid — IVF prunes nothing, moot
     base = _nonzero_base(_spread(emb))
     # ONE bounded job for centroids + sample (r16; was two separate
     # collects — each a full scan job, and the diagnostic runs per
@@ -484,9 +507,9 @@ def ivf_sampled_recall(
     # (per-partition top-K, no full sort — the sample stays
     # DETERMINISTIC across partition layouts/parallelism, unlike a bare
     # limit(); review r9) returns all centroids followed by at least
-    # the top ``max_sample`` non-centroids by (hash, vec_id) — exactly
-    # the rows the two collects returned; the driver-side slice below
-    # re-caps the sample in case some centroid ids are absent from
+    # the top ``_RECALL_SAMPLE`` non-centroids by (hash, vec_id) —
+    # exactly the rows the two collects returned; the driver-side slice
+    # below re-caps the sample in case some centroid ids are absent from
     # base. Ordering the sample by the hash — not vec_id — keeps the
     # kept rows a pseudo-random spread of the corpus even when
     # sample_mod=1 passes everything.
@@ -502,22 +525,23 @@ def ivf_sampled_recall(
             F.xxhash64(F.col("vec_id")).alias("__h"),
         )
         .orderBy(F.desc("__c"), "__h", "vec_id")
-        .limit(max_sample + len(centroid_ids))
+        .limit(_RECALL_SAMPLE + len(centroid_ids))
         .collect()
     )
     cent = sorted(
         (r for r in fetched if r["__c"] == 1), key=lambda r: r.vec_id
     )
     c_mat = np.asarray([r.embedding for r in cent], dtype=np.float64)
-    sample = [r for r in fetched if r["__c"] == 0][:max_sample]
+    cells = (np.asarray([r.vec_id for r in cent], dtype=np.int64), c_mat)
+    sample = [r for r in fetched if r["__c"] == 0][:_RECALL_SAMPLE]
     if len(sample) < 2 * k or len(c_mat) < 2:
-        return 1.0  # sample too small to prune anything — IVF is moot
+        return 1.0, cells  # sample too small to prune anything — IVF is moot
     x = np.asarray([r.embedding for r in sample], dtype=np.float64)
     c_sq = (c_mat * c_mat).sum(axis=1)
     # cell assignment for every sampled vector (the index rule: L2 argmin)
     d_cells = _centroid_dists(x, c_mat, c_sq)
-    cells = d_cells.argmin(axis=1)
-    nq = min(n_query_sample, len(x))
+    cells_of = d_cells.argmin(axis=1)
+    nq = min(_RECALL_QUERIES, len(x))
     n_probes = min(n_probes, len(c_mat))
     hits = total = 0
     dots = x[:nq] @ x.T  # queries × sample dot products
@@ -526,9 +550,9 @@ def ivf_sampled_recall(
         dq[qi] = -np.inf  # exclude self
         true_k = np.argpartition(-dq, k)[:k]
         probed = set(np.argpartition(d_cells[qi], n_probes - 1)[:n_probes])
-        hits += sum(1 for t in true_k if cells[t] in probed)
+        hits += sum(1 for t in true_k if cells_of[t] in probed)
         total += k
-    return hits / total
+    return hits / total, cells
 
 
 def _centroid_dists(x, c_mat, c_sq):
@@ -541,12 +565,22 @@ def _centroid_dists(x, c_mat, c_sq):
     return c_sq[None, :] - 2.0 * (x @ c_mat.T)
 
 
-def _ivf_centroids(base: DataFrame, centroid_ids: tuple[int, ...]):
+def _centroid_table(cells: DataFrame) -> DataFrame:
+    """The one IVF centroid table ``(cell_id, cemb, cn2)``, broadcast:
+    ``cells`` gives (cell_id, cemb) and ‖cemb‖² comes from the same
+    fixed-order fold as every corpus norm. Pinned and trained
+    quantizers differ only in where ``cells`` comes from."""
     return F.broadcast(
+        cells.select("cell_id", "cemb", F.expr(_spark_norm2("cemb")).alias("cn2"))
+    )
+
+
+def _ivf_centroids(base: DataFrame, centroid_ids: tuple[int, ...]) -> DataFrame:
+    """Pinned centroid table: the corpus vectors ``centroid_ids`` are the
+    cells (sample-init, no Lloyd rounds — value-exact across engines)."""
+    return _centroid_table(
         base.filter(F.col("vec_id").isin(*centroid_ids)).select(
-            F.col("vec_id").alias("cell_id"),
-            F.col("embedding").alias("cemb"),
-            F.expr(_spark_norm2("embedding")).alias("cn2"),
+            F.col("vec_id").alias("cell_id"), F.col("embedding").alias("cemb")
         )
     )
 
@@ -561,18 +595,80 @@ def _cell_dists(vecs: DataFrame, cent: DataFrame) -> DataFrame:
     )
 
 
+# Grids of at least this many cells assign through the Arrow matmul,
+# smaller ones through the SQL fold: the fold's lambda cost grows with
+# the cell count, the Arrow pass costs a fixed Python stage, and on
+# √N-sized grids the two meet between 16 and 64 cells (measured table in
+# CHANGES.md). The 16-cell gate grids stay on the oracle-exact fold.
+IVF_ARROW_MIN_CELLS = 64
+
+
+def _ivf_assign(base: DataFrame, cent: DataFrame, n_cells: int, cells=None) -> DataFrame:
+    """(vec_id, cell_id): the one IVF cell assignment, its kernel picked
+    from the grid's cell count — :func:`_ivf_assign_sql` below
+    ``IVF_ARROW_MIN_CELLS``, :func:`_ivf_assign_arrow` at or above it.
+    ``cells`` is the ``(cell ids, centroid matrix)`` pair the Arrow
+    kernel needs; a caller that already holds it on the driver (the
+    trained quantizer, the ANN planner) passes it, otherwise the
+    centroid table is collected once here."""
+    if n_cells < IVF_ARROW_MIN_CELLS:
+        return _ivf_assign_sql(base, cent)
+    return _ivf_assign_arrow(base, _centroid_matrix(cent) if cells is None else cells)
+
+
+def _centroid_matrix(cent: DataFrame):
+    """``(cell ids, centroid matrix)`` of a centroid table, collected
+    and ordered by cell id — one job."""
+    import numpy as np
+
+    rows = sorted(cent.select("cell_id", "cemb").collect())
+    return (
+        np.asarray([r.cell_id for r in rows], dtype=np.int64),
+        np.asarray([r.cemb for r in rows], dtype=np.float64),
+    )
+
+
 def _ivf_assign_sql(base: DataFrame, cent: DataFrame) -> DataFrame:
     """(vec_id, cell_id) as argmin-by-struct: ``min(struct(dist,
     cell_id))`` under a plain groupBy — map-side combinable PARTIAL
     aggregation, so the corpus × n_cells distance rows reduce to one row
     per vector before any shuffle; ties go to the lower cell id. (A
     row_number window here would shuffle and sort the full corpus×cells
-    expansion — measured OOM at 4M vectors × 128 cells on local[32].)"""
+    expansion — measured OOM at 4M vectors × 128 cells on local[32].)
+    No Python stage, and the DuckDB oracles replay it bit for bit."""
     return (
         _cell_dists(base, cent)
         .groupBy("vec_id")
         .agg(F.min(F.struct("dist", "cell_id")).alias("best"))
         .select("vec_id", F.col("best.cell_id").alias("cell_id"))
+    )
+
+
+def _ivf_assign_arrow(base: DataFrame, cells) -> DataFrame:
+    """(vec_id, cell_id) by one numpy matmul per Arrow batch against the
+    ``(cell ids, centroid matrix)`` pair ``cells`` — the assignment for
+    production grids (~1000 cells at 1M vectors), where the SQL fold's
+    per-cell lambda cost is hopeless (339 s at 4M×128 cells). Ties break
+    to the LOWEST cell id like the fold (rows ordered by cell id, argmin
+    takes the first minimum); distances differ from the fold only in
+    float summation order. Map-only, no shuffle."""
+    import numpy as np
+
+    c_ids, c_mat = cells
+    c_sq = (c_mat * c_mat).sum(axis=1)
+
+    def assign_batches(it):
+        import pandas as pd
+
+        for pdf in it:
+            x = np.asarray(list(pdf["embedding"]), dtype=np.float64)
+            d = _centroid_dists(x, c_mat, c_sq)
+            yield pd.DataFrame(
+                {"vec_id": pdf["vec_id"], "cell_id": c_ids[d.argmin(axis=1)]}
+            )
+
+    return base.select("vec_id", "embedding").mapInPandas(
+        assign_batches, "vec_id long, cell_id long"
     )
 
 
@@ -598,83 +694,52 @@ def _ivf_candidates(
     )
 
 
-def _ivf_assign_arrow(base: DataFrame, centroid_ids: tuple[int, ...]) -> DataFrame:
-    """Vectorized (numpy-matmul) cell assignment for PRODUCTION cell
-    counts — the scale path behind ``ivf_int8_index(assign_method=
-    "arrow")``.
-
-    The SQL argmin fold materializes corpus × n_cells lambda-evaluated
-    distance rows: exact and map-side combinable, but its cost grows
-    linearly in n_cells through Catalyst's higher-order-function
-    interpreter — fine at the 16-cell oracle configuration, measured
-    339 s at 4M×128, and hopeless at the √N cells (~1000 at 1M) a
-    production IVF runs (the r7 verdict's operating-point finding).
-    Here each Arrow batch computes all distances as ONE matrix product
-    against the broadcast centroid matrix (n_cells × dim float64 —
-    2000×128 ≈ 2 MB, always driver/executor-sized), argmin per row.
-    Ties break to the LOWEST cell id like the SQL fold (centroid
-    columns are ordered by cell id and ``argmin`` returns the first
-    minimum); distances differ from the SQL fold only in float
-    summation order, so assignments can disagree solely on
-    near-equidistant ties — irrelevant for retrieval quality and
-    pinned ≥99% identical in tests. Map-only: reads (vec_id,
-    embedding), emits (vec_id, cell_id) — at 100 TB this is one pass,
-    no shuffle at all (the SQL fold's partial agg shuffles one row per
-    vector)."""
-    import numpy as np
-
-    rows = sorted(
-        base.filter(F.col("vec_id").isin(*centroid_ids))
-        .select(F.col("vec_id").alias("cell_id"), "embedding")
-        .collect(),
-        key=lambda r: r.cell_id,
+def _ivf_topk(
+    base: DataFrame,
+    cent: DataFrame,
+    n_cells: int,
+    k: int,
+    n_queries: int,
+    n_probes: int,
+    codes: DataFrame | None = None,
+    assign: DataFrame | None = None,
+    cells=None,
+) -> DataFrame:
+    """The one IVF query path behind every IVF builder: assign the
+    corpus ``base`` to the cells of ``cent`` (:func:`_ivf_assign`, unless
+    a prebuilt ``assign`` is given), probe each query's ``n_probes``
+    nearest cells, rescore the candidates and rank. With int8 ``codes``
+    the rescore is the exact int8 dot (:func:`_int8_rescore`), otherwise
+    the float cosine fold of :func:`cosine_topk`."""
+    if assign is None:
+        assign = _ivf_assign(base, cent, n_cells, cells)
+    cand = _ivf_candidates(base, cent, assign, n_queries, n_probes)
+    if codes is not None:
+        return _rank_limit(_int8_rescore(cand, codes), "dot", k)
+    n = base.select(
+        "vec_id", "embedding", F.expr(_spark_norm2("embedding")).alias("n2")
     )
-    c_ids = np.asarray([r.cell_id for r in rows], dtype=np.int64)
-    c_mat = np.asarray([r.embedding for r in rows], dtype=np.float64)
-    c_sq = (c_mat * c_mat).sum(axis=1)
-
-    def assign_batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            x = np.asarray(list(pdf["embedding"]), dtype=np.float64)
-            d = _centroid_dists(x, c_mat, c_sq)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "cell_id": c_ids[d.argmin(axis=1)]}
-            )
-
-    return base.select("vec_id", "embedding").mapInPandas(
-        assign_batches, "vec_id long, cell_id long"
+    scored = _pair_features(cand, n, "embedding", "n2").select(
+        "query_id",
+        "neighbor_id",
+        _cosine("q_embedding", "c_embedding", "q_n2", "c_n2").alias("cos"),
     )
+    return _rank_limit(scored, "cos", k)
 
 
 def ivf_int8_index(
     emb: DataFrame,
     centroid_ids: tuple[int, ...] = IVF_CENTROID_IDS,
-    assign_method: str = "sql",
 ) -> tuple[DataFrame, DataFrame]:
     """Build-time artifacts of the two-stage index: ``(assign, codes)``
     — one (vec_id, cell_id) row per vector and the int8 code table.
-    Persist both to amortize the corpus×centroid fold across query
-    batches.
-
-    ``assign_method="sql"`` (default, the oracle-exact gate
-    configuration) computes the cell assignment as argmin-by-struct
-    (:func:`_ivf_assign_sql`).
-
-    ``assign_method="arrow"`` is the production-scale path for √N-sized
-    cell grids (:func:`_ivf_assign_arrow`): one numpy matmul per Arrow
-    batch against the broadcast centroid matrix — use it whenever
-    n_cells is large enough that the per-cell lambda fold dominates
-    (REHEARSAL_r08_ivf_*: ~1000–2000 cells at 1M–4M vectors)."""
+    Persist both to amortize the corpus×centroid assignment across query
+    batches. The assignment kernel follows the grid size
+    (:func:`_ivf_assign`); on a grid of ``IVF_ARROW_MIN_CELLS`` or more
+    it collects the pinned centroids once, here."""
     base = _nonzero_base(_spread(emb))
-    if assign_method == "arrow":
-        assign = _ivf_assign_arrow(base, centroid_ids)
-    elif assign_method == "sql":
-        assign = _ivf_assign_sql(base, _ivf_centroids(base, centroid_ids))
-    else:  # pragma: no cover - caller bug
-        raise ValueError(f"unknown assign_method: {assign_method!r}")
-    return assign, _int8_codes(base)
+    cent = _ivf_centroids(base, centroid_ids)
+    return _ivf_assign(base, cent, len(centroid_ids)), _int8_codes(base)
 
 
 def ivf_int8_topk(
@@ -692,34 +757,35 @@ def ivf_int8_topk(
 
     Stage 1 (IVF-Flat, deterministic): centroids are PINNED corpus
     vectors (sample-init, no Lloyd rounds — trained float centroids have
-    no value-exact cross-engine twin). Every vector joins the broadcast
-    centroid set (map-side, no shuffle), its cell is
-    argmin ||v−c||² = argmin (||c||² − 2·v·c) via a fixed-order fold,
-    ties on cell id. Queries keep their ``n_probes`` nearest cells.
-    Candidate generation is then an EQUI-JOIN on the cell id — never
-    query × corpus.
+    no value-exact cross-engine twin). Every vector's cell is
+    argmin ||v−c||² = argmin (||c||² − 2·v·c), ties on cell id
+    (:func:`_ivf_assign`: the SQL fold on the 16-cell gate grid, the
+    Arrow matmul on grids of ``IVF_ARROW_MIN_CELLS`` or more). Queries
+    keep their ``n_probes`` nearest cells. Candidate generation is then
+    an EQUI-JOIN on the cell id — never query × corpus.
 
     Stage 2: candidates rescore by the exact int8-quantized bigint dot
     product (the sim_int8_topk arithmetic — integer, drift-free), rank
     per query, tie on neighbor id.
 
-    At 100 TB: stage 1 reads 1 float vector + writes a (vec_id, cell)
-    pair via a map-side-combinable argmin aggregate; stage 2's scan is
-    confined to probed cells and reads 1-byte codes. Both stages
-    shuffle only on the cell/vec id. The index (assignment + codes) is
-    a BUILD-TIME artifact — pass a persisted :func:`ivf_int8_index`
-    result as ``index`` to amortize it across query batches; query
-    probe cells are always computed fresh from the (tiny) query
-    vectors, the production access pattern.
+    At 100 TB: stage 1 reads 1 float vector and writes a (vec_id, cell)
+    pair; stage 2's scan is confined to probed cells and reads 1-byte
+    codes. Both stages shuffle only on the cell/vec id. The index
+    (assignment + codes) is a BUILD-TIME artifact — pass a
+    persisted :func:`ivf_int8_index` result as ``index`` to amortize it
+    across query batches; query probe cells are always computed fresh
+    from the (tiny) query vectors, the production access pattern.
+    Without ``index``, a grid of ``IVF_ARROW_MIN_CELLS`` or more cells
+    collects its centroids once at build time. No registry row takes
+    that path: the gate rows run the 16-cell grid, and :func:`ann_topk`
+    hands over the matrix its planner already collected.
     """
-    assign, qn = (
-        index if index is not None else ivf_int8_index(emb, centroid_ids)
-    )
     base = _nonzero_base(_spread(emb))
-    cand = _ivf_candidates(
-        base, _ivf_centroids(base, centroid_ids), assign, n_queries, n_probes
+    assign, codes = index if index is not None else (None, _int8_codes(base))
+    return _ivf_topk(
+        base, _ivf_centroids(base, centroid_ids), len(centroid_ids),
+        k, n_queries, n_probes, codes=codes, assign=assign,
     )
-    return _rank_limit(_int8_rescore(cand, qn), "dot", k)
 
 
 def ivf_int8_topk_oracle(
@@ -790,35 +856,18 @@ def ivf_float_topk(
     n_probes: int = 4,
     centroid_ids: tuple[int, ...] = IVF_CENTROID_IDS,
 ) -> DataFrame:
-    """IVF-Flat with FLOAT cosine rescoring, fully deterministic — the
-    ex-rows-only ``sim_ivf_topk`` restated so it value-matches a DuckDB
-    oracle (r9 verdict #5): pinned sample-init centroids (corpus
-    vectors, no Lloyd rounds — trained float means have no value-exact
-    cross-engine twin, which is what kept this family rows-only for 9
-    rounds), argmin cell assignment via a fixed-order float fold with
-    cell-id tie-break, candidates from a cell-id EQUI-join, and cosine
-    scoring as the same fixed-order fold :func:`cosine_topk` uses. The
-    TRAINED k-means variant (functions/ivf.py) remains the production
-    API, recall-pinned in tests — this is the same split
-    ivf_int8_topk made for the int8 path in r6.
-
-    Plan shape is ivf_int8_topk's: broadcast centroid set, map-side
-    combinable argmin aggregate, cell equi-join — sub-linear scan at
-    100 TB, no query×corpus product anywhere."""
+    """IVF-Flat with FLOAT cosine rescoring over pinned sample-init
+    centroids, fully deterministic so it value-matches a DuckDB oracle
+    (r9 verdict #5): the :func:`ivf_int8_topk` pipeline (one IVF query
+    path, :func:`_ivf_topk`) with cosine scoring as the same fixed-order
+    fold :func:`cosine_topk` uses. The TRAINED k-means quantizer
+    (``ivf.ivf_topk``) runs the same path over its trained centroid
+    table, recall-pinned in tests."""
     base = _nonzero_base(_spread(emb))
-    cent = _ivf_centroids(base, centroid_ids)
-    cand = _ivf_candidates(
-        base, cent, _ivf_assign_sql(base, cent), n_queries, n_probes
+    return _ivf_topk(
+        base, _ivf_centroids(base, centroid_ids), len(centroid_ids),
+        k, n_queries, n_probes,
     )
-    n = base.select(
-        "vec_id", "embedding", F.expr(_spark_norm2("embedding")).alias("n2")
-    )
-    scored = _pair_features(cand, n, "embedding", "n2").select(
-        "query_id",
-        "neighbor_id",
-        _cosine("q_embedding", "c_embedding", "q_n2", "c_n2").alias("cos"),
-    )
-    return _rank_limit(scored, "cos", k)
 
 
 def ivf_float_topk_oracle(
@@ -906,7 +955,7 @@ def hamming_prefilter_topk(
     uniform, local[32], default prefilter_mult=32): recall@10 0.49 at
     8.6 s vs the exact int8 scan's 1.0 at 9.9 s — at CPU-bound local
     scale the exact scan dominates. :func:`ann_plan` therefore only
-    dispatches here past its ``exact_nd_threshold`` cost boundary
+    dispatches here past its ``ANN_EXACT_ND_THRESHOLD`` cost boundary
     (r11), where the scan is I/O-bound and stage 1's
     8-bytes-per-vector read (vs 64 for int8 codes) cuts read volume
     8×. Raise ``prefilter_mult`` to trade stage-2 cost for recall.
@@ -942,14 +991,17 @@ def hamming_prefilter_topk(
     return _rank_limit(_int8_rescore(cand, _int8_codes(base)), "dot", k)
 
 
+# ann_plan's calibrated thresholds; its docstring gives their meaning
+ANN_BUILD_THRESHOLD = 0.6
+ANN_FALLBACK_THRESHOLD = 0.4
+ANN_EXACT_ND_THRESHOLD = 256_000_000
+
+
 def ann_plan(
     emb: DataFrame,
     k: int = 10,
     n_queries: int = 8,
     amortized: bool = True,
-    build_threshold: float = 0.6,
-    fallback_threshold: float = 0.4,
-    exact_nd_threshold: int = 256_000_000,
 ) -> dict:
     """Choose an ANN strategy for this corpus — the executable form of
     the operating rule the r9 round documented on
@@ -959,10 +1011,10 @@ def ann_plan(
     (REHEARSAL_r09_ivf_uniform.json: clustered corpora estimate
     0.78-0.86, uniform 0.26-0.30 at the √N point):
 
-    * estimate ≥ ``build_threshold`` (0.6) → ``"ivf"``: the corpus has
+    * estimate ≥ ``ANN_BUILD_THRESHOLD`` (0.6) → ``"ivf"``: the corpus has
       cluster structure; build IVF-√N + int8 codes
       (:func:`ivf_int8_topk`), 3-6% expected scan fraction.
-    * estimate < ``fallback_threshold`` (0.4) → uniform-like; IVF at
+    * estimate < ``ANN_FALLBACK_THRESHOLD`` (0.4) → uniform-like; IVF at
       the √N point would under-recall (~0.59 measured at 1M uniform).
       With ``amortized=True`` (the index persists across query batches)
       → ``"ivf_wide"``: IVF with probes raised to 50% of cells — recall
@@ -970,7 +1022,7 @@ def ann_plan(
       still beats the float full scan per batch (4.6 s vs 10.4 s at
       1M). One-off batches (``amortized=False``) are cost-modeled
       (r11, closing the r10 verdict's watch item): when
-      ``n_vectors × dim ≤ exact_nd_threshold`` the corpus is small
+      ``n_vectors × dim ≤ ANN_EXACT_ND_THRESHOLD`` the corpus is small
       enough that the exact int8 scan is CPU-bound and essentially as
       fast as the Hamming prefilter while returning recall 1.0
       (measured at 1M×64 uniform: exact 9.9 s recall 1.0 vs hamming
@@ -992,7 +1044,10 @@ def ann_plan(
 
     Returns a plan dict: ``strategy`` (ivf | ivf_wide | exact |
     hamming), ``est_recall``, ``n_vectors``, ``centroid_ids``,
-    ``n_probes``, ``reason``. Feed it to :func:`ann_topk` (or call
+    ``n_probes``, ``reason`` and ``cells`` — the ``(cell ids, centroid
+    matrix)`` pair the diagnostic collected, which :func:`ann_topk`
+    hands to the Arrow assignment on a large grid, so the index build
+    runs no job of its own. Feed it to :func:`ann_topk` (or call
     ann_topk directly, which plans internally)."""
     n = emb.count()
     centroid_ids, n_probes = ivf_operating_point(n, n_queries)
@@ -1004,11 +1059,12 @@ def ann_plan(
             "n_vectors": n,
             "centroid_ids": (),
             "n_probes": 0,
+            "cells": None,
         }
-    est = ivf_sampled_recall(emb, centroid_ids, n_probes, k=k)
-    if est >= build_threshold:
+    est, cells = _sampled_recall(emb, centroid_ids, n_probes, k)
+    if est >= ANN_BUILD_THRESHOLD:
         strategy, reason = "ivf", "clustered"
-    elif est < fallback_threshold:
+    elif est < ANN_FALLBACK_THRESHOLD:
         if amortized:
             strategy, reason = "ivf_wide", "uniform-amortized"
             n_probes = max(n_probes, (len(centroid_ids) + 1) // 2)
@@ -1019,7 +1075,7 @@ def ann_plan(
                 .first()
             )
             dim = int(row["d"]) if row is not None and row["d"] else 0
-            if dim <= 0 or n * dim <= exact_nd_threshold:
+            if dim <= 0 or n * dim <= ANN_EXACT_ND_THRESHOLD:
                 # unknown/degenerate dim → exact is the safe plan
                 strategy, reason = "exact", "uniform-oneoff-cpu-bound"
             else:
@@ -1033,6 +1089,7 @@ def ann_plan(
         "n_vectors": n,
         "centroid_ids": centroid_ids,
         "n_probes": n_probes,
+        "cells": cells,
     }
 
 
@@ -1058,12 +1115,11 @@ def ann_topk(
         plan = ann_plan(emb, k=k, n_queries=n_queries, amortized=amortized)
     strategy = plan["strategy"]
     if strategy in ("ivf", "ivf_wide"):
-        return ivf_int8_topk(
-            emb,
-            k=k,
-            n_queries=n_queries,
-            n_probes=plan["n_probes"],
-            centroid_ids=plan["centroid_ids"],
+        ids = plan["centroid_ids"]
+        base = _nonzero_base(_spread(emb))
+        return _ivf_topk(
+            base, _ivf_centroids(base, ids), len(ids), k, n_queries,
+            plan["n_probes"], codes=_int8_codes(base), cells=plan.get("cells"),
         )
     if strategy == "hamming":
         return hamming_prefilter_topk(emb, k=k, n_queries=n_queries)
@@ -1117,20 +1173,15 @@ def lsh_bucket_topk(
     """
     if n_probes < 1 or n_probes > N_PLANES + 1:
         raise ValueError(f"n_probes must be in [1, {N_PLANES + 1}]")
-    par = emb.sparkSession.sparkContext.defaultParallelism
-    # second repartition = exchange barrier: the 512-term bucket projection
-    # and the norms are computed once and REUSED by both the query and the
-    # candidate branch (ReuseExchange), instead of codegen-compiling and
-    # evaluating the giant expression twice — measured 2× on cold plans
-    withb = (
-        _spread(emb)
-        .select(
-            "vec_id",
-            "embedding",
-            F.expr(_spark_norm2("embedding")).alias("n2"),
-            F.expr(_bucket_expr("spark")).alias("bucket"),
-        )
-        .repartition(par, "bucket")
+    # the query set is broadcast, so the corpus joins it map-side on the
+    # bucket and needs no bucket shuffle; Catalyst pushes the query
+    # filter down to the scan, so the query branch projects its few rows
+    # itself
+    withb = _spread(emb).select(
+        "vec_id",
+        "embedding",
+        F.expr(_spark_norm2("embedding")).alias("n2"),
+        F.expr(_bucket_expr("spark")).alias("bucket"),
     )
     q0 = withb.filter(F.col("vec_id") < n_queries)
     if n_probes > 1:

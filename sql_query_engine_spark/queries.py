@@ -2632,8 +2632,10 @@ def sim_int8_topk(spark, sf_dir):
     "sim_ivf_int8_topk",
     similarity.ivf_int8_topk_oracle(),
     "two-stage retrieval: deterministic IVF candidate generation (pinned "
-    "sample-init centroids, map-side broadcast assignment, cell-id "
-    "equi-join) + exact int8 bigint rescoring of candidates only — the "
+    "sample-init centroids; the 16-cell grid assigns through the SQL "
+    "argmin fold of the one IVF core — no Python stage — with in-plan "
+    "query probes and a cell-id equi-join) + exact int8 bigint "
+    "rescoring of candidates only — the "
     "production vector-index shape. Composes sim_int8_topk's rescorer "
     "with a coarse quantizer so the rescoring scan is n_probes/n_cells "
     "of the corpus instead of a full pass (sub-linear at 100 TB); "
@@ -2753,9 +2755,10 @@ def sim_ivfpq_topk(spark, sf_dir):
     "nearest of 16 pinned sample-init cells, candidates come from a "
     "cell-id equi-join, scoring is the cosine_topk fixed-order fold — "
     "the learned-partition counterpart to the LSH scale path, restated "
-    "deterministically so it is value-exact oracle-checked (r10); the "
-    "distributedly-TRAINED k-means quantizer remains the production "
-    "API in functions/ivf.py, recall-pinned in tests.",
+    "deterministically so it is value-exact oracle-checked (r10). The "
+    "distributedly-TRAINED k-means quantizer (functions/ivf.py) runs "
+    "the same IVF core over its trained centroid table, recall-pinned "
+    "in tests.",
 )
 def sim_ivf_topk(spark, sf_dir):
     return similarity.ivf_float_topk(_t(spark, sf_dir, "embeddings"))

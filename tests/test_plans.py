@@ -470,6 +470,33 @@ def test_minhash_rows_sign_map_only(spark):
         assert exchanges <= ceiling, (name, exchanges, tree)
 
 
+def test_lsh_rows_skip_the_bucket_shuffle(spark):
+    """The LSH rows join the broadcast query set to the corpus map-side
+    on the bucket, so the final executed plan holds no hash exchange on
+    the bucket and no more Exchange nodes than the ceilings below. The
+    bucket repartition these rows used to add was meant to be reused by
+    both branches, but Catalyst pushed the query filter below it, so
+    nothing was reused (no ReusedExchange) and the corpus was shuffled
+    once more: 5 / 6 exchanges here."""
+    import re
+
+    from sql_query_engine_spark.queries import queries
+
+    ceilings = {"sim_lsh_ann_topk": 3, "sim_lsh_multiprobe_topk": 4}
+    qs = queries()
+    for name, ceiling in ceilings.items():
+        df = qs[name](spark, SF_DIR)
+        df.collect()  # AQE settles the final plan only once it runs
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.executedPlan()  # the final plan alone
+        tree = plan.toString()
+        nodes = re.findall(r"^[\s:+-]*(\w+)", tree, re.M)
+        assert "hashpartitioning(bucket" not in tree, (name, tree)
+        assert nodes.count("Exchange") <= ceiling, (name, tree)
+        assert nodes.count("BroadcastExchange") == 1, (name, tree)
+
+
 def test_curation_plan_shapes(spark):
     """Plan pins for the curation operators: the mixture filter is
     map-only (zero exchanges), the global shuffle's window is partitioned

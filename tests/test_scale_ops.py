@@ -6,6 +6,7 @@ implementations on small data — same results, different physical shape."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sql_query_engine_spark.catalog import load_table
@@ -157,23 +158,40 @@ def test_ivf_int8_two_stage(spark):
         )
 
 
-def test_ivf_arrow_assignment_matches_sql_fold(spark):
-    """The vectorized Arrow cell assignment (the production path for
-    √N-sized cell grids, r7 verdict #3) agrees with the oracle-exact SQL
-    argmin fold: identical (vec_id → cell_id) on the gate corpus. The
-    two paths compute the same ||c||² − 2·v·c distances, differing only
-    in float summation order, so disagreement is possible solely on
-    near-equidistant ties — none exist in the gate corpus."""
-    from sql_query_engine_spark.functions import similarity
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_ivf_assignment_kernels_agree(spark, sf):
+    """The two IVF assignment kernels — the SQL argmin fold below
+    IVF_ARROW_MIN_CELLS, the Arrow matmul at or above it — give identical
+    (vec_id → cell_id) on every testdata corpus, on the pinned 16-cell
+    gate grid and on the √N operating-point grid. Both compute
+    ‖c‖² − 2·v·c and differ only in float summation order, so they
+    could disagree solely on near-equidistant ties; none exist here."""
+    from sql_query_engine_spark.functions import similarity as s
 
-    emb = load_table(spark, SF_DIR, "embeddings")
-    a_sql, _ = similarity.ivf_int8_index(emb, assign_method="sql")
-    a_arr, _ = similarity.ivf_int8_index(emb, assign_method="arrow")
-    m_sql = {r.vec_id: r.cell_id for r in a_sql.collect()}
-    m_arr = {r.vec_id: r.cell_id for r in a_arr.collect()}
-    assert set(m_sql) == set(m_arr)
-    differ = [v for v in m_sql if m_sql[v] != m_arr[v]]
-    assert not differ, f"assignments differ for {len(differ)} vectors: {differ[:5]}"
+    emb = load_table(spark, SF_DIR.replace("sf0.001", sf), "embeddings")
+    base = s._nonzero_base(s._spread(emb))
+    grids = [s.IVF_CENTROID_IDS, s.ivf_operating_point(emb.count())[0]]
+    for ids in grids:
+        cent = s._ivf_centroids(base, ids)
+        m_sql = dict(s._ivf_assign_sql(base, cent).collect())
+        m_arr = dict(s._ivf_assign_arrow(base, s._centroid_matrix(cent)).collect())
+        assert m_sql and m_sql == m_arr, [
+            v for v in m_sql if m_sql[v] != m_arr.get(v)][:5]
+
+
+def test_ivf_gate_grid_runs_no_python_stage(spark):
+    """The 16-cell pinned grid sits below IVF_ARROW_MIN_CELLS, so the
+    gate rows assign through the SQL fold: no Python stage in the
+    executed plan. The Arrow kernel above the crossover is pinned in
+    test_ann_topk_dispatch_contract_and_recall."""
+    from sql_query_engine_spark.queries import queries
+
+    qs = queries()
+    for name in ("sim_ivf_int8_topk", "sim_ivf_topk", "sim_ivfpq_topk"):
+        plan = qs[name](spark, SF_DIR)._jdf.queryExecution().executedPlan()
+        assert plan.toString().count("MapInPandas") == 0, name
+        if name != "sim_ivfpq_topk":  # its coarse step is its own window
+            assert "min(struct(dist" in plan.toString(), name  # the SQL fold
 
 
 def test_ivf_operating_point_rule(spark):
@@ -340,16 +358,18 @@ def test_ivfpq_topk(spark):
 
 
 def test_ivf_adaptive_params(spark):
-    """√N sizing: cells grow with the corpus, probes with √cells, both
-    clamped; the adaptive path (n_cells=None) must still clear the same
-    recall floor as the fixed test configuration."""
+    """One √N sizing rule behind the pinned and the trained quantizer:
+    cells grow with the corpus, probes with √cells, both clamped; the
+    trained adaptive path (n_cells=None) sizes its grid by the same rule
+    and must still clear the recall floor of the fixed test
+    configuration."""
     from sql_query_engine_spark.functions import ivf, similarity
 
-    assert ivf.adaptive_params(100) == (10, 4)
-    assert ivf.adaptive_params(1_000_000) == (1000, 31)
-    assert ivf.adaptive_params(10) == (4, 4)  # floor
-    cells, probes = ivf.adaptive_params(10**13)  # ~100 TB of 1 KB docs
-    assert cells == 65536 and probes == 256  # ceiling holds driver size
+    assert similarity._ivf_grid(100) == (16, 8)  # cell and probe floors
+    assert similarity._ivf_grid(1_000_000) == (1000, 31)
+    assert similarity._ivf_grid(10) == (2, 2)  # no more cells than vectors
+    assert similarity._ivf_grid(10**13) == (65536, 256)  # driver-sized ceiling
+    assert similarity._ivf_grid(8) == (0, 1)  # nothing past the query set
 
     emb = load_table(spark, SF_DIR, "embeddings")
     exact = {}
@@ -362,6 +382,34 @@ def test_ivf_adaptive_params(spark):
         hits += len(ivf_nbrs & nbrs)
         total += len(nbrs)
     assert total and hits / total >= 0.3, f"adaptive recall too low: {hits}/{total}"
+
+
+def test_trained_ivf_with_centroids_builds_lazily(spark):
+    """Given its centroids, ivf.ivf_topk builds with no Spark job and
+    no persisted RDD on either assignment kernel: the centroid table is
+    a literal relation, query probes are computed in-plan, and the
+    Arrow kernel reads the driver-side matrix."""
+    import uuid
+
+    from sql_query_engine_spark.functions import ivf, similarity
+
+    sc = spark.sparkContext
+    emb = load_table(spark, SF_DIR, "embeddings")
+    vecs = [list(r.embedding) for r in emb.orderBy("vec_id").limit(
+        similarity.IVF_ARROW_MIN_CELLS).collect()]
+    persisted = len(sc._jsc.getPersistentRDDs())
+    for n_cells in (16, similarity.IVF_ARROW_MIN_CELLS):
+        group = f"ivf-lazy-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, "trained ivf build")
+        try:
+            df = ivf.ivf_topk(emb, k=10, n_queries=8, centroids=vecs[:n_cells])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0, n_cells
+        assert len(sc._jsc.getPersistentRDDs()) == persisted, n_cells
+        stages = df._jdf.queryExecution().executedPlan().toString().count("MapInPandas")
+        assert stages == (n_cells >= similarity.IVF_ARROW_MIN_CELLS), n_cells
+        assert df.count() == 80, n_cells
 
 
 def test_asof_join_semantics(spark):
@@ -959,7 +1007,7 @@ def test_ivf_sampled_recall_separates_corpora(spark):
     ) == 1.0
 
 
-def test_ann_planner_chooses_correctly(spark):
+def test_ann_planner_chooses_correctly(spark, monkeypatch):
     """ann_plan (r9 verdict #3: the calibrated IVF decision rule as
     ENGINE behavior, not a docstring) must dispatch per the measured
     thresholds: clustered corpora build IVF at the sqrt(N) point;
@@ -992,9 +1040,8 @@ def test_ann_planner_chooses_correctly(spark):
     assert p_u1["strategy"] == "exact", p_u1
     assert p_u1["reason"] == "uniform-oneoff-cpu-bound"
 
-    p_u1_big = similarity.ann_plan(
-        uniform, amortized=False, exact_nd_threshold=0
-    )
+    monkeypatch.setattr(similarity, "ANN_EXACT_ND_THRESHOLD", 0)
+    p_u1_big = similarity.ann_plan(uniform, amortized=False)
     assert p_u1_big["strategy"] == "hamming", p_u1_big
     assert p_u1_big["reason"] == "uniform-oneoff-io-bound"
 
@@ -1024,6 +1071,12 @@ def test_ann_topk_dispatch_contract_and_recall(spark):
     plan = similarity.ann_plan(clustered, k=k, n_queries=nq)
     assert plan["strategy"] == "ivf"
     got = similarity.ann_topk(clustered, k=k, n_queries=nq, plan=plan)
+    # the √N grid (~141 cells) is past IVF_ARROW_MIN_CELLS: exactly one
+    # Arrow assignment stage and no SQL argmin fold over the corpus
+    assert len(plan["centroid_ids"]) >= similarity.IVF_ARROW_MIN_CELLS
+    executed = got._jdf.queryExecution().executedPlan().toString()
+    assert executed.count("MapInPandas") == 1
+    assert "min(struct(dist" not in executed
     assert got.columns == exact.columns == [
         "query_id", "neighbor_id", "dot", "rank",
     ]

@@ -95,8 +95,8 @@ SHOWCASE = [
     (
         "sim_lsh_multiprobe_topk",
         "query-side posexplode fan-out to the probe buckets; corpus side "
-        "unchanged (one bucket per vector, one hash exchange on the "
-        "bucket int)",
+        "unchanged (one bucket per vector after the round-robin spread, "
+        "joined map-side to the broadcast probes — no bucket shuffle)",
         "multi-probe recall is bought entirely with query-side work — "
         "the corpus shuffle and index layout are identical to "
         "single-probe, which is what lets recall scale without re-hashing "
